@@ -44,14 +44,27 @@ object Cli {
         .mkString("  ").replaceAll("\\s+$", ""))
     }
 
-  def main(args: Array[String]): Unit = args.toList match {
+  /** Ends a command with an exit code; [[main]] turns it into the process
+    * exit after every `finally` has run (sessions stopped). */
+  private[graft] final class Exit(val code: Int) extends scala.util.control.ControlThrowable
+
+  private def exit(code: Int): Nothing = throw new Exit(code)
+
+  /** Read and parse a config file; a missing file or a config error prints
+    * one `error:` line and exits 1 — before any SparkSession starts. */
+  private def config[T](path: String)(parse: String => T): T = {
+    def error(msg: String): Nothing = { System.err.println(s"error: $msg"); exit(1) }
+    if (!Files.exists(Paths.get(path))) error(s"pipeline config not found: $path")
+    try parse(Files.readString(Paths.get(path)))
+    catch { case scala.util.control.NonFatal(e) => error(String.valueOf(e.getMessage).linesIterator.mkString(" ")) }
+  }
+
+  def main(args: Array[String]): Unit =
+    try run(args) catch { case e: Exit => sys.exit(e.code) }
+
+  private[graft] def run(args: Array[String]): Unit = args.toList match {
     case "run" :: path :: rest =>
-      if (!Files.exists(Paths.get(path))) {
-        System.err.println(s"error: pipeline config not found: $path")
-        sys.exit(1)
-      }
-      val yaml = Files.readString(Paths.get(path))
-      val conf = Pipeline.fromYaml(yaml)
+      val conf = config(path)(Pipeline.fromYaml)
       if (rest.contains("--lint")) {
         // build + plan the pipeline WITHOUT executing it, then report the
         // scale-guardrail findings (graft.core.PlanLint) as one JSON line
@@ -64,7 +77,7 @@ object Cli {
             s"${j(rule)}:[${nodes.map(j).mkString(",")}]"
           }.mkString(",")
           println(s"""{"pipeline":${j(conf.name)},"lint_findings":${rep.values.map(_.size).sum},"findings":{$body}}""")
-          if (rep.contains("cartesian_product") || rep.contains("global_window")) sys.exit(1)
+          if (rep.contains("cartesian_product") || rep.contains("global_window")) exit(1)
         } finally spark.stop()
       } else if (rest.contains("--dry-run")) {
         println(s"pipeline: ${conf.name}")
@@ -106,15 +119,11 @@ object Cli {
           Thread.sleep(300) // listener delivery is async
           System.err.println(f"[metrics] actions=${metrics.snapshot.size} totalMs=${metrics.totalDurationMs}%.1f")
           System.err.println(s"[lineage] ${graft.core.Orchestration.lineageOf(conf).toJson}")
-          if (res.status != "success") sys.exit(1)
+          if (res.status != "success") exit(1)
         } finally spark.stop()
       }
     case "stream" :: path :: rest =>
-      if (!Files.exists(Paths.get(path))) {
-        System.err.println(s"error: pipeline config not found: $path")
-        sys.exit(1)
-      }
-      val conf = graft.streaming.StreamPipeline.fromYaml(Files.readString(Paths.get(path)))
+      val conf = config(path)(graft.streaming.StreamPipeline.fromYaml)
       val spark = Sessions.local(appName = s"graft-stream-${conf.name}")
       // recentProgress is ring-buffered (numRecentProgressUpdates, default
       // 100) — a long --drain would undercount batches/rows without this
@@ -161,7 +170,7 @@ object Cli {
       sub match {
         case "register" =>
           val path = rest.headOption.filterNot(_.startsWith("--")).getOrElse {
-            System.err.println("error: catalog register needs a dataset path"); sys.exit(1)
+            System.err.println("error: catalog register needs a dataset path"); exit(1)
           }
           val spark = Sessions.local(appName = "graft-catalog")
           try {
@@ -189,7 +198,7 @@ object Cli {
           println(cat.generateCatalogReport())
         case other =>
           System.err.println(s"usage: graft.Cli catalog register|search|report ... (got: $other)")
-          sys.exit(2)
+          exit(2)
       }
     case "quality" :: path :: rest =>
       // quality check over a dataset (cli/quality_commands.py `quality
@@ -220,7 +229,7 @@ object Cli {
         rest.sliding(2).collectFirst { case List(`name`, v) => v }
       val tracker = new graft.core.LineageTracker(lflag("--dir").getOrElse(".graft-lineage"))
       val table = rest.headOption.filterNot(_.startsWith("--")).getOrElse {
-        System.err.println(s"error: lineage $sub needs a table name"); sys.exit(1)
+        System.err.println(s"error: lineage $sub needs a table name"); exit(1)
       }
       sub match {
         case "report" => println(tracker.generateLineageReport(table))
@@ -234,7 +243,7 @@ object Cli {
             s""""edges":[${es.mkString(",")}]}""")
         case other =>
           System.err.println(s"usage: graft.Cli lineage report|graph <table> --dir <d> (got: $other)")
-          sys.exit(2)
+          exit(2)
       }
     case "health" :: rest =>
       // health rollup (monitoring/health_check.py parity, round 13):
@@ -277,11 +286,11 @@ object Cli {
         s""""healthy":${results.count(_.status == Health.Healthy)},""" +
         s""""degraded":${results.count(_.status == Health.Degraded)},""" +
         s""""unhealthy":${results.count(_.status == Health.Unhealthy)}}""")
-      if (rest.contains("--strict") && overall == Health.Unhealthy) sys.exit(1)
+      if (rest.contains("--strict") && overall == Health.Unhealthy) exit(1)
     case "entry" :: _ =>
       Smoke.main(Array.empty)
     case other =>
       System.err.println(s"usage: graft.Cli run <pipeline.yaml> [--dry-run] | graft.Cli stream <yaml> [--drain] | graft.Cli catalog register|search|report | graft.Cli health [--jdbc url] [--kv memory:ns] [--strict] | graft.Cli entry (got: $other)")
-      sys.exit(2)
+      exit(2)
   }
 }

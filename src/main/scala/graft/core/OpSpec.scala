@@ -48,45 +48,24 @@ object OpSpec {
   final case class CustomSql(query: String, tempViewName: String = "temp_table")    extends OpSpec
   /** Ordered sub-list (one YAML transform block can expand to several ops). */
   final case class Sequence(ops: Seq[OpSpec])                                       extends OpSpec
-  /** The op types the reference's YAMLs declare but never dispatch — wired
-    * here to the library implementations (SURVEY §2.A gap note). Params stay
-    * dynamic (config-shaped); see OpCompiler.applyFeatureEngineering /
-    * applyTimeSeries for the accepted keys.
+  /** An op family bound at parse: its YAML params (kept for display) and
+    * the closure its OpCompiler binder returned — the binder did every read
+    * and check, the closure holds only the Spark work. The families are the
+    * op types the reference's YAMLs declare but never dispatch
+    * (feature_engineering, time_series_processing, validate — SURVEY §2.A
+    * gap note) and graft's text_processing, multimodal, quality_monitor,
+    * scd2 and layout; each binder's scaladoc says what it does and
+    * docs/OPS.md lists its keys.
     */
-  final case class FeatureEngineering(params: Map[String, Any])                     extends OpSpec
-  final case class TimeSeriesProcessing(params: Map[String, Any])                   extends OpSpec
-  /** Training-data text ops (beyond-reference surface) as first-class
-    * pipeline citizens: dedup (exact / near), quality features & score,
-    * language ID, token counts, chunking, Bloom blocklist exclusion.
-    */
-  final case class TextProcessing(params: Map[String, Any])                         extends OpSpec
-  /** Multimodal media ops (beyond-reference surface): wrap binary payloads,
-    * REAL ImageIO decode/resize, REAL WAV decode/trim (AudioSystem), frame
-    * sampling, and the video/compressed-audio stub featurizer — see
-    * graft.multimodal.Multimodal.
-    */
-  final case class MultimodalOp(params: Map[String, Any])                           extends OpSpec
-  /** Quality monitoring as a pipeline step (utils/quality_monitor.py:133-340):
-    * replaces the frame with the metrics relation (emit: metrics, default)
-    * or the WARN/FAIL alert relation (emit: alerts).
-    */
-  final case class QualityMonitorOp(params: Map[String, Any])                       extends OpSpec
-  /** SCD Type-2 dimension maintenance (graft.ops.Scd): operation=init turns
-    * the frame into an open-version dimension; operation=apply merges the
-    * change batch in `updates_table` into the frame (the dimension).
-    */
-  final case class Scd2Op(params: Map[String, Any])                                 extends OpSpec
-  /** Write-side layout (graft.sources.Layout): operation=zorder_key adds the
-    * Morton key; operation=cluster range-partitions + sorts by it (the
-    * write-ready multi-dimensional clustering).
-    */
-  final case class LayoutOp(params: Map[String, Any])                               extends OpSpec
-  /** Inline expectation gate (ecommerce_pipeline.yaml:28-39 `validate` op):
-    * rows satisfying `expression` must be ≥ min_ratio, else the pipeline
-    * fails. NOTE: this is an action (it counts), by design — validation is a
-    * barrier in the reference lifecycle too (pipeline.py:234-256).
-    */
-  final case class Validate(params: Map[String, Any])                               extends OpSpec
+  sealed trait BoundOp extends OpSpec { def params: Map[String, Any]; def bound: Bound }
+  final case class FeatureEngineering(params: Map[String, Any])(val bound: Bound)   extends BoundOp
+  final case class TimeSeriesProcessing(params: Map[String, Any])(val bound: Bound) extends BoundOp
+  final case class TextProcessing(params: Map[String, Any])(val bound: Bound)       extends BoundOp
+  final case class MultimodalOp(params: Map[String, Any])(val bound: Bound)         extends BoundOp
+  final case class QualityMonitorOp(params: Map[String, Any])(val bound: Bound)     extends BoundOp
+  final case class Scd2Op(params: Map[String, Any])(val bound: Bound)               extends BoundOp
+  final case class LayoutOp(params: Map[String, Any])(val bound: Bound)             extends BoundOp
+  final case class Validate(params: Map[String, Any])(val bound: Bound)             extends BoundOp
   /** In-run result cache (reference performance/cache.py:98-256; SURVEY §4
     * scopes CROSS-run caching out — `df.persist` is the Spark-native
     * in-run equivalent). `storageLevel` is any
@@ -97,6 +76,9 @@ object OpSpec {
     * executor storage past its run.
     */
   final case class CacheOp(storageLevel: String = "MEMORY_AND_DISK")                 extends OpSpec
+
+  /** A bound op's Spark half: (frame, table catalog) => frame. */
+  type Bound = (DataFrame, String => DataFrame) => DataFrame
 
   /** One window-function application inside a WindowOp
     * (spark_processor.py:244-263 function specs). */
@@ -133,15 +115,15 @@ object OpCompiler {
     def rowsDropped: Long = rowsIn - rowsOut
   }
 
-  /** Compile an op list WITH stage-attrition accounting: a
+  /** Compile an op list WITH stage-attrition accounting: a named
     * `Dataset.observe` node (count + optional weight sum) is threaded
     * before the first op and after every op, so the per-stage in/out
     * counts ride the SAME action that executes the chain — zero extra
     * corpus passes, the `observe()` production shape. Returns the
-    * instrumented output frame and a `report()` thunk valid after ONE
-    * action has executed on (a descendant of) that frame; the report is a
-    * |ops|-row driver-local frame (stage, op, rows_in, rows_out,
-    * rows_dropped, weight_in, weight_out).
+    * instrumented output frame and the [[Attrition]] report, valid after
+    * ONE action has executed on (a descendant of) that frame; the report
+    * is |ops| rows (stage, op, rows_in, rows_out, rows_dropped, weight_in,
+    * weight_out).
     *
     * `weightCol` (e.g. tokens/chars) is summed as a long wherever the
     * column exists in the schema at that stage boundary — stages that drop
@@ -150,989 +132,834 @@ object OpCompiler {
   def compileObserved(ops: Seq[OpSpec], tables: String => DataFrame,
                       caches: scala.collection.mutable.Buffer[DataFrame],
                       weightCol: Option[String])(
-      df: DataFrame): (DataFrame, () => Seq[StageAttrition]) = {
+      df: DataFrame): (DataFrame, Attrition) = {
     import org.apache.spark.sql.functions._
-    val observations = scala.collection.mutable.ArrayBuffer.empty[
-      (org.apache.spark.sql.Observation, Boolean)] // (obs, hasWeight)
+    val prefix = s"graft_attrition_${java.util.UUID.randomUUID().toString.take(8)}_"
+    val hasWeight = scala.collection.mutable.ArrayBuffer.empty[Boolean]
     def instrument(d: DataFrame): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
+      val name = s"$prefix${hasWeight.size}"
       val withW = weightCol.filter(d.columns.contains)
-      observations += ((obs, withW.isDefined))
+      hasWeight += withW.isDefined
       withW match {
-        case Some(w) => d.observe(obs, count(lit(1)).as("rows"),
-          sum(col(w).cast("long")).as("weight"))
-        case None    => d.observe(obs, count(lit(1)).as("rows"))
+        case Some(w) => d.observe(name, count(lit(1)).as("rows"), sum(col(w).cast("long")).as("weight"))
+        case None    => d.observe(name, count(lit(1)).as("rows"))
       }
     }
-    val out = ops.foldLeft(instrument(df))((d, op) =>
-      instrument(applyOp(d, op, tables, caches)))
-    val report = () => {
-      val vals: Seq[(Long, Option[Long])] = observations.toSeq.map { case (obs, hasW) =>
-        val row = org.apache.spark.sql.GraftColumnBridge.observationRow(obs)
-          .getOrElse(throw new IllegalStateException(
+    val out = ops.foldLeft(instrument(df))((d, op) => instrument(applyOp(d, op, tables, caches)))
+    (out, new Attrition(df.sparkSession, prefix, ops.map(_.getClass.getSimpleName), hasWeight.toSeq))
+  }
+
+  /** The stage report of [[compileObserved]]. It keeps, per observe node,
+    * the metrics of the LAST query that ran it: eager actions inside ops
+    * run the upstream nodes too, and a query whose plan dropped a node (an
+    * empty relation propagated at plan or run time, a zero limit) simply
+    * does not report it. (Spark's `Observation` is not used: it completes
+    * on the first query whose plan holds the node, with a schema-less empty
+    * row when that query never ran it.)
+    * Listening ends at the first report or at [[close]].
+    */
+  final class Attrition private[core] (spark: org.apache.spark.sql.SparkSession, prefix: String,
+                                       labels: Seq[String], hasWeight: Seq[Boolean])
+    extends (() => Seq[StageAttrition]) with AutoCloseable {
+    private val latest = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
+    private val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.observedMetrics.foreach { case (n, r) => if (n.startsWith(prefix)) latest.put(n, r) }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+
+    def close(): Unit = spark.listenerManager.unregister(listener)
+
+    def apply(): Seq[StageAttrition] = {
+      org.apache.spark.sql.GraftColumnBridge.drainListeners(spark)
+      close()
+      val vals = hasWeight.indices.map { i =>
+        val row = Option(latest.get(s"$prefix$i")).getOrElse(throw new IllegalStateException(
           "attrition report requested before any action executed the instrumented chain"))
-        val rows = row.getLong(row.fieldIndex("rows"))
-        val weight =
-          if (!hasW) None
-          else {
-            val i = row.fieldIndex("weight")
-            if (row.isNullAt(i)) None else Some(row.getLong(i))
-          }
-        (rows, weight)
+        val weight = if (!hasWeight(i) || row.isNullAt(1)) None else Some(row.getLong(1))
+        (row.getLong(0), weight)
       }
-      ops.zipWithIndex.map { case (op, i) =>
-        StageAttrition(i + 1, op.getClass.getSimpleName,
-          vals(i)._1, vals(i + 1)._1, vals(i)._2, vals(i + 1)._2)
+      labels.indices.map { i =>
+        StageAttrition(i + 1, labels(i), vals(i)._1, vals(i + 1)._1, vals(i)._2, vals(i + 1)._2)
       }
     }
-    (out, report)
   }
 
   def applyOp(df: DataFrame, op: OpSpec, tables: String => DataFrame = null,
-              caches: scala.collection.mutable.Buffer[DataFrame] = null): DataFrame = op match {
-    case FilterCondition(c)            => Relational.filterCondition(df, c)
-    case FilterColumn(c, o, v)         => Relational.filterColumn(df, c, o, v)
-    case Select(cols, excl)            => Relational.select(df, cols, excl)
-    case Rename(m)                     => Relational.rename(df, m)
-    case Cast(m)                       => Relational.cast(df, m)
-    case FillNull(c, m, v, ob, pb)     => Relational.fillNull(df, c, m, v, ob, pb)
-    case Calculate(c, e)               => Relational.calculate(df, c, e)
-    case ExtractDateParts(c, y, m, d, w) => Relational.extractDateParts(df, c, y, m, d, w)
-    case RegexExtract(c, p, g)         => Relational.regexExtract(df, c, p, g)
-    case StringOperation(c, o, ov, nv) => Relational.stringOperation(df, c, o, ov, nv)
-    case Aggregate(g, a)               => Relational.aggregate(df, g, a)
-    case Join(rt, on, cond, jt, bc)    =>
-      require(tables != null, "Join op requires a table catalog")
-      Relational.join(df, tables(rt), on, cond, jt, bc)
-    case Sort(c, a)                    => Relational.sort(df, c, a)
-    case Limit(n)                      => df.limit(n)
-    case Sample(f, seed)               => df.sample(withReplacement = false, f, seed)
-    case Deduplicate(s, o, k)          => Relational.deduplicate(df, s, o, k)
-    case Clean(ops2, nulls)            => Relational.clean(df, ops2, nulls)
-    case Pivot(g, p, v, f, pv)         => Relational.pivot(df, g, p, v, f, pv)
-    case Melt(id, vv, vn, valn)        => Relational.melt(df, id, vv, vn, valn)
-    case w: WindowOp                   => graft.functions.WindowLib.applyWindowOp(df, w)
-    case CustomSql(q, tv)              => Relational.customSql(df, q, tv)
-    case CacheOp(level)                =>
-      val sl = try org.apache.spark.storage.StorageLevel.fromString(level.trim.toUpperCase) catch {
-        case _: IllegalArgumentException =>
-          throw new IllegalArgumentException(
-            s"cache op: unknown storage_level '$level' (use MEMORY_ONLY, MEMORY_AND_DISK, DISK_ONLY, ..._SER, ..._2, NONE)")
-      }
-      val cached = df.persist(sl)
-      if (caches != null) caches += cached
-      cached
-    case Sequence(ops2)                => ops2.foldLeft(df)((d, o) => applyOp(d, o, tables, caches))
-    case FeatureEngineering(p)         => applyFeatureEngineering(df, p)
-    case TimeSeriesProcessing(p)       => applyTimeSeries(df, p)
-    case Validate(p)                   => applyValidate(df, p)
-    case TextProcessing(p)             => applyTextProcessing(df, p, tables)
-    case MultimodalOp(p)               => applyMultimodal(df, p)
-    case QualityMonitorOp(p)           => applyQualityMonitor(df, p)
-    case Scd2Op(p)                     =>
-      val keys = seqOf(p, "keys"); val tracked = seqOf(p, "tracked")
-      val ts = s(p, "ts_col", "ts")
-      s(p, "operation", "apply") match {
-        case "init"  => graft.ops.Scd.scd2Init(df, keys, tracked, ts)
-        case "apply" => graft.ops.Scd.scd2Apply(df, tables(s(p, "updates_table")),
-          keys, tracked, ts, seqOf(p, "order_by"))
-        case "cdc_apply" => // Type-1 CDC merge: df = snapshot, changes from catalog
-          graft.ops.Scd.applyCdc(df, tables(s(p, "changes_table")), keys,
-            s(p, "op_col", "op"), s(p, "seq_col", "seq"))
-        case other   => throw new IllegalArgumentException(s"Unknown scd2 operation: $other")
-      }
-    case LayoutOp(p)                   =>
-      val cols = seqOf(p, "columns"); val bits = s(p, "bits", "8").toInt
-      s(p, "operation", "zorder_key") match {
-        case "zorder_key" => graft.sources.Layout.addZOrderKey(df, cols, bits,
-          s(p, "key_col", "zkey"))
-        case "cluster"    => graft.sources.Layout.clusterByZOrder(df, cols, bits,
-          s(p, "partitions", "0").toInt, s(p, "key_col", "zkey"))
-        case other        => throw new IllegalArgumentException(s"Unknown layout operation: $other")
-      }
+              caches: scala.collection.mutable.Buffer[DataFrame] = null): DataFrame = {
+    val catalog: String => DataFrame =
+      if (tables != null) tables
+      else name => throw new IllegalArgumentException(
+        s"${op.getClass.getSimpleName} needs table '$name' but no table catalog was given")
+    op match {
+      case FilterCondition(c)            => Relational.filterCondition(df, c)
+      case FilterColumn(c, o, v)         => Relational.filterColumn(df, c, o, v)
+      case Select(cols, excl)            => Relational.select(df, cols, excl)
+      case Rename(m)                     => Relational.rename(df, m)
+      case Cast(m)                       => Relational.cast(df, m)
+      case FillNull(c, m, v, ob, pb)     => Relational.fillNull(df, c, m, v, ob, pb)
+      case Calculate(c, e)               => Relational.calculate(df, c, e)
+      case ExtractDateParts(c, y, m, d, w) => Relational.extractDateParts(df, c, y, m, d, w)
+      case RegexExtract(c, p, g)         => Relational.regexExtract(df, c, p, g)
+      case StringOperation(c, o, ov, nv) => Relational.stringOperation(df, c, o, ov, nv)
+      case Aggregate(g, a)               => Relational.aggregate(df, g, a)
+      case Join(rt, on, cond, jt, bc)    => Relational.join(df, catalog(rt), on, cond, jt, bc)
+      case Sort(c, a)                    => Relational.sort(df, c, a)
+      case Limit(n)                      => df.limit(n)
+      case Sample(f, seed)               => df.sample(withReplacement = false, f, seed)
+      case Deduplicate(s, o, k)          => Relational.deduplicate(df, s, o, k)
+      case Clean(ops2, nulls)            => Relational.clean(df, ops2, nulls)
+      case Pivot(g, p, v, f, pv)         => Relational.pivot(df, g, p, v, f, pv)
+      case Melt(id, vv, vn, valn)        => Relational.melt(df, id, vv, vn, valn)
+      case w: WindowOp                   => graft.functions.WindowLib.applyWindowOp(df, w)
+      case CustomSql(q, tv)              => Relational.customSql(df, q, tv)
+      case CacheOp(level)                =>
+        val cached = df.persist(storageLevel(level))
+        if (caches != null) caches += cached
+        cached
+      case Sequence(ops2)                => ops2.foldLeft(df)((d, o) => applyOp(d, o, tables, caches))
+      case b: BoundOp                    => b.bound(df, catalog)
+    }
   }
 
-  // ------------------------------------------------- dynamic-param dispatch
+  /** A `cache` op's storage level, checked when the op is parsed. */
+  def storageLevel(level: String): org.apache.spark.storage.StorageLevel =
+    try org.apache.spark.storage.StorageLevel.fromString(level.trim.toUpperCase) catch {
+      case _: IllegalArgumentException =>
+        throw new IllegalArgumentException(
+          s"cache op: unknown storage_level '$level' (use MEMORY_ONLY, MEMORY_AND_DISK, DISK_ONLY, ..._SER, ..._2, NONE)")
+    }
 
-  private def s(p: Map[String, Any], k: String, dflt: String = null): String =
-    p.get(k).map(_.toString).getOrElse(dflt)
+  // ------------------------------------------------------------- binders
+  //
+  // Each family below is a binder: it does every read and check through
+  // its Params (no Spark) and returns the closure that does the Spark work.
+  // PipelineConfig.parseOp runs it inside Pipeline.fromYaml; OpsDoc runs it
+  // in recording mode to render docs/OPS.md.
 
-  private def seqOf(p: Map[String, Any], k: String): Seq[String] = p.get(k) match {
-    case Some(l: java.util.List[_])            => scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.map(_.toString).toSeq
-    case Some(l: Seq[_])                       => l.map(_.toString)
-    case Some(v)                               => Seq(v.toString)
-    case None                                  => Nil
-  }
+  private type Arm = Params => Bound
 
-  private def intSeq(p: Map[String, Any], k: String): Seq[Int] = seqOf(p, k).map(_.toInt)
-
-  /** Prototype centroid ids from `centroid_ids` — accepts a YAML list OR
-    * a comma string, via seqOf's element-wise list handling (an earlier
-    * draft read the param through s(), which stringifies a java List to
-    * "[0, 10]" and the bracketed ids silently matched nothing — a
-    * round-12 review catch). Empty = no pinning (Lloyd fit).
-    */
-  private def centroidIds(p: Map[String, Any]): Seq[String] =
-    seqOf(p, "centroid_ids").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-
-  /** Prototype centroids for proto_prune / d4_select: a `loadPath` wins
-    * outright (YESTERDAY'S FIT — the fit-once/apply-everywhere discipline
-    * of langid/ppl/dsir/pq, VERDICT r12 #5); else non-empty `ids` pins
-    * the centroids to data rows (matched as strings, ordered by id) —
-    * deterministic AND replayable by a plain SQL oracle; else a
-    * hash-gated id-sorted driver-Lloyd fit on the frame (the
-    * Prototypes.protoFit protocol). A non-null `savePath` persists
-    * whatever was fitted/pinned for tomorrow (the pq_encode
-    * model_path/save_model_path pattern).
-    */
-  private def protoCentroidsFor(df: org.apache.spark.sql.DataFrame, ids: Seq[String],
-                                idCol: String, vecCol: String,
-                                k: Int, seed: Long, maxTrainRows: Int,
-                                loadPath: String = null,
-                                savePath: String = null): Array[Array[Double]] = {
-    import org.apache.spark.sql.functions.col
-    if (loadPath != null) return graft.vec.Prototypes.loadCentroids(df.sparkSession, loadPath)
-    val cents =
-      if (ids.nonEmpty) {
-        val rows = df.filter(col(idCol).cast("string").isin(ids: _*))
-          .orderBy(col(idCol)).select(col(vecCol)).collect()
-        require(rows.length == ids.distinct.length,
-          s"proto centroids: ${ids.distinct.length} ids given, ${rows.length} rows matched (${ids.mkString(",")})")
-        rows.map(_.getSeq[Any](0).map {
-          case f: java.lang.Float => f.toDouble
-          case n: java.lang.Number => n.doubleValue()
-        }.toArray)
-      } else graft.vec.Prototypes.protoFit(df, idCol, vecCol, k, seed, maxTrainRows)
-    if (savePath != null) graft.vec.Prototypes.saveCentroids(df.sparkSession, cents, savePath)
-    cents
-  }
-
-  private def pairs(p: Map[String, Any], k: String): Seq[(String, String)] = p.get(k) match {
-    case Some(m: java.util.Map[_, _]) =>
-      scala.jdk.CollectionConverters.MapHasAsScala(m).asScala.toSeq.flatMap {
-        case (c, fns: java.util.List[_]) =>
-          scala.jdk.CollectionConverters.ListHasAsScala(fns).asScala.map(f => c.toString -> f.toString)
-        case (c, f) => Seq(c.toString -> f.toString)
-      }
-    case Some(m: Map[_, _]) => m.toSeq.map { case (c, f) => c.toString -> f.toString }
-    case _                  => Nil
-  }
+  /** Keys several ops share, each with its one default. */
+  private def textCol(a: Params): String = a.str("text_column", "text")
+  private def idCol(a: Params): String = a.str("id_column", "doc_id")
+  private def keyCol(a: Params, id: String): String = a.str("key_column", id)
+  private def salt(a: Params): Int = a.int("salt", 42)
+  private def vecCol(a: Params): String = a.str("vector_column", "embedding")
+  private def vecId(a: Params): String = a.str("id_column", "vec_id")
+  private def payloadCol(a: Params): String = a.str("payload_column", "payload")
+  private def batchSize(a: Params): Int = a.int("batch_size", 256)
+  private def gramOrders(a: Params): Seq[Int] = a.ints("gram_orders", Seq(1, 2))
 
   /** feature_engineering op (iot_pipeline.yaml:22-44 shape): `operation`
     * selects the FeatureLib member.
     */
-  private def applyFeatureEngineering(df: DataFrame, p: Map[String, Any]): DataFrame = {
+  def featureEngineering(a: Params): Bound = {
     import graft.functions.FeatureLib
-    s(p, "operation", "ratio") match {
-      case "ratio" =>
-        FeatureLib.ratioFeature(df, s(p, "name"), s(p, "numerator"), s(p, "denominator"),
-          s(p, "div_by_zero", "null"))
-      case "interactions" =>
-        FeatureLib.interactionFeatures(df, seqOf(p, "columns"), s(p, "op", "multiply"),
-          s(p, "max_interactions", "20").toInt)
-      case "polynomial" =>
-        FeatureLib.polynomialFeatures(df, seqOf(p, "columns"), s(p, "degree", "2").toInt,
-          s(p, "interaction_only", "false").toBoolean)
-      case "binning" =>
-        val c = s(p, "column"); val bins = s(p, "bins", "10").toInt
-        s(p, "method", "uniform") match {
-          case "uniform"  => FeatureLib.binUniform(df, c, bins)
-          case "quantile" => FeatureLib.binQuantile(df, c, bins)
-          case "kmeans"   => FeatureLib.binKmeans(df, c, bins)
-          case "quantile_grouped" =>
+    a.select[Arm]("operation", "ratio")(
+      "ratio" -> { a =>
+        val (name, num, den) = (a.req("name"), a.req("numerator"), a.req("denominator"))
+        val divByZero = a.str("div_by_zero", "null")
+        (df, _) => FeatureLib.ratioFeature(df, name, num, den, divByZero) },
+      "interactions" -> { a =>
+        val (cols, op, max) = (a.list("columns"), a.str("op", "multiply"), a.int("max_interactions", 20))
+        (df, _) => FeatureLib.interactionFeatures(df, cols, op, max) },
+      "polynomial" -> { a =>
+        val (cols, degree, only) = (a.list("columns"), a.int("degree", 2), a.bool("interaction_only", false))
+        (df, _) => FeatureLib.polynomialFeatures(df, cols, degree, only) },
+      "binning" -> { a =>
+        val c = a.req("column"); val bins = a.int("bins", 10)
+        a.select[Arm]("method", "uniform")(
+          "uniform"  -> { _ => (df, _) => FeatureLib.binUniform(df, c, bins) },
+          "quantile" -> { _ => (df, _) => FeatureLib.binQuantile(df, c, bins) },
+          "kmeans"   -> { _ => (df, _) => FeatureLib.binKmeans(df, c, bins) },
+          "quantile_grouped" -> { a =>
             // per-group cuts (CCNet-style head/middle/tail when labels given)
-            FeatureLib.binQuantileGrouped(df, c, bins, seqOf(p, "group_by"),
-              outCol = s(p, "output_column"),
-              labels = { val l = seqOf(p, "labels"); if (l.isEmpty) null else l })
-          case m => throw new IllegalArgumentException(s"Unknown binning method: $m")
-        }
-      case "onehot"    => FeatureLib.encodeOneHot(df, s(p, "column"), seqOf(p, "values"))
-      case "frequency" => FeatureLib.encodeFrequency(df, s(p, "column"))
-      case "label"     => FeatureLib.encodeLabel(df, s(p, "column"))
-      case "target" =>
-        FeatureLib.encodeTarget(df, s(p, "column"), s(p, "target_column"),
-          s(p, "smoothing", "20.0").toDouble)
-      case "scaling" =>
-        FeatureLib.scaleFeatures(df, seqOf(p, "columns"), s(p, "method", "zscore"),
-          seqOf(p, "group_by"))
-      case "winsorize" =>
-        FeatureLib.winsorize(df, s(p, "column"), s(p, "lower", "0.05").toDouble,
-          s(p, "upper", "0.95").toDouble, seqOf(p, "group_by"))
-      case "aggregation" =>
-        FeatureLib.aggregationFeatures(df, seqOf(p, "group_by"), pairs(p, "aggregations"))
-      case "text_stats" => FeatureLib.textBasicStats(df, s(p, "column"))
-      case "top_keywords" =>
-        FeatureLib.textTopKeywords(df, s(p, "column", "text"), s(p, "id_column", "doc_id"),
-          s(p, "k", "5").toInt, s(p, "vocab_size", "1000").toInt)
-      case "clustering" => // reference create_clustering_features: kmeans | dbscan
-        s(p, "algorithm", "kmeans") match {
-          case "kmeans" =>
-            FeatureLib.clusteringFeatures(df, seqOf(p, "columns"), s(p, "n_clusters", "5").toInt)
-          case "dbscan" =>
-            graft.functions.Dbscan.clusteringFeaturesDbscan(df, seqOf(p, "columns"),
-              s(p, "eps", "0.5").toDouble, s(p, "min_samples", "5").toInt, s(p, "id_column", "id"))
-          case a => throw new IllegalArgumentException(s"Unknown clustering algorithm: $a")
-        }
-      case other => throw new IllegalArgumentException(s"Unknown feature_engineering operation: $other")
-    }
+            val (groups, out, labels) = (a.list("group_by"), a.opt("output_column").orNull, a.list("labels"))
+            (df, _) => FeatureLib.binQuantileGrouped(df, c, bins, groups, outCol = out,
+              labels = if (labels.isEmpty) null else labels) })(a) },
+      "onehot" -> { a => val (c, values) = (a.req("column"), a.list("values"))
+        (df, _) => FeatureLib.encodeOneHot(df, c, values) },
+      "frequency" -> { a => val c = a.req("column"); (df, _) => FeatureLib.encodeFrequency(df, c) },
+      "label" -> { a => val c = a.req("column"); (df, _) => FeatureLib.encodeLabel(df, c) },
+      "target" -> { a =>
+        val (c, t, smoothing) = (a.req("column"), a.req("target_column"), a.double("smoothing", 20.0))
+        (df, _) => FeatureLib.encodeTarget(df, c, t, smoothing) },
+      "scaling" -> { a =>
+        val (cols, method, groups) = (a.list("columns"), a.str("method", "zscore"), a.list("group_by"))
+        (df, _) => FeatureLib.scaleFeatures(df, cols, method, groups) },
+      "winsorize" -> { a =>
+        val (c, lo, hi) = (a.req("column"), a.double("lower", 0.05), a.double("upper", 0.95))
+        val groups = a.list("group_by")
+        (df, _) => FeatureLib.winsorize(df, c, lo, hi, groups) },
+      "aggregation" -> { a => val (groups, aggs) = (a.list("group_by"), a.pairs("aggregations"))
+        (df, _) => FeatureLib.aggregationFeatures(df, groups, aggs) },
+      "text_stats" -> { a => val c = a.req("column"); (df, _) => FeatureLib.textBasicStats(df, c) },
+      "top_keywords" -> { a =>
+        val (c, id) = (a.str("column", "text"), a.str("id_column", "doc_id"))
+        val (k, vocab) = (a.int("k", 5), a.int("vocab_size", 1000))
+        (df, _) => FeatureLib.textTopKeywords(df, c, id, k, vocab) },
+      "clustering" -> { a => // reference create_clustering_features: kmeans | dbscan
+        val cols = a.list("columns")
+        a.select[Arm]("algorithm", "kmeans")(
+          "kmeans" -> { a => val n = a.int("n_clusters", 5)
+            (df, _) => FeatureLib.clusteringFeatures(df, cols, n) },
+          "dbscan" -> { a =>
+            val (eps, minSamples, id) = (a.double("eps", 0.5), a.int("min_samples", 5), a.str("id_column", "id"))
+            (df, _) => graft.functions.Dbscan.clusteringFeaturesDbscan(df, cols, eps, minSamples, id) })(a)
+      })(a)
   }
 
   /** time_series_processing / windowed_aggregation ops
     * (finance_pipeline.yaml:26-35, streaming_pipeline.yaml:45-63 shapes).
     */
-  private def applyTimeSeries(df: DataFrame, p: Map[String, Any]): DataFrame = {
+  def timeSeries(a: Params): Bound = {
     import graft.functions.TimeSeriesLib
-    val ts = Option(s(p, "time_column")).getOrElse(s(p, "ts_col", "ts"))
-    val keys = seqOf(p, "keys") ++ seqOf(p, "group_by")
-    s(p, "operation", "resample") match {
-      case "resample" =>
-        val aggs = { val a = pairs(p, "aggregations"); if (a.nonEmpty) a else Seq(s(p, "value_column", "value") -> "avg") }
-        TimeSeriesLib.resample(df, ts, s(p, "window_size", s(p, "freq", "1 hour")), aggs, keys)
-      case "resample_grid" =>
-        TimeSeriesLib.resampleWithGrid(df, ts, s(p, "freq", "1 hour"), pairs(p, "aggregations"),
-          keys, s(p, "fill", "none"))
-      case "rolling" =>
-        TimeSeriesLib.rollingStats(df, s(p, "column"), s(p, "window", "5").toInt,
-          seqOf(p, "stats"), s(p, "order_by", ts), keys, s(p, "min_periods", "1").toInt)
-      case "lags" =>
-        TimeSeriesLib.calculateLags(df, s(p, "column"), intSeq(p, "lags"), s(p, "order_by", ts), keys)
-      case "differences" =>
-        TimeSeriesLib.calculateDifferences(df, s(p, "column"), intSeq(p, "periods"), s(p, "order_by", ts), keys)
-      case "fill_missing" =>
-        TimeSeriesLib.fillMissing(df, s(p, "column"), s(p, "method", "ffill"), s(p, "order_by", ts),
-          keys, p.getOrElse("value", null))
-      case "outliers" =>
-        TimeSeriesLib.flagOutliers(df, s(p, "column"), s(p, "method", "zscore"),
-          s(p, "threshold", "3.0").toDouble, keys, s(p, "order_by", ts), s(p, "window", "20").toInt)
-      case "time_features" => TimeSeriesLib.timeFeatures(df, ts)
-      case "trend" =>
-        TimeSeriesLib.trendFeatures(df, s(p, "column"), s(p, "order_by", ts), keys)
-      case "twap" =>
-        require(keys.nonEmpty, "twap requires keys/group_by (the entity key)")
-        TimeSeriesLib.timeWeightedAvg(df, s(p, "column", "value"), ts, keys,
-          seqOf(p, "order_by"))
-      case "volume_anomalies" =>
-        TimeSeriesLib.volumeAnomalies(df, ts, s(p, "period", "day"), keys,
-          s(p, "threshold", "3.5").toDouble)
-      case "interarrival" =>
-        require(keys.nonEmpty, "interarrival requires keys/group_by (the entity key)")
+    val ts = a.str("time_column", a.str("ts_col", "ts"))
+    val keys = a.list("keys") ++ a.list("group_by")
+    def orderCol(a: Params): String = a.str("order_by", ts)
+    def column(a: Params): String = a.req("column")
+    def requireKeys(op: String): Unit = a.require(keys.nonEmpty, s"$op requires keys/group_by (the entity key)")
+    a.select[Arm]("operation", "resample")(
+      "resample" -> { a =>
+        val pairs = a.pairs("aggregations"); val value = a.str("value_column", "value")
+        val aggs = if (pairs.nonEmpty) pairs else Seq(value -> "avg")
+        val size = a.str("window_size", a.str("freq", "1 hour"))
+        (df, _) => TimeSeriesLib.resample(df, ts, size, aggs, keys) },
+      "resample_grid" -> { a =>
+        val (freq, aggs, fill) = (a.str("freq", "1 hour"), a.pairs("aggregations"), a.str("fill", "none"))
+        (df, _) => TimeSeriesLib.resampleWithGrid(df, ts, freq, aggs, keys, fill) },
+      "rolling" -> { a =>
+        val (c, w, stats, o) = (column(a), a.int("window", 5), a.list("stats"), orderCol(a))
+        val minPeriods = a.int("min_periods", 1)
+        (df, _) => TimeSeriesLib.rollingStats(df, c, w, stats, o, keys, minPeriods) },
+      "lags" -> { a => val (c, lags, o) = (column(a), a.ints("lags"), orderCol(a))
+        (df, _) => TimeSeriesLib.calculateLags(df, c, lags, o, keys) },
+      "differences" -> { a => val (c, periods, o) = (column(a), a.ints("periods"), orderCol(a))
+        (df, _) => TimeSeriesLib.calculateDifferences(df, c, periods, o, keys) },
+      "fill_missing" -> { a =>
+        val (c, method, o, value) = (column(a), a.str("method", "ffill"), orderCol(a), a.any("value"))
+        (df, _) => TimeSeriesLib.fillMissing(df, c, method, o, keys, value) },
+      "outliers" -> { a =>
+        val (c, method, th) = (column(a), a.str("method", "zscore"), a.double("threshold", 3.0))
+        val (o, w) = (orderCol(a), a.int("window", 20))
+        (df, _) => TimeSeriesLib.flagOutliers(df, c, method, th, keys, o, w) },
+      "time_features" -> { _ => (df, _) => TimeSeriesLib.timeFeatures(df, ts) },
+      "trend" -> { a => val (c, o) = (column(a), orderCol(a))
+        (df, _) => TimeSeriesLib.trendFeatures(df, c, o, keys) },
+      "twap" -> { a =>
+        requireKeys("twap")
+        val (c, o) = (a.str("column", "value"), a.list("order_by"))
+        (df, _) => TimeSeriesLib.timeWeightedAvg(df, c, ts, keys, o) },
+      "volume_anomalies" -> { a => val (period, th) = (a.str("period", "day"), a.double("threshold", 3.5))
+        (df, _) => TimeSeriesLib.volumeAnomalies(df, ts, period, keys, th) },
+      "interarrival" -> { a =>
+        requireKeys("interarrival")
         // scalable=true: segmented-pair gaps + mergeable approx median —
         // the bot-dominated-log variant (exact median needs every gap of a
         // key in one buffer; see interArrivalStats' scaladoc)
-        if (s(p, "scalable", "false").toBoolean)
-          TimeSeriesLib.interArrivalStatsScalable(df, ts, keys, seqOf(p, "order_by"),
-            s(p, "accuracy", "10000").toInt)
-        else TimeSeriesLib.interArrivalStats(df, ts, keys, seqOf(p, "order_by"))
-      case "transitions" =>
-        require(seqOf(p, "order_by").nonEmpty && keys.nonEmpty,
+        val (scalable, o, accuracy) = (a.bool("scalable", false), a.list("order_by"), a.int("accuracy", 10000))
+        (df, _) =>
+          if (scalable) TimeSeriesLib.interArrivalStatsScalable(df, ts, keys, o, accuracy)
+          else TimeSeriesLib.interArrivalStats(df, ts, keys, o) },
+      "transitions" -> { a =>
+        val (state, o) = (a.str("state_column", "event_type"), a.list("order_by"))
+        a.require(o.nonEmpty && keys.nonEmpty,
           "transitions requires params.order_by (total per-entity order) and keys/group_by")
-        TimeSeriesLib.transitionMatrix(df, s(p, "state_column", "event_type"),
-          seqOf(p, "order_by"), keys)
-      case "trending" =>
-        require(s(p, "item_column") != null, "trending requires params.item_column")
-        TimeSeriesLib.trendingTopK(df, ts, s(p, "item_column"),
-          s(p, "k", "10").toInt, s(p, "period", "day"))
-      case "active_users" =>
-        require(s(p, "user_column") != null, "active_users requires params.user_column")
-        TimeSeriesLib.activeUsers(df, s(p, "user_column"), ts, intSeq(p, "windows") match {
-          case Nil => Seq(7, 28); case ws => ws
-        })
-      case "cohort_retention" =>
-        require(s(p, "user_column") != null,
-          "cohort_retention requires params.user_column")
-        TimeSeriesLib.cohortRetention(df, s(p, "user_column"), ts, s(p, "period", "week"))
-      case "funnel" =>
-        require(s(p, "user_column") != null && seqOf(p, "steps").nonEmpty,
-          "funnel requires params.user_column and params.steps (ordered step values)")
-        TimeSeriesLib.funnel(df, s(p, "user_column"), ts,
-          s(p, "step_column", "event_type"), seqOf(p, "steps"))
-      case "smooth" =>
-        s(p, "method", "moving_average") match {
-          case "moving_average" =>
-            TimeSeriesLib.smoothMovingAverage(df, s(p, "column"), s(p, "window", "5").toInt,
-              s(p, "order_by", ts), keys)
-          case "exponential" =>
-            TimeSeriesLib.smoothEwm(df, s(p, "column"), s(p, "alpha", "0.3").toDouble,
-              s(p, "order_by", ts), keys)
-          case "savgol" =>
-            TimeSeriesLib.smoothSavgol(df, s(p, "column"), s(p, "window", "7").toInt,
-              s(p, "polyorder", "2").toInt, s(p, "order_by", ts), keys)
-        }
-      case "changepoints" =>
-        TimeSeriesLib.detectChangepoints(df, s(p, "column"), s(p, "window", "10").toInt,
-          s(p, "order_by", ts), keys)
-      case "decompose" =>
-        TimeSeriesLib.seasonalDecompose(df, s(p, "column"), s(p, "period", "24").toInt,
-          s(p, "order_by", ts), keys, s(p, "model", "additive"))
-      case "sessionize" =>
-        TimeSeriesLib.sessionize(df, ts, s(p, "gap_seconds", "1800").toLong, keys,
-          s(p, "session_col", "session_id"))
-      case "session_stats" =>
-        TimeSeriesLib.sessionStats(df, ts, s(p, "gap_seconds", "1800").toLong, keys,
-          pairs(p, "aggregations"))
-      case other => throw new IllegalArgumentException(s"Unknown time_series operation: $other")
+        (df, _) => TimeSeriesLib.transitionMatrix(df, state, o, keys) },
+      "trending" -> { a =>
+        val (item, k, period) = (a.req("item_column"), a.int("k", 10), a.str("period", "day"))
+        (df, _) => TimeSeriesLib.trendingTopK(df, ts, item, k, period) },
+      "active_users" -> { a => val (user, windows) = (a.req("user_column"), a.ints("windows", Seq(7, 28)))
+        (df, _) => TimeSeriesLib.activeUsers(df, user, ts, windows) },
+      "cohort_retention" -> { a => val (user, period) = (a.req("user_column"), a.str("period", "week"))
+        (df, _) => TimeSeriesLib.cohortRetention(df, user, ts, period) },
+      "funnel" -> { a =>
+        val (user, step, steps) = (a.req("user_column"), a.str("step_column", "event_type"), a.list("steps"))
+        a.require(steps.nonEmpty, "funnel requires params.steps (ordered step values)")
+        (df, _) => TimeSeriesLib.funnel(df, user, ts, step, steps) },
+      "smooth" -> { a =>
+        val c = column(a)
+        a.select[Arm]("method", "moving_average")(
+          "moving_average" -> { a => val (w, o) = (a.int("window", 5), orderCol(a))
+            (df, _) => TimeSeriesLib.smoothMovingAverage(df, c, w, o, keys) },
+          "exponential" -> { a => val (alpha, o) = (a.double("alpha", 0.3), orderCol(a))
+            (df, _) => TimeSeriesLib.smoothEwm(df, c, alpha, o, keys) },
+          "savgol" -> { a => val (w, poly, o) = (a.int("window", 7), a.int("polyorder", 2), orderCol(a))
+            (df, _) => TimeSeriesLib.smoothSavgol(df, c, w, poly, o, keys) })(a) },
+      "changepoints" -> { a => val (c, w, o) = (column(a), a.int("window", 10), orderCol(a))
+        (df, _) => TimeSeriesLib.detectChangepoints(df, c, w, o, keys) },
+      "decompose" -> { a =>
+        val (c, period, o, model) = (column(a), a.int("period", 24), orderCol(a), a.str("model", "additive"))
+        (df, _) => TimeSeriesLib.seasonalDecompose(df, c, period, o, keys, model) },
+      "sessionize" -> { a => val (gap, out) = (a.long("gap_seconds", 1800L), a.str("session_col", "session_id"))
+        (df, _) => TimeSeriesLib.sessionize(df, ts, gap, keys, out) },
+      "session_stats" -> { a => val (gap, aggs) = (a.long("gap_seconds", 1800L), a.pairs("aggregations"))
+        (df, _) => TimeSeriesLib.sessionStats(df, ts, gap, keys, aggs) })(a)
+  }
+
+  /** The Gopher rules (Rae 2021 A1.1) as one binder for gopher_rules,
+    * gopher_filter and the stream gopher_gate: the text and language keys
+    * are named by the caller, the nine thresholds are read once here. With
+    * a language column the two anglocentric rules dispatch per language
+    * (unknown lang → neutral) and min_alpha_ratio/min_stopwords override
+    * the floors uniformly across languages. The frame gains the per-rule
+    * booleans, gopher_keep and gopher_fail_reasons ([[GopherAuditColumns]]).
+    */
+  private[graft] def gopher(a: Params, textKey: String, langKey: String): DataFrame => DataFrame = {
+    import graft.text.TextLib
+    val text = a.str(textKey, "text")
+    val lang = a.opt(langKey)
+    val (minWords, maxWords) = (a.int("min_words", 50), a.int("max_words", 100000))
+    val minMeanWordLen = a.double("min_mean_word_len", 3.0)
+    val maxMeanWordLen = a.double("max_mean_word_len", 10.0)
+    val maxSymbolRatio = a.double("max_symbol_ratio", 0.1)
+    val maxBulletRatio = a.double("max_bullet_ratio", 0.9)
+    val maxEllipsisRatio = a.double("max_ellipsis_ratio", 0.3)
+    val minAlphaRatio = a.double("min_alpha_ratio", 0.8)
+    val minStopwords = a.int("min_stopwords", 2)
+    df => lang match {
+      case Some(l) => TextLib.gopherRulesByLang(df, text, l,
+        TextLib.gopherLangParamsWithFloors(minAlphaRatio, minStopwords),
+        minWords, maxWords, minMeanWordLen, maxMeanWordLen,
+        maxSymbolRatio, maxBulletRatio, maxEllipsisRatio)
+      case None => TextLib.gopherRules(df, text, minWords, maxWords,
+        minMeanWordLen, maxMeanWordLen, maxSymbolRatio, maxBulletRatio,
+        maxEllipsisRatio, minAlphaRatio, minStopwords)
     }
   }
 
-  /** Inline `validate` op: throws when an expectation's pass ratio is below
-    * its min_ratio (this is deliberately an action — see OpSpec.Validate).
+  /** Columns [[gopher]] adds; a gate keeps gopher_keep rows and drops them all. */
+  private[graft] val GopherAuditColumns = Seq("gopher_word_count_ok", "gopher_mean_word_len_ok",
+    "gopher_symbol_ratio_ok", "gopher_bullet_lines_ok", "gopher_ellipsis_lines_ok",
+    "gopher_alpha_words_ok", "gopher_stopwords_ok", "gopher_keep", "gopher_fail_reasons")
+
+  /** The C4 rules (Raffel 2020), shared by c4_rules and c4_filter. */
+  private def c4(a: Params): DataFrame => DataFrame = {
+    val text = textCol(a)
+    val (perLine, sentences) = (a.int("min_words_per_line", 3), a.int("min_sentences", 5))
+    val badwords = a.list("badwords")
+    df => graft.text.TextLib.c4Rules(df, text, perLine, sentences, badwords)
+  }
+
+  /** Prototype centroids for proto_prune / d4_select: `centroids_path`
+    * wins outright (YESTERDAY'S FIT — the fit-once/apply-everywhere
+    * discipline of langid/ppl/dsir/pq, VERDICT r12 #5); else non-empty
+    * `centroid_ids` (a YAML list or a comma string) pins the centroids to
+    * data rows (matched as strings, ordered by id) — deterministic AND
+    * replayable by a plain SQL oracle; else a hash-gated id-sorted
+    * driver-Lloyd fit on the frame (the Prototypes.protoFit protocol). A
+    * `save_centroids_path` persists whatever was fitted/pinned for
+    * tomorrow (the pq_encode model_path/save_model_path pattern).
     */
+  private def protoCentroids(a: Params, idCol: String, vecCol: String): DataFrame => Array[Array[Double]] = {
+    import org.apache.spark.sql.functions.col
+    val ids = a.list("centroid_ids").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val (k, seed, maxTrainRows) = (a.int("k", 64), a.long("seed", 42L), a.int("max_train_rows", 100000))
+    val (loadPath, savePath) = (a.opt("centroids_path"), a.opt("save_centroids_path"))
+    df => loadPath.map(graft.vec.Prototypes.loadCentroids(df.sparkSession, _)).getOrElse {
+      val cents =
+        if (ids.nonEmpty) {
+          val rows = df.filter(col(idCol).cast("string").isin(ids: _*))
+            .orderBy(col(idCol)).select(col(vecCol)).collect()
+          require(rows.length == ids.distinct.length,
+            s"proto centroids: ${ids.distinct.length} ids given, ${rows.length} rows matched (${ids.mkString(",")})")
+          rows.map(_.getSeq[Any](0).map {
+            case f: java.lang.Float => f.toDouble
+            case n: java.lang.Number => n.doubleValue()
+          }.toArray)
+        } else graft.vec.Prototypes.protoFit(df, idCol, vecCol, k, seed, maxTrainRows)
+      savePath.foreach(graft.vec.Prototypes.saveCentroids(df.sparkSession, cents, _))
+      cents
+    }
+  }
+
+  /** MinHash-LSH knobs of near_dedup / near_dedup_against: (shingle_n,
+    * num_hashes, bands, threshold). Without `bands` the band count derives
+    * from the threshold via pickLshParams (the S-curve-optimal LSH shape). */
+  private def minhash(a: Params): (Int, Int, Int, Double) = {
+    val (shingle, hashes, threshold) = (a.int("shingle_n", 3), a.int("num_hashes", 64), a.double("threshold", 0.8))
+    (shingle, hashes, graft.text.Dedup.bandsFor(hashes, threshold, a.optInt("bands")), threshold)
+  }
+
+  /** dup_spans / cut_dup_spans: (text, id, gram_tokens, min_count). */
+  private def spans(a: Params) = (textCol(a), idCol(a), a.int("gram_tokens", 5), a.int("min_count", 2))
+
+  /** The LM scorers' optional reference corpus: (table, text column, vocab size). */
+  private def lmCorpus(a: Params, text: String) =
+    (a.opt("corpus_table"), a.str("corpus_text_column", text), a.int("vocab_size", 50000))
+
+  /** SemDeDup's knobs, shared by semantic_dedup and d4_select. */
+  private def semDedup(a: Params, id: String, vec: String): DataFrame => DataFrame = {
+    val (threshold, nClusters) = (a.double("threshold", 0.95), a.int("n_clusters", 64))
+    val keep = a.str("keep", "far_from_centroid")
+    df => graft.vec.SemDedup.semanticDedup(df, id, vec, threshold = threshold,
+      nClusters = nClusters, keep = keep)
+  }
+
   /** text_processing op: training-data ops dispatched by `operation`.
     * Column params default to the documents-table shape (text / doc_id).
     */
-  private def applyTextProcessing(df: DataFrame, p: Map[String, Any],
-                                  tables: String => DataFrame): DataFrame = {
+  def textProcessing(a: Params): Bound = {
     import org.apache.spark.sql.functions.col
     import graft.text.{Dedup, TextLib}
-    val text = s(p, "text_column", "text")
-    val id = s(p, "id_column", "doc_id")
-    s(p, "operation") match {
-      case "exact_dedup" =>
-        val qc = s(p, "quality_column")
-        if (qc == null) Dedup.exact(df, text, id)
-        else Dedup.exactKeepBest(df, text, id, qc)
-      case "near_dedup" =>
-        // bands omitted → derived from the threshold via pickLshParams
-        // (state the dedup threshold, get the S-curve-optimal LSH shape);
-        // an explicit bands: still wins
-        val ndHashes = s(p, "num_hashes", "64").toInt
-        val ndThreshold = s(p, "threshold", "0.8").toDouble
-        val ndBands = Dedup.bandsFor(ndHashes, ndThreshold, Option(s(p, "bands")).map(_.toInt))
-        val qc = s(p, "quality_column")
-        if (qc == null)
-          Dedup.nearDedup(df, text, id,
-            s(p, "shingle_n", "3").toInt, ndHashes,
-            ndBands, ndThreshold,
-            s(p, "max_bucket_size", "1000").toInt)
-        else // keep-best survivor election (round 11) — exact_dedup parity
-          Dedup.nearDedupKeepBest(df, text, id, qc,
-            s(p, "shingle_n", "3").toInt, ndHashes,
-            ndBands, ndThreshold,
-            s(p, "max_bucket_size", "1000").toInt)
-      case "fuzzy_pairs" => // edit-distance self-join (replaces the frame with pairs)
-        graft.text.Fuzzy.fuzzyPairs(df, id, text,
-          s(p, "max_dist", "2").toInt, s(p, "q", "2").toInt,
-          s(p, "max_gram_df", Long.MaxValue.toString).toLong)
-      case "quality_features" => TextLib.qualityFeatures(df, text)
-      case "quality_score"    => TextLib.qualityScore(df, text)
-      case "rpv2_extras" => // RPV2 residual signals: native unigram
-        // entropy, lorem-ipsum ratio, curly-bracket ratio
-        TextLib.rpv2Extras(df, text)
-      case "soft_dedup" => // reweight-instead-of-drop exact dedup
-        TextLib.softDedupWeights(df, text)
-      case "fix_mojibake" => // ftfy-style one-layer encoding repair, in place
-        df.withColumn(text, TextLib.fixMojibake(col(text)))
-      case "seen_corpus_apply" => // flag/drop against a FROZEN corpus bloom
-        require(s(p, "bloom_path") != null,
-          "seen_corpus_apply requires params.bloom_path (written by Dedup.saveSeenBloom)")
-        val flagged = Dedup.seenCorpusApply(df, text,
-          Dedup.loadSeenBloom(df.sparkSession, s(p, "bloom_path")))
-        if (s(p, "drop", "false").toBoolean)
-          flagged.filter(!col("maybe_seen")).drop("maybe_seen")
-        else flagged
-      case "repetition_signals" => // Gopher A1.1 repetition fractions
-        TextLib.repetitionSignals(df, text, id,
-          s(p, "top_n", "2").toInt, s(p, "dup_n", "5").toInt)
-      case "deflate_ratio" => // compression-ratio quality signal
-        df.withColumn(s(p, "output_column", "deflate_ratio"),
-          graft.expr.DeflateRatio(col(text)))
-      case "lang_id"          => TextLib.langId(df, text)
-      case "lang_id_apply" => // classify against a FROZEN char-n-gram model
-        require(s(p, "model_path") != null,
-          "lang_id_apply requires params.model_path (written by TextLib.saveLangIdModel)")
-        TextLib.langIdApply(df, text,
-          TextLib.loadLangIdModel(df.sparkSession, s(p, "model_path")),
-          s(p, "output_column", "lang_pred"))
-      case "token_counts" =>
-        df.withColumn(s(p, "output_column", "n_tokens"), TextLib.tokenCountWs(col(text)))
-      case "chunk" =>
-        TextLib.chunkDocuments(df, text,
-          s(p, "chunk_size", "512").toInt, s(p, "overlap", "64").toInt)
-      case "fingerprint" =>
-        df.withColumn(s(p, "output_column", "fingerprint"),
-          TextLib.fingerprint(col(text), s(p, "shingle_n", "3").toInt))
-      case "readability" => // Flesch reading-ease + word/sentence/syllable counts
-        TextLib.readability(df, text)
-      case "kwic" => // keyword-in-context occurrences with ±window tokens
-        require(s(p, "term") != null, "kwic requires params.term (the keyword to locate)")
-        TextLib.keywordInContext(df, text, id, s(p, "term"),
-          s(p, "window", "5").toInt)
-      case "pseudonymize" => // salted sha2 tokenization of identifier columns
-        require(seqOf(p, "columns").nonEmpty && s(p, "salt") != null,
-          "pseudonymize requires params.columns and params.salt")
-        graft.functions.CleanLib.pseudonymize(df, seqOf(p, "columns"), s(p, "salt"))
-      case "consolidate_values" => // fold typo-splintered categoricals onto the frequent canonical
-        require(s(p, "column") != null, "consolidate_values requires params.column")
-        graft.text.Fuzzy.consolidateValues(df, s(p, "column"),
-          s(p, "max_dist", "2").toInt, s(p, "output_column"))
-      case "redact_pii" =>
-        df.withColumn(text, TextLib.redactPii(col(text),
-          s(p, "email_token", "<EMAIL>"), s(p, "phone_token", "<PHONE>"), s(p, "ip_token", "<IP>")))
-      case "repetition_ratio" =>
-        df.withColumn(s(p, "output_column", "repetition_ratio"),
-          TextLib.repetitionRatio(col(text), s(p, "shingle_n", "3").toInt))
-      case "normalize_unicode" =>
-        df.withColumn(text, TextLib.normalizeUnicode(col(text), s(p, "form", "NFC")))
-      case "html_to_text" => // strip tags/scripts, decode entities, keep paragraphs
-        df.withColumn(s(p, "output_column", text), TextLib.htmlToText(col(text)))
-      case "pack" =>
-        TextLib.packDocuments(df, text, s(p, "budget_tokens", "1024").toInt,
-          s(p, "partition_by", "lang").split(",").map(_.trim).toSeq,
-          s(p, "order_by", id).split(",").map(_.trim).toSeq)
-      case "pack_concat" =>
-        require(df.columns.contains("pack_id") && df.columns.contains("pack_offset"),
-          "pack_concat requires pack_id/pack_offset columns — run a `pack` op first")
-        TextLib.materializePacks(df, text,
-          s(p, "partition_by", "lang").split(",").map(_.trim).toSeq,
-          s(p, "separator", "\n\n"))
-      case "sample_hash" =>
-        graft.ops.Scale.sampleByHash(df, s(p, "key_column", id),
-          s(p, "fraction").toDouble, s(p, "salt", "42").toInt)
-      case "sample_weighted" =>
-        require(s(p, "weight_column") != null,
-          "sample_weighted requires params.weight_column (e.g. a quality or length score)")
-        require(s(p, "k") != null, "sample_weighted requires params.k (rows kept)")
-        graft.ops.Scale.weightedSample(df, s(p, "weight_column"), s(p, "key_column", id),
-          s(p, "k").toInt, seqOf(p, "group_by"), s(p, "salt", "42").toInt)
-      case "sample_budget" =>
-        require(s(p, "group_column") != null,
-          "sample_budget requires params.group_column (e.g. the domain/source column)")
-        require(s(p, "budget") != null,
-          "sample_budget requires params.budget (target weight kept per group)")
-        // YAML "3e9" arrives as a Double rendering ("3.0E9") — accept both
-        // integer and float spellings of the budget
-        val budgetStr = s(p, "budget")
-        val budget = try budgetStr.toLong catch {
-          case _: NumberFormatException => budgetStr.toDouble.toLong
-        }
-        graft.ops.Scale.sampleToBudget(df, s(p, "weight_column", "n_tokens"),
-          s(p, "group_column"), s(p, "key_column", id),
-          budget, s(p, "salt", "42").toInt)
-      case "decontaminate" =>
-        require(tables != null, "decontaminate requires a table catalog")
-        require(s(p, "eval_table") != null,
-          "decontaminate requires params.eval_table (name of the held-out eval suite table)")
-        graft.text.Contamination.decontaminate(df, text, id,
-          tables(s(p, "eval_table")),
-          s(p, "eval_text_column", text), s(p, "eval_id_column", id),
-          s(p, "ngram_n", "8").toInt, s(p, "min_overlap", "1").toInt)
-      case "semantic_contamination" =>
-        require(tables != null, "semantic_contamination requires a table catalog")
-        require(s(p, "eval_table") != null,
-          "semantic_contamination requires params.eval_table (name of the held-out eval suite table)")
-        graft.text.Contamination.semanticContamination(df, id,
-          s(p, "vector_column", "embedding"),
-          tables(s(p, "eval_table")),
-          s(p, "eval_id_column", id),
-          s(p, "eval_vector_column", s(p, "vector_column", "embedding")),
-          s(p, "threshold", "0.95").toDouble)
-      case "bm25_search" =>
-        require(tables != null, "bm25_search requires a table catalog")
-        require(s(p, "query_table") != null,
-          "bm25_search requires params.query_table (the small query/probe table)")
-        graft.text.Search.bm25TopK(df, text, id,
-          tables(s(p, "query_table")),
-          s(p, "query_id_column", "query_id"), s(p, "query_text_column", "query_text"),
-          s(p, "k", "10").toInt, s(p, "k1", "1.2").toDouble, s(p, "b", "0.75").toDouble)
-      case "quota_per_group" =>
-        require(s(p, "group_column") != null,
-          "quota_per_group requires params.group_column (e.g. the domain/source column)")
-        require(s(p, "quota") != null,
-          "quota_per_group requires params.quota (max rows kept per group)")
-        graft.ops.Scale.quotaPerGroup(df, s(p, "group_column"), s(p, "key_column", id),
-          s(p, "quota").toInt, preBuckets = s(p, "pre_buckets", "64").toInt)
-      case "assign_split" =>
-        val labels = seqOf(p, "labels")
-        val weights = seqOf(p, "weights").map(_.toDouble)
-        require(labels.nonEmpty && labels.length == weights.length,
+    import graft.ops.Scale
+    a.select[Arm]("operation")(
+      "exact_dedup" -> { a => val (text, id, qc) = (textCol(a), idCol(a), a.opt("quality_column"))
+        (df, _) => qc.fold(Dedup.exact(df, text, id))(Dedup.exactKeepBest(df, text, id, _)) },
+      "near_dedup" -> { a =>
+        val (text, id, (shingle, hashes, bands, threshold)) = (textCol(a), idCol(a), minhash(a))
+        val (maxBucket, qc) = (a.int("max_bucket_size", 1000), a.opt("quality_column"))
+        (df, _) => qc match {
+          case None => Dedup.nearDedup(df, text, id, shingle, hashes, bands, threshold, maxBucket)
+          case Some(q) => // keep-best survivor election (round 11) — exact_dedup parity
+            Dedup.nearDedupKeepBest(df, text, id, q, shingle, hashes, bands, threshold, maxBucket)
+        } },
+      "fuzzy_pairs" -> { a => // edit-distance self-join (replaces the frame with pairs)
+        val (text, id) = (textCol(a), idCol(a))
+        val (maxDist, q, maxGramDf) = (a.int("max_dist", 2), a.int("q", 2), a.long("max_gram_df", Long.MaxValue))
+        (df, _) => graft.text.Fuzzy.fuzzyPairs(df, id, text, maxDist, q, maxGramDf) },
+      "quality_features" -> { a => val text = textCol(a); (df, _) => TextLib.qualityFeatures(df, text) },
+      "quality_score" -> { a => val text = textCol(a); (df, _) => TextLib.qualityScore(df, text) },
+      // RPV2 residual signals: native unigram entropy, lorem-ipsum ratio,
+      // curly-bracket ratio
+      "rpv2_extras" -> { a => val text = textCol(a); (df, _) => TextLib.rpv2Extras(df, text) },
+      // reweight-instead-of-drop exact dedup
+      "soft_dedup" -> { a => val text = textCol(a); (df, _) => TextLib.softDedupWeights(df, text) },
+      // ftfy-style one-layer encoding repair, in place
+      "fix_mojibake" -> { a => val text = textCol(a)
+        (df, _) => df.withColumn(text, TextLib.fixMojibake(col(text))) },
+      "seen_corpus_apply" -> { a => // flag/drop against a FROZEN corpus bloom
+        val (text, path, drop) = (textCol(a), a.req("bloom_path"), a.bool("drop", false))
+        (df, _) => {
+          val flagged = Dedup.seenCorpusApply(df, text, Dedup.loadSeenBloom(df.sparkSession, path))
+          if (drop) flagged.filter(!col("maybe_seen")).drop("maybe_seen") else flagged
+        } },
+      "repetition_signals" -> { a => // Gopher A1.1 repetition fractions
+        val (text, id, topN, dupN) = (textCol(a), idCol(a), a.int("top_n", 2), a.int("dup_n", 5))
+        (df, _) => TextLib.repetitionSignals(df, text, id, topN, dupN) },
+      "deflate_ratio" -> { a => // compression-ratio quality signal
+        val (text, out) = (textCol(a), a.str("output_column", "deflate_ratio"))
+        (df, _) => df.withColumn(out, graft.expr.DeflateRatio(col(text))) },
+      "lang_id" -> { a => val text = textCol(a); (df, _) => TextLib.langId(df, text) },
+      "lang_id_apply" -> { a => // classify against a FROZEN char-n-gram model
+        val (text, path, out) = (textCol(a), a.req("model_path"), a.str("output_column", "lang_pred"))
+        (df, _) => TextLib.langIdApply(df, text, TextLib.loadLangIdModel(df.sparkSession, path), out) },
+      "token_counts" -> { a => val (text, out) = (textCol(a), a.str("output_column", "n_tokens"))
+        (df, _) => df.withColumn(out, TextLib.tokenCountWs(col(text))) },
+      "chunk" -> { a => val (text, size, overlap) = (textCol(a), a.int("chunk_size", 512), a.int("overlap", 64))
+        (df, _) => TextLib.chunkDocuments(df, text, size, overlap) },
+      "fingerprint" -> { a =>
+        val (text, out, n) = (textCol(a), a.str("output_column", "fingerprint"), a.int("shingle_n", 3))
+        (df, _) => df.withColumn(out, TextLib.fingerprint(col(text), n)) },
+      // Flesch reading-ease + word/sentence/syllable counts
+      "readability" -> { a => val text = textCol(a); (df, _) => TextLib.readability(df, text) },
+      "kwic" -> { a => // keyword-in-context occurrences with ±window tokens
+        val (text, id, term, window) = (textCol(a), idCol(a), a.req("term"), a.int("window", 5))
+        (df, _) => TextLib.keywordInContext(df, text, id, term, window) },
+      "pseudonymize" -> { a => // salted sha2 tokenization of identifier columns
+        val (cols, s) = (a.list("columns"), a.req("salt"))
+        a.require(cols.nonEmpty, "pseudonymize requires params.columns and params.salt")
+        (df, _) => graft.functions.CleanLib.pseudonymize(df, cols, s) },
+      "consolidate_values" -> { a => // fold typo-splintered categoricals onto the frequent canonical
+        val (c, maxDist, out) = (a.req("column"), a.int("max_dist", 2), a.opt("output_column").orNull)
+        (df, _) => graft.text.Fuzzy.consolidateValues(df, c, maxDist, out) },
+      "redact_pii" -> { a =>
+        val text = textCol(a)
+        val (email, phone, ip) = (a.str("email_token", "<EMAIL>"), a.str("phone_token", "<PHONE>"),
+          a.str("ip_token", "<IP>"))
+        (df, _) => df.withColumn(text, TextLib.redactPii(col(text), email, phone, ip)) },
+      "repetition_ratio" -> { a =>
+        val (text, out, n) = (textCol(a), a.str("output_column", "repetition_ratio"), a.int("shingle_n", 3))
+        (df, _) => df.withColumn(out, TextLib.repetitionRatio(col(text), n)) },
+      "normalize_unicode" -> { a => val (text, form) = (textCol(a), a.str("form", "NFC"))
+        (df, _) => df.withColumn(text, TextLib.normalizeUnicode(col(text), form)) },
+      "html_to_text" -> { a => // strip tags/scripts, decode entities, keep paragraphs
+        val text = textCol(a); val out = a.str("output_column", text)
+        (df, _) => df.withColumn(out, TextLib.htmlToText(col(text))) },
+      "pack" -> { a =>
+        val (text, id, budget) = (textCol(a), idCol(a), a.int("budget_tokens", 1024))
+        val parts = a.str("partition_by", "lang").split(",").map(_.trim).toSeq
+        val order = a.str("order_by", id).split(",").map(_.trim).toSeq
+        (df, _) => TextLib.packDocuments(df, text, budget, parts, order) },
+      "pack_concat" -> { a =>
+        val text = textCol(a)
+        val parts = a.str("partition_by", "lang").split(",").map(_.trim).toSeq
+        val sep = a.str("separator", "\n\n")
+        (df, _) => {
+          require(df.columns.contains("pack_id") && df.columns.contains("pack_offset"),
+            "pack_concat requires pack_id/pack_offset columns — run a `pack` op first")
+          TextLib.materializePacks(df, text, parts, sep)
+        } },
+      "sample_hash" -> { a => val (key, fraction, s) = (keyCol(a, idCol(a)), a.reqDouble("fraction"), salt(a))
+        (df, _) => Scale.sampleByHash(df, key, fraction, s) },
+      "sample_weighted" -> { a =>
+        val (w, key, k) = (a.req("weight_column"), keyCol(a, idCol(a)), a.reqInt("k"))
+        val (groups, s) = (a.list("group_by"), salt(a))
+        (df, _) => Scale.weightedSample(df, w, key, k, groups, s) },
+      "sample_budget" -> { a =>
+        val (w, group, key) = (a.str("weight_column", "n_tokens"), a.req("group_column"), keyCol(a, idCol(a)))
+        val (budget, s) = (a.reqLong("budget"), salt(a))
+        (df, _) => Scale.sampleToBudget(df, w, group, key, budget, s) },
+      "decontaminate" -> { a =>
+        val (text, id, eval) = (textCol(a), idCol(a), a.req("eval_table"))
+        val (evalText, evalId) = (a.str("eval_text_column", text), a.str("eval_id_column", id))
+        val (n, minOverlap) = (a.int("ngram_n", 8), a.int("min_overlap", 1))
+        (df, tables) => graft.text.Contamination.decontaminate(df, text, id, tables(eval),
+          evalText, evalId, n, minOverlap) },
+      "semantic_contamination" -> { a =>
+        val (id, vec, eval) = (idCol(a), vecCol(a), a.req("eval_table"))
+        val (evalId, evalVec) = (a.str("eval_id_column", id), a.str("eval_vector_column", vec))
+        val threshold = a.double("threshold", 0.95)
+        (df, tables) => graft.text.Contamination.semanticContamination(df, id, vec, tables(eval),
+          evalId, evalVec, threshold) },
+      "bm25_search" -> { a =>
+        val (text, id, queries) = (textCol(a), idCol(a), a.req("query_table"))
+        val (qId, qText) = (a.str("query_id_column", "query_id"), a.str("query_text_column", "query_text"))
+        val (k, k1, b) = (a.int("k", 10), a.double("k1", 1.2), a.double("b", 0.75))
+        (df, tables) => graft.text.Search.bm25TopK(df, text, id, tables(queries), qId, qText, k, k1, b) },
+      "quota_per_group" -> { a =>
+        val (group, key, quota) = (a.req("group_column"), keyCol(a, idCol(a)), a.reqInt("quota"))
+        val preBuckets = a.int("pre_buckets", 64)
+        (df, _) => Scale.quotaPerGroup(df, group, key, quota, preBuckets = preBuckets) },
+      "assign_split" -> { a =>
+        val (labels, weights) = (a.list("labels"), a.doubles("weights"))
+        a.require(labels.nonEmpty && labels.length == weights.length,
           "assign_split requires params.labels and params.weights of equal length")
-        Option(s(p, "clusters_table")) match {
+        val (key, clusters) = (keyCol(a, idCol(a)), a.opt("clusters_table"))
+        val (s, out) = (salt(a), a.str("output_column", "split"))
+        (df, tables) => clusters match {
           case Some(ct) => // leakage-safe: gate on the duplicate-cluster key
-            require(tables != null, "assign_split with clusters_table requires a table catalog")
-            graft.ops.Scale.assignSplitLeakageSafe(df, s(p, "key_column", id),
-              tables(ct), labels.zip(weights),
-              s(p, "salt", "42").toInt, s(p, "output_column", "split"))
-          case None =>
-            graft.ops.Scale.assignSplit(df, s(p, "key_column", id), labels.zip(weights),
-              s(p, "salt", "42").toInt, s(p, "output_column", "split"))
-        }
-      case "repeat_epochs" =>
-        require(s(p, "group_column") != null,
-          "repeat_epochs requires params.group_column (the mixture/domain column)")
-        val eps = p.get("epochs") match {
-          case Some(m: java.util.Map[_, _]) =>
-            scala.jdk.CollectionConverters.MapHasAsScala(m).asScala
-              .map { case (k, v) => k.toString -> v.toString.toDouble }.toMap
-          case Some(m: Map[_, _]) => m.map { case (k, v) => k.toString -> v.toString.toDouble }
-          case _ => throw new IllegalArgumentException(
-            "repeat_epochs requires params.epochs (a {group: epoch-count} mapping)")
-        }
-        graft.ops.Scale.repeatEpochs(df, s(p, "group_column"), s(p, "key_column", id),
-          eps, s(p, "salt", "42").toInt)
-      case "sample_temperature" =>
-        require(s(p, "group_column") != null,
-          "sample_temperature requires params.group_column (the mixture/domain column)")
-        require(s(p, "total_rows") != null,
-          "sample_temperature requires params.total_rows (approximate kept-row target)")
-        graft.ops.Scale.temperatureSample(df, s(p, "group_column"), s(p, "key_column", id),
-          s(p, "alpha", "0.5").toDouble, s(p, "total_rows").toDouble.toLong,
-          s(p, "salt", "42").toInt)
-      case "dedup_lines" =>
+            Scale.assignSplitLeakageSafe(df, key, tables(ct), labels.zip(weights), s, out)
+          case None => Scale.assignSplit(df, key, labels.zip(weights), s, out)
+        } },
+      "repeat_epochs" -> { a =>
+        val (group, key) = (a.req("group_column"), keyCol(a, idCol(a)))
+        val epochs = a.mapping("epochs").map { case (g, v) =>
+          g -> scala.util.Try(v.toString.toDouble).getOrElse(Double.NaN) }.toMap
+        a.require(epochs.nonEmpty && !epochs.values.exists(_.isNaN),
+          "repeat_epochs requires params.epochs (a {group: epoch-count} mapping)")
+        val s = salt(a)
+        (df, _) => Scale.repeatEpochs(df, group, key, epochs, s) },
+      "sample_temperature" -> { a =>
+        val (group, key) = (a.req("group_column"), keyCol(a, idCol(a)))
+        val (alpha, total, s) = (a.double("alpha", 0.5), a.reqLong("total_rows"), salt(a))
+        (df, _) => Scale.temperatureSample(df, group, key, alpha, total, s) },
+      "dedup_lines" -> { a =>
         // within-document repeated-line removal (keep-first; short lines
         // exempt so blank-line paragraph breaks survive)
-        TextLib.dedupLines(df, text, s(p, "min_chars", "1").toInt)
-      case "c4_rules" =>
-        // audit mode: rewritten text + c4_n_lines_kept/c4_n_sentences/c4_keep
-        TextLib.c4Rules(df, text,
-          s(p, "min_words_per_line", "3").toInt, s(p, "min_sentences", "5").toInt,
-          seqOf(p, "badwords"))
-      case "c4_filter" =>
-        // the gate applied: survivors only, audit columns dropped (same
-        // param-parity discipline as gopher_rules/gopher_filter)
-        TextLib.c4Rules(df, text,
-          s(p, "min_words_per_line", "3").toInt, s(p, "min_sentences", "5").toInt,
-          seqOf(p, "badwords"))
-          .filter(col("c4_keep"))
-          .drop("c4_n_lines_kept", "c4_n_sentences", "c4_keep")
-      case "gopher_rules" =>
-        // audit mode: per-rule booleans + gopher_keep + gopher_fail_reasons.
-        // With lang_column (round 12): the two anglocentric rules dispatch
-        // per language (unknown lang → neutral); min_alpha_ratio/
-        // min_stopwords override the floors uniformly across languages
-        // (ADVICE r12 — previously silently ignored under lang dispatch).
-        if (s(p, "lang_column") != null)
-          TextLib.gopherRulesByLang(df, text, s(p, "lang_column"),
-            TextLib.gopherLangParamsWithFloors(
-              s(p, "min_alpha_ratio", "0.8").toDouble, s(p, "min_stopwords", "2").toInt),
-            s(p, "min_words", "50").toInt, s(p, "max_words", "100000").toInt,
-            s(p, "min_mean_word_len", "3.0").toDouble, s(p, "max_mean_word_len", "10.0").toDouble,
-            s(p, "max_symbol_ratio", "0.1").toDouble, s(p, "max_bullet_ratio", "0.9").toDouble,
-            s(p, "max_ellipsis_ratio", "0.3").toDouble)
-        else TextLib.gopherRules(df, text,
-          s(p, "min_words", "50").toInt, s(p, "max_words", "100000").toInt,
-          s(p, "min_mean_word_len", "3.0").toDouble, s(p, "max_mean_word_len", "10.0").toDouble,
-          s(p, "max_symbol_ratio", "0.1").toDouble, s(p, "max_bullet_ratio", "0.9").toDouble,
-          s(p, "max_ellipsis_ratio", "0.3").toDouble, s(p, "min_alpha_ratio", "0.8").toDouble,
-          s(p, "min_stopwords", "2").toInt)
-      case "gopher_filter" =>
-        // the gate applied: survivors only, audit columns dropped. The
-        // threshold parsing deliberately REPEATS gopher_rules' above —
-        // OpsDocSpec mechanically pins both case arms to identical param
-        // lists (the doc generator reads each arm's source), so a missed
-        // edit in one arm fails the build instead of gating silently
-        // differently in audit vs filter mode.
-        (if (s(p, "lang_column") != null)
-          TextLib.gopherRulesByLang(df, text, s(p, "lang_column"),
-            TextLib.gopherLangParamsWithFloors(
-              s(p, "min_alpha_ratio", "0.8").toDouble, s(p, "min_stopwords", "2").toInt),
-            s(p, "min_words", "50").toInt, s(p, "max_words", "100000").toInt,
-            s(p, "min_mean_word_len", "3.0").toDouble, s(p, "max_mean_word_len", "10.0").toDouble,
-            s(p, "max_symbol_ratio", "0.1").toDouble, s(p, "max_bullet_ratio", "0.9").toDouble,
-            s(p, "max_ellipsis_ratio", "0.3").toDouble)
-        else TextLib.gopherRules(df, text,
-          s(p, "min_words", "50").toInt, s(p, "max_words", "100000").toInt,
-          s(p, "min_mean_word_len", "3.0").toDouble, s(p, "max_mean_word_len", "10.0").toDouble,
-          s(p, "max_symbol_ratio", "0.1").toDouble, s(p, "max_bullet_ratio", "0.9").toDouble,
-          s(p, "max_ellipsis_ratio", "0.3").toDouble, s(p, "min_alpha_ratio", "0.8").toDouble,
-          s(p, "min_stopwords", "2").toInt))
-          .filter(col("gopher_keep"))
-          .drop("gopher_word_count_ok", "gopher_mean_word_len_ok", "gopher_symbol_ratio_ok",
-            "gopher_bullet_lines_ok", "gopher_ellipsis_lines_ok", "gopher_alpha_words_ok",
-            "gopher_stopwords_ok", "gopher_keep", "gopher_fail_reasons")
-      case "unimax_sample" =>
-        require(s(p, "group_column") != null,
-          "unimax_sample requires params.group_column (the language/domain column)")
-        require(s(p, "weight_column") != null,
-          "unimax_sample requires params.weight_column (chars/tokens per row)")
-        require(s(p, "budget") != null,
-          "unimax_sample requires params.budget (total weight units to allocate)")
-        val uxBudgetStr = s(p, "budget")
-        val uxBudget = try uxBudgetStr.toLong catch {
-          case _: NumberFormatException => uxBudgetStr.toDouble.toLong
-        }
-        graft.ops.Scale.unimaxSample(df, s(p, "group_column"), s(p, "weight_column"),
-          s(p, "key_column", id), uxBudget,
-          s(p, "max_epochs", "4.0").toDouble, s(p, "salt", "42").toInt)
-      case "unimax_apply" =>
-        require(s(p, "allocation_path") != null,
-          "unimax_apply requires params.allocation_path (a saved unimaxAllocation parquet)")
-        graft.ops.Scale.unimaxApply(df,
-          df.sparkSession.read.parquet(s(p, "allocation_path")),
-          s(p, "group_column", "lang"), s(p, "key_column", id), s(p, "salt", "42").toInt)
-      case "shard_assign" =>
-        require(s(p, "num_shards") != null,
-          "shard_assign requires params.num_shards (number of output shards)")
-        graft.ops.Scale.shardAssign(df, s(p, "key_column", id),
-          s(p, "num_shards").toInt, s(p, "salt", "42").toInt)
-      case "length_histogram" =>
-        TextLib.lengthHistogram(df, s(p, "length_column", "n_chars"))
-      case "token_divergence" =>
-        require(tables != null, "token_divergence requires a table catalog")
-        require(s(p, "other_table") != null,
-          "token_divergence requires params.other_table (corpus to compare against)")
-        TextLib.tokenDivergence(df, text,
-          tables(s(p, "other_table")), s(p, "other_text_column", text),
-          s(p, "smoothing", "0.5").toDouble)
-      case "psi_drift" => // feature drift vs a reference snapshot
-        require(tables != null, "psi_drift requires a table catalog")
-        require(s(p, "reference_table") != null,
-          "psi_drift requires params.reference_table (the reference snapshot)")
-        require(s(p, "value_column") != null,
-          "psi_drift requires params.value_column (column to compare)")
-        val refT = tables(s(p, "reference_table"))
-        s(p, "kind", "numeric") match {
-          case "numeric" => graft.quality.Profiler.psiBins(
-            refT, df, s(p, "value_column"),
-            s(p, "bins", "10").toInt, s(p, "epsilon", "1e-6").toDouble)
-          case "categorical" => graft.quality.Profiler.psiCategorical(
-            refT, df, s(p, "value_column"),
-            s(p, "top_k", "20").toInt, s(p, "epsilon", "1e-6").toDouble)
-          case other => throw new IllegalArgumentException(
-            s"psi_drift kind must be numeric|categorical, got '$other'")
-        }
-      case "bpe_merges" =>
-        graft.text.Bpe.mergesDF(df, text,
-          s(p, "num_merges", "1000").toInt,
-          s(p, "max_words", "1000000").toInt,
-          s(p, "min_pair_count", "2").toLong)
-      case "lm_score" =>
-        val lmCorpus = s(p, "corpus_table")
-        if (lmCorpus != null)
-          require(tables != null, "lm_score with corpus_table requires a table catalog")
-        TextLib.unigramScore(df, text, id,
-          corpus = if (lmCorpus == null) null else tables(lmCorpus),
-          corpusTextCol = s(p, "corpus_text_column", text),
-          vocabSize = s(p, "vocab_size", "50000").toInt)
-      case "lm_bigram_score" =>
-        val lm2Corpus = s(p, "corpus_table")
-        if (lm2Corpus != null)
-          require(tables != null, "lm_bigram_score with corpus_table requires a table catalog")
-        TextLib.bigramScore(df, text, id,
-          corpus = if (lm2Corpus == null) null else tables(lm2Corpus),
-          corpusTextCol = s(p, "corpus_text_column", text),
-          vocabSize = s(p, "vocab_size", "50000").toInt,
-          bigramSize = s(p, "bigram_size", "200000").toInt)
-      case "script_profile" =>
-        TextLib.scriptProfile(df, text)
-      case "quality_classifier" =>
-        val feats = seqOf(p, "feature_columns")
-        require(feats.nonEmpty,
+        val (text, minChars) = (textCol(a), a.int("min_chars", 1))
+        (df, _) => TextLib.dedupLines(df, text, minChars) },
+      // audit mode: rewritten text + c4_n_lines_kept/c4_n_sentences/c4_keep
+      "c4_rules" -> { a => val rules = c4(a); (df, _) => rules(df) },
+      "c4_filter" -> { a => // the gate applied: survivors only, audit columns dropped
+        val rules = c4(a)
+        (df, _) => rules(df).filter(col("c4_keep"))
+          .drop("c4_n_lines_kept", "c4_n_sentences", "c4_keep") },
+      // audit mode: per-rule booleans + gopher_keep + gopher_fail_reasons
+      "gopher_rules" -> { a => val rules = gopher(a, "text_column", "lang_column")
+        (df, _) => rules(df) },
+      "gopher_filter" -> { a => // the gate applied: survivors only, audit columns dropped
+        val rules = gopher(a, "text_column", "lang_column")
+        (df, _) => rules(df).filter(col("gopher_keep")).drop(GopherAuditColumns: _*) },
+      "unimax_sample" -> { a =>
+        val (group, w, key) = (a.req("group_column"), a.req("weight_column"), keyCol(a, idCol(a)))
+        val (budget, maxEpochs, s) = (a.reqLong("budget"), a.double("max_epochs", 4.0), salt(a))
+        (df, _) => Scale.unimaxSample(df, group, w, key, budget, maxEpochs, s) },
+      "unimax_apply" -> { a =>
+        val path = a.req("allocation_path")
+        val (group, key, s) = (a.str("group_column", "lang"), keyCol(a, idCol(a)), salt(a))
+        (df, _) => Scale.unimaxApply(df, df.sparkSession.read.parquet(path), group, key, s) },
+      "shard_assign" -> { a => val (key, shards, s) = (keyCol(a, idCol(a)), a.reqInt("num_shards"), salt(a))
+        (df, _) => Scale.shardAssign(df, key, shards, s) },
+      "length_histogram" -> { a => val c = a.str("length_column", "n_chars")
+        (df, _) => TextLib.lengthHistogram(df, c) },
+      "token_divergence" -> { a =>
+        val (text, other) = (textCol(a), a.req("other_table"))
+        val (otherText, smoothing) = (a.str("other_text_column", text), a.double("smoothing", 0.5))
+        (df, tables) => TextLib.tokenDivergence(df, text, tables(other), otherText, smoothing) },
+      "psi_drift" -> { a => // feature drift vs a reference snapshot
+        val (ref, value) = (a.req("reference_table"), a.req("value_column"))
+        a.select[Arm]("kind", "numeric")(
+          "numeric" -> { a => val (bins, eps) = (a.int("bins", 10), a.double("epsilon", 1e-6))
+            (df, tables) => graft.quality.Profiler.psiBins(tables(ref), df, value, bins, eps) },
+          "categorical" -> { a => val (topK, eps) = (a.int("top_k", 20), a.double("epsilon", 1e-6))
+            (df, tables) => graft.quality.Profiler.psiCategorical(tables(ref), df, value, topK, eps) })(a) },
+      "bpe_merges" -> { a =>
+        val (text, merges) = (textCol(a), a.int("num_merges", 1000))
+        val (maxWords, minPair) = (a.int("max_words", 1000000), a.long("min_pair_count", 2L))
+        (df, _) => graft.text.Bpe.mergesDF(df, text, merges, maxWords, minPair) },
+      "lm_score" -> { a =>
+        val (text, id) = (textCol(a), idCol(a)); val (corpus, corpusText, vocab) = lmCorpus(a, text)
+        (df, tables) => TextLib.unigramScore(df, text, id, corpus = corpus.map(tables).orNull,
+          corpusTextCol = corpusText, vocabSize = vocab) },
+      "lm_bigram_score" -> { a =>
+        val (text, id) = (textCol(a), idCol(a)); val (corpus, corpusText, vocab) = lmCorpus(a, text)
+        val bigrams = a.int("bigram_size", 200000)
+        (df, tables) => TextLib.bigramScore(df, text, id, corpus = corpus.map(tables).orNull,
+          corpusTextCol = corpusText, vocabSize = vocab, bigramSize = bigrams) },
+      "script_profile" -> { a => val text = textCol(a); (df, _) => TextLib.scriptProfile(df, text) },
+      "quality_classifier" -> { a =>
+        import graft.quality.QualityClassifier
+        val feats = a.list("feature_columns")
+        a.require(feats.nonEmpty,
           "quality_classifier requires params.feature_columns (numeric feature list)")
-        val labelCol = s(p, "label_column")
-        val signal = s(p, "signal_column")
-        require(labelCol != null || signal != null,
+        val (labelCol, signal) = (a.opt("label_column"), a.opt("signal_column"))
+        a.require(labelCol.isDefined || signal.isDefined,
           "quality_classifier requires params.label_column (0/1 labels) or " +
             "params.signal_column (pseudo-label from a ranking signal)")
-        val labeled =
-          if (labelCol != null) df
-          else graft.quality.QualityClassifier.pseudoLabelByQuantile(df, signal,
-            s(p, "lo_quantile", "0.3").toDouble, s(p, "hi_quantile", "0.7").toDouble)
-        val m = graft.quality.QualityClassifier.train(labeled,
-          Option(labelCol).getOrElse("quality_label"), feats,
-          s(p, "max_iter", "50").toInt, s(p, "reg_param", "0.01").toDouble)
-        graft.quality.QualityClassifier.score(labeled, m,
-          s(p, "output_column", "quality_prob"))
-      case "winnow" =>
-        df.withColumn(s(p, "output_column", "fingerprints"),
-          TextLib.winnowFingerprint(col(text),
-            s(p, "gram_tokens", "5").toInt, s(p, "window", "4").toInt))
-      case "url_canonicalize" => // canonical + host + registered-domain cols
-        graft.text.UrlLib.withUrlColumns(df, s(p, "url_column", "url"),
-          s(p, "prefix", "url"))
-      case "url_dedup" => // keep-first per canonical URL
-        graft.text.UrlLib.dedupByUrl(df, s(p, "url_column", "url"), id)
-      case "para_dedup" =>
-        Dedup.paragraphDedup(df, text, id,
-          s(p, "separator", "\n\n"), s(p, "min_chars", "1").toInt)
-      case "dup_spans" =>
-        Dedup.duplicateSpans(df, text, id,
-          s(p, "gram_tokens", "5").toInt, s(p, "min_count", "2").toInt)
-      case "cut_dup_spans" => // ExactSubstr CUT: rewrite texts, keep-first canonical span
-        Dedup.cutDuplicateSpans(df, text, id,
-          s(p, "gram_tokens", "5").toInt, s(p, "min_count", "2").toInt)
-      case "cut_contaminated" => // surgical span decontamination vs an eval corpus
-        require(tables != null, "cut_contaminated requires a table catalog")
-        require(s(p, "eval_table") != null,
-          "cut_contaminated requires params.eval_table (the benchmark/eval corpus)")
-        graft.text.Contamination.cutContaminatedSpans(df, text, id,
-          tables(s(p, "eval_table")), s(p, "eval_text_column", text),
-          s(p, "gram_tokens", "8").toInt)
-      case "dsir_weights" => // DSIR importance log-weights vs a target corpus (Xie 2023)
-        require(tables != null, "dsir_weights requires a table catalog")
-        require(s(p, "target_table") != null,
-          "dsir_weights requires params.target_table (the target-distribution corpus)")
-        val target = tables(s(p, "target_table"))
-          .withColumnRenamed(s(p, "target_text_column", text), text)
-        val ns = { val o = intSeq(p, "gram_orders"); if (o.isEmpty) Seq(1, 2) else o }
-        val buckets = s(p, "hashed_buckets", "0").toInt
-        if (buckets > 0)
-          graft.text.Dsir.logWeightsHashed(df, target, text, id, ns,
-            s(p, "alpha", "1.0").toDouble, buckets)
-        else graft.text.Dsir.logWeights(df, target, text, id, ns,
-          s(p, "alpha", "1.0").toDouble)
-      case "dsir_select" => // the paper's resampling step: k docs ∝ exp(weight)
-        require(tables != null, "dsir_select requires a table catalog")
-        require(s(p, "target_table") != null,
-          "dsir_select requires params.target_table (the target-distribution corpus)")
-        require(s(p, "k") != null, "dsir_select requires params.k (sample size)")
-        val target = tables(s(p, "target_table"))
-          .withColumnRenamed(s(p, "target_text_column", text), text)
-        val ns = { val o = intSeq(p, "gram_orders"); if (o.isEmpty) Seq(1, 2) else o }
-        graft.text.Dsir.select(df, target, text, id, s(p, "k").toInt, ns,
-          s(p, "alpha", "1.0").toDouble, s(p, "hashed_buckets", "0").toInt,
-          s(p, "salt", "42").toInt)
-      case "ppl_apply" => // gate against a FROZEN CCNet model (pplFit + savePplModel)
-        require(s(p, "model_path") != null,
-          "ppl_apply requires params.model_path (written by TextLib.savePplModel)")
-        TextLib.pplApply(df, text,
-          TextLib.loadPplModel(df.sparkSession, s(p, "model_path")))
-      case "dsir_apply" => // score against a FROZEN hashed DSIR model (pure map)
-        require(s(p, "model_path") != null,
-          "dsir_apply requires params.model_path (written by Dsir.saveModel)")
-        val ns = { val o = intSeq(p, "gram_orders"); if (o.isEmpty) Seq(1, 2) else o }
-        graft.text.Dsir.applyHashed(df, text,
-          graft.text.Dsir.loadModel(df.sparkSession, s(p, "model_path")), ns)
-      case "perplexity_buckets" => // CCNet head/middle/tail per group
-        val corpusTable = s(p, "corpus_table")
-        val corpus = if (corpusTable == null) null else {
-          require(tables != null, "perplexity_buckets with corpus_table requires a table catalog")
-          tables(corpusTable)
-        }
-        TextLib.perplexityBuckets(df, text, id,
-          seqOf(p, "group_columns"), s(p, "n_buckets", "3").toInt,
-          corpus, s(p, "corpus_text_column", text),
-          s(p, "vocab_size", "50000").toInt)
-      case "snapshot_diff" =>
-        require(tables != null, "snapshot_diff requires a table catalog")
-        require(s(p, "old_table") != null,
-          "snapshot_diff requires params.old_table (the previous snapshot; the primary frame is the new one)")
-        Dedup.snapshotDiff(tables(s(p, "old_table")), df, id, text)
-      case "dedup_against" =>
-        require(tables != null, "dedup_against requires a table catalog")
-        require(s(p, "corpus_table") != null,
-          "dedup_against requires params.corpus_table (name of the accepted-snapshot table)")
-        Dedup.dedupAgainstCorpus(df, text,
-          tables(s(p, "corpus_table")), s(p, "corpus_text_column", text),
-          s(p, "fpp", "0.001").toDouble,
-          s(p, "expected_batch_rows", "-1").toLong)
-      case "near_dedup_against" =>
+        val (lo, hi) = (a.double("lo_quantile", 0.3), a.double("hi_quantile", 0.7))
+        val (maxIter, reg) = (a.int("max_iter", 50), a.double("reg_param", 0.01))
+        val out = a.str("output_column", "quality_prob")
+        (df, _) => {
+          val labeled = labelCol.fold(QualityClassifier.pseudoLabelByQuantile(df, signal.get, lo, hi))(_ => df)
+          val m = QualityClassifier.train(labeled, labelCol.getOrElse("quality_label"), feats, maxIter, reg)
+          QualityClassifier.score(labeled, m, out)
+        } },
+      "winnow" -> { a =>
+        val (text, out) = (textCol(a), a.str("output_column", "fingerprints"))
+        val (grams, window) = (a.int("gram_tokens", 5), a.int("window", 4))
+        (df, _) => df.withColumn(out, TextLib.winnowFingerprint(col(text), grams, window)) },
+      "url_canonicalize" -> { a => // canonical + host + registered-domain cols
+        val (url, prefix) = (a.str("url_column", "url"), a.str("prefix", "url"))
+        (df, _) => graft.text.UrlLib.withUrlColumns(df, url, prefix) },
+      "url_dedup" -> { a => // keep-first per canonical URL
+        val (id, url) = (idCol(a), a.str("url_column", "url"))
+        (df, _) => graft.text.UrlLib.dedupByUrl(df, url, id) },
+      "para_dedup" -> { a =>
+        val (text, id, sep, minChars) = (textCol(a), idCol(a), a.str("separator", "\n\n"), a.int("min_chars", 1))
+        (df, _) => Dedup.paragraphDedup(df, text, id, sep, minChars) },
+      "dup_spans" -> { a => val (text, id, grams, n) = spans(a)
+        (df, _) => Dedup.duplicateSpans(df, text, id, grams, n) },
+      "cut_dup_spans" -> { a => val (text, id, grams, n) = spans(a) // ExactSubstr CUT: keep-first canonical span
+        (df, _) => Dedup.cutDuplicateSpans(df, text, id, grams, n) },
+      "cut_contaminated" -> { a => // surgical span decontamination vs an eval corpus
+        val (text, id, eval) = (textCol(a), idCol(a), a.req("eval_table"))
+        val (evalText, grams) = (a.str("eval_text_column", text), a.int("gram_tokens", 8))
+        (df, tables) => graft.text.Contamination.cutContaminatedSpans(df, text, id, tables(eval), evalText, grams)
+      },
+      "dsir_weights" -> { a => // DSIR importance log-weights vs a target corpus (Xie 2023)
+        val (text, id, target) = (textCol(a), idCol(a), a.req("target_table"))
+        val (targetText, ns) = (a.str("target_text_column", text), gramOrders(a))
+        val (buckets, alpha) = (a.int("hashed_buckets", 0), a.double("alpha", 1.0))
+        (df, tables) => {
+          val t = tables(target).withColumnRenamed(targetText, text)
+          if (buckets > 0) graft.text.Dsir.logWeightsHashed(df, t, text, id, ns, alpha, buckets)
+          else graft.text.Dsir.logWeights(df, t, text, id, ns, alpha)
+        } },
+      "dsir_select" -> { a => // the paper's resampling step: k docs ∝ exp(weight)
+        val (text, id, target) = (textCol(a), idCol(a), a.req("target_table"))
+        val (k, targetText, ns) = (a.reqInt("k"), a.str("target_text_column", text), gramOrders(a))
+        val (alpha, buckets, s) = (a.double("alpha", 1.0), a.int("hashed_buckets", 0), salt(a))
+        (df, tables) => graft.text.Dsir.select(df, tables(target).withColumnRenamed(targetText, text),
+          text, id, k, ns, alpha, buckets, s) },
+      "ppl_apply" -> { a => // gate against a FROZEN CCNet model (pplFit + savePplModel)
+        val (text, path) = (textCol(a), a.req("model_path"))
+        (df, _) => TextLib.pplApply(df, text, TextLib.loadPplModel(df.sparkSession, path)) },
+      "dsir_apply" -> { a => // score against a FROZEN hashed DSIR model (pure map)
+        val (text, path, ns) = (textCol(a), a.req("model_path"), gramOrders(a))
+        (df, _) => graft.text.Dsir.applyHashed(df, text, graft.text.Dsir.loadModel(df.sparkSession, path), ns)
+      },
+      "perplexity_buckets" -> { a => // CCNet head/middle/tail per group
+        val (text, id, groups, n) = (textCol(a), idCol(a), a.list("group_columns"), a.int("n_buckets", 3))
+        val (corpus, corpusText, vocab) = lmCorpus(a, text)
+        (df, tables) => TextLib.perplexityBuckets(df, text, id, groups, n,
+          corpus.map(tables).orNull, corpusText, vocab) },
+      "snapshot_diff" -> { a =>
+        // old_table: the previous snapshot; the primary frame is the new one
+        val (text, id, old) = (textCol(a), idCol(a), a.req("old_table"))
+        (df, tables) => Dedup.snapshotDiff(tables(old), df, id, text) },
+      "dedup_against" -> { a =>
+        val (text, corpus) = (textCol(a), a.req("corpus_table"))
+        val (corpusText, fpp) = (a.str("corpus_text_column", text), a.double("fpp", 0.001))
+        val expected = a.long("expected_batch_rows", -1L)
+        (df, tables) => Dedup.dedupAgainstCorpus(df, text, tables(corpus), corpusText, fpp, expected) },
+      "near_dedup_against" -> { a =>
         // incremental NEAR-dup: drop batch rows whose MinHash-estimated
         // Jaccard against any accepted-snapshot doc reaches the threshold
         // (dedup_against's exact-hash sibling; ref signatures scale with
-        // the snapshot ONCE, the join with the batch)
-        require(tables != null, "near_dedup_against requires a table catalog")
-        require(s(p, "corpus_table") != null,
-          "near_dedup_against requires params.corpus_table (name of the accepted-snapshot table)")
-        // column-name parity with dedup_against: a snapshot whose text/id
-        // columns are named differently maps them here (round-6 review)
-        val snapshot = tables(s(p, "corpus_table"))
-          .withColumnRenamed(s(p, "corpus_text_column", text), text)
-          .withColumnRenamed(s(p, "corpus_id_column", id), id)
-        val naHashes = s(p, "num_hashes", "64").toInt
-        val naThreshold = s(p, "threshold", "0.8").toDouble
-        val dupIds = Dedup.minhashCandidatesAgainst(df, snapshot,
-            text, id,
-            s(p, "shingle_n", "3").toInt, naHashes,
-            Dedup.bandsFor(naHashes, naThreshold, Option(s(p, "bands")).map(_.toInt)),
-            naThreshold)
-          .select(col("new_id").as(id)).distinct()
-        df.join(dupIds, Seq(id), "left_anti")
-      case "mmr_select" =>
-        // diversify a bounded retrieval candidate frame (per-query lists)
-        graft.text.Search.mmrSelect(df, s(p, "query_id_column", "query_id"), id,
-          s(p, "relevance_column", "relevance"), s(p, "vector_column", "embedding"),
-          s(p, "k", "10").toInt, s(p, "lambda", "0.5").toDouble)
-      case "rrf_fuse" =>
+        // the snapshot ONCE, the join with the batch). Column-name parity
+        // with dedup_against: a snapshot whose text/id columns are named
+        // differently maps them here (round-6 review)
+        val (text, id, corpus) = (textCol(a), idCol(a), a.req("corpus_table"))
+        val (corpusText, corpusId) = (a.str("corpus_text_column", text), a.str("corpus_id_column", id))
+        val (shingle, hashes, bands, threshold) = minhash(a)
+        (df, tables) => {
+          val snapshot = tables(corpus).withColumnRenamed(corpusText, text).withColumnRenamed(corpusId, id)
+          val dupIds = Dedup.minhashCandidatesAgainst(df, snapshot, text, id, shingle, hashes, bands, threshold)
+            .select(col("new_id").as(id)).distinct()
+          df.join(dupIds, Seq(id), "left_anti")
+        } },
+      "mmr_select" -> { a => // diversify a bounded retrieval candidate frame (per-query lists)
+        val (qId, id) = (a.str("query_id_column", "query_id"), idCol(a))
+        val (rel, vec) = (a.str("relevance_column", "relevance"), vecCol(a))
+        val (k, lambda) = (a.int("k", 10), a.double("lambda", 0.5))
+        (df, _) => graft.text.Search.mmrSelect(df, qId, id, rel, vec, k, lambda) },
+      "rrf_fuse" -> { a =>
         // hybrid-retrieval fusion: the primary frame is the first ranked
         // list; params.lists names further lists in the table catalog
-        require(tables != null || seqOf(p, "lists").isEmpty,
-          "rrf_fuse with params.lists requires a table catalog")
-        graft.text.Search.rrfFuse(df +: seqOf(p, "lists").map(tables),
-          s(p, "query_id_column", "query_id"), id,
-          s(p, "rank_column", "rank"),
-          s(p, "k_rrf", "60").toInt, s(p, "k", "10").toInt)
-      case "quantize_int8" =>
-        graft.vec.VectorOps.quantizeInt8(df, s(p, "vector_column", "embedding"),
-          s(p, "output_column", "q"), s(p, "scale_column", "q_scale"))
-      case "l2_normalize" =>
-        graft.vec.VectorOps.l2Normalize(df, s(p, "vector_column", "embedding"),
-          s(p, "output_column", "unit"))
-      case "embed_meanpool" => // chunk→doc pooling: weighted positional
+        val (lists, qId, id) = (a.list("lists"), a.str("query_id_column", "query_id"), idCol(a))
+        val (rank, kRrf, k) = (a.str("rank_column", "rank"), a.int("k_rrf", 60), a.int("k", 10))
+        (df, tables) => graft.text.Search.rrfFuse(df +: lists.map(tables), qId, id, rank, kRrf, k) },
+      "quantize_int8" -> { a =>
+        val (vec, out, scale) = (vecCol(a), a.str("output_column", "q"), a.str("scale_column", "q_scale"))
+        (df, _) => graft.vec.VectorOps.quantizeInt8(df, vec, out, scale) },
+      "l2_normalize" -> { a => val (vec, out) = (vecCol(a), a.str("output_column", "unit"))
+        (df, _) => graft.vec.VectorOps.l2Normalize(df, vec, out) },
+      "embed_meanpool" -> { a => // chunk→doc pooling: weighted positional
         // mean per group (+ optional renorm); REPLACES the frame with one
         // row per group
-        require(seqOf(p, "group_by").nonEmpty,
-          "embed_meanpool requires params.group_by (key columns)")
-        graft.vec.VectorOps.meanPool(df, seqOf(p, "group_by"),
-          s(p, "vector_column", "embedding"), s(p, "output_column", "pooled"),
-          Option(s(p, "weight_column")), s(p, "renorm", "false").toBoolean)
-      case "mrl_truncate" => // Matryoshka prefix truncation + renorm
-        require(s(p, "dims") != null, "mrl_truncate requires params.dims")
-        graft.vec.VectorOps.truncateRenorm(df, s(p, "vector_column", "embedding"),
-          s(p, "dims").toInt, s(p, "output_column", "trunc"))
-      case "semantic_dedup" => // SemDeDup: embedding-space dedup, one survivor/group
-        graft.vec.SemDedup.semanticDedup(df, s(p, "id_column", "vec_id"),
-          s(p, "vector_column", "embedding"),
-          threshold = s(p, "threshold", "0.95").toDouble,
-          nClusters = s(p, "n_clusters", "64").toInt,
-          keep = s(p, "keep", "far_from_centroid"))
-      case "proto_prune" => // SSL prototypes (Sorscher et al. 2022): drop
+        val groups = a.list("group_by")
+        a.require(groups.nonEmpty, "embed_meanpool requires params.group_by (key columns)")
+        val (vec, out) = (vecCol(a), a.str("output_column", "pooled"))
+        val (w, renorm) = (a.opt("weight_column"), a.bool("renorm", false))
+        (df, _) => graft.vec.VectorOps.meanPool(df, groups, vec, out, w, renorm) },
+      "mrl_truncate" -> { a => // Matryoshka prefix truncation + renorm
+        val (vec, dims, out) = (vecCol(a), a.reqInt("dims"), a.str("output_column", "trunc"))
+        (df, _) => graft.vec.VectorOps.truncateRenorm(df, vec, dims, out) },
+      "semantic_dedup" -> { a => // SemDeDup: embedding-space dedup, one survivor/group
+        val dedup = semDedup(a, vecId(a), vecCol(a))
+        (df, _) => dedup(df) },
+      "proto_prune" -> { a => // SSL prototypes (Sorscher et al. 2022): drop
         // the most-prototypical prune_fraction of every embedding cluster
         // (keep the hard tail). centroid_ids pins centroids to data rows
         // (the oracle-replayable path); otherwise a deterministic Lloyd
         // fit on the incoming frame (k/seed/max_train_rows).
-        val ppVec = s(p, "vector_column", "embedding")
-        val ppId = s(p, "id_column", "vec_id")
-        graft.vec.Prototypes.protoApply(df, ppId, ppVec,
-          protoCentroidsFor(df, centroidIds(p), ppId, ppVec,
-            s(p, "k", "64").toInt, s(p, "seed", "42").toLong,
-            s(p, "max_train_rows", "100000").toInt,
-            s(p, "centroids_path"), s(p, "save_centroids_path")),
-          s(p, "prune_fraction", "0.3").toDouble)
-      case "d4_select" => // D4 (Tirumala et al. 2023): SemDeDup, then
+        val (vec, id) = (vecCol(a), vecId(a))
+        val (cents, prune) = (protoCentroids(a, id, vec), a.double("prune_fraction", 0.3))
+        (df, _) => graft.vec.Prototypes.protoApply(df, id, vec, cents(df), prune) },
+      "d4_select" -> { a => // D4 (Tirumala et al. 2023): SemDeDup, then
         // prototype-prune the survivors; centroids resolve AFTER the
         // semantic stage (the paper re-clusters deduped data — duplicate
         // mass must not drag centroids toward itself)
-        val d4Vec = s(p, "vector_column", "embedding")
-        val d4Id = s(p, "id_column", "vec_id")
-        val d4Surv = graft.vec.SemDedup.semanticDedup(df, d4Id, d4Vec,
-          threshold = s(p, "threshold", "0.95").toDouble,
-          nClusters = s(p, "n_clusters", "64").toInt,
-          keep = s(p, "keep", "far_from_centroid"))
-        graft.vec.Prototypes.protoApply(d4Surv, d4Id, d4Vec,
-          protoCentroidsFor(d4Surv, centroidIds(p), d4Id, d4Vec,
-            s(p, "k", "64").toInt, s(p, "seed", "42").toLong,
-            s(p, "max_train_rows", "100000").toInt,
-            s(p, "centroids_path"), s(p, "save_centroids_path")),
-          s(p, "prune_fraction", "0.3").toDouble)
-      case "semantic_gate" => // frozen semantic gate (round 13): batch
-        // counterpart of the stream transform — audit mode adds
-        // sem_cell/sem_max_cos/sem_dup against a saved accepted-corpus
-        // model; pair with a filter op (or use the stream form) to gate.
-        // Commissioning (round 14, VERDICT r13 #6 — the pq_encode
-        // model_path/save_model_path discipline): model_path loads
-        // YESTERDAY'S fit; without it the op fits on `accepted_table`
-        // (a catalog table holding the frozen accepted corpus — NEVER
-        // the incoming frame itself, whose every row would gate itself
-        // out at cosine 1.0) and save_model_path persists the result
-        // for tomorrow's batch runs and the stream transform.
-        val sgModel = Option(s(p, "model_path")) match {
-          case Some(mp) => graft.vec.SemGate.loadSemGate(df.sparkSession, mp)
-          case None =>
-            require(tables != null && s(p, "accepted_table") != null,
-              "semantic_gate requires params.model_path (a saved " +
-                "SemGate.saveSemGate directory) or params.accepted_table " +
-                "(catalog table with the frozen accepted corpus) to fit")
-            val m = graft.vec.SemGate.semGateFit(
-              tables(s(p, "accepted_table")),
-              s(p, "id_column", "vec_id"), s(p, "vector_column", "embedding"),
-              nCells = s(p, "n_cells", "16").toInt,
-              seed = s(p, "seed", "42").toLong,
-              maxTrainRows = s(p, "max_train_rows", "100000").toInt,
-              maxReps = s(p, "max_reps", "1000000").toInt,
-              centroids = Option(s(p, "centroids_path"))
-                .map(graft.vec.Prototypes.loadCentroids(df.sparkSession, _)).orNull)
-            Option(s(p, "save_model_path"))
-              .foreach(graft.vec.SemGate.saveSemGate(df.sparkSession, m, _))
+        val (vec, id) = (vecCol(a), vecId(a))
+        val dedup = semDedup(a, id, vec)
+        val (cents, prune) = (protoCentroids(a, id, vec), a.double("prune_fraction", 0.3))
+        (df, _) => {
+          val survivors = dedup(df)
+          graft.vec.Prototypes.protoApply(survivors, id, vec, cents(survivors), prune)
+        } },
+      "semantic_gate" -> { a => // frozen semantic gate (round 13): the
+        // stream transform's batch counterpart in audit mode (adds
+        // sem_cell/sem_max_cos/sem_dup). model_path loads YESTERDAY'S fit;
+        // without it the op fits on `accepted_table` (the frozen accepted
+        // corpus — NEVER the incoming frame, whose every row would gate
+        // itself out at cosine 1.0) and save_model_path keeps the result.
+        import graft.vec.SemGate
+        val (modelPath, accepted) = (a.opt("model_path"), a.opt("accepted_table"))
+        a.require(modelPath.isDefined || accepted.isDefined,
+          "semantic_gate requires params.model_path (a saved " +
+            "SemGate.saveSemGate directory) or params.accepted_table " +
+            "(catalog table with the frozen accepted corpus) to fit")
+        val (id, vec) = (vecId(a), vecCol(a))
+        val (nCells, seed) = (a.int("n_cells", 16), a.long("seed", 42L))
+        val (maxTrainRows, maxReps) = (a.int("max_train_rows", 100000), a.int("max_reps", 1000000))
+        val (centroids, savePath) = (a.opt("centroids_path"), a.opt("save_model_path"))
+        val threshold = a.double("threshold", 0.95)
+        (df, tables) => {
+          val spark = df.sparkSession
+          val model = modelPath.map(SemGate.loadSemGate(spark, _)).getOrElse {
+            val m = SemGate.semGateFit(tables(accepted.get), id, vec, nCells = nCells, seed = seed,
+              maxTrainRows = maxTrainRows, maxReps = maxReps,
+              centroids = centroids.map(graft.vec.Prototypes.loadCentroids(spark, _)).orNull)
+            savePath.foreach(SemGate.saveSemGate(spark, m, _))
             m
-        }
-        graft.vec.SemGate.semGateApply(df, s(p, "vector_column", "embedding"),
-          sgModel, s(p, "threshold", "0.95").toDouble)
-      case "pq_encode" => // encode with a stored model, or train-on-the-frame
+          }
+          SemGate.semGateApply(df, vec, model, threshold)
+        } },
+      "pq_encode" -> { a => // encode with a stored model, or train-on-the-frame
         // model_path: ENCODE WITH YESTERDAY'S CODEBOOK (appendable index);
         // without it the op trains on the incoming frame (deterministic)
         // and save_model_path optionally persists the result for tomorrow
-        val model = Option(s(p, "model_path")) match {
-          case Some(mp) => graft.vec.Pq.loadModel(df.sparkSession, mp)
-          case None =>
-            val m = graft.vec.Pq.train(df, s(p, "vector_column", "embedding"),
-              s(p, "id_column", "vec_id"), m = s(p, "m", "8").toInt,
-              nbits = s(p, "nbits", "8").toInt, seed = s(p, "seed", "42").toLong)
-            Option(s(p, "save_model_path"))
-              .foreach(graft.vec.Pq.saveModel(df.sparkSession, m, _))
-            m
-        }
-        graft.vec.Pq.encode(df, s(p, "vector_column", "embedding"), model,
-          s(p, "output_column", "pq_code"))
-      case "bloom_exclude" =>
-        require(tables != null, "bloom_exclude requires a table catalog")
-        require(s(p, "blocklist_table") != null,
-          "bloom_exclude requires params.blocklist_table (name of a catalog table)")
-        require(s(p, "blocklist_key") != null,
-          "bloom_exclude requires params.blocklist_key (key column in the blocklist table)")
-        graft.ops.Scale.excludeKeysBloom(df, s(p, "key_column", id),
-          tables(s(p, "blocklist_table")), s(p, "blocklist_key"),
-          s(p, "fpp", "0.01").toDouble)
-      case other => throw new IllegalArgumentException(s"Unknown text_processing operation: $other")
-    }
+        import graft.vec.Pq
+        val (modelPath, vec, id) = (a.opt("model_path"), vecCol(a), vecId(a))
+        val (m, nbits, seed) = (a.int("m", 8), a.int("nbits", 8), a.long("seed", 42L))
+        val (savePath, out) = (a.opt("save_model_path"), a.str("output_column", "pq_code"))
+        (df, _) => {
+          val model = modelPath.map(Pq.loadModel(df.sparkSession, _)).getOrElse {
+            val trained = Pq.train(df, vec, id, m = m, nbits = nbits, seed = seed)
+            savePath.foreach(Pq.saveModel(df.sparkSession, trained, _))
+            trained
+          }
+          Pq.encode(df, vec, model, out)
+        } },
+      "bloom_exclude" -> { a =>
+        val (key, table) = (keyCol(a, idCol(a)), a.req("blocklist_table"))
+        val (blockKey, fpp) = (a.req("blocklist_key"), a.double("fpp", 0.01))
+        (df, tables) => Scale.excludeKeysBloom(df, key, tables(table), blockKey, fpp) })(a)
   }
 
-  private def applyValidate(df: DataFrame, p: Map[String, Any]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val exps: Seq[(String, Double)] = p.get("expectations") match {
-      case Some(l: java.util.List[_]) =>
-        scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq.map {
-          case m: java.util.Map[_, _] =>
-            val mm = scala.jdk.CollectionConverters.MapHasAsScala(m).asScala
-              .map { case (k, v) => k.toString -> v }.toMap
-            (mm("expression").toString, mm.get("min_ratio").map(_.toString.toDouble).getOrElse(1.0))
-        }
-      case _ => Seq((s(p, "expression"), s(p, "min_ratio", "1.0").toDouble))
-    }
+  /** validate op (ecommerce_pipeline.yaml:28-39): rows satisfying each
+    * expression must be ≥ its min_ratio, else the pipeline fails. This is
+    * an action (one aggregate), by design — validation is a barrier in the
+    * reference lifecycle too (pipeline.py:234-256). */
+  def validate(a: Params): Bound = {
+    val listed = a.subs("expectations").map(e => (e.req("expression"), e.double("min_ratio", 1.0)))
+    val (flat, flatMin) = (a.opt("expression"), a.double("min_ratio", 1.0))
+    a.require(listed.nonEmpty || flat.isDefined, "validate requires params.expression or params.expectations")
+    val exps = if (listed.nonEmpty) listed else flat.map(_ -> flatMin).toSeq
     // No persist: caching here would pin a cache entry for the session's
     // lifetime (nothing downstream can know to unpersist it). The price is
     // one extra upstream computation when the pipeline later materializes —
     // same trade Pipeline.execute's validation stage makes; callers who
     // want reuse should persist upstream explicitly.
-    val aggs = exps.zipWithIndex.map { case ((e, _), i) =>
-      avg(when(expr(e), 1.0).otherwise(0.0)).as(s"r$i")
+    (df, _) => {
+      passRatios(df, exps.map(_._1)).zip(exps).foreach { case (ratio, (e, minR)) =>
+        require(ratio >= minR, f"validation failed: '$e' pass ratio $ratio%.4f < $minR")
+      }
+      df
     }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    exps.zipWithIndex.foreach { case ((e, minR), i) =>
-      val ratio = if (row.isNullAt(i)) 1.0 else row.getDouble(i)
-      require(ratio >= minR, f"validation failed: '$e' pass ratio $ratio%.4f < $minR")
-    }
-    df
   }
 
-  /** multimodal op: media-column ops dispatched by `operation`. */
-  private def applyMultimodal(df: DataFrame, p: Map[String, Any]): DataFrame = {
-    import graft.multimodal.Multimodal
-    s(p, "operation") match {
-      case "as_media" =>
-        Multimodal.asMedia(df, s(p, "id_column", "doc_id"), s(p, "payload_column", "payload"),
-          s(p, "format", "application/octet-stream"), s(p, "width", "0").toInt,
-          s(p, "height", "0").toInt, s(p, "duration_ms", "0").toLong)
-      case "decode_image_stats" =>
-        Multimodal.decodeImageStats(df, s(p, "payload_column", "payload"),
-          s(p, "output_column", "image_stats"), s(p, "batch_size", "256").toInt)
-      case "resize_images" =>
-        require(s(p, "width") != null && s(p, "height") != null,
-          "multimodal resize_images requires params.width and params.height (target dims)")
-        Multimodal.resizeImages(df, s(p, "width").toInt, s(p, "height").toInt,
-          s(p, "batch_size", "256").toInt)
-      case "image_dhash" => // REAL decode → perceptual 64-bit difference hash
-        Multimodal.imageDHash(df, s(p, "payload_column", "payload"),
-          s(p, "output_column", "dhash"), s(p, "batch_size", "256").toInt)
-      case "image_neardup" => // Hamming-banded image near-dup pairs over a dhash column
-        Multimodal.imageNearDupPairs(df, s(p, "id_column", "media_id"),
-          s(p, "hash_column", "dhash"), s(p, "max_hamming", "3").toInt,
-          s(p, "max_bucket_size", "1000").toInt)
-      case "decode_audio_stats" =>
-        Multimodal.decodeAudioStats(df, s(p, "payload_column", "payload"),
-          s(p, "output_column", "audio_stats"), s(p, "batch_size", "256").toInt)
-      case "trim_audio" =>
-        Multimodal.trimAudio(df, s(p, "max_ms", "60000").toLong,
-          s(p, "batch_size", "256").toInt)
-      case "sample_gif_frames" => // REAL multi-frame decode (animated GIF)
-        Multimodal.sampleGifFrames(df, s(p, "every_n", "1").toInt,
-          s(p, "batch_size", "64").toInt)
-      case "sample_frames" =>
-        Multimodal.sampleFrames(df, s(p, "every_ms", "1000").toLong)
-      case "decode_features_stub" => // video/compressed audio: no codec here
-        Multimodal.decodeToFeatures(df, s(p, "payload_column", "payload"),
-          s(p, "dim", "16").toInt, s(p, "output_column", "features"))
-      case other => throw new IllegalArgumentException(s"Unknown multimodal operation: $other")
+  /** The share of rows satisfying each SQL expression, in one aggregate
+    * pass (1.0 over an empty frame; no pass for no expressions). */
+  def passRatios(df: DataFrame, exprs: Seq[String]): Seq[Double] =
+    if (exprs.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.functions.{avg, expr, when}
+      val aggs = exprs.zipWithIndex.map { case (e, i) => avg(when(expr(e), 1.0).otherwise(0.0)).as(s"r$i") }
+      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      exprs.indices.map(i => if (row.isNullAt(i)) 1.0 else row.getDouble(i))
     }
+
+  /** multimodal op (graft.multimodal.Multimodal): wrap binary payloads,
+    * REAL ImageIO decode/resize, REAL WAV decode/trim (AudioSystem), frame
+    * sampling, and the video/compressed-audio stub featurizer. */
+  def multimodal(a: Params): Bound = {
+    import graft.multimodal.Multimodal
+    a.select[Arm]("operation")(
+      "as_media" -> { a =>
+        val (id, payload, format) = (a.str("id_column", "doc_id"), payloadCol(a),
+          a.str("format", "application/octet-stream"))
+        val (w, h, ms) = (a.int("width", 0), a.int("height", 0), a.long("duration_ms", 0L))
+        (df, _) => Multimodal.asMedia(df, id, payload, format, w, h, ms) },
+      "decode_image_stats" -> { a =>
+        val (payload, out, batch) = (payloadCol(a), a.str("output_column", "image_stats"), batchSize(a))
+        (df, _) => Multimodal.decodeImageStats(df, payload, out, batch) },
+      "resize_images" -> { a => // target dims
+        val (w, h, batch) = (a.reqInt("width"), a.reqInt("height"), batchSize(a))
+        (df, _) => Multimodal.resizeImages(df, w, h, batch) },
+      "image_dhash" -> { a => // REAL decode → perceptual 64-bit difference hash
+        val (payload, out, batch) = (payloadCol(a), a.str("output_column", "dhash"), batchSize(a))
+        (df, _) => Multimodal.imageDHash(df, payload, out, batch) },
+      "image_neardup" -> { a => // Hamming-banded image near-dup pairs over a dhash column
+        val (id, hash) = (a.str("id_column", "media_id"), a.str("hash_column", "dhash"))
+        val (maxHamming, maxBucket) = (a.int("max_hamming", 3), a.int("max_bucket_size", 1000))
+        (df, _) => Multimodal.imageNearDupPairs(df, id, hash, maxHamming, maxBucket) },
+      "decode_audio_stats" -> { a =>
+        val (payload, out, batch) = (payloadCol(a), a.str("output_column", "audio_stats"), batchSize(a))
+        (df, _) => Multimodal.decodeAudioStats(df, payload, out, batch) },
+      "trim_audio" -> { a => val (maxMs, batch) = (a.long("max_ms", 60000L), batchSize(a))
+        (df, _) => Multimodal.trimAudio(df, maxMs, batch) },
+      "sample_gif_frames" -> { a => // REAL multi-frame decode (animated GIF)
+        val (every, batch) = (a.int("every_n", 1), a.int("batch_size", 64))
+        (df, _) => Multimodal.sampleGifFrames(df, every, batch) },
+      "sample_frames" -> { a => val every = a.long("every_ms", 1000L)
+        (df, _) => Multimodal.sampleFrames(df, every) },
+      "decode_features_stub" -> { a => // video/compressed audio: no codec here
+        val (payload, dim, out) = (payloadCol(a), a.int("dim", 16), a.str("output_column", "features"))
+        (df, _) => Multimodal.decodeToFeatures(df, payload, dim, out) })(a)
   }
 
   /** quality_monitor op: replaces the frame with its metrics relation
@@ -1140,17 +967,39 @@ object OpCompiler {
     * `as_of` (any to_timestamp-parsable string) pins timeliness for
     * reproducible runs; `at_epoch` pins the alert ids.
     */
-  private def applyQualityMonitor(df: DataFrame, p: Map[String, Any]): DataFrame = {
+  def qualityMonitor(a: Params): Bound = {
     import org.apache.spark.sql.functions.{current_timestamp, lit, to_timestamp}
     import graft.quality.QualityMonitor
-    val asOf = Option(s(p, "as_of")).map(v => to_timestamp(lit(v))).getOrElse(current_timestamp())
-    val metrics = QualityMonitor.runChecks(df, s(p, "table_name", "input"),
-      QualityMonitor.defaultChecks(df), asOf)
-    s(p, "emit", "metrics") match {
-      case "metrics" => metrics
-      case "alerts"  => QualityMonitor.alerts(metrics, s(p, "at_epoch", "0").toLong)
-      case other     => throw new IllegalArgumentException(
-        s"quality_monitor: emit must be metrics|alerts, got '$other'")
-    }
+    val (asOf, table) = (a.opt("as_of"), a.str("table_name", "input"))
+    def metrics(df: DataFrame): DataFrame = QualityMonitor.runChecks(df, table,
+      QualityMonitor.defaultChecks(df), asOf.map(v => to_timestamp(lit(v))).getOrElse(current_timestamp()))
+    a.select[Arm]("emit", "metrics")(
+      "metrics" -> { _ => (df, _) => metrics(df) },
+      "alerts" -> { a => val epoch = a.long("at_epoch", 0L)
+        (df, _) => QualityMonitor.alerts(metrics(df), epoch) })(a)
+  }
+
+  /** scd2 op (graft.ops.Scd): init, apply (change batch from the catalog)
+    * or cdc_apply (Type-1 CDC merge: df = snapshot, changes from catalog). */
+  def scd2(a: Params): Bound = {
+    import graft.ops.Scd
+    val (keys, tracked, ts) = (a.list("keys"), a.list("tracked"), a.str("ts_col", "ts"))
+    a.select[Arm]("operation", "apply")(
+      "init" -> { _ => (df, _) => Scd.scd2Init(df, keys, tracked, ts) },
+      "apply" -> { a => val (updates, order) = (a.req("updates_table"), a.list("order_by"))
+        (df, tables) => Scd.scd2Apply(df, tables(updates), keys, tracked, ts, order) },
+      "cdc_apply" -> { a =>
+        val (changes, opCol, seqCol) = (a.req("changes_table"), a.str("op_col", "op"), a.str("seq_col", "seq"))
+        (df, tables) => Scd.applyCdc(df, tables(changes), keys, opCol, seqCol) })(a)
+  }
+
+  /** layout op (graft.sources.Layout): Morton key, or cluster by it. */
+  def layout(a: Params): Bound = {
+    import graft.sources.Layout
+    val (cols, bits, key) = (a.list("columns"), a.int("bits", 8), a.str("key_col", "zkey"))
+    a.select[Arm]("operation", "zorder_key")(
+      "zorder_key" -> { _ => (df, _) => Layout.addZOrderKey(df, cols, bits, key) },
+      "cluster" -> { a => val partitions = a.int("partitions", 0)
+        (df, _) => Layout.clusterByZOrder(df, cols, bits, partitions, key) })(a)
   }
 }

@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.sources.{Readers, Sinks}
 
 /** Config-compiled pipeline runtime — the §3.1 lifecycle
@@ -75,10 +74,11 @@ object Pipeline {
   def execute(spark: SparkSession, conf: PipelineConfig.PipelineConf,
               plog: Option[StructuredLog.PipelineLogger]): Result = {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // frames persisted by `cache` ops — unpersisted when the run ends
-    // (success, validation failure, or crash): an in-run cache must not
-    // squat in executor storage after its pipeline is gone
+    // frames persisted by `cache` ops and by the storage stage — unpersisted
+    // when the run ends (success, validation failure, or crash): an in-run
+    // cache must not squat in executor storage after its pipeline is gone
     val caches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    var attrition: Option[OpCompiler.Attrition] = None
     var stage = "load"
     try {
       plog.foreach(_.startPipeline(Map(
@@ -91,18 +91,19 @@ object Pipeline {
       plog.foreach(_.endStep("load"))
       stage = "process"
       plog.foreach(_.startStep("process"))
-      val (processed, attritionThunk) = conf.attrition match {
+      val processed = conf.attrition match {
         case Some(a) =>
           val (out, rep) = OpCompiler.compileObserved(
             conf.operations, catalog, caches, a.weightColumn)(primary)
-          (out, Some(rep))
+          attrition = Some(rep)
+          out
         case None =>
-          (OpCompiler.compile(conf.operations, catalog, caches)(primary), None)
+          OpCompiler.compile(conf.operations, catalog, caches)(primary)
       }
       // observe() metrics ride the run's own validation/storage actions —
       // zero extra passes; a run with neither gets one cheap noop drive
       def attritionReport(actionRan: Boolean): Seq[OpCompiler.StageAttrition] =
-        attritionThunk.map { rep =>
+        attrition.map { rep =>
           if (!actionRan) processed.write.format("noop").mode("overwrite").save()
           val report = rep()
           conf.attrition.flatMap(_.reportPath).foreach { rp =>
@@ -119,15 +120,7 @@ object Pipeline {
       stage = "validate"
 
       // validation stage (pipeline.py:234-256): one aggregate pass
-      val ratios: Seq[Double] =
-        if (conf.expectations.isEmpty) Nil
-        else {
-          val aggs = conf.expectations.zipWithIndex.map { case (e, i) =>
-            avg(when(expr(e.expression), 1.0).otherwise(0.0)).as(s"r$i")
-          }
-          val row = processed.agg(aggs.head, aggs.tail: _*).collect()(0)
-          conf.expectations.indices.map(i => if (row.isNullAt(i)) 1.0 else row.getDouble(i))
-        }
+      val ratios = OpCompiler.passRatios(processed, conf.expectations.map(_.expression))
       // check by INDEX: the name-keyed report map collapses duplicate names
       // (last wins), and checking through it would let a failing expectation
       // hide behind a passing namesake
@@ -158,6 +151,7 @@ object Pipeline {
       val rows = conf.storage match {
         case Some(st) =>
           val counted = processed.persist()
+          caches += counted
           val n = counted.count()
           st.typ match {
             case "parquet" =>
@@ -195,7 +189,6 @@ object Pipeline {
               "pipeline", conf.name,
               Map("storage_type" -> st.typ, "path" -> st.path))
           }
-          counted.unpersist()
           n
         case None => -1L
       }
@@ -215,6 +208,7 @@ object Pipeline {
         }
         Result(conf.name, "failed", 0L, Map.empty, errors.toSeq)
     } finally {
+      attrition.foreach(_.close())
       caches.foreach(c => try c.unpersist(blocking = false) catch { case _: Throwable => () })
     }
   }

@@ -8,15 +8,12 @@ import java.{util => ju}
   * operations[], validation, storage — with `${VAR:default}` environment
   * substitution (config.py:123-139).
   *
-  * Parsed with SnakeYAML (ships with Spark) into the OpSpec AST, so the
-  * whole pipeline compiles to ONE lazy Catalyst plan (§3.1 port note:
-  * "the op compiler replaces the interpreter").
-  *
-  * Implements the union of the dispatched op surface AND the op types the
-  * reference's shipped YAMLs declare but its dispatcher never handles
-  * (SURVEY §2.A gap note): `feature_engineering`, `time_series_processing`,
-  * `validate`, plus transform params `column_mappings` / `type_conversions` /
-  * `calculated_columns` / `date_columns`.
+  * Parsed with SnakeYAML (ships with Spark) and bound through [[Params]]
+  * into the OpSpec AST — every key checked, every op family bound — so the
+  * whole pipeline compiles to ONE lazy Catalyst plan (§3.1 port note: "the
+  * op compiler replaces the interpreter"). Covers the dispatched op surface
+  * AND the op types and transform params the reference's shipped YAMLs
+  * declare but its dispatcher never handles (SURVEY §2.A gap note).
   */
 object PipelineConfig {
 
@@ -48,203 +45,165 @@ object PipelineConfig {
   def fromYaml(yaml: String): PipelineConf = {
     val root = new org.yaml.snakeyaml.Yaml()
       .load[ju.Map[String, AnyRef]](substituteEnv(yaml))
-    fromMap(root.asScala.toMap)
+    Params.bind("", root)(parse)
   }
 
-  // ------------------------------------------------------------- internals
-
-  private def str(m: Map[String, Any], k: String, dflt: String = null): String =
-    m.get(k).map(_.toString).getOrElse(dflt)
-
-  private def strSeq(m: Map[String, Any], k: String): Seq[String] = m.get(k) match {
-    case Some(l: ju.List[_]) => l.asScala.map(_.toString).toSeq
-    case Some(s: String)     => Seq(s)
-    case _                   => Nil
+  /** The whole config: every section read through [[Params]], every op
+    * bound, every unread key rejected — all before any SparkSession. */
+  private def parse(root: Params): PipelineConf = {
+    val name = root.str("name", "pipeline")
+    val sources = root.section("source")(source).toSeq ++ root.subs("sources").map(source)
+    val ops = root.subs("operations").map(op)
+    val expectations = root.sub("validation").subs("expectations").map(expectation)
+    PipelineConf(name, sources, ops, expectations, root.section("storage")(storage),
+      root.section("attrition")(attrition))
   }
 
-  private def anySeq(m: Map[String, Any], k: String): Seq[Any] = m.get(k) match {
-    case Some(l: ju.List[_]) => l.asScala.toSeq
-    case Some(v)             => Seq(v)
-    case _                   => Nil
+  /** Reader and writer `options:` stay free-form: they pass through to
+    * Spark (jdbc, csv) or name catalog/lineage hooks. */
+  private def options(a: Params): Map[String, String] =
+    a.mapping("options").map { case (k, v) => k -> String.valueOf(v) }.toMap
+
+  private[graft] def source(a: Params): SourceConf =
+    SourceConf(a.oneOf("type", "parquet", "csv", "json", "parquet", "orc", "text", "s3", "jdbc"),
+      a.opt("path").orNull, options(a), a.str("table", "main"))
+
+  private[graft] def storage(a: Params): StorageConf =
+    StorageConf(a.oneOf("type", "parquet", "parquet", "csv", "orc", "jdbc", "noop"),
+      a.opt("path").orNull, a.str("mode", "overwrite"), a.list("partition_by"), options(a))
+
+  private[graft] def expectation(a: Params): ExpectationConf = {
+    val e = a.req("expression")
+    ExpectationConf(a.opt("name").getOrElse(e), e, a.double("min_ratio", 1.0))
   }
 
-  private def subMap(v: Any): Map[String, Any] = v match {
-    case m: ju.Map[_, _] => m.asScala.map { case (k, x) => k.toString -> (x: Any) }.toMap
-    case _               => Map.empty
+  private[graft] def attrition(a: Params): AttritionConf =
+    AttritionConf(a.opt("weight_column"), a.opt("report_path"))
+
+  /** One `operations:` entry, standalone (no section index in errors). */
+  private[graft] def parseOp(m: Map[String, Any]): OpSpec = Params.bind("operation", m)(op)
+
+  /** One op: `type` plus its keys, either flat or under `params:` (not
+    * both — a flat key next to `params:` is rejected as unknown). */
+  private[graft] def op(a: Params): OpSpec = {
+    val p = if (a.has("params")) a.params else a
+    a.select[Params => OpSpec]("type")(opTypes: _*)(p)
   }
 
-  /** Order-preserving variant: SnakeYAML hands us LinkedHashMaps, but a
-    * scala immutable Map loses declaration order past 4 entries — fatal for
-    * transform chains where step N reads step N-1's output.
-    */
-  private def subMapOrdered(v: Any): Seq[(String, Any)] = v match {
-    case m: ju.Map[_, _] => m.asScala.toSeq.map { case (k, x) => k.toString -> (x: Any) }
-    case _               => Nil
-  }
-
-  private def fromMap(root: Map[String, Any]): PipelineConf = {
-    val name = str(root, "name", "pipeline")
-    val sources: Seq[SourceConf] = root.get("source").map(subMap).map(parseSource).toSeq ++
-      (root.get("sources") match {
-        case Some(l: ju.List[_]) => l.asScala.map(v => parseSource(subMap(v))).toSeq
-        case _                   => Nil
-      })
-    val ops = root.get("operations") match {
-      case Some(l: ju.List[_]) => l.asScala.map(v => parseOp(subMap(v))).toSeq
-      case _                   => Nil
-    }
-    val expectations = root.get("validation").map(subMap).toSeq.flatMap { v =>
-      v.get("expectations") match {
-        case Some(l: ju.List[_]) => l.asScala.map { e =>
-          val em = subMap(e)
-          ExpectationConf(str(em, "name", str(em, "expression", "expectation")),
-            str(em, "expression"), str(em, "min_ratio", "1.0").toDouble)
-        }.toSeq
-        case _ => Nil
-      }
-    }
-    val storage = root.get("storage").map(subMap).map { s =>
-      StorageConf(str(s, "type", "parquet"), str(s, "path"), str(s, "mode", "overwrite"),
-        strSeq(s, "partition_by"),
-        subMap(s.getOrElse("options", null)).map { case (k, v) => k -> v.toString })
-    }
-    val attrition = root.get("attrition").map(subMap).map { a =>
-      AttritionConf(Option(str(a, "weight_column")), Option(str(a, "report_path")))
-    }
-    PipelineConf(name, sources, ops, expectations, storage, attrition)
-  }
-
-  private def parseSource(m: Map[String, Any]): SourceConf =
-    SourceConf(str(m, "type", "parquet"), str(m, "path"),
-      subMap(m.getOrElse("options", null)).map { case (k, v) => k -> v.toString },
-      str(m, "table", "main"))
-
-  private[graft] def parseOp(m: Map[String, Any]): OpSpec = {
+  /** Every `type:` an op may have, with its binder. */
+  private[graft] val opTypes: Seq[(String, Params => OpSpec)] = {
     import OpSpec._
-    val params = if (m.contains("params")) subMap(m("params")) else m
-    str(m, "type") match {
-      case "filter" =>
-        if (params.contains("condition")) FilterCondition(str(params, "condition"))
-        else FilterColumn(str(params, "column"), str(params, "operator", "=="), params.getOrElse("value", null))
-      case "select" => Select(strSeq(params, "columns"), strSeq(params, "exclude"))
-      case "transform" => parseTransform(params)
-      case "aggregate" =>
-        Aggregate(strSeq(params, "group_by"), parseAggregations(params.getOrElse("aggregations", null)))
-      case "join" =>
+    Seq(
+      "filter" -> { p =>
+        p.opt("condition") match {
+          case Some(c) => FilterCondition(c)
+          case None    => FilterColumn(p.req("column"), p.str("operator", "=="), p.any("value"))
+        } },
+      "select" -> { p => Select(p.list("columns"), p.list("exclude")) },
+      "transform" -> transform,
+      "aggregate" -> { p => Aggregate(p.list("group_by"), p.pairs("aggregations")) },
+      "join" -> { p =>
         // `using` aliases `on`: bare `on:` is a YAML 1.1 BOOLEAN token, so
-        // an unquoted `on: [k]` silently parses as key `true` and the join
-        // "loses" its keys — accept the unambiguous spelling too
-        val joinOn = { val o = strSeq(params, "on"); if (o.nonEmpty) o else strSeq(params, "using") }
-        Join(str(params, "right_table"), joinOn, str(params, "condition"),
-          str(params, "join_type", "inner"), str(params, "broadcast", "false").toBoolean)
-      case "sort" =>
-        val asc = params.get("ascending") match {
-          case Some(l: ju.List[_]) => l.asScala.map(_.toString.toBoolean).toSeq
-          case Some(b)             => Seq(b.toString.toBoolean)
-          case None                => Nil
-        }
-        Sort(strSeq(params, "columns"), asc)
-      case "limit"  => Limit(str(params, "n", "1000").toInt)
-      case "sample" => Sample(str(params, "fraction", "0.1").toDouble, str(params, "seed", "42").toLong)
-      case "deduplicate" =>
-        Deduplicate(strSeq(params, "subset"), strSeq(params, "order_by"), str(params, "keep", "first"))
-      case "clean" =>
-        Clean(strSeq(params, "operations"))
-      case "pivot" =>
+        // an unquoted `on: [k]` parses as key `true` (rejected as unknown)
+        val (on, using) = (p.list("on"), p.list("using"))
+        Join(p.req("right_table"), if (on.nonEmpty) on else using, p.opt("condition").orNull,
+          p.str("join_type", "inner"), p.bool("broadcast", false)) },
+      "sort" -> { p => Sort(p.list("columns"), p.bools("ascending")) },
+      "limit" -> { p => Limit(p.int("n", 1000)) },
+      "sample" -> { p => Sample(p.double("fraction", 0.1), p.long("seed", 42L)) },
+      "deduplicate" -> { p => Deduplicate(p.list("subset"), p.list("order_by"), p.str("keep", "first")) },
+      "clean" -> { p => Clean(p.list("operations")) },
+      "pivot" -> { p =>
         // pivot_values: declared pivot domain — skips the distinct pre-scan
         // and bounds output width (the SURVEY §7 scale knob)
-        Pivot(strSeq(params, "group_cols"), str(params, "pivot_col"), str(params, "value_col"),
-          str(params, "agg_func", "sum"), anySeq(params, "pivot_values"))
-      case "melt" =>
-        Melt(strSeq(params, "id_vars"), strSeq(params, "value_vars"),
-          str(params, "var_name", "variable"), str(params, "value_name", "value"))
-      case "window" => parseWindow(params)
-      case "custom_sql" =>
-        CustomSql(str(params, "query"), str(params, "temp_view_name", "temp_table"))
-      case "feature_engineering"     => FeatureEngineering(params)
-      case "time_series_processing"  => TimeSeriesProcessing(params)
-      case "text_processing"         => TextProcessing(params)
-      case "multimodal"              => MultimodalOp(params)
-      case "quality_monitor"         => QualityMonitorOp(params)
-      case "scd2"                    => Scd2Op(params)
-      case "layout"                  => LayoutOp(params)
-      case "windowed_aggregation"    => TimeSeriesProcessing(params + ("operation" -> "resample"))
-      case "validate"                => Validate(params)
+        val values = p.any("pivot_values") match {
+          case null                => Nil
+          case l: ju.List[_]       => l.asScala.toSeq
+          case v                   => Seq(v)
+        }
+        Pivot(p.list("group_cols"), p.req("pivot_col"), p.req("value_col"), p.str("agg_func", "sum"), values) },
+      "melt" -> { p =>
+        Melt(p.list("id_vars"), p.list("value_vars"), p.str("var_name", "variable"), p.str("value_name", "value"))
+      },
+      "window" -> window,
+      "custom_sql" -> { p => CustomSql(p.req("query"), p.str("temp_view_name", "temp_table")) },
+      "feature_engineering" -> { p => FeatureEngineering(p.values)(OpCompiler.featureEngineering(p)) },
+      "time_series_processing" -> { p => TimeSeriesProcessing(p.values)(OpCompiler.timeSeries(p)) },
+      "text_processing" -> { p => TextProcessing(p.values)(OpCompiler.textProcessing(p)) },
+      "multimodal" -> { p => MultimodalOp(p.values)(OpCompiler.multimodal(p)) },
+      "quality_monitor" -> { p => QualityMonitorOp(p.values)(OpCompiler.qualityMonitor(p)) },
+      "scd2" -> { p => Scd2Op(p.values)(OpCompiler.scd2(p)) },
+      "layout" -> { p => LayoutOp(p.values)(OpCompiler.layout(p)) },
+      // the streaming_pipeline.yaml spelling: time_series_processing,
+      // whose default operation is already resample
+      "windowed_aggregation" -> { p => TimeSeriesProcessing(p.values)(OpCompiler.timeSeries(p)) },
+      "validate" -> { p => Validate(p.values)(OpCompiler.validate(p)) },
       // in-run result cache (performance/cache.py:98-256; "persist" is the
       // Spark-native spelling of the same op)
-      case "cache"                   => CacheOp(str(params, "storage_level", "MEMORY_AND_DISK"))
-      case "persist"                 => CacheOp(str(params, "storage_level", "MEMORY_AND_DISK"))
-      case other => throw new IllegalArgumentException(s"Unknown operation type: $other")
-    }
+      "cache" -> cache,
+      "persist" -> cache)
+  }
+
+  private def cache(p: Params): OpSpec = {
+    val level = p.str("storage_level", "MEMORY_AND_DISK")
+    OpCompiler.storageLevel(level)
+    OpSpec.CacheOp(level)
   }
 
   /** transform supports the dispatched shape (`transformations` map) AND the
     * declared-but-never-dispatched param spellings from the shipped YAMLs
     * (column_mappings / type_conversions / calculated_columns / date_columns,
-    * ecommerce_pipeline.yaml:19-27).
+    * ecommerce_pipeline.yaml:19-27). Steps run in that order.
     */
-  private def parseTransform(params: Map[String, Any]): OpSpec = {
+  private def transform(a: Params): OpSpec = {
     import OpSpec._
-    val steps = scala.collection.mutable.ArrayBuffer.empty[OpSpec]
-    params.get("transformations").map(subMapOrdered).foreach { ts =>
-      ts.foreach { case (column, conf) =>
-        val cm = subMap(conf)
-        val p = subMap(cm.getOrElse("params", null))
-        steps += (str(cm, "type") match {
-          case "rename"    => Rename(Map(column -> str(p, "new_name")))
-          case "cast"      => Cast(Map(column -> str(p, "dtype")))
-          case "fill_null" => FillNull(column, str(p, "method", "value"), p.getOrElse("value", null),
-                                strSeq(p, "order_by"), strSeq(p, "partition_by"))
-          case "calculate" => Calculate(column, str(p, "expression"))
-          case "extract_date_parts" =>
-            ExtractDateParts(column, p.get("year").forall(_.toString.toBoolean),
-              p.get("month").forall(_.toString.toBoolean), p.get("day").forall(_.toString.toBoolean),
-              p.get("weekday").exists(_.toString.toBoolean))
-          case "regex_extract" => RegexExtract(column, str(p, "pattern"), str(p, "group_idx", "1").toInt)
-          case "string_operations" =>
-            StringOperation(column, str(p, "operation"), str(p, "old_value"), str(p, "new_value"))
-          case other => throw new IllegalArgumentException(s"Unknown transform type: $other")
-        })
-      }
-    }
-    params.get("column_mappings").map(subMap).foreach { m2 =>
-      steps += Rename(m2.map { case (k, v) => k -> v.toString })
-    }
-    params.get("type_conversions").map(subMap).foreach { m2 =>
-      steps += Cast(m2.map { case (k, v) => k -> v.toString })
-    }
-    params.get("date_columns").foreach { v =>
-      strSeq(Map("c" -> v), "c").foreach(c => steps += Cast(Map(c -> "timestamp")))
-    }
-    params.get("calculated_columns").map(subMapOrdered).foreach { m2 =>
-      m2.foreach { case (colName, exprStr) => steps += Calculate(colName, exprStr.toString) }
-    }
-    if (steps.size == 1) steps.head else OpSpec.Sequence(steps.toSeq)
+    val mappings = a.mapping("column_mappings")
+    val conversions = a.mapping("type_conversions")
+    val dates = a.list("date_columns")
+    val calculated = a.mapping("calculated_columns")
+    val steps =
+      a.entries("transformations", "column").map { case (column, t) =>
+        t.select[(String, Params) => OpSpec]("type")(transformSteps: _*)(column, t.params)
+      } ++
+      (if (mappings.isEmpty) Nil else Seq(Rename(mappings.map { case (k, v) => k -> String.valueOf(v) }.toMap))) ++
+      (if (conversions.isEmpty) Nil else Seq(Cast(conversions.map { case (k, v) => k -> String.valueOf(v) }.toMap))) ++
+      dates.map(c => Cast(Map(c -> "timestamp"))) ++
+      calculated.map { case (c, e) => Calculate(c, String.valueOf(e)) }
+    if (steps.size == 1) steps.head else Sequence(steps)
   }
 
-  private def parseAggregations(v: Any): Seq[(String, String)] = subMap(v).toSeq.flatMap {
-    case (c, fn: ju.List[_]) => fn.asScala.map(f => c -> f.toString)
-    case (c, fn)             => Seq(c -> fn.toString)
+  /** The per-column steps of a `transformations:` block. */
+  private[graft] val transformSteps: Seq[(String, (String, Params) => OpSpec)] = {
+    import OpSpec._
+    Seq(
+      "rename" -> { (c, p) => Rename(Map(c -> p.req("new_name"))) },
+      "cast" -> { (c, p) => Cast(Map(c -> p.req("dtype"))) },
+      "fill_null" -> { (c, p) =>
+        FillNull(c, p.str("method", "value"), p.any("value"), p.list("order_by"), p.list("partition_by")) },
+      "calculate" -> { (c, p) => Calculate(c, p.req("expression")) },
+      "extract_date_parts" -> { (c, p) =>
+        ExtractDateParts(c, p.bool("year", true), p.bool("month", true), p.bool("day", true),
+          p.bool("weekday", false)) },
+      "regex_extract" -> { (c, p) => RegexExtract(c, p.req("pattern"), p.int("group_idx", 1)) },
+      "string_operations" -> { (c, p) =>
+        StringOperation(c, p.req("operation"), p.opt("old_value").orNull, p.opt("new_value").orNull) })
   }
 
-  private def parseWindow(params: Map[String, Any]): OpSpec = {
+  private def window(p: Params): OpSpec = {
     import OpSpec._
-    val spec = subMap(params.getOrElse("window_spec", null))
-    val orderBy = strSeq(spec, "order_by").map(_ -> true)
-    def frame(k: String): Option[(Long, Long)] = spec.get(k) match {
-      case Some(l: ju.List[_]) if l.size == 2 =>
-        Some((l.get(0).toString.toLong, l.get(1).toString.toLong))
-      case _ => None
+    val spec = p.sub("window_spec")
+    def frame(k: String): Option[(Long, Long)] = {
+      val f = spec.longs(k)
+      spec.require(f.isEmpty || f.size == 2, s"$k takes [start, end]")
+      if (f.size == 2) Some((f(0), f(1))) else None
     }
-    val fns = params.get("functions") match {
-      case Some(l: ju.List[_]) => l.asScala.map { f =>
-        val fm = subMap(f)
-        WindowFuncSpec(str(fm, "type"), str(fm, "column"), str(fm, "alias"),
-          str(fm, "offset", "1").toInt, fm.getOrElse("default", null), str(fm, "n", "1").toInt,
-          str(fm, "min_periods", "1").toInt)
-      }.toSeq
-      case _ => Nil
+    val (partitionBy, orderBy) = (spec.list("partition_by"), spec.list("order_by").map(_ -> true))
+    val (rows, range) = (frame("rows_between"), frame("range_between"))
+    val fns = p.subs("functions").map { f =>
+      WindowFuncSpec(f.oneOf("type", null, graft.functions.WindowLib.FunctionTypes: _*),
+        f.opt("column").orNull, f.opt("alias").orNull, f.int("offset", 1), f.any("default"),
+        f.int("n", 1), f.int("min_periods", 1))
     }
-    WindowOp(strSeq(spec, "partition_by"), orderBy, fns, frame("rows_between"), frame("range_between"))
+    WindowOp(partitionBy, orderBy, fns, rows, range)
   }
 }

@@ -74,6 +74,11 @@ object WindowLib {
   def movingSum(c: String, k: Int, minPeriods: Int, w: WindowSpec): Column =
     movingAgg("sum", c, k, minPeriods, w)
 
+  /** Every `type:` a window op's function may name ([[applyWindowOp]]). */
+  val FunctionTypes: Seq[String] = Seq("row_number", "rank", "dense_rank", "percent_rank",
+    "ntile", "cume_dist", "lag", "lead", "first_value", "last_value", "nth_value",
+    "running_sum", "running_avg", "moving_avg", "moving_sum", "sum", "avg", "count", "min", "max")
+
   /** The op-dispatch entry (spark_processor.py:225-265 + the name-dispatch
     * table window_functions.py:386-435): apply a list of window functions over
     * one shared spec, honoring optional rows/range frames.

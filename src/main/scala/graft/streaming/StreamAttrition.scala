@@ -14,9 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * them into the same rows/weight in-out report — zero extra passes, the
   * metrics ride each micro-batch's own execution.
   *
-  * (Batch uses the `Observation` helper; it rejects streaming Datasets by
-  * design, which is why the stream path uses named observes + the
-  * listener bus.)
+  * (Batch uses named observes too, read from each query's observed
+  * metrics by a QueryExecutionListener — OpCompiler.Attrition; streams
+  * report theirs per micro-batch in the progress events.)
   *
   * Thread-safety: progress events arrive on the listener bus thread;
   * accumulation synchronizes, `report()` snapshots.

@@ -1,60 +1,250 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
 import java.{util => ju}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
+import graft.core.Params
 
 /** Config-driven streaming pipeline — the §3.3 lifecycle
   * (streaming_pipeline.yaml): stream source → record transforms/filters →
   * event-time windowed aggregation (watermark, checkpoint — the DECLARED
-  * semantics, streaming_pipeline.yaml:100-105) → sink.
-  *
-  * YAML shape:
+  * semantics, streaming_pipeline.yaml:100-105) → sink. Every section is
+  * bound at [[fromYaml]]; docs/OPS.md lists its keys, e.g.
   * {{{
-  * name: agg_stream
-  * stream_source: { type: file|kafka, path|servers+topics, format: json, schema: "ts TIMESTAMP, ..." }
-  * transforms:
-  *   - { type: calculate_field, field: x, expression: "v * 2" }
-  *   - { type: filter, condition: "x > 0" }
-  * window:
-  *   type: tumbling|sliding|session
-  *   size: "5 minutes"          # slide: for sliding; gap: for session
-  *   time_column: ts
-  *   watermark: "10 seconds"
-  *   keys: [event_type]
-  *   aggregations: { value: [sum, count] }
-  * sink: { type: memory|parquet|kafka, name|path, checkpoint: /tmp/cp, output_mode: update }
+  * stream_source: { type: file, path: /in, format: json, schema: "ts TIMESTAMP, v DOUBLE" }
+  * transforms: [ { type: filter, condition: "v > 0" } ]
+  * window: { type: tumbling, size: "5 minutes", keys: [user], aggregations: { v: [sum] } }
+  * sink: { type: memory, name: out, output_mode: update }
   * }}}
   */
 object StreamPipeline {
 
-  final case class Conf(name: String, raw: Map[String, Any])
+  /** A stream config bound at parse: every section read and checked, each
+    * piece a closure holding only its Spark work. */
+  final case class Conf(name: String,
+                        source: SparkSession => DataFrame,
+                        transforms: Seq[(String, DataFrame => DataFrame)],
+                        attritionWeight: Option[Option[String]],
+                        window: Option[DataFrame => DataFrame],
+                        sink: DataFrame => StreamingQuery,
+                        monitoring: Option[SparkSession => StreamMetrics])
 
+  /** Parse and bind the whole config; an unknown key, a bad value or a
+    * batch-only op under `transforms:` fails here, before any SparkSession. */
   def fromYaml(yaml: String): Conf = {
     val root = new org.yaml.snakeyaml.Yaml()
       .load[ju.Map[String, AnyRef]](graft.core.PipelineConfig.substituteEnv(yaml))
-      .asScala.map { case (k, v) => k -> (v: Any) }.toMap
-    Conf(root.getOrElse("name", "stream").toString, root)
+    Params.bind("", root) { a =>
+      val name = a.str("name", "stream")
+      a.require(a.has("stream_source"), "missing required key 'stream_source'")
+      val src = source(a.sub("stream_source"))
+      val trs = a.subs("transforms").map(transform)
+      val attr = a.section("attrition")(attrition)
+      val win = a.section("window")(window)
+      val (queryName, snk) = sink(a.sub("sink"), name, win.fold("append")(_._1))
+      val mon = a.section("monitoring")(monitoring(_, queryName))
+      Conf(name, src, trs, attr, win.map(_._2), snk, mon)
+    }
   }
 
-  private def sub(v: Any): Map[String, Any] = v match {
-    case m: ju.Map[_, _] => m.asScala.map { case (k, x) => k.toString -> (x: Any) }.toMap
-    case _               => Map.empty
+  private def ddl(a: Params, k: String): StructType = {
+    val t = scala.util.Try(StructType.fromDDL(a.req(k)))
+    a.require(t.isSuccess, s"key '$k': ${t.failed.map(_.getMessage).getOrElse("")}")
+    t.getOrElse(null)
   }
-  private def str(m: Map[String, Any], k: String, d: String = null): String =
-    m.get(k).map(_.toString).getOrElse(d)
-  private def seqOf(m: Map[String, Any], k: String): Seq[String] = m.get(k) match {
-    case Some(l: ju.List[_]) => l.asScala.map(_.toString).toSeq
-    case Some(s)             => Seq(s.toString)
-    case None                => Nil
+
+  private def textField(a: Params): String = a.str("text_field", "text")
+
+  private[graft] def source(a: Params): SparkSession => DataFrame =
+    a.select[Params => SparkSession => DataFrame]("type", "file")(
+      "file" -> { a =>
+        val (path, format, schema) = (a.req("path"), a.str("format", "json"), ddl(a, "schema"))
+        spark => StreamOps.files(spark, path, format, schema) },
+      "kafka" -> { a =>
+        val (servers, topics, schema) = (a.req("servers"), a.req("topics"), ddl(a, "schema"))
+        val offsets = a.str("starting_offsets", "latest")
+        spark => StreamOps.kafka(spark, servers, topics, schema, offsets) })(a)
+
+  private type Transform = Params => DataFrame => DataFrame
+
+  /** Every stream transform, with its binder. */
+  private[graft] val transforms: Seq[(String, Transform)] = Seq(
+    "calculate_field" -> { a => val (field, e) = (a.req("field"), a.req("expression"))
+      df => StreamOps.calculateField(df, field, e) },
+    "rename_field" -> { a => val (from, to) = (a.req("from"), a.req("to"))
+      df => StreamOps.renameField(df, from, to) },
+    "add_timestamp" -> { a => val field = a.str("field", "processing_ts"); df => StreamOps.addTimestamp(df, field) },
+    "parse_json_field" -> { a => val (field, schema) = (a.req("field"), ddl(a, "schema"))
+      df => StreamOps.parseJsonField(df, field, schema) },
+    "flatten_nested" -> { _ => df => StreamOps.flattenNested(df) },
+    "filter" -> { a => val c = a.req("condition"); df => df.filter(expr(c)) },
+    "dsir_gate" -> { a => // frozen hashed-DSIR model as a pure-map stream gate (round 10)
+      val (path, text, min) = (a.req("model_path"), textField(a), a.optDouble("min_log_weight"))
+      df => {
+        val scored = graft.text.Dsir.applyHashed(df, text, graft.text.Dsir.loadModel(df.sparkSession, path))
+        min.fold(scored)(m => scored.filter(col("log_weight") >= m))
+      } },
+    "ppl_gate" -> { a => // frozen CCNet floors as a stream gate: keep head..max_bucket
+      val (path, text, max) = (a.req("model_path"), textField(a), a.optInt("max_bucket"))
+      df => {
+        val bucketed = graft.text.TextLib.pplApply(df, text,
+          graft.text.TextLib.loadPplModel(df.sparkSession, path))
+        max.fold(bucketed)(m => bucketed.filter(col("ppl_bucket").isNotNull && col("ppl_bucket") <= m))
+      } },
+    "gopher_gate" -> { a => // Gopher rules as a stream gate — pure map, no
+      // fitted model to freeze; the batch gopher_filter's binder with the
+      // stream's field names. With lang_field (round 12, VERDICT r11 #3)
+      // the anglocentric rules dispatch per language — chain it after
+      // langid_gate so lang_field = lang_pred.
+      val rules = graft.core.OpCompiler.gopher(a, "text_field", "lang_field")
+      df => rules(df).filter(col("gopher_keep")).drop(graft.core.OpCompiler.GopherAuditColumns: _*) },
+    "unimax_gate" -> { a => // frozen UniMax allocation as a stream mixture
+      // gate: a stateless broadcast join + explode (epoch column added),
+      // so upsampling composes into ingest like the other frozen gates
+      val (path, group, key) = (a.req("allocation_path"), a.str("group_field", "lang"), a.str("key_field", "doc_id"))
+      val salt = a.int("salt", 42)
+      df => graft.ops.Scale.unimaxApply(df, df.sparkSession.read.parquet(path), group, key, salt) },
+    "dedup_lines" -> { a => // within-document repeated-line removal — pure per-row map
+      val (text, minChars) = (textField(a), a.int("min_chars", 1))
+      df => graft.text.TextLib.dedupLines(df, text, minChars) },
+    "langid_gate" -> { a => // frozen char-n-gram language ID as a stream
+      // gate: pure-map scoring, optional keep_langs filter on the prediction
+      val (path, text) = (a.req("model_path"), textField(a))
+      val keep = a.opt("keep_langs").map(_.split(",").map(_.trim).toSeq)
+      df => {
+        val pred = graft.text.TextLib.langIdApply(df, text,
+          graft.text.TextLib.loadLangIdModel(df.sparkSession, path))
+        keep.fold(pred)(langs => pred.filter(col("lang_pred").isin(langs: _*)))
+      } },
+    "seen_gate" -> { a => // frozen accepted-corpus bloom: drop records
+      // whose text was already ingested — a pure row-local probe against
+      // the few-MB sketch (a ~fpp fraction of fresh docs is the cost)
+      val (path, text) = (a.req("bloom_path"), textField(a))
+      df => graft.text.Dedup.seenCorpusApply(df, text, graft.text.Dedup.loadSeenBloom(df.sparkSession, path))
+        .filter(!col("maybe_seen")).drop("maybe_seen") },
+    "neardup_gate" -> { a => // frozen NEAR-dup gate (round 12): drop records
+      // whose LSH band buckets collide with the accepted corpus's —
+      // seen_gate's sibling at the banding S-curve; the snapshot is never
+      // read at ingest (a ~bands·fpp fraction of fresh docs is the cost)
+      val (path, text) = (a.req("model_path"), textField(a))
+      df => graft.text.Dedup.neardupBloomApply(df, text,
+          graft.text.Dedup.loadNeardupBloom(df.sparkSession, path))
+        .filter(!col("maybe_neardup")).drop("maybe_neardup") },
+    "semantic_gate" -> { a => // frozen SEMANTIC gate (round 13): drop records
+      // whose embedding sits within `threshold` cosine of an accepted-corpus
+      // vector IN ITS OWN CELL — pure map, zero joins, zero state
+      val (path, vec, threshold) = (a.req("model_path"), a.str("vector_field", "embedding"),
+        a.double("threshold", 0.95))
+      df => graft.vec.SemGate.semGateApply(df, vec, graft.vec.SemGate.loadSemGate(df.sparkSession, path),
+          threshold).filter(!col("sem_dup")).drop("sem_cell", "sem_max_cos", "sem_dup") },
+    "quota_per_group" -> { a => val (group, quota) = (a.req("group_column"), a.long("quota", 10000L))
+      df => StreamOps.quotaPerGroupStream(df, group, quota) })
+
+  /** Op names that exist only in batch pipelines (a type, or a
+    * text_processing operation), for the batch-only error. */
+  private lazy val batchOnly: Set[String] =
+    (graft.core.PipelineConfig.opTypes.map(_._1) ++
+      Params.record()(graft.core.OpCompiler.textProcessing).selectors.flatMap(_.choices)).toSet --
+      transforms.map(_._1)
+
+  private[graft] def transform(a: Params): (String, DataFrame => DataFrame) = {
+    val t = a.values.get("type").map(String.valueOf)
+    a.require(!t.exists(batchOnly),
+      s"key 'type': '${t.orNull}' is a batch-only op; stream transforms are ${transforms.map(_._1).mkString(", ")}")
+    val (name, tr) = a.select("type")(transforms.map { case (n, t) => n -> (n, t) }: _*)
+    (name, tr(a))
   }
-  private def aggPairs(m: Map[String, Any]): Seq[(String, String)] = sub(m.getOrElse("aggregations", null)).toSeq.flatMap {
-    case (c, l: ju.List[_]) => l.asScala.map(f => c -> f.toString)
-    case (c, f)             => Seq(c -> f.toString)
+
+  /** The `attrition:` section: the weight column summed per stage. */
+  private[graft] def attrition(a: Params): Option[String] = a.opt("weight_column")
+
+  /** The `window:` section: (the sink's default output mode, windowed
+    * aggregation). Session windows REJECT update mode (Spark:
+    * session_window aggregation requires append/complete). */
+  private[graft] def window(a: Params): (String, DataFrame => DataFrame) = {
+    val (ts, wm) = (a.str("time_column", "ts"), a.str("watermark", "10 seconds"))
+    val (keys, aggs) = (a.list("keys"), a.pairs("aggregations"))
+    a.select[Params => (String, DataFrame => DataFrame)]("type", "tumbling")(
+      "tumbling" -> { a =>
+        val size = a.str("size", "5 minutes")
+        ("update", df => StreamOps.tumbling(df, ts, size, wm, keys, aggs)) },
+      "sliding" -> { a =>
+        val (size, slide) = (a.str("size", "10 minutes"), a.str("slide", "5 minutes"))
+        ("update", df => StreamOps.sliding(df, ts, size, slide, wm, keys, aggs)) },
+      "session" -> { a =>
+        val gap = a.str("gap", "30 minutes")
+        ("append", df => StreamOps.session(df, ts, gap, wm, keys, aggs)) })(a)
+  }
+
+  /** The `sink:` section: (a memory sink's declared query name, start). */
+  private[graft] def sink(a: Params, name: String,
+                          defaultMode: String): (Option[String], DataFrame => StreamingQuery) = {
+    val mode = a.str("output_mode", defaultMode)
+    // journaled exactly-once KV sink (AtomicKeyValueSink): effects + batch
+    // marker land in ONE atomic sink action, so appends survive micro-batch
+    // replays. store=memory is the Redis-EVAL-parity in-JVM store (the only
+    // loadable one offline); a Redis client plugs in as another factory arm.
+    def kvStore(a: Params): () => graft.sources.AtomicKeyValueSink = {
+      a.oneOf("store", "memory", "memory")
+      val ns = a.str("namespace", name)
+      () => new graft.sources.KeyValueSink.InMemoryKV(ns)
+    }
+    def kvWrite(a: Params) = (a.str("mode", "kv"), a.str("target", "graft"), a.long("ttl_seconds", -1L))
+    type Start = DataFrame => StreamingQuery
+    a.select[Params => (Option[String], Start)]("type", "memory")(
+      "memory" -> { a =>
+        val declared = a.opt("name")
+        val q = declared.getOrElse(name)
+        (declared, df => df.writeStream.format("memory").queryName(q).outputMode(mode).start()) },
+      "parquet" -> { a =>
+        val (path, ckpt) = (a.req("path"), a.req("checkpoint"))
+        (None, df => df.writeStream.format("parquet").option("path", path)
+          .option("checkpointLocation", ckpt).outputMode("append").start()) },
+      "kafka" -> { a =>
+        val (servers, topic, ckpt) = (a.req("servers"), a.req("topic"), a.opt("checkpoint").orNull)
+        // the declared output_mode applies to EVERY sink
+        (None, df => StreamOps.kafkaSink(df, servers, topic, ckpt).outputMode(mode).start()) },
+      "kv" -> { a =>
+        val (factory, key, ckpt) = (kvStore(a), a.str("key_field", "doc_id"), a.opt("checkpoint").orNull)
+        val (kvMode, target, ttl) = kvWrite(a)
+        (None, df => graft.sources.KeyValueSink.streamWriterAtomic(df, key, ckpt, factory,
+          mode = kvMode, target = target, ttlSeconds = ttl).start()) },
+      "neardup_ingest_kv" -> { a => // GROWING near-dup gate fused to the
+        // journaled KV sink: per micro-batch, screen against the
+        // accumulated accepted-corpus sketch, near-dedup within the batch,
+        // land the survivors in the KV store (its own journaled atomic
+        // apply, under a DISTINCT journal key — the outer batch journal
+        // must not see the inner commit and skip the sketch growth), then
+        // persist the grown sketch as v=<batchId>. See
+        // StreamOps.nearDedupIngestSink for the crash-ordering contract.
+        val (modelDir, ckpt) = (a.req("model_dir"), a.req("checkpoint"))
+        val (factory, key, text) = (kvStore(a), a.str("key_field", "doc_id"), textField(a))
+        val (shingle, hashes, bands) = (a.int("shingle_n", 3), a.int("num_hashes", 64), a.int("bands", 16))
+        val (fpp, expected) = (a.double("fpp", 0.001), a.long("expected_keys", 10000000L))
+        val (threshold, rowFppWarn) = (a.double("threshold", 0.8), a.double("row_fpp_warn", 0.5))
+        val keep = a.int("keep_versions", 2)
+        val (kvMode, target, ttl) = kvWrite(a)
+        (None, df => StreamOps.nearDedupIngestSink(df, text, key, modelDir,
+            graft.text.Dedup.emptyNeardupBloom(shingle, hashes, bands, fpp, expected), ckpt,
+            new graft.sources.BatchJournal.KvJournal(factory),
+            threshold = threshold, rowFppWarn = rowFppWarn, keepVersions = keep) { (surv, id) =>
+          graft.sources.KeyValueSink.writeBatchJournaled(surv, key, factory,
+            s"__graft/journal/$ckpt/kv/$id", kvMode, target, ttl)
+          ()
+        }.start()) })(a)
+  }
+
+  /** The `monitoring:` section (reference streaming_pipeline.yaml:83-97).
+    * Memory sinks carry a query name to filter on; other sinks record every
+    * query in the session (single-query pipelines in practice). */
+  private[graft] def monitoring(a: Params, queryName: Option[String]): SparkSession => StreamMetrics = {
+    val (maxBatchMs, minRps) = (a.long("max_batch_ms", 1000L), a.double("min_records_per_second", 10.0))
+    val maxBatches = a.int("max_batches", 10000)
+    spark => StreamMetrics.attach(spark, maxBatchMs = maxBatchMs, minRecordsPerSec = minRps,
+      queryName = queryName.orNull, maxBatches = maxBatches)
   }
 
   /** Build the streaming DataFrame (source → transforms → window agg). */
@@ -68,173 +258,15 @@ object StreamPipeline {
     * caller attaches/detaches the listener ([[startWithAttrition]] does
     * both ends). */
   def buildWithAttrition(spark: SparkSession, conf: Conf): (DataFrame, Option[StreamAttrition]) = {
-    val src = sub(conf.raw("stream_source"))
-    val base = str(src, "type", "file") match {
-      case "file" =>
-        StreamOps.files(spark, str(src, "path"), str(src, "format", "json"),
-          StructType.fromDDL(str(src, "schema")))
-      case "kafka" =>
-        StreamOps.kafka(spark, str(src, "servers"), str(src, "topics"),
-          StructType.fromDDL(str(src, "schema")), str(src, "starting_offsets", "latest"))
-      case other => throw new IllegalArgumentException(s"Unknown stream source: $other")
-    }
-
-    val trList = conf.raw.get("transforms") match {
-      case Some(l: ju.List[_]) => l.asScala.map(sub).toSeq
-      case _                   => Nil
-    }
-    def applyTr(df: DataFrame, tr: Map[String, Any]): DataFrame =
-      str(tr, "type") match {
-        case "calculate_field" => StreamOps.calculateField(df, str(tr, "field"), str(tr, "expression"))
-        case "rename_field"    => StreamOps.renameField(df, str(tr, "from"), str(tr, "to"))
-        case "add_timestamp"   => StreamOps.addTimestamp(df, str(tr, "field", "processing_ts"))
-        case "parse_json_field"=> StreamOps.parseJsonField(df, str(tr, "field"), StructType.fromDDL(str(tr, "schema")))
-        case "flatten_nested"  => StreamOps.flattenNested(df)
-        case "filter"          => df.filter(expr(str(tr, "condition")))
-        case "dsir_gate" => // frozen hashed-DSIR model as a pure-map stream gate (round 10)
-          require(str(tr, "model_path") != null,
-            "dsir_gate requires model_path (a saved Dsir.saveModel parquet)")
-          val m = graft.text.Dsir.loadModel(df.sparkSession, str(tr, "model_path"))
-          val scored = graft.text.Dsir.applyHashed(df, str(tr, "text_field", "text"), m)
-          val min = str(tr, "min_log_weight")
-          if (min == null) scored else scored.filter(col("log_weight") >= min.toDouble)
-        case "ppl_gate" => // frozen CCNet floors as a stream gate: keep head..max_bucket
-          require(str(tr, "model_path") != null,
-            "ppl_gate requires model_path (a saved pplFit model directory)")
-          val m = graft.text.TextLib.loadPplModel(df.sparkSession, str(tr, "model_path"))
-          val bucketed = graft.text.TextLib.pplApply(df, str(tr, "text_field", "text"), m)
-          val max = str(tr, "max_bucket")
-          if (max == null) bucketed
-          else bucketed.filter(col("ppl_bucket").isNotNull && col("ppl_bucket") <= max.toInt)
-        case "gopher_gate" => // Gopher rules as a stream gate — pure map, no
-          // fitted model to freeze. All nine thresholds are exposed (the
-          // batch gopher_rules/gopher_filter parity); survivors drop every
-          // audit column — gopher_fail_reasons is '' on every kept row by
-          // construction, a dead constant downstream. With lang_field
-          // (round 12, VERDICT r11 #3): the anglocentric rules dispatch
-          // per language (DefaultGopherLangParams, neutral for unknown) —
-          // chain it after langid_gate so lang_field = lang_pred.
-          val gated = str(tr, "lang_field") match {
-            case null => graft.text.TextLib.gopherRules(df, str(tr, "text_field", "text"),
-              minWords = str(tr, "min_words", "50").toInt,
-              maxWords = str(tr, "max_words", "100000").toInt,
-              minMeanWordLen = str(tr, "min_mean_word_len", "3.0").toDouble,
-              maxMeanWordLen = str(tr, "max_mean_word_len", "10.0").toDouble,
-              maxSymbolRatio = str(tr, "max_symbol_ratio", "0.1").toDouble,
-              maxBulletRatio = str(tr, "max_bullet_ratio", "0.9").toDouble,
-              maxEllipsisRatio = str(tr, "max_ellipsis_ratio", "0.3").toDouble,
-              minAlphaRatio = str(tr, "min_alpha_ratio", "0.8").toDouble,
-              minStopwords = str(tr, "min_stopwords", "2").toInt)
-            case langField => graft.text.TextLib.gopherRulesByLang(
-              df, str(tr, "text_field", "text"), langField,
-              // floors override uniformly across languages (ADVICE r12 —
-              // previously silently ignored under lang dispatch)
-              graft.text.TextLib.gopherLangParamsWithFloors(
-                str(tr, "min_alpha_ratio", "0.8").toDouble,
-                str(tr, "min_stopwords", "2").toInt),
-              minWords = str(tr, "min_words", "50").toInt,
-              maxWords = str(tr, "max_words", "100000").toInt,
-              minMeanWordLen = str(tr, "min_mean_word_len", "3.0").toDouble,
-              maxMeanWordLen = str(tr, "max_mean_word_len", "10.0").toDouble,
-              maxSymbolRatio = str(tr, "max_symbol_ratio", "0.1").toDouble,
-              maxBulletRatio = str(tr, "max_bullet_ratio", "0.9").toDouble,
-              maxEllipsisRatio = str(tr, "max_ellipsis_ratio", "0.3").toDouble)
-          }
-          gated
-            .filter(col("gopher_keep"))
-            .drop("gopher_word_count_ok", "gopher_mean_word_len_ok",
-              "gopher_symbol_ratio_ok", "gopher_bullet_lines_ok",
-              "gopher_ellipsis_lines_ok", "gopher_alpha_words_ok",
-              "gopher_stopwords_ok", "gopher_keep", "gopher_fail_reasons")
-        case "unimax_gate" => // frozen UniMax allocation as a stream mixture
-          // gate: a stateless broadcast join + explode (epoch column added),
-          // so upsampling composes into ingest like the other frozen gates
-          require(str(tr, "allocation_path") != null,
-            "unimax_gate requires allocation_path (a saved unimaxAllocation parquet)")
-          val alloc = df.sparkSession.read.parquet(str(tr, "allocation_path"))
-          graft.ops.Scale.unimaxApply(df, alloc,
-            str(tr, "group_field", "lang"), str(tr, "key_field", "doc_id"),
-            str(tr, "salt", "42").toInt)
-        case "dedup_lines" => // within-document repeated-line removal —
-          // pure per-row map, directly streamable
-          graft.text.TextLib.dedupLines(df, str(tr, "text_field", "text"),
-            str(tr, "min_chars", "1").toInt)
-        case "langid_gate" => // frozen char-n-gram language ID as a stream
-          // gate: pure-map scoring (VocabLogProbMean per language), optional
-          // keep_langs filter on the prediction
-          require(str(tr, "model_path") != null,
-            "langid_gate requires model_path (a saved TextLib.saveLangIdModel directory)")
-          val m = graft.text.TextLib.loadLangIdModel(df.sparkSession, str(tr, "model_path"))
-          val pred = graft.text.TextLib.langIdApply(df, str(tr, "text_field", "text"), m)
-          str(tr, "keep_langs") match {
-            case null  => pred
-            case langs => pred.filter(col("lang_pred").isin(langs.split(",").map(_.trim): _*))
-          }
-        case "seen_gate" => // frozen accepted-corpus bloom: drop records
-          // whose text was already ingested — a pure row-local probe
-          // against the few-MB sketch, never touching the snapshot at
-          // ingest (a ~fpp fraction of fresh docs is the documented cost)
-          require(str(tr, "bloom_path") != null,
-            "seen_gate requires bloom_path (a saved Dedup.saveSeenBloom parquet)")
-          graft.text.Dedup.seenCorpusApply(df, str(tr, "text_field", "text"),
-            graft.text.Dedup.loadSeenBloom(df.sparkSession, str(tr, "bloom_path")))
-            .filter(!col("maybe_seen")).drop("maybe_seen")
-        case "neardup_gate" => // frozen NEAR-dup gate (round 12): drop
-          // records whose LSH band buckets collide with the accepted
-          // corpus's — seen_gate's exact-hash sibling at the banding
-          // S-curve. Row-local signature + `bands` bloom probes against a
-          // few-MB sketch; the snapshot is never read at ingest. No false
-          // negatives vs the frozen key set; a ~bands·fpp fraction of
-          // fresh docs is the documented cost.
-          require(str(tr, "model_path") != null,
-            "neardup_gate requires model_path (a saved Dedup.saveNeardupBloom parquet)")
-          graft.text.Dedup.neardupBloomApply(df, str(tr, "text_field", "text"),
-            graft.text.Dedup.loadNeardupBloom(df.sparkSession, str(tr, "model_path")))
-            .filter(!col("maybe_neardup")).drop("maybe_neardup")
-        case "semantic_gate" => // frozen SEMANTIC gate (round 13, VERDICT
-          // r12 #6): drop records whose embedding sits within `threshold`
-          // cosine of an accepted-corpus vector IN ITS OWN CELL — the
-          // embedding-space member of the frozen-gate family (exact →
-          // seen_gate, lexical → neardup_gate, semantic → this). Pure
-          // map: k centroid dots + |cell| rep dots per row, zero joins,
-          // zero state (SemGate's scaladoc has the bounds).
-          require(str(tr, "model_path") != null,
-            "semantic_gate requires model_path (a saved SemGate.saveSemGate directory)")
-          graft.vec.SemGate.semGateApply(df, str(tr, "vector_field", "embedding"),
-            graft.vec.SemGate.loadSemGate(df.sparkSession, str(tr, "model_path")),
-            str(tr, "threshold", "0.95").toDouble)
-            .filter(!col("sem_dup")).drop("sem_cell", "sem_max_cos", "sem_dup")
-        case "quota_per_group" => StreamOps.quotaPerGroupStream(df,
-          str(tr, "group_column"), str(tr, "quota", "10000").toLong)
-        case other             => throw new IllegalArgumentException(s"Unknown stream transform: $other")
-      }
-
-    val (transformed, attrition) = conf.raw.get("attrition").map(sub) match {
-      case Some(a) =>
-        val stages = trList.map(tr => (str(tr, "type"), (d: DataFrame) => applyTr(d, tr)))
-        val (out, l) = StreamAttrition.instrument(base, stages,
-          Option(str(a, "weight_column")))
+    val base = conf.source(spark)
+    val (transformed, attrition) = conf.attritionWeight match {
+      case Some(weight) =>
+        val (out, l) = StreamAttrition.instrument(base, conf.transforms, weight)
         (out, Some(l))
       case None =>
-        (trList.foldLeft(base)(applyTr), None)
+        (conf.transforms.foldLeft(base)((d, t) => t._2(d)), None)
     }
-
-    val out = conf.raw.get("window").map(sub) match {
-      case None => transformed
-      case Some(w) =>
-        val ts = str(w, "time_column", "ts")
-        val wm = str(w, "watermark", "10 seconds")
-        val keys = seqOf(w, "keys")
-        val aggs = aggPairs(w)
-        str(w, "type", "tumbling") match {
-          case "tumbling" => StreamOps.tumbling(transformed, ts, str(w, "size", "5 minutes"), wm, keys, aggs)
-          case "sliding"  => StreamOps.sliding(transformed, ts, str(w, "size", "10 minutes"),
-            str(w, "slide", "5 minutes"), wm, keys, aggs)
-          case "session"  => StreamOps.session(transformed, ts, str(w, "gap", "30 minutes"), wm, keys, aggs)
-          case other      => throw new IllegalArgumentException(s"Unknown window type: $other")
-        }
-    }
-    (out, attrition)
+    (conf.window.fold(transformed)(_(transformed)), attrition)
   }
 
   /** [[start]] plus the attrition listener (attached before start; the
@@ -243,7 +275,7 @@ object StreamPipeline {
   def startWithAttrition(spark: SparkSession, conf: Conf): (StreamingQuery, Option[StreamAttrition]) = {
     val (df, attrition) = buildWithAttrition(spark, conf)
     attrition.foreach(StreamAttrition.attach(spark, _))
-    try (startFrame(spark, conf, df), attrition)
+    try (conf.sink(df), attrition)
     catch {
       case e: Throwable =>
         attrition.foreach(StreamAttrition.detach(spark, _))
@@ -252,24 +284,12 @@ object StreamPipeline {
   }
 
   /** Start the query with a metrics listener when the YAML declares a
-    * `monitoring` section (reference streaming_pipeline.yaml:83-97):
-    * {{{
-    * monitoring: { max_batch_ms: 1000, min_records_per_second: 10 }
-    * }}}
-    * Returns the query plus the attached [[StreamMetrics]] (None without a
-    * monitoring section). Caller detaches the listener when done.
+    * `monitoring` section. Returns the query plus the attached
+    * [[StreamMetrics]] (None without a monitoring section). Caller detaches
+    * the listener when done.
     */
   def startMonitored(spark: SparkSession, conf: Conf): (StreamingQuery, Option[StreamMetrics]) = {
-    val metrics = conf.raw.get("monitoring").map(sub).map { m =>
-      val sink = sub(conf.raw.getOrElse("sink", null))
-      StreamMetrics.attach(spark,
-        maxBatchMs = str(m, "max_batch_ms", "1000").toLong,
-        minRecordsPerSec = str(m, "min_records_per_second", "10").toDouble,
-        // memory sinks carry a query name to filter on; other sinks record
-        // every query in the session (single-query pipelines in practice)
-        queryName = str(sink, "name", null),
-        maxBatches = str(m, "max_batches", "10000").toInt)
-    }
+    val metrics = conf.monitoring.map(_(spark))
     // a start() failure must not leak the already-attached listener on the
     // shared session (round-6 review)
     try (start(spark, conf), metrics)
@@ -282,89 +302,5 @@ object StreamPipeline {
 
   /** Start the query against the configured sink. */
   def start(spark: SparkSession, conf: Conf): StreamingQuery =
-    startFrame(spark, conf, build(spark, conf))
-
-  private def startFrame(spark: SparkSession, conf: Conf, df: DataFrame): StreamingQuery = {
-    val sink = sub(conf.raw.getOrElse("sink", null))
-    // session windows REJECT update mode (Spark: session_window aggregation
-    // requires append/complete) — the default must honor that or a YAML
-    // session pipeline dies at start()
-    val windowType = conf.raw.get("window").map(sub).map(w => str(w, "type", "tumbling"))
-    val defaultMode = windowType match {
-      case Some("session") => "append"
-      case Some(_)         => "update"
-      case None            => "append"
-    }
-    val mode = str(sink, "output_mode", defaultMode)
-    str(sink, "type", "memory") match {
-      case "memory" =>
-        df.writeStream.format("memory").queryName(str(sink, "name", conf.name))
-          .outputMode(mode).start()
-      case "parquet" =>
-        df.writeStream.format("parquet")
-          .option("path", str(sink, "path"))
-          .option("checkpointLocation", str(sink, "checkpoint"))
-          .outputMode("append").start()
-      case "kafka" =>
-        StreamOps.kafkaSink(df, str(sink, "servers"), str(sink, "topic"), str(sink, "checkpoint"))
-          .outputMode(mode) // the declared output_mode applies to EVERY sink
-          .start()
-      case "kv" => // journaled exactly-once KV sink (AtomicKeyValueSink):
-        // effects + batch marker land in ONE atomic sink action, so
-        // list/stream appends survive micro-batch replays without
-        // duplicating. store=memory is the Redis-EVAL-parity in-JVM
-        // implementation (the only loadable one in this sandbox — the
-        // ConnectorConfSpec probe situation); a production Redis client
-        // plugs in as another AtomicKeyValueSink factory arm.
-        val factory: () => graft.sources.AtomicKeyValueSink =
-          str(sink, "store", "memory") match {
-            case "memory" =>
-              val ns = str(sink, "namespace", conf.name)
-              () => new graft.sources.KeyValueSink.InMemoryKV(ns)
-            case other => throw new IllegalArgumentException(
-              s"Unknown kv store: $other (supported here: memory)")
-          }
-        graft.sources.KeyValueSink.streamWriterAtomic(df,
-          str(sink, "key_field", "doc_id"), str(sink, "checkpoint"), factory,
-          mode = str(sink, "mode", "kv"), target = str(sink, "target", "graft"),
-          ttlSeconds = str(sink, "ttl_seconds", "-1").toLong)
-          .start()
-      case "neardup_ingest_kv" => // GROWING near-dup gate fused to the
-        // journaled KV sink: per micro-batch, screen against the
-        // accumulated accepted-corpus sketch, near-dedup within the batch,
-        // land the survivors in the KV store (its own journaled atomic
-        // apply, under a DISTINCT journal key — the outer batch journal
-        // must not see the inner commit and skip the sketch growth), then
-        // persist the grown sketch as v=<batchId>. See
-        // StreamOps.nearDedupIngestSink for the crash-ordering contract.
-        require(str(sink, "model_dir") != null, "neardup_ingest_kv requires model_dir")
-        require(str(sink, "checkpoint") != null, "neardup_ingest_kv requires checkpoint")
-        val ckpt = str(sink, "checkpoint")
-        val keyField = str(sink, "key_field", "doc_id")
-        val factory: () => graft.sources.AtomicKeyValueSink =
-          str(sink, "store", "memory") match {
-            case "memory" =>
-              val ns = str(sink, "namespace", conf.name)
-              () => new graft.sources.KeyValueSink.InMemoryKV(ns)
-            case other => throw new IllegalArgumentException(
-              s"Unknown kv store: $other (supported here: memory)")
-          }
-        val seed = graft.text.Dedup.emptyNeardupBloom(
-          str(sink, "shingle_n", "3").toInt, str(sink, "num_hashes", "64").toInt,
-          str(sink, "bands", "16").toInt, str(sink, "fpp", "0.001").toDouble,
-          str(sink, "expected_keys", "10000000").toLong)
-        StreamOps.nearDedupIngestSink(df, str(sink, "text_field", "text"), keyField,
-            str(sink, "model_dir"), seed, ckpt,
-            new graft.sources.BatchJournal.KvJournal(factory),
-            threshold = str(sink, "threshold", "0.8").toDouble,
-            rowFppWarn = str(sink, "row_fpp_warn", "0.5").toDouble,
-            keepVersions = str(sink, "keep_versions", "2").toInt) { (surv, id) =>
-          graft.sources.KeyValueSink.writeBatchJournaled(surv, keyField, factory,
-            s"__graft/journal/$ckpt/kv/$id", str(sink, "mode", "kv"),
-            str(sink, "target", "graft"), str(sink, "ttl_seconds", "-1").toLong)
-          ()
-        }.start()
-      case other => throw new IllegalArgumentException(s"Unknown sink type: $other")
-    }
-  }
+    conf.sink(build(spark, conf))
 }

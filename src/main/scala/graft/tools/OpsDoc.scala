@@ -2,171 +2,143 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-/** docs/OPS.md generator — the YAML op surface extracted from the TWO
-  * dispatch points themselves (core/PipelineConfig.scala for `type:`
-  * values and transform sub-ops; core/OpSpec.scala's OpCompiler for every
-  * dynamic family's `operation:` values and their params), so the
-  * document cannot drift from the code: OpsDocSpec regenerates it on
-  * every build and fails when the committed file is stale (VERDICT r6
-  * #7 — the op set had grown ~30 ops past the README's examples).
-  *
-  * Extraction is deliberately source-level: the dynamic families take
-  * `Map[String, Any]` params, so reflection sees nothing — but every
-  * param read goes through the s()/seqOf()/intSeq()/pairs() helpers,
-  * which makes the accepted keys and defaults mechanically greppable.
+import graft.core.{Params, PipelineConfig}
+import graft.core.Params.Key
+import graft.streaming.StreamPipeline
+
+/** docs/OPS.md generator — the YAML surface rendered from the binders that
+  * parse it (graft.core.Params in recording mode): PipelineConfig's
+  * sections and op types, OpCompiler's op families, and StreamPipeline's
+  * source, transforms, window, sink and monitoring. The document lists
+  * exactly the keys the parser accepts, because both come from the same
+  * reads; OpsDocSpec regenerates it on every build and fails when the
+  * committed file is stale.
   *
   * Regenerate: `java -cp 'target/scala-2.13/classes:/opt/spark/jars/...'
   * graft.tools.OpsDoc` (writes docs/OPS.md in the CWD).
   */
 object OpsDoc {
 
-  private def read(p: String): String =
-    new String(Files.readAllBytes(Paths.get(p)), "UTF-8")
+  private type Binder = Params => Any
 
-  /** `case "x" =>` values inside `text`. */
-  private def caseValues(text: String): Seq[String] =
-    "case \"([a-z_0-9|]+)\"".r.findAllMatchIn(text).map(_.group(1)).toSeq.distinct
-
-  /** Region of `text` from the line containing `from` up to (excluding)
-    * the next occurrence of any of `until`. */
-  private def region(text: String, from: String, until: Seq[String]): String = {
-    val i = text.indexOf(from)
-    require(i >= 0, s"OpsDoc: marker not found: $from")
-    val tail = text.substring(i)
-    val end = until.map(u => tail.indexOf(u, from.length)).filter(_ > 0) match {
-      case Nil => tail.length
-      case es  => es.min
-    }
-    tail.substring(0, end)
+  /** Every key `bind` reads on any branch below the pinned selectors, and
+    * every selector met below them. */
+  private def explore(bind: Binder, pinned: Map[String, String]): (Seq[Key], Seq[Params.Selector]) = {
+    val r = Params.record(pinned)(bind)
+    val open = r.selectors.toSeq.filterNot(s => pinned.contains(s.path))
+    val branches = for (s <- open; c <- s.choices if c != s.chosen)
+      yield explore(bind, pinned + (s.path -> c))
+    ((r.keys.toSeq ++ branches.flatMap(_._1)).distinctBy(_.path), open ++ branches.flatMap(_._2))
   }
 
-  private final case class Param(name: String, kind: String, default: Option[String])
-
-  /** Params referenced through the dynamic-dispatch helpers in `block`.
-    * Literal string defaults render verbatim; expression defaults render
-    * as `expr`. Insertion-ordered, deduplicated, `operation` excluded.
-    */
-  private def params(block: String): Seq[Param] = {
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, Param]
-    def add(p: Param): Unit = if (p.name != "operation" && !out.contains(p.name)) out(p.name) = p
-    val scalar = """s\(p,\s*"([a-z_0-9]+)"\s*(?:,\s*([^()]+?))?\)""".r
-    scalar.findAllMatchIn(block).foreach { m =>
-      val dflt = Option(m.group(2)).map(_.trim).map { d =>
-        if (d.startsWith("\"") && d.endsWith("\"")) d.substring(1, d.length - 1) else "expr"
-      }
-      add(Param(m.group(1), "scalar", dflt))
+  private def render(k: Key, strip: String): String = {
+    val suffix = k.kind match {
+      case "[]" | "{}" => k.kind
+      case _           => ""
     }
-    """seqOf\(p,\s*"([a-z_0-9]+)"\)""".r.findAllMatchIn(block)
-      .foreach(m => add(Param(m.group(1), "list", None)))
-    """intSeq\(p,\s*"([a-z_0-9]+)"\)""".r.findAllMatchIn(block)
-      .foreach(m => add(Param(m.group(1), "int list", None)))
-    """pairs\(p,\s*"([a-z_0-9]+)"\)""".r.findAllMatchIn(block)
-      .foreach(m => add(Param(m.group(1), "mapping", None)))
-    """p\.get(?:OrElse)?\("([a-z_0-9]+)"""".r.findAllMatchIn(block)
-      .foreach(m => add(Param(m.group(1), "any", None)))
-    out.values.toSeq
+    val name = s"${k.path.stripPrefix(strip)}$suffix"
+    val shown = k.default.fold(s"`$name`")(d => s"`$name=${d.replace("\n", "\\n")}`")
+    if (k.choices.isEmpty) shown else s"$shown (${k.choices.mkString(" \\| ")})"
   }
 
-  private def renderParams(ps: Seq[Param]): String =
-    if (ps.isEmpty) "—"
-    else ps.map { p =>
-      val suffix = p.kind match {
-        case "list" | "int list" => "[]"
-        case "mapping"           => "{}"
-        case _                   => ""
-      }
-      p.default match {
-        case Some(d) => s"`${p.name}$suffix=$d`"
-        case None    => s"`${p.name}$suffix`"
-      }
-    }.mkString(", ")
+  private def renderAll(ks: Seq[Key], strip: String = ""): String =
+    if (ks.isEmpty) "—" else ks.map(render(_, strip)).mkString(", ")
 
-  /** One dynamic family: split its dispatch body into per-operation case
-    * blocks and tabulate (operation, params, nested sub-values).
-    */
-  private def familyTable(src: String, defName: String, until: Seq[String]): Seq[String] = {
-    val body = region(src, defName, until)
-    val caseRx = """(?m)^([ ]*)case "([a-z_0-9]+)"\s*=>""".r
-    val all = caseRx.findAllMatchIn(body).toSeq
-    // the family's own operations sit at the SHALLOWEST case indentation;
-    // deeper cases are nested method/kind selectors inside one operation
-    val outerIndent = all.map(_.group(1).length).minOption.getOrElse(0)
-    val hits = all.filter(_.group(1).length == outerIndent)
-    val prelude = if (hits.isEmpty) body else body.substring(0, hits.head.start)
-    val rows = hits.zipWithIndex.map { case (m, i) =>
-      val end = if (i + 1 < hits.length) hits(i + 1).start else body.length
-      val block = body.substring(m.end, end)
-      val subs = caseValues(block)
-      (m.group(2), renderParams(params(block)),
-        if (subs.isEmpty) "" else subs.mkString(", "))
+  private def keysOf(bind: Binder): String = renderAll(Params.record()(bind).keys.toSeq)
+
+  /** The table of the selector at `sel` in `bind` (other selectors pinned):
+    * one row per choice with the keys that branch reads; keys read before
+    * the selector at its own level are listed once above the table, and
+    * deeper selectors' choices fill the nested-values column. */
+  private def section(bind: Binder, pinned: Map[String, String], sel: String): Seq[String] = {
+    val r = Params.record(pinned)(bind)
+    val s = r.selectors.find(_.path == sel).get
+    val level = sel.substring(0, sel.lastIndexOf('.') + 1)
+    def own(k: Key) = k.path.startsWith(level) && k.path != sel && !pinned.contains(k.path)
+    val prelude = r.keys.take(s.at).filter(own).toSeq
+    val rows = s.choices.map { c =>
+      val (keys, sels) = explore(bind, pinned + (sel -> c))
+      val nested = sels.filterNot(_.path == sel).flatMap(_.choices).distinct
+      s"| `$c` | ${renderAll(keys.filter(k => own(k) && !prelude.exists(_.path == k.path)), level)} | " +
+        s"${nested.mkString(", ")} |"
     }
-    val common = params(prelude)
-    val header = Seq(
-      if (common.isEmpty) "" else s"Common params: ${renderParams(common)}\n",
-      "| operation | params (defaults) | nested values |",
-      "|---|---|---|").filter(_.nonEmpty)
-    header ++ rows.map { case (op, ps, subs) => s"| `$op` | $ps | $subs |" }
+    Seq(if (prelude.isEmpty) "" else s"Common keys: ${renderAll(prelude, level)}\n",
+      s"| `$sel` | keys (defaults) | nested values |", "|---|---|---|").filter(_.nonEmpty) ++ rows
   }
 
-  def generate(mainDir: String = "src/main/scala/graft"): String = {
-    val conf = read(s"$mainDir/core/PipelineConfig.scala")
-    val spec = read(s"$mainDir/core/OpSpec.scala")
-
-    val topLevel = caseValues(region(conf, "def parseOp(", Seq("def parseTransform(")))
-    val transformSubs = caseValues(region(conf, "def parseTransform(", Seq("def parseAggregations(")))
-
+  def generate(): String = {
     val out = new StringBuilder
     out ++= "# YAML operation surface\n\n"
-    out ++= "GENERATED by `graft.tools.OpsDoc` from the dispatch code itself\n"
-    out ++= "(core/PipelineConfig.scala `type:` parsing + core/OpSpec.scala's\n"
-    out ++= "OpCompiler dynamic families) — do not edit by hand; OpsDocSpec fails\n"
-    out ++= "the build when this file is stale. Regenerate:\n"
+    out ++= "GENERATED by `graft.tools.OpsDoc` from the binders that parse the YAML\n"
+    out ++= "(graft.core.Params recording their reads) — do not edit; OpsDocSpec fails\n"
+    out ++= "the build when it is stale. Regenerate with\n"
     out ++= "`java -cp target/scala-2.13/classes:/opt/spark/jars/'*' graft.tools.OpsDoc`.\n\n"
-    out ++= "Param notation: `name=default` (literal default), `name=expr`\n"
-    out ++= "(computed default), `name[]` (list), `name{}` (mapping). Families\n"
-    out ++= "whose common params appear above their table read them before the\n"
-    out ++= "`operation` dispatch. Nested values are inner `method:`/`kind:`-style\n"
-    out ++= "selectors accepted inside that operation. For exact semantics see the\n"
-    out ++= "Scaladoc of the implementing member named in OpSpec.scala.\n\n"
+    out ++= "Any key not listed is rejected by `Pipeline.fromYaml` / `StreamPipeline.fromYaml`.\n"
+    out ++= "Notation: `name=default`, `name[]` (list), `name{}` (mapping), `(a \\| b)`\n"
+    out ++= "(accepted values); a default computed from another key shows that key's\n"
+    out ++= "default. Nested values are the choices of inner selectors in that row.\n\n"
 
-    out ++= "## Top-level `operations:` types (PipelineConfig.parseOp)\n\n"
-    out ++= topLevel.map(t => s"`$t`").mkString(", ") + "\n\n"
-    out ++= "## `transform` sub-operations (per-column `transformations:` blocks)\n\n"
-    out ++= transformSubs.map(t => s"`$t`").mkString(", ") + "\n\n"
+    out ++= "## Pipeline sections (PipelineConfig)\n\n"
+    out ++= "Top level: `name`, `source`, `sources[]`, `operations[]`, `validation`, `storage`,\n"
+    out ++= "`attrition`. `options{}` passes through to the reader or writer (and\n"
+    out ++= "`storage.options.catalog_dir`/`lineage_dir` register the written dataset).\n\n"
+    out ++= "| section | keys (defaults) |\n|---|---|\n"
+    Seq("`source`, `sources[]`" -> PipelineConfig.source _,
+      "`validation.expectations[]`" -> PipelineConfig.expectation _,
+      "`storage`" -> PipelineConfig.storage _,
+      "`attrition`" -> PipelineConfig.attrition _).foreach { case (name, bind) =>
+      out ++= s"| $name | ${keysOf(bind)} |\n"
+    }
 
-    val families = Seq(
-      ("feature_engineering", "private def applyFeatureEngineering",
-        Seq("private def applyTimeSeries")),
-      ("time_series_processing", "private def applyTimeSeries",
-        Seq("/** Inline `validate`", "private def applyTextProcessing")),
-      ("text_processing", "private def applyTextProcessing",
-        Seq("private def applyValidate")),
-      ("multimodal", "private def applyMultimodal",
-        Seq("private def applyQualityMonitor")),
-      ("quality_monitor", "private def applyQualityMonitor",
-        Seq("\n}")),
-      ("scd2", "case Scd2Op(p)", Seq("case LayoutOp")),
-      ("layout", "case LayoutOp(p)", Seq("  }\n")))
-    families.foreach { case (name, marker, until) =>
-      out ++= s"## `$name` (`operation:` dispatch)\n\n"
-      out ++= familyTable(spec, marker, until).mkString("\n") + "\n\n"
+    // top-level op types: the keys each reads before any inner selector;
+    // a type with an inner selector gets its own section below
+    val op: Binder = PipelineConfig.op
+    val typed = PipelineConfig.opTypes.map { case (t, _) =>
+      val r = Params.record(Map("type" -> t))(op)
+      val inner = r.selectors.find(_.path != "type")
+      val keys = r.keys.take(inner.fold(r.keys.size)(_.at)).filter(_.path != "type").toSeq
+      (t, keys, inner.map(s => (s, section(op, Map("type" -> t), s.path))))
+    }
+    val firstWith = typed.collect { case (t, _, Some((_, table))) => table -> t }
+      .groupBy(_._1).map { case (table, ts) => table -> ts.head._2 }
+    out ++= "\n## `operations:` types (PipelineConfig.parseOp)\n\n"
+    out ++= "An op's keys sit next to `type:` or under `params:`, not both.\n\n"
+    out ++= "| type | keys (defaults) | dispatch |\n|---|---|---|\n"
+    typed.foreach { case (t, keys, inner) =>
+      val dispatch = inner.fold("") { case (s, table) =>
+        val owner = firstWith(table)
+        if (owner == t) s"`${s.path}:` (section below)" else s"as `$owner`"
+      }
+      out ++= s"| `$t` | ${renderAll(keys)} | $dispatch |\n"
+    }
+    typed.foreach {
+      case (t, _, Some((s, table))) if firstWith(table) == t =>
+        out ++= s"\n## `$t` (`${s.path}:` dispatch)\n\n"
+        out ++= table.mkString("\n") + "\n"
+      case _ =>
+    }
+
+    out ++= "\n## Stream pipelines (StreamPipeline.fromYaml)\n\n"
+    out ++= "Top level: `name`, `stream_source` (required), `transforms[]`, `window`,\n"
+    out ++= "`sink`, `monitoring`, `attrition`. A batch-only op under `transforms:`\n"
+    out ++= "is rejected. `sink.output_mode` defaults to `update` under a tumbling or\n"
+    out ++= "sliding window and to `append` otherwise.\n\n"
+    out ++= s"`monitoring`: ${keysOf(StreamPipeline.monitoring(_, None))}\n\n"
+    out ++= s"`attrition`: ${keysOf(StreamPipeline.attrition)}\n\n"
+    Seq[(String, Binder)](
+      "stream_source" -> StreamPipeline.source,
+      "transforms[]" -> StreamPipeline.transform,
+      "window" -> StreamPipeline.window,
+      "sink" -> (StreamPipeline.sink(_, "<name>", "append"))).foreach { case (name, bind) =>
+      out ++= s"### `$name` (`type:` dispatch)\n\n"
+      out ++= section(bind, Map.empty, "type").mkString("\n") + "\n\n"
     }
 
     out ++= "## Model envelopes\n\n"
-    out ++= "`semantic_gate` commissioning (round 14): without `model_path` the op\n"
-    out ++= "fits on `accepted_table` (a catalog table holding the frozen accepted\n"
-    out ++= "corpus — never the incoming frame, whose every row would gate itself\n"
-    out ++= "out at cosine 1.0) and `save_model_path` persists the model for batch\n"
-    out ++= "replay and the stream `semantic_gate` transform. Sizing: the fitted\n"
-    out ++= "model holds reps×dim doubles on the DRIVER heap (3–4× with boxing\n"
-    out ++= "during fit) and again in EVERY task binary at apply time — 1 M reps at\n"
-    out ++= "dim 768 would be ≈6 GB of raw vector payload. Both bounds fail loudly\n"
-    out ++= "at fit time BEFORE any vector is collected: rows ≤ `max_reps`, and\n"
-    out ++= "rows×dim ≤ 2×10⁸ doubles (`SemGate.MaxModelElems`, ≈1.6 GB raw). Past\n"
-    out ++= "either bound, the snapshot-join dedup tier (`dedup_against` /\n"
-    out ++= "`semantic_dedup`) is the documented route. The saved reps directory is\n"
-    out ++= "sharded at ~8 M doubles (~64 MB) per file and reloads bit-identically\n"
-    out ++= "regardless of file count.\n"
+    out ++= "`semantic_gate` without `model_path` fits on `accepted_table` (never the\n"
+    out ++= "incoming frame) and `save_model_path` keeps the model for batch replay\n"
+    out ++= "and the stream gate; its size bounds (`max_reps`, `SemGate.MaxModelElems`)\n"
+    out ++= "are in graft.vec.SemGate's scaladoc.\n"
     out.toString
   }
 

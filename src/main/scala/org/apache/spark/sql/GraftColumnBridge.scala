@@ -18,10 +18,10 @@ object GraftColumnBridge {
   def applyFunctionInjections(ext: SparkSessionExtensions, spark: SparkSession): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
 
-  /** Non-blocking Observation read (getRowOrEmpty is private[sql]; the
-    * public get() blocks forever when no action has fired — an attrition
-    * report must fail loudly instead). */
-  def observationRow(o: Observation): Option[Row] = o.getRowOrEmpty
+  /** Wait until every event posted so far reached its listeners
+    * (QueryExecutionListeners run on the listener bus, after the action
+    * returned; the bus is private[spark]). */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** A DataFrame over an RDD of CATALYST rows (internalCreateDataFrame is
     * private[sql]) — the segmented-scan operators' round-14 escape from the

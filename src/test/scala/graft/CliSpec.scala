@@ -116,4 +116,45 @@ class CliSpec extends SparkSpec {
     assert(out.contains("storage: parquet"))
     assert(out.contains("\"lineage\"") || out.contains("lineage"))
   }
+
+  test("run, --lint, --dry-run and stream on a config error: one error line, exit 1, no SparkSession") {
+    val dir = tmpDir()
+    def write(name: String, body: String): String = {
+      val p = java.nio.file.Paths.get(dir, name)
+      java.nio.file.Files.writeString(p, body)
+      p.toString
+    }
+    val batch = write("bad.yaml",
+      """name: typo
+        |source: { type: parquet, path: /nonexistent }
+        |operations:
+        |  - { type: text_processing, params: { operation: gopher_filter, min_wordz: 1 } }
+        |""".stripMargin)
+    val stream = write("bad_stream.yaml",
+      """name: typo_stream
+        |stream_source: { type: file, path: /nonexistent, schema: "ts TIMESTAMP" }
+        |transforms:
+        |  - { type: filter, conditon: "true" }
+        |""".stripMargin)
+    def failing(args: String*): String = {
+      val err = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val exit =
+        try intercept[Cli.Exit](Cli.run(args.toArray))
+        finally System.setErr(saved)
+      assert(exit.code == 1, s"${args.mkString(" ")}: exit ${exit.code}")
+      new String(err.toByteArray, "UTF-8").trim
+    }
+    Seq(Seq("run", batch), Seq("run", batch, "--lint"), Seq("run", batch, "--dry-run")).foreach { args =>
+      val msg = failing(args: _*)
+      assert(msg.linesIterator.size == 1 && msg.startsWith("error: ") &&
+        msg.contains("operations[0]") && msg.contains("min_wordz"), msg)
+    }
+    val msg = failing("stream", stream)
+    assert(msg.startsWith("error: ") && msg.contains("transforms[0]") && msg.contains("conditon"), msg)
+    // the shared test session survived: no command got as far as starting
+    // (and stopping) a session of its own
+    assert(!spark.sparkContext.isStopped)
+  }
 }

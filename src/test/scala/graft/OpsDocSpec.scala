@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tools.OpsDoc
 
-/** docs/OPS.md is GENERATED from the dispatch code (VERDICT r6 #7 — the
-  * op surface had outgrown the README's examples and a hand-written doc
-  * would drift again). This spec regenerates the document on every build
-  * and fails when the committed file is stale, plus sanity-pins that the
-  * extraction actually sees the dispatch (a regex gone blind would
-  * otherwise "freshly generate" an empty doc forever).
+/** docs/OPS.md is GENERATED from the binders that parse the YAML
+  * (VERDICT r6 #7 — the op surface had outgrown the README's examples and
+  * a hand-written doc would drift again). This spec regenerates the
+  * document on every build and fails when the committed file is stale,
+  * plus sanity-pins that the recording pass actually sees every binder (a
+  * recorder gone blind would otherwise "freshly generate" an empty doc
+  * forever).
   */
 class OpsDocSpec extends AnyFunSuite {
 
@@ -23,10 +24,9 @@ class OpsDocSpec extends AnyFunSuite {
   }
 
   test("gopher_rules and gopher_filter accept identical thresholds (anti-divergence pin)") {
-    // the two case arms repeat the same 9-param parsing by design (the doc
-    // generator reads each arm's source, so delegation would hide the
-    // params from docs/OPS.md); this pin makes a missed edit in one arm a
-    // build failure instead of a silent audit-vs-filter gating divergence
+    // one binder (OpCompiler.gopher) reads the thresholds for all three
+    // ops; this pin keeps it that way — the stream gate names its text and
+    // language keys *_field, everything else must match the batch pair
     def paramsOf(op: String): String = {
       val row = generated.linesIterator.find(_.startsWith(s"| `$op` |"))
         .getOrElse(fail(s"no generated row for $op"))
@@ -34,6 +34,8 @@ class OpsDocSpec extends AnyFunSuite {
     }
     assert(paramsOf("gopher_rules") == paramsOf("gopher_filter"),
       s"threshold param lists diverged:\n rules:  ${paramsOf("gopher_rules")}\n filter: ${paramsOf("gopher_filter")}")
+    assert(paramsOf("gopher_gate").replace("_field", "_column") == paramsOf("gopher_rules"),
+      s"stream gate diverged:\n gate:  ${paramsOf("gopher_gate")}\n rules: ${paramsOf("gopher_rules")}")
   }
 
   test("extraction sees the real dispatch surface (blind-regex control)") {
@@ -50,6 +52,11 @@ class OpsDocSpec extends AnyFunSuite {
     assert(generated.contains("| `cdc_apply` | `changes_table`"), "scd2 rows")
     assert(generated.contains("| `zorder_key` |"), "layout rows")
     assert(generated.contains("| `alerts` | `at_epoch=0`"), "quality_monitor rows")
+    // stream sections: source, transforms, window, sink
+    assert(generated.contains("| `kafka` | `servers`"), "stream source rows")
+    assert(generated.contains("| `neardup_gate` | `model_path`"), "stream transform rows")
+    assert(generated.contains("| `session` | `gap=30 minutes`"), "stream window rows")
+    assert(generated.contains("| `neardup_ingest_kv` | `model_dir`"), "stream sink rows")
     // the generated op count stays in the right order of magnitude — a
     // half-blind split would silently halve the table
     val rows = generated.linesIterator.count(l => l.startsWith("| `"))

@@ -125,15 +125,47 @@ class PipelineSpec extends SparkSpec {
     assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     assert(caches.size == 1)
     caches.foreach(_.unpersist(blocking = true))
-    // an unknown level is a config error, not a silent MEMORY_AND_DISK
+    // an unknown level is a config error, not a silent MEMORY_AND_DISK —
+    // rejected when the YAML is parsed
     val bad = intercept[IllegalArgumentException] {
-      graft.core.OpCompiler.applyOp(
-        Seq((1, "x")).toDF("a", "b"), graft.core.OpSpec.CacheOp("MEMORY_MOSTLY"))
+      Pipeline.fromYaml(yaml.replace("DISK_ONLY", "MEMORY_MOSTLY"))
     }
     assert(bad.getMessage.contains("storage_level"))
     // "persist" is an alias in YAML
     assert(PipelineConfig.parseOp(Map("type" -> "persist")) ==
       graft.core.OpSpec.CacheOp("MEMORY_AND_DISK"))
+  }
+
+  test("attrition report survives a query whose plan drops the observed stages") {
+    val df = Seq((1, 10L), (2, 20L), (3, 30L)).toDF("id", "n")
+    val (out, report) = graft.core.OpCompiler.compileObserved(
+      Seq(graft.core.OpSpec.FilterCondition("id > 1")), null, null, Some("n"))(df)
+    // limit(0) plans to an empty relation: the observe nodes sit in this
+    // query's logical plan but never run, so it must not supply (or void)
+    // the stage metrics the later write measures
+    assert(out.limit(0).collect().isEmpty)
+    out.write.format("noop").mode("overwrite").save()
+    assert(report() == Seq(graft.core.OpCompiler.StageAttrition(
+      1, "FilterCondition", 3L, 2L, Some(60L), Some(50L))))
+  }
+
+  test("a failed storage write releases the storage stage's persisted frame") {
+    val in = Files.createTempDirectory("graft_store_fail_in").toString
+    writeCsv(in)
+    // the sink path sits under a regular file, so the write must fail
+    val blocker = Files.createTempFile("graft_store_fail", ".txt").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val res = Pipeline.execute(spark, Pipeline.fromYaml(
+      s"""name: store_fail
+         |source: { type: csv, path: "$in/*.csv", options: { header: true } }
+         |operations:
+         |  - { type: filter, condition: "age >= 25" }
+         |storage: { type: parquet, path: "$blocker/out", mode: overwrite }
+         |""".stripMargin))
+    assert(res.status == "failed", s"the write under a regular file must fail: $res")
+    assert(persisted == before,
+      s"storage frame leaked on failure: ${persisted -- before} still persisted")
   }
 
   test("text_processing ops in a YAML pipeline: near-dedup then quality filter") {
@@ -342,13 +374,10 @@ class PipelineSpec extends SparkSpec {
     // transform loads
     val m = graft.vec.SemGate.loadSemGate(spark, s"$modelDir/sg")
     assert(m.reps.map(_.ids.length).sum == 4, "all 4 accepted vectors indexed")
-    // without model_path OR accepted_table the op must refuse loudly
+    // without model_path OR accepted_table the op must refuse loudly — at
+    // parse time, before any frame is loaded
     val badYaml = applyYaml.replace(s"""model_path: "$modelDir/sg", """, "")
-    val conf3 = Pipeline.fromYaml(badYaml)
-    val (primary3, catalog3) = Pipeline.load(spark, conf3)
-    val e = intercept[IllegalArgumentException] {
-      graft.core.OpCompiler.compile(conf3.operations, catalog3)(primary3).collect()
-    }
+    val e = intercept[IllegalArgumentException](Pipeline.fromYaml(badYaml))
     assert(e.getMessage.contains("accepted_table"), e.getMessage)
   }
 
