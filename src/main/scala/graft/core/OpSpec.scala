@@ -249,7 +249,6 @@ object OpCompiler {
   private def vecCol(a: Params): String = a.str("vector_column", "embedding")
   private def vecId(a: Params): String = a.str("id_column", "vec_id")
   private def payloadCol(a: Params): String = a.str("payload_column", "payload")
-  private def batchSize(a: Params): Int = a.int("batch_size", 256)
   private def gramOrders(a: Params): Seq[Int] = a.ints("gram_orders", Seq(1, 2))
 
   /** feature_engineering op (iot_pipeline.yaml:22-44 shape): `operation`
@@ -935,26 +934,26 @@ object OpCompiler {
         val (w, h, ms) = (a.int("width", 0), a.int("height", 0), a.long("duration_ms", 0L))
         (df, _) => Multimodal.asMedia(df, id, payload, format, w, h, ms) },
       "decode_image_stats" -> { a =>
-        val (payload, out, batch) = (payloadCol(a), a.str("output_column", "image_stats"), batchSize(a))
-        (df, _) => Multimodal.decodeImageStats(df, payload, out, batch) },
+        val (payload, out) = (payloadCol(a), a.str("output_column", "image_stats"))
+        (df, _) => Multimodal.decodeImageStats(df, payload, out) },
       "resize_images" -> { a => // target dims
-        val (w, h, batch) = (a.reqInt("width"), a.reqInt("height"), batchSize(a))
-        (df, _) => Multimodal.resizeImages(df, w, h, batch) },
+        val (w, h) = (a.reqInt("width"), a.reqInt("height"))
+        (df, _) => Multimodal.resizeImages(df, w, h) },
       "image_dhash" -> { a => // REAL decode → perceptual 64-bit difference hash
-        val (payload, out, batch) = (payloadCol(a), a.str("output_column", "dhash"), batchSize(a))
-        (df, _) => Multimodal.imageDHash(df, payload, out, batch) },
+        val (payload, out) = (payloadCol(a), a.str("output_column", "dhash"))
+        (df, _) => Multimodal.imageDHash(df, payload, out) },
       "image_neardup" -> { a => // Hamming-banded image near-dup pairs over a dhash column
         val (id, hash) = (a.str("id_column", "media_id"), a.str("hash_column", "dhash"))
         val (maxHamming, maxBucket) = (a.int("max_hamming", 3), a.int("max_bucket_size", 1000))
         (df, _) => Multimodal.imageNearDupPairs(df, id, hash, maxHamming, maxBucket) },
       "decode_audio_stats" -> { a =>
-        val (payload, out, batch) = (payloadCol(a), a.str("output_column", "audio_stats"), batchSize(a))
-        (df, _) => Multimodal.decodeAudioStats(df, payload, out, batch) },
-      "trim_audio" -> { a => val (maxMs, batch) = (a.long("max_ms", 60000L), batchSize(a))
-        (df, _) => Multimodal.trimAudio(df, maxMs, batch) },
+        val (payload, out) = (payloadCol(a), a.str("output_column", "audio_stats"))
+        (df, _) => Multimodal.decodeAudioStats(df, payload, out) },
+      "trim_audio" -> { a => val maxMs = a.long("max_ms", 60000L)
+        (df, _) => Multimodal.trimAudio(df, maxMs) },
       "sample_gif_frames" -> { a => // REAL multi-frame decode (animated GIF)
-        val (every, batch) = (a.int("every_n", 1), a.int("batch_size", 64))
-        (df, _) => Multimodal.sampleGifFrames(df, every, batch) },
+        val every = a.int("every_n", 1)
+        (df, _) => Multimodal.sampleGifFrames(df, every) },
       "sample_frames" -> { a => val every = a.long("every_ms", 1000L)
         (df, _) => Multimodal.sampleFrames(df, every) },
       "decode_features_stub" -> { a => // video/compressed audio: no codec here

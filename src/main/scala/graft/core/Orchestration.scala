@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Driver-side orchestration parity: lineage tracking
@@ -51,8 +52,7 @@ object Orchestration {
   final class MetricsCollector extends QueryExecutionListener {
     private val buf = new ConcurrentLinkedQueue[QueryMetric]()
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      val rows = qe.executedPlan.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-      buf.add(QueryMetric(funcName, durationNs, rows, failed = false))
+      buf.add(QueryMetric(funcName, durationNs, outputRows(qe.executedPlan), failed = false))
     }
     override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit =
       buf.add(QueryMetric(funcName, -1L, -1L, failed = true))
@@ -74,6 +74,20 @@ object Orchestration {
           registry.recordCounter("query_output_rows", m.outputRows.toDouble, tags)
       }
     }
+  }
+
+  /** Rows a query produced: `numOutputRows` of the topmost node that
+    * defines it. Write, `collect` and `count` roots carry no such metric,
+    * so this looks down single-child chains, through AQE's final plan,
+    * query stages and codegen wrappers; -1 when that chain has none.
+    */
+  private[core] def outputRows(plan: SparkPlan): Long = plan match {
+    case a: AdaptiveSparkPlanExec => outputRows(a.executedPlan)
+    case s: QueryStageExec => outputRows(s.plan)
+    case _ => plan.metrics.get("numOutputRows").map(_.value).getOrElse(plan.children match {
+      case Seq(only) => outputRows(only)
+      case _ => -1L
+    })
   }
 
   def installMetrics(spark: SparkSession): MetricsCollector = {

@@ -1,9 +1,12 @@
 package graft.functions
 
+import graft.core.SegmentedScan
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, StringType,
+  StructField, StructType, TimestampType}
 
 /** Time-series library — §2.J, graft's equivalent of the reference's
   * transformations/time_series.py (527 LoC), re-expressed as distributed
@@ -343,25 +346,21 @@ object TimeSeriesLib {
     */
   private case class EwmChunk(key: String, pow: Double, bNum: Double, bDen: Double)
   private case class EwmPartSummary(first: EwmChunk, last: EwmChunk, oneChunk: Boolean)
+  /** EWM state after the last row of `key` seen so far. */
+  private case class EwmState(key: String, num: Double, den: Double)
 
   /** Exponentially-weighted mean, pandas `ewm(alpha).mean()` adjust=true
     * semantics (time_series.py:438-447): y_t = Σ w_i x_i / Σ w_i with
     * w_i = (1-α)^(t-i). The recurrence has no windowed closed form, but it
-    * IS an affine map, so it parallelizes as a segmented scan (round 6,
-    * VERDICT r5 #4 — the old `groupByKey.flatMapGroups` needed each key's
-    * FULL series in one task and died on a single 100×-scale key):
-    *   1. range-repartition by (key, ord) + in-partition sort — one
-    *      shuffle; a big key may span many partitions;
-    *   2. pass 1: per partition, the composed affine maps of its first and
-    *      last key chunks (O(#partitions) driver bytes);
-    *   3. driver fold threads the carry state across partitions (only keys
-    *      that span a boundary compose; interior keys start from zero and
-    *      keep bit-exact single-scan results);
-    *   4. pass 2 re-reads the SAME shuffle output (map stage skipped) and
-    *      emits per-(key, ord) EWM from the broadcast incoming states.
-    * Cross-boundary states are algebraically equal but may differ from a
-    * sequential scan in final ulps (affine composition reorders float ops)
-    * — same class of divergence as pandas' own vectorized ewm.
+    * IS an affine map, so it runs as a [[graft.core.SegmentedScan]] over
+    * (key, ord): pass 1 summarizes each partition's first and last key
+    * chunks as composed affine maps, the fold threads the (num, den) state
+    * across boundaries (only keys that span one compose; interior keys
+    * start from zero and keep bit-exact single-scan results), pass 2
+    * emits per-(key, ord) EWM. Cross-boundary states are algebraically
+    * equal but may differ from a sequential scan in final ulps (affine
+    * composition reorders float ops) — same class of divergence as pandas'
+    * own vectorized ewm.
     * Output: partition cols + order col + value + `{value}_ewm`.
     */
   def smoothEwm(
@@ -371,8 +370,6 @@ object TimeSeriesLib {
       orderCol: String,
       partitionBy: Seq[String]
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     // key = JSON of the partition tuple: unambiguous (concatenation would
     // merge ("a","bc") with ("ab","c")) and null-safe
     val keyCol = if (partitionBy.nonEmpty) to_json(struct(partitionBy.map(col): _*))
@@ -390,126 +387,91 @@ object TimeSeriesLib {
     }
     val oneMinus = 1.0 - alpha
     // null order keys have no position in the scan — they bypass below and
-    // carry a null EWM. RangePartitioner keeps equal (key, ord) rows in
-    // one partition, so tie groups never straddle a boundary. FULL rows
-    // ride the range shuffle (one corpus exchange; the previous id-only
-    // scan + join-back paid two more corpus-sized exchanges to reunite
-    // rows with their EWM — sessionize's round-6 lesson applied here too).
+    // carry a null EWM
     val pre = df.withColumn("__key", keyCol)
       .withColumn("__ord", ordCol)
       .withColumn("__val", col(valueCol).cast(DoubleType))
-    val sorted = pre.filter(col("__ord").isNotNull)
-      .repartitionByRange(col("__key"), col("__ord"))
-      // __val as tertiary sort key: rows tied on (key, ord) with DIFFERENT
-      // values must fold in one deterministic order, or the pass-1 chunk
-      // summaries and pass-2 emission (separate jobs re-sorting the same
-      // shuffle blocks) could disagree on the tie order and hand later
-      // partitions an incoming state matching no single scan (round-6
-      // review; any fixed tie order is as valid as the old arbitrary one)
-      .sortWithinPartitions("__key", "__ord", "__val")
-    val keyIdx = sorted.schema.fieldNames.indexOf("__key")
-    val ordIdx = sorted.schema.fieldNames.indexOf("__ord")
-    val valIdx = sorted.schema.fieldNames.indexOf("__val")
-
-    // pass 1: first/last chunk affine summaries per partition
-    val summaries: Array[(Int, EwmPartSummary)] =
-      sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-        var cur: String = null
-        var pow = 1.0; var bNum = 0.0; var bDen = 0.0
-        var first: EwmChunk = null
-        var any = false
-        def chunk() = EwmChunk(cur, pow, bNum, bDen)
-        it.foreach { r =>
-          val key = r.getString(keyIdx)
-          if (!any) { cur = key; any = true }
-          else if (key != cur) {
-            if (first == null) first = chunk()
-            cur = key; pow = 1.0; bNum = 0.0; bDen = 0.0
-          }
-          if (!r.isNullAt(valIdx)) {
-            val x = r.getDouble(valIdx)
-            pow *= oneMinus; bNum = bNum * oneMinus + x; bDen = bDen * oneMinus + 1.0
-          }
-        }
-        if (!any) Iterator.empty
-        else {
-          val lastC = chunk()
-          Iterator.single((pid, EwmPartSummary(
-            if (first == null) lastC else first, lastC, first == null)))
-        }
-      }.collect()
-
-    // driver fold: incoming (num, den) state for each partition's FIRST
-    // chunk; carry threads through empty partitions untouched
-    val incoming = scala.collection.mutable.Map[Int, (Double, Double)]()
-    var carryKey: String = null
-    var cn = 0.0; var cd = 0.0
-    def applyChunk(c: EwmChunk, n0: Double, d0: Double): (Double, Double) =
-      if (n0 == 0.0 && d0 == 0.0) (c.bNum, c.bDen) // fresh key: bit-exact local scan
-      else (c.pow * n0 + c.bNum, c.pow * d0 + c.bDen)
-    summaries.sortBy(_._1).foreach { case (pid, s) =>
-      val continues = s.first.key == carryKey && carryKey != null
-      if (continues) incoming(pid) = (cn, cd)
-      val (n1, d1) =
-        if (s.oneChunk && continues) applyChunk(s.last, cn, cd)
-        else applyChunk(s.last, 0.0, 0.0)
-      carryKey = s.last.key; cn = n1; cd = d1
-    }
-    val bIncoming = spark.sparkContext.broadcast(incoming.toMap)
-
-    // pass 2: same shuffle output, rows re-emitted WITH their EWM — ties
-    // on __ord keep the state AFTER the whole tie group (pandas parity
-    // with the old LinkedHashMap formulation), which requires buffering
-    // the tie group before emitting. Tie width is bounded by how many
-    // SAME-INSTANT readings one key has — pathological only for degenerate
-    // order keys, so a guard turns the would-be executor OOM into a
-    // diagnosable error telling the caller to use a finer order column
-    // (round-6 review; sessionize streams instead because its ordinal is
-    // known at group start).
+    // __val as tie-break: rows tied on (key, ord) with DIFFERENT values must
+    // fold in one deterministic order in both passes, or pass 2 could start
+    // from an incoming state matching no single scan
+    val scan = SegmentedScan(pre.filter(col("__ord").isNotNull),
+      Seq(col("__key"), col("__ord")), tieBreak = Seq(col("__val")))
+    val (keyIdx, ordIdx, valIdx) = (scan.index("__key"), scan.index("__ord"), scan.index("__val"))
+    val out = scan.schema.add(s"${valueCol}_ewm", DoubleType)
+    def applyChunk(c: EwmChunk, n0: Double, d0: Double): EwmState =
+      if (n0 == 0.0 && d0 == 0.0) EwmState(c.key, c.bNum, c.bDen) // fresh key: bit-exact local scan
+      else EwmState(c.key, c.pow * n0 + c.bNum, c.pow * d0 + c.bDen)
+    // Ties on __ord keep the state AFTER the whole tie group (pandas
+    // parity), so pass 2 buffers each tie group. Tie width is bounded by
+    // how many SAME-INSTANT readings one key has; a guard turns the
+    // would-be executor OOM on a degenerate order key into an error naming
+    // the fix.
     val maxTieWidth = 1000000
-    val outRdd = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val withEwm = scan.run(out)({ it =>
+      // pass 1: first/last chunk affine summaries
+      var cur: String = null
+      var pow = 1.0; var bNum = 0.0; var bDen = 0.0
+      var first: EwmChunk = null
+      def chunk() = EwmChunk(cur, pow, bNum, bDen)
+      it.foreach { r =>
+        val key = r.getUTF8String(keyIdx).toString
+        if (cur == null) cur = key
+        else if (key != cur) {
+          if (first == null) first = chunk()
+          cur = key; pow = 1.0; bNum = 0.0; bDen = 0.0
+        }
+        if (!r.isNullAt(valIdx)) {
+          val x = r.getDouble(valIdx)
+          pow *= oneMinus; bNum = bNum * oneMinus + x; bDen = bDen * oneMinus + 1.0
+        }
+      }
+      val last = chunk()
+      EwmPartSummary(if (first == null) last else first, last, first == null)
+    })(SegmentedScan.prefix(EwmState(null, 0.0, 0.0)) { (in: EwmState, s: EwmPartSummary) =>
+      // a one-chunk partition continuing the carried key composes onto it
+      if (s.oneChunk && s.first.key == in.key) applyChunk(s.last, in.num, in.den)
+      else applyChunk(s.last, 0.0, 0.0)
+    }) { (in, it) =>
       // NB: named `rows`, not `buffered` — inside `new Iterator` that name
       // would resolve to the INHERITED Iterator.buffered method (shadowing
       // the local) and recurse hasNext→buffered→hasNext to a StackOverflow
       val rows = it.buffered
       var cur: String = null
-      var started = false
       var num = 0.0; var den = 0.0
-      new Iterator[org.apache.spark.sql.Row] {
-        private var pending: Iterator[org.apache.spark.sql.Row] = Iterator.empty
+      val app = new SegmentedScan.Appender(out, 1)
+      new Iterator[InternalRow] {
+        private var pending: Iterator[InternalRow] = Iterator.empty
         def hasNext: Boolean = pending.hasNext || rows.hasNext
-        def next(): org.apache.spark.sql.Row = {
+        def next(): InternalRow = {
           if (!pending.hasNext) {
-            val key = rows.head.getString(keyIdx); val ord = rows.head.getLong(ordIdx)
+            val key = rows.head.getUTF8String(keyIdx).toString; val ord = rows.head.getLong(ordIdx)
             if (key != cur) {
-              val in = if (!started) bIncoming.value.getOrElse(pid, (0.0, 0.0)) else (0.0, 0.0)
-              num = in._1; den = in._2; cur = key; started = true
+              // only the partition's first key can continue the carry
+              if (cur == null && key == in.key) { num = in.num; den = in.den }
+              else { num = 0.0; den = 0.0 }
+              cur = key
             }
-            val group = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-            while (rows.hasNext && rows.head.getString(keyIdx) == key &&
-              rows.head.getLong(ordIdx) == ord) {
+            val group = scala.collection.mutable.ArrayBuffer[InternalRow]()
+            while (rows.hasNext && rows.head.getLong(ordIdx) == ord &&
+              rows.head.getUTF8String(keyIdx).toString == key) {
               val r = rows.next()
               if (!r.isNullAt(valIdx)) {
                 val x = r.getDouble(valIdx)
                 num = num * oneMinus + x; den = den * oneMinus + 1.0
               }
-              group += r
+              group += r.copy() // the sort reuses its row buffer
               require(group.length <= maxTieWidth,
                 s"smoothEwm: more than $maxTieWidth rows share one (key, $orderCol) " +
                   "instant — tied readings must buffer to share the post-group EWM; " +
                   "use a finer-grained order column")
             }
-            val e: Any = if (den > 0) num / den else null
-            pending = group.iterator.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ e))
+            app(0) = if (den > 0) num / den else null
+            pending = group.iterator.map(r => app(r))
           }
           pending.next()
         }
       }
     }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        s"${valueCol}_ewm", org.apache.spark.sql.types.DoubleType))
-    val withEwm = spark.createDataFrame(outRdd, outSchema)
     // null order keys have no position in the scan → null EWM
     val nullRows = pre.filter(col("__ord").isNull)
       .withColumn(s"${valueCol}_ewm", lit(null).cast("double"))
@@ -655,17 +617,14 @@ object TimeSeriesLib {
     * shape needed to join session context back onto events or feed
     * per-session downstream features.
     *
-    * Scale shape (round 6): the lag + running-sum per-key window funneled a
-    * hyperactive entity's whole series through one unsplittable task (one
-    * bot dominating an event log is normal reality). Session assignment is
-    * a prefix scan — only the first row of a key's chunk depends on
-    * anything outside the chunk (the previous event time, for the gap
-    * test, and the running session count) — so it runs as the smoothEwm
-    * segmented scan: range-repartition by (key, ts), per-partition chunk
-    * summaries (first/last event time, fresh-start session count), a
-    * driver fold threading (count, lastTs) across partition boundaries,
-    * and a second pass over the same shuffle output emitting per-(key, ts)
-    * session ids, joined back to the caller's rows.
+    * Scale shape: session assignment is a prefix scan — only the first row
+    * of a key's chunk depends on anything outside the chunk (the previous
+    * event time, for the gap test, and the running session count) — so it
+    * runs as a [[graft.core.SegmentedScan]] over (key, ts) instead of a
+    * per-key lag + running-sum window: pass 1 summarizes each partition's
+    * first/last chunk (first/last event time, fresh-start session count),
+    * the fold threads (count, lastTs) across boundaries, pass 2 emits each
+    * event's session id.
     *
     * Determinism under timestamp ties: tied events see gap 0, so they never
     * open a session and share one ordinal (spec-pinned). Rows with a NULL
@@ -685,113 +644,65 @@ object TimeSeriesLib {
     // chunk summaries but not in the tie-group-collapsing emission pass —
     // and a zero/negative gap is semantically meaningless anyway
     require(gapSeconds > 0, s"sessionize: gapSeconds must be positive, got $gapSeconds")
-    val spark = df.sparkSession
     val gapMicros = gapSeconds * 1000000L
     val keyCol = to_json(struct(keys.map(col): _*))
-    // FULL rows ride the range shuffle (one corpus exchange total, same
-    // bytes as the old window formulation) — an id-only scan + join-back
-    // would pay two more corpus-sized exchanges just to reunite rows with
-    // their ordinals
     val pre = df.withColumn("__key", keyCol)
       .withColumn("__ord", unix_micros(col(tsCol)))
-    val sorted = pre.filter(col("__ord").isNotNull)
-      .repartitionByRange(col("__key"), col("__ord"))
-      .sortWithinPartitions("__key", "__ord")
-    val keyIdx = sorted.schema.fieldNames.indexOf("__key")
-    val ordIdx = sorted.schema.fieldNames.indexOf("__ord")
-
-    // Both passes run over queryExecution.toRdd — CATALYST rows (round 14).
-    // The old `.rdd` deserialized every field of every event to external
-    // java objects in pass 1 AND pass 2, and pass 2 re-encoded them through
-    // createDataFrame(RDD[Row]); the internal rows need only the key/ts
-    // fields read (one String per row for the chunk comparison — what
-    // getString did anyway) and pass 2 appends the ordinal via a reused
-    // JoinedRow. The lazy val is SHARED, so the range exchange + sort still
-    // execute once and pass 2 reads the shuffle files.
-    val internalRdd = sorted.queryExecution.toRdd
-
+    val scan = SegmentedScan(pre.filter(col("__ord").isNotNull),
+      Seq(col("__key"), col("__ord")))
+    val (keyIdx, ordIdx) = (scan.index("__key"), scan.index("__ord"))
+    val out = scan.schema.add(sessionCol, LongType)
     // pass 1: first/last chunk summaries — (firstTs, lastTs, session count
     // under a FRESH start). Only the first row's is-new flag depends on the
     // incoming state, so a continuing chunk's true count is
     // firstIsNew + (freshCount - 1).
     case class Chunk(key: String, firstTs: Long, lastTs: Long, freshCount: Long)
-    val summaries = internalRdd.mapPartitionsWithIndex { (pid, it) =>
+    case class Carry(key: String, cnt: Long, lastTs: Long)
+    val withSess = scan.run(out)({ it =>
       var cur: String = null; var firstTs = 0L; var prevTs = 0L; var cnt = 0L
-      var first: Chunk = null; var any = false
+      var first: Chunk = null
       def chunk() = Chunk(cur, firstTs, prevTs, cnt)
       it.foreach { r =>
         val key = r.getUTF8String(keyIdx).toString; val ts = r.getLong(ordIdx)
-        if (!any) { any = true; cur = key; firstTs = ts; prevTs = ts; cnt = 1L }
-        else if (key != cur) {
-          if (first == null) first = chunk()
+        if (key != cur) {
+          if (cur != null && first == null) first = chunk()
           cur = key; firstTs = ts; prevTs = ts; cnt = 1L
         } else {
           if (ts - prevTs >= gapMicros) cnt += 1L
           prevTs = ts
         }
       }
-      if (!any) Iterator.empty
-      else Iterator.single((pid, (if (first == null) chunk() else first, chunk(), first == null)))
-    }.collect()
-
-    // driver fold: incoming (sessionCount, lastTs) per partition whose
-    // first chunk continues the previous partition's last key
-    val incoming = scala.collection.mutable.Map[Int, (Long, Long)]()
-    var carryKey: String = null; var carryCnt = 0L; var carryTs = 0L
-    summaries.sortBy(_._1).foreach { case (pid, (firstC, lastC, oneChunk)) =>
-      val continues = carryKey != null && firstC.key == carryKey
-      if (continues) incoming(pid) = (carryCnt, carryTs)
-      val (n1, t1) =
-        if (oneChunk && continues) {
-          val firstIsNew = if (firstC.firstTs - carryTs >= gapMicros) 1L else 0L
-          (carryCnt + firstIsNew + (lastC.freshCount - 1L), lastC.lastTs)
-        } else (lastC.freshCount, lastC.lastTs)
-      carryKey = lastC.key; carryCnt = n1; carryTs = t1
-    }
-    val bIncoming = spark.sparkContext.broadcast(incoming.toMap)
-
-    // pass 2: same shuffle output, rows re-emitted WITH their ordinal —
-    // STREAMING, O(1) memory per task: a session ordinal is fully
-    // determined at its tie group's FIRST row (tied events see gap 0 and
-    // never increment), so each row emits immediately; no tie-group
-    // buffering (round-6 review: coarse timestamps × one bot key make tie
-    // widths corpus-sized)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        sessionCol, org.apache.spark.sql.types.LongType))
-    val outRdd = internalRdd.mapPartitionsWithIndex { (pid, it) =>
+      (if (first == null) chunk() else first, chunk(), first == null)
+    })(SegmentedScan.prefix(Carry(null, 0L, 0L)) {
+      (in: Carry, s: (Chunk, Chunk, Boolean)) =>
+        val (firstC, lastC, oneChunk) = s
+        if (oneChunk && firstC.key == in.key) {
+          val firstIsNew = if (firstC.firstTs - in.lastTs >= gapMicros) 1L else 0L
+          Carry(lastC.key, in.cnt + firstIsNew + (lastC.freshCount - 1L), lastC.lastTs)
+        } else Carry(lastC.key, lastC.freshCount, lastC.lastTs)
+    }) { (in, it) =>
+      // STREAMING, O(1) memory per task: a session ordinal is fully
+      // determined at its tie group's FIRST row (tied events see gap 0 and
+      // never increment), so each row emits immediately; no tie-group
+      // buffering (coarse timestamps × one bot key make tie widths
+      // corpus-sized)
       var cur: String = null
-      var started = false
       var cnt = 0L; var prevTs = 0L; var havePrev = false
-      // reused per-partition: the appended ordinal cell, the concat view,
-      // and an UnsafeProjection so downstream stages read flat UnsafeRows
-      // instead of chasing JoinedRow virtual dispatch (rows are valid
-      // until next(), the standard SparkPlan contract — downstream
-      // operators copy when they buffer)
-      val sess = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(outSchema)
+      val app = new SegmentedScan.Appender(out, 1)
       it.map { r =>
         val key = r.getUTF8String(keyIdx).toString; val ts = r.getLong(ordIdx)
         if (key != cur) {
-          if (!started) {
-            started = true
-            bIncoming.value.get(pid) match {
-              case Some((c, t)) => cnt = c; prevTs = t; havePrev = true
-              case None         => cnt = 0L; havePrev = false
-            }
-          } else { cnt = 0L; havePrev = false }
+          // only the partition's first key can continue the carry
+          if (cur == null && key == in.key) { cnt = in.cnt; prevTs = in.lastTs; havePrev = true }
+          else { cnt = 0L; havePrev = false }
           cur = key
         }
         if (!havePrev || ts - prevTs >= gapMicros) cnt += 1L
         prevTs = ts; havePrev = true
-        sess.update(0, cnt)
-        proj(joined.apply(r, sess)): org.apache.spark.sql.catalyst.InternalRow
+        app(0) = cnt
+        app(r)
       }
     }
-    val withSess = org.apache.spark.sql.GraftColumnBridge
-      .internalCreateDataFrame(spark, outRdd, outSchema)
     // null event times have no position in the scan → null session id
     val nullRows = pre.filter(col("__ord").isNull)
       .withColumn(sessionCol, lit(null).cast("long"))
@@ -936,31 +847,13 @@ object TimeSeriesLib {
         max(col("__gap")).as("max_gap_s"))
   }
 
-  /** First-order Markov transition matrix over per-entity event
-    * sequences: count and conditional probability of state→state steps
-    * (the session-flow / user-journey summary). `orderCols` must make the
-    * per-entity order total — pass a unique tiebreaker (event id) after
-    * the timestamp, or tied rows would make adjacency
-    * partition-order-dependent.
-    *
-    * Scale shape (round 6): adjacency needs only CONSECUTIVE rows, so a
-    * per-entity `lead()` window — which funnels a hyperactive entity's
-    * whole series through one unsplittable task (one bot 99%-dominating an
-    * event log is normal reality; SkewStressSpec pins it) — is replaced by
-    * the smoothEwm segmented-scan discipline: range-repartition by
-    * (entity, order) + in-partition sort (a big entity spans many
-    * partitions), emit in-partition adjacent pairs, stitch the
-    * O(#partitions) boundary pairs from each partition's first/last row on
-    * the driver. The pair counts then map-side-combine to the ≤|states|²
-    * matrix; probabilities ride a window over that aggregated frame.
-    */
   /** Segmented adjacent-pair extraction — the shared skeleton of the
-    * round-6 de-skewed sequence operators ([[transitionMatrix]],
-    * [[interArrivalStatsScalable]]): range-repartition by (entity key,
-    * order), in-partition sort, emit in-partition (prev, cur) payload
-    * pairs, stitch the O(#partitions) cross-boundary pairs from each
-    * partition's first/last row on the driver. No per-entity single-task
-    * requirement: a hyperactive entity spans range partitions.
+    * de-skewed sequence operators ([[transitionMatrix]],
+    * [[interArrivalStatsScalable]]): a [[graft.core.SegmentedScan]] over
+    * (entity key, order) whose carry is the previous non-empty partition's
+    * last (key, payload), so pass 2 emits the cross-boundary pair at its
+    * partition's first row. No per-entity single-task requirement: a
+    * hyperactive entity spans range partitions.
     *
     * `pre` must already carry `__key` (string entity key) first, then the
     * order columns, then the payload as its LAST column; rows with null
@@ -970,84 +863,57 @@ object TimeSeriesLib {
   private def segmentedAdjacentPairs(pre: DataFrame, orderCols: Seq[String],
                                      payloadType: org.apache.spark.sql.types.DataType,
                                      keepKey: Boolean): DataFrame = {
-    val spark = pre.sparkSession
-    val sorted = pre
-      .repartitionByRange(col("__key") +: orderCols.map(col): _*)
-      .sortWithinPartitions("__key", orderCols: _*)
-    val payloadIdx = sorted.schema.fields.length - 1
-    // Both passes run over CATALYST rows (round 14, the sessionize
-    // discipline): only the key string and the payload VALUE are read per
-    // row — the payload is copied out of the reused row buffer with
-    // InternalRow.copyValue (a no-op for primitives, a byte copy for
-    // strings) instead of deserializing every field of every row to
-    // external objects and re-encoding the pairs through
-    // createDataFrame(RDD[Row]). The shared toRdd lazy val means the range
-    // exchange + sort still execute once; pass 2 reads the shuffle files.
-    val internalRdd = sorted.queryExecution.toRdd
-    def keyPayload(r: org.apache.spark.sql.catalyst.InternalRow): (String, Any) =
-      (r.getUTF8String(0).toString,
-        org.apache.spark.sql.catalyst.InternalRow.copyValue(r.get(payloadIdx, payloadType)))
-    // pass 1: each partition's first and last (key, payload) — the only
-    // rows a cross-boundary pair can involve
-    val edges: Array[(Int, (String, Any), (String, Any))] =
-      internalRdd.mapPartitionsWithIndex { (pid, it) =>
-        var first: (String, Any) = null
-        var last: (String, Any) = null
-        it.foreach { r =>
-          val ks = keyPayload(r)
-          if (first == null) first = ks
-          last = ks
-        }
-        if (first == null) Iterator.empty else Iterator.single((pid, first, last))
-      }.collect()
-    // driver stitch: a boundary pair exists when consecutive non-empty
-    // partitions open and close on the SAME entity
-    val boundary = scala.collection.mutable.ArrayBuffer[(String, Any, Any)]()
-    var prev: (String, Any) = null
-    edges.sortBy(_._1).foreach { case (_, first, last) =>
-      if (prev != null && prev._1 == first._1) boundary += ((prev._1, prev._2, first._2))
-      prev = last
-    }
-    import org.apache.spark.sql.types.{StructField, StructType, StringType}
-    val fields =
+    import org.apache.spark.unsafe.types.UTF8String
+    val scan = SegmentedScan(pre, col("__key") +: orderCols.map(col))
+    val payloadIdx = scan.schema.length - 1
+    // the payload is copied out of the reused row buffer (a no-op for
+    // primitives, a byte copy for strings)
+    def keyPayload(r: InternalRow): (String, Any) =
+      (r.getUTF8String(0).toString, InternalRow.copyValue(r.get(payloadIdx, payloadType)))
+    val out = StructType(
       (if (keepKey) Seq(StructField("__key", StringType)) else Nil) ++
-        Seq(StructField("__from", payloadType), StructField("__to", payloadType))
-    val schema = StructType(fields)
-    val nOut = schema.length
-    // pass 2: in-partition adjacent pairs (same shuffle output, map stage
-    // skipped); pairs leave each task pre-shaped for downstream aggregates,
-    // as flat UnsafeRows (valid until next(), the SparkPlan contract)
-    val inPart = internalRdd.mapPartitions { it =>
-      var prevKey: String = null
-      var prevPayload: Any = null
-      val cells = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nOut)
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
-      it.flatMap { r =>
-        val (k, v) = keyPayload(r)
-        val out =
-          if (prevKey != null && prevKey == k) {
-            var i = 0
-            if (keepKey) {
-              cells.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(k)); i = 1
-            }
-            cells.update(i, prevPayload); cells.update(i + 1, v)
-            Iterator.single(proj(cells): org.apache.spark.sql.catalyst.InternalRow)
-          } else Iterator.empty
-        prevKey = k; prevPayload = v
-        out
-      }
+        Seq(StructField("__from", payloadType), StructField("__to", payloadType)))
+    scan.run(out)({ it =>
+      // pass 1: the partition's last (key, payload) — the only row a
+      // later partition's first row can pair with. Keeping the row past
+      // next() is safe only for the last one: the sorter hands it out as a
+      // copy before freeing its pages.
+      var last: InternalRow = null
+      it.foreach(r => last = r)
+      keyPayload(last)
+    })(SegmentedScan.prefix[(String, Any), (String, Any)]((null, null))((_, last) => last)) {
+      (carried, it) =>
+        var (prevKey, prevPayload) = carried
+        val app = new SegmentedScan.Appender(out, out.length)
+        it.flatMap { r =>
+          val (k, v) = keyPayload(r)
+          val pair =
+            if (prevKey == k) {
+              var i = 0
+              if (keepKey) { app(0) = UTF8String.fromString(k); i = 1 }
+              app(i) = prevPayload; app(i + 1) = v
+              Iterator.single(app(InternalRow.empty))
+            } else Iterator.empty
+          prevKey = k; prevPayload = v
+          pair
+        }
     }
-    val boundaryRows = boundary.toSeq.map { case (k, a, b) =>
-      val vals =
-        if (keepKey) Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(k), a, b)
-        else Array[Any](a, b)
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals):
-        org.apache.spark.sql.catalyst.InternalRow
-    }
-    org.apache.spark.sql.GraftColumnBridge.internalCreateDataFrame(spark,
-      inPart.union(spark.sparkContext.parallelize(boundaryRows, 1)), schema)
   }
 
+  /** First-order Markov transition matrix over per-entity event
+    * sequences: count and conditional probability of state→state steps
+    * (the session-flow / user-journey summary). `orderCols` must make the
+    * per-entity order total — pass a unique tiebreaker (event id) after
+    * the timestamp, or tied rows would make adjacency
+    * partition-order-dependent.
+    *
+    * Scale shape: adjacency needs only CONSECUTIVE rows, so the pairs come
+    * from [[segmentedAdjacentPairs]] instead of a per-entity `lead()`
+    * window (which funnels a hyperactive entity's whole series through one
+    * task; SkewStressSpec pins it). The pair counts then map-side-combine
+    * to the ≤|states|² matrix; probabilities ride a window over that
+    * aggregated frame.
+    */
   def transitionMatrix(df: DataFrame, stateCol: String, orderCols: Seq[String],
                        partitionBy: Seq[String]): DataFrame = {
     require(orderCols.nonEmpty, "transitionMatrix: need at least one order column")

@@ -6,9 +6,8 @@ import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column handling for training-data
   * pipelines. Media payloads are opaque `binary` columns with a typed
-  * metadata struct; decode/featurize steps run distributed via
-  * `mapPartitions` over batched rows (the Scala analogue of `mapInPandas`
-  * batch plumbing).
+  * metadata struct; decode/featurize steps run distributed as a per-row
+  * `mapPartitions` (the Scala analogue of `mapInPandas`).
   *
   * IMAGE decode/resize/encode are REAL: `javax.imageio.ImageIO` ships
   * PNG/JPEG/GIF/BMP codecs in the JDK, no external dependency
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types._
   * video or MP3/AAC codecs, so `decodeToFeatures`/`sampleFrames` remain
   * clearly-marked deterministic FAKES (hash-derived features / byte
   * slices with the right shapes). Their Spark-side contract — schema,
-  * batching, partitioning, null passthrough — is real and tested;
+  * partitioning, null passthrough — is real and tested;
   * swapping in a true codec is a one-function change.
   */
 object Multimodal {
@@ -132,24 +131,22 @@ object Multimodal {
     Row(w, h, channels, mr, mg, mb, 0.299 * mr + 0.587 * mg + 0.114 * mb, hist.toSeq)
   }
 
-  /** REAL image decode → stats column, through the batched mapPartitions
-    * plumbing (the same batch shape a heavier codec would use). Appends a
+  /** REAL image decode → stats column, one codec call per row in a
+    * mapPartitions (the shape a heavier codec would use). Appends a
     * nullable `outCol` struct (ImageStatsSchema); null/undecodable payloads
     * yield a null struct. Row-local — no shuffle; at 100 TB the decode cost
     * scales with executors like any map.
     */
-  def decodeImageStats(df: DataFrame, payloadCol: String, outCol: String = "image_stats",
-                       batchSize: Int = 256): DataFrame = {
+  def decodeImageStats(df: DataFrame, payloadCol: String,
+                       outCol: String = "image_stats"): DataFrame = {
     val spark = df.sparkSession
     val inSchema = df.schema
     val outSchema = inSchema.add(outCol, ImageStatsSchema)
     val payloadIdx = inSchema.fieldIndex(payloadCol)
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val stats = imageStats(row.get(payloadIdx).asInstanceOf[Array[Byte]])
-          Row.fromSeq(row.toSeq :+ stats)
-        }
+      it.map { row =>
+        val stats = imageStats(row.get(payloadIdx).asInstanceOf[Array[Byte]])
+        Row.fromSeq(row.toSeq :+ stats)
       }
     }
     spark.createDataFrame(rdd, outSchema)
@@ -262,18 +259,15 @@ object Multimodal {
     hash
   }
 
-  /** dHash column over a media frame (batched decode, null passthrough). */
-  def imageDHash(df: DataFrame, payloadCol: String, outCol: String = "dhash",
-                 batchSize: Int = 256): DataFrame = {
+  /** dHash column over a media frame (per-row decode, null passthrough). */
+  def imageDHash(df: DataFrame, payloadCol: String, outCol: String = "dhash"): DataFrame = {
     val spark = df.sparkSession
     val inSchema = df.schema
     val outSchema = inSchema.add(outCol, LongType)
     val payloadIdx = inSchema.fieldIndex(payloadCol)
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          Row.fromSeq(row.toSeq :+ dhash64(row.get(payloadIdx).asInstanceOf[Array[Byte]]))
-        }
+      it.map { row =>
+        Row.fromSeq(row.toSeq :+ dhash64(row.get(payloadIdx).asInstanceOf[Array[Byte]]))
       }
     }
     spark.createDataFrame(rdd, outSchema)
@@ -310,10 +304,10 @@ object Multimodal {
   }
 
   /** REAL image resize via JDK Graphics2D (bilinear) + PNG re-encode, in the
-    * batched plumbing; metadata records the new dims. Null/undecodable
+    * per-row mapPartitions; metadata records the new dims. Null/undecodable
     * payloads pass through unchanged with their original meta.
     */
-  def resizeImages(df: DataFrame, targetW: Int, targetH: Int, batchSize: Int = 256): DataFrame = {
+  def resizeImages(df: DataFrame, targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0, s"resizeImages: target dims must be positive")
     val spark = df.sparkSession
     val inSchema = df.schema
@@ -321,31 +315,29 @@ object Multimodal {
     val metaIdx = inSchema.fieldIndex("meta")
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
       noImageIOFileCache()
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-          val decoded =
-            if (payload == null) null
-            else try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-                 catch { case _: Exception => null }
-          if (decoded == null) row
-          else {
-            val out = new java.awt.image.BufferedImage(targetW, targetH,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g2 = out.createGraphics()
-            g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g2.drawImage(decoded, 0, 0, targetW, targetH, null)
-            g2.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            val oldMeta = row.getStruct(metaIdx)
-            val newMeta = Row("image/png", targetW, targetH, oldMeta.getLong(3))
-            val vals = row.toSeq.toArray
-            vals(payloadIdx) = bos.toByteArray
-            vals(metaIdx) = newMeta
-            Row.fromSeq(vals.toSeq)
-          }
+      it.map { row =>
+        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
+        val decoded =
+          if (payload == null) null
+          else try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+               catch { case _: Exception => null }
+        if (decoded == null) row
+        else {
+          val out = new java.awt.image.BufferedImage(targetW, targetH,
+            java.awt.image.BufferedImage.TYPE_INT_RGB)
+          val g2 = out.createGraphics()
+          g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+          g2.drawImage(decoded, 0, 0, targetW, targetH, null)
+          g2.dispose()
+          val bos = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(out, "png", bos)
+          val oldMeta = row.getStruct(metaIdx)
+          val newMeta = Row("image/png", targetW, targetH, oldMeta.getLong(3))
+          val vals = row.toSeq.toArray
+          vals(payloadIdx) = bos.toByteArray
+          vals(metaIdx) = newMeta
+          Row.fromSeq(vals.toSeq)
         }
       }
     }
@@ -393,7 +385,7 @@ object Multimodal {
     * shuffle; downstream repartitions by media_id if it needs co-location.
     * (`sampleFrames` remains the byte-slice STUB for true video formats.)
     */
-  def sampleGifFrames(df: DataFrame, everyN: Int = 1, batchSize: Int = 64): DataFrame = {
+  def sampleGifFrames(df: DataFrame, everyN: Int = 1): DataFrame = {
     require(everyN > 0, "sampleGifFrames: everyN must be positive")
     val spark = df.sparkSession
     val inSchema = df.schema
@@ -409,30 +401,28 @@ object Multimodal {
     val payloadIdx = inSchema.fieldIndex("payload")
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
       noImageIOFileCache()
-      it.grouped(batchSize).flatMap { batch =>
-        batch.flatMap { row =>
-          val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-          if (payload == null) Nil
+      it.flatMap { row =>
+        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
+        if (payload == null) Nil
+        else {
+          val iis = javax.imageio.ImageIO.createImageInputStream(
+            new java.io.ByteArrayInputStream(payload))
+          val readers = javax.imageio.ImageIO.getImageReaders(iis)
+          if (!readers.hasNext) { iis.close(); Nil }
           else {
-            val iis = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) { iis.close(); Nil }
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val n = reader.getNumImages(true) // count ALL frames (one pass)
-                (0 until n by everyN).flatMap { i =>
-                  try {
-                    val st = statsOf(reader.read(i))
-                    Seq(Row(row.getLong(idIdx), i, st.getInt(0), st.getInt(1),
-                      st.getDouble(3), st.getDouble(4), st.getDouble(5)))
-                  } catch { case _: Exception => Nil } // corrupt frame: skip, keep the rest
-                }
-              } catch { case _: Exception => Nil }
-              finally { reader.dispose(); iis.close() }
-            }
+            val reader = readers.next()
+            try {
+              reader.setInput(iis)
+              val n = reader.getNumImages(true) // count ALL frames (one pass)
+              (0 until n by everyN).flatMap { i =>
+                try {
+                  val st = statsOf(reader.read(i))
+                  Seq(Row(row.getLong(idIdx), i, st.getInt(0), st.getInt(1),
+                    st.getDouble(3), st.getDouble(4), st.getDouble(5)))
+                } catch { case _: Exception => Nil } // corrupt frame: skip, keep the rest
+              }
+            } catch { case _: Exception => Nil }
+            finally { reader.dispose(); iis.close() }
           }
         }
       }
@@ -559,22 +549,20 @@ object Multimodal {
     } catch { case _: Exception => null } finally in.close()
   }
 
-  /** REAL WAV decode → stats column through the batched mapPartitions
-    * plumbing (same shape as `decodeImageStats`). Appends a nullable
+  /** REAL WAV decode → stats column, one codec call per row (same shape
+    * as `decodeImageStats`). Appends a nullable
     * `outCol` struct (AudioStatsSchema). Row-local — no shuffle.
     */
-  def decodeAudioStats(df: DataFrame, payloadCol: String, outCol: String = "audio_stats",
-                       batchSize: Int = 256): DataFrame = {
+  def decodeAudioStats(df: DataFrame, payloadCol: String,
+                       outCol: String = "audio_stats"): DataFrame = {
     val spark = df.sparkSession
     val inSchema = df.schema
     val outSchema = inSchema.add(outCol, AudioStatsSchema)
     val payloadIdx = inSchema.fieldIndex(payloadCol)
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val stats = audioStats(row.get(payloadIdx).asInstanceOf[Array[Byte]])
-          Row.fromSeq(row.toSeq :+ stats)
-        }
+      it.map { row =>
+        val stats = audioStats(row.get(payloadIdx).asInstanceOf[Array[Byte]])
+        Row.fromSeq(row.toSeq :+ stats)
       }
     }
     spark.createDataFrame(rdd, outSchema)
@@ -608,40 +596,38 @@ object Multimodal {
     * JDK writer, update `meta.duration_ms`. Null/undecodable payloads pass
     * through unchanged. Row-local — no shuffle.
     */
-  def trimAudio(df: DataFrame, maxMs: Long, batchSize: Int = 256): DataFrame = {
+  def trimAudio(df: DataFrame, maxMs: Long): DataFrame = {
     require(maxMs > 0, "trimAudio: maxMs must be positive")
     val spark = df.sparkSession
     val inSchema = df.schema
     val payloadIdx = inSchema.fieldIndex("payload")
     val metaIdx = inSchema.fieldIndex("meta")
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { row =>
-          val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-          val in =
-            if (payload == null) null
-            else try openAudio(payload)
-                 catch { case _: Exception => null }
-          if (in == null) row
-          else try {
-            val fmt = in.getFormat
-            val rate = math.round(fmt.getSampleRate).toLong
-            val keepFrames = math.min(in.getFrameLength, maxMs * rate / 1000L)
-            val keepBytes = (keepFrames * fmt.getFrameSize).toInt
-            val bytes = in.readNBytes(keepBytes)
-            val trimmed = new javax.sound.sampled.AudioInputStream(
-              new java.io.ByteArrayInputStream(bytes), fmt, keepFrames)
-            val bos = new java.io.ByteArrayOutputStream()
-            writeWav(trimmed, bos)
-            val oldMeta = row.getStruct(metaIdx)
-            val newMeta = Row(oldMeta.getString(0), oldMeta.getInt(1), oldMeta.getInt(2),
-              keepFrames * 1000L / rate)
-            val vals = row.toSeq.toArray
-            vals(payloadIdx) = bos.toByteArray
-            vals(metaIdx) = newMeta
-            Row.fromSeq(vals.toSeq)
-          } catch { case _: Exception => row } finally in.close()
-        }
+      it.map { row =>
+        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
+        val in =
+          if (payload == null) null
+          else try openAudio(payload)
+               catch { case _: Exception => null }
+        if (in == null) row
+        else try {
+          val fmt = in.getFormat
+          val rate = math.round(fmt.getSampleRate).toLong
+          val keepFrames = math.min(in.getFrameLength, maxMs * rate / 1000L)
+          val keepBytes = (keepFrames * fmt.getFrameSize).toInt
+          val bytes = in.readNBytes(keepBytes)
+          val trimmed = new javax.sound.sampled.AudioInputStream(
+            new java.io.ByteArrayInputStream(bytes), fmt, keepFrames)
+          val bos = new java.io.ByteArrayOutputStream()
+          writeWav(trimmed, bos)
+          val oldMeta = row.getStruct(metaIdx)
+          val newMeta = Row(oldMeta.getString(0), oldMeta.getInt(1), oldMeta.getInt(2),
+            keepFrames * 1000L / rate)
+          val vals = row.toSeq.toArray
+          vals(payloadIdx) = bos.toByteArray
+          vals(metaIdx) = newMeta
+          Row.fromSeq(vals.toSeq)
+        } catch { case _: Exception => row } finally in.close()
       }
     }
     spark.createDataFrame(rdd, inSchema)
@@ -696,32 +682,28 @@ object Multimodal {
       (seed: Long, numFrames: Int) => syntheticWav(seed, numFrames))
   }
 
-  /** Batched per-partition featurizer — the mapPartitions path for codecs
-    * that need library calls (not expressible as Catalyst expressions).
-    * Processes rows in `batchSize` groups (arrow-style batch shape).
+  /** Per-partition featurizer — the mapPartitions path for codecs that
+    * need library calls (not expressible as Catalyst expressions).
     */
-  def featurizeBatched(df: DataFrame, payloadCol: String, dim: Int = 16,
-                       batchSize: Int = 256): DataFrame = {
+  def featurizeBatched(df: DataFrame, payloadCol: String, dim: Int = 16): DataFrame = {
     val spark = df.sparkSession
     val inSchema = df.schema
     val outSchema = inSchema.add("features", ArrayType(DoubleType))
     val payloadIdx = inSchema.fieldIndex(payloadCol)
     val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // STUB "codec call" per batch: deterministic hash features.
-        batch.map { row =>
-          val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-          val feats: Array[Double] =
-            if (payload == null) null
-            else {
-              var h = 1125899906842597L
-              payload.foreach(b => h = h * 31 + b)
-              // floorMod: signed % would put negative-hash features in
-              // [-3, 1), diverging from decodeToFeatures' pmod range [-1, 1)
-              Array.tabulate(dim)(i => (Math.floorMod(h + i * 2654435761L, 1000L).toDouble / 500.0) - 1.0)
-            }
-          Row.fromSeq(row.toSeq :+ (if (feats == null) null else feats.toSeq))
-        }
+      // STUB "codec call" per row: deterministic hash features.
+      it.map { row =>
+        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
+        val feats: Array[Double] =
+          if (payload == null) null
+          else {
+            var h = 1125899906842597L
+            payload.foreach(b => h = h * 31 + b)
+            // floorMod: signed % would put negative-hash features in
+            // [-3, 1), diverging from decodeToFeatures' pmod range [-1, 1)
+            Array.tabulate(dim)(i => (Math.floorMod(h + i * 2654435761L, 1000L).toDouble / 500.0) - 1.0)
+          }
+        Row.fromSeq(row.toSeq :+ (if (feats == null) null else feats.toSeq))
       }
     }
     spark.createDataFrame(rdd, outSchema)

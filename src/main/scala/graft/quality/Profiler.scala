@@ -127,42 +127,31 @@ object Profiler {
     * corpus-sized (continuous data at scale): `spearman` above broadcasts
     * the distinct-value rank table, which is the right call for discrete/
     * binned data but caps at the broadcast limit. This variant never
-    * broadcasts and never funnels rows through one task. Global average
-    * ranks use the canonical distributed-ordinal pattern: range-repartition
-    * on the value, sort within partitions, `zipWithIndex` for global
-    * ordinals (one count-per-partition pass + one offset pass, both
-    * narrow), then a groupBy(value) averaging tied ordinals — identical to
-    * rank + (ties−1)/2 — and a shuffle (sort-merge) join back on the
+    * broadcasts and never funnels rows through one task. Global ordinals
+    * come from a [[graft.core.SegmentedScan]] over the value (pass 1
+    * counts each partition's rows, the fold turns the counts into ordinal
+    * starts), then a groupBy(value) averages tied ordinals — identical to
+    * rank + (ties−1)/2 — and a shuffle (sort-merge) join goes back on the
     * value. Every stage partitions on the value key; nothing depends on
     * |distinct| or broadcasts anything.
     */
   def spearmanLarge(df: DataFrame, a: String, b: String, partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField}
-    val spark = df.sparkSession
+    import graft.core.SegmentedScan
     val p = if (partitions > 0) partitions
-            else spark.sessionState.conf.numShufflePartitions
+            else df.sparkSession.sessionState.conf.numShufflePartitions
     def ranks(c: String, out: String): DataFrame = {
       val vals = df.select(col(c).as("__v")).where(col("__v").isNotNull)
-      val sorted = vals.repartitionByRange(p, col("__v")).sortWithinPartitions("__v")
-      val schema = sorted.schema.add(StructField("__ord", LongType, nullable = false))
+      val scan = SegmentedScan(vals, Seq(col("__v")), numPartitions = p)
+      val schema = scan.schema.add(StructField("__ord", LongType, nullable = false))
       // ordinals are 1-based; a tie group's ordinals are consecutive, so
       // avg(ordinal) == rank() + (n_ties - 1)/2 exactly (midpoints are
       // representable: .0 or .5)
-      // catalyst-row ordinals (round 14, the Prototypes.ranked discipline):
-      // no external-Row decode/re-encode of the value stream
-      val ord = sorted.queryExecution.toRdd.zipWithIndex().mapPartitions { it =>
-        val cell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-        val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-          .create(schema)
-        it.map { case (r, i) =>
-          cell.update(0, i + 1L)
-          proj(joined.apply(r, cell)): org.apache.spark.sql.catalyst.InternalRow
-        }
-      }
-      org.apache.spark.sql.GraftColumnBridge.internalCreateDataFrame(spark, ord, schema)
-        .groupBy(col("__v")).agg(avg(col("__ord")).as(out))
+      scan.run(schema)(_.size.toLong)(SegmentedScan.prefix[Long, Long](0L)(_ + _)) { (start, it) =>
+        val app = new SegmentedScan.Appender(schema, 1)
+        var ordinal = start
+        it.map { r => ordinal += 1L; app(0) = ordinal; app(r) }
+      }.groupBy(col("__v")).agg(avg(col("__ord")).as(out))
     }
     df.select(col(a).as("__a"), col(b).as("__b"))
       .join(ranks(a, "__ra").withColumnRenamed("__v", "__a"), Seq("__a"))

@@ -1,5 +1,6 @@
 package graft.vec
 
+import graft.core.SegmentedScan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
@@ -40,13 +41,12 @@ import org.apache.spark.sql.types.{LongType, StructField}
   * centroid literal (the SemDedup trick — no k×dim lit() forest). The
   * per-cluster rank deliberately does NOT use a window partitioned by
   * cluster: a cluster is corpus/k rows, and a degenerate cell would funnel
-  * a corpus fraction through a single window task. Instead it uses the
-  * distributed-ordinal pattern of [[graft.quality.Profiler.spearmanLarge]]
-  * — range-repartition on (cluster, cos desc, id), sortWithinPartitions,
-  * zipWithIndex, then rank = global ordinal − cluster offset, where the
-  * offsets come from a k-row count table (driver-bounded by |centroids|,
-  * like langIdFit's vocab bound). Every stage is linear and skew-free; no
-  * stage depends on the largest cluster's size.
+  * a corpus fraction through a single window task. Instead it runs as a
+  * [[graft.core.SegmentedScan]] over (cluster, cos desc, id): rank =
+  * global ordinal − cluster offset, where ordinal starts and offsets come
+  * from per-partition cluster counts (driver-bounded by |centroids| ×
+  * partitions, like langIdFit's vocab bound). Every stage is linear and
+  * skew-free; no stage depends on the largest cluster's size.
   */
 object Prototypes {
 
@@ -127,82 +127,50 @@ object Prototypes {
         (lit(0) - col("__best.ni")).cast("int").as("cluster"),
         col("__best.c").as("cos_to_centroid"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val spark = corpus.sparkSession
-    // distributed ordinals: total order (cluster, cos desc, id) → global
-    // ordinal; per-cluster rank = ordinal − cluster offset. No per-cluster
-    // window, no single-task funnel (spearmanLarge's pattern). No explicit
-    // partition count: AQE right-sizes the range exchange from runtime
-    // bytes (a pinned numShufflePartitions was a constant tuned for
-    // neither scale).
-    val sorted = scored
-      .repartitionByRange(col("cluster"), col("cos_to_centroid").desc, col("__pid"))
-      .sortWithinPartitions(col("cluster"), col("cos_to_centroid").desc, col("__pid"))
-    // ONE counting pass fuses what used to be THREE driver-synchronized
-    // round-trips (round 15): a groupBy(cluster).collect() for the offsets,
-    // zipWithIndex's own per-partition count job, and a broadcast join of
-    // the k-row offset table onto every output row. Pass 1 counts rows per
-    // (partition, cluster) — the sort already clusters equal keys, so this
-    // is a run-length scan — and the driver derives BOTH the per-partition
-    // ordinal starts and the per-cluster (offset, size) map from the same
-    // k×parts-bounded table (|centroids| × numPartitions entries, the same
-    // driver envelope the old k-row collect + RangePartitioner metadata
-    // already paid). Pass 2 reuses pass 1's shuffle files (same lazy
-    // toRdd) and computes rank and kept IN-ROW from the broadcast maps.
-    val sortedRdd = sorted.queryExecution.toRdd
-    val clusterIdx = 1 // (__pid, cluster, cos_to_centroid)
-    val partCounts: Array[(Int, Array[(Int, Long)])] =
-      sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-        val counts = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
-        it.foreach { r =>
-          val c = r.getInt(clusterIdx)
-          counts.update(c, counts.getOrElse(c, 0L) + 1L)
-        }
-        Iterator.single((pid, counts.toArray))
-      }.collect()
-    // per-partition ordinal starts (partition order IS the total order)
-    val byPid = partCounts.sortBy(_._1)
-    var running = 0L
-    val partStart: Map[Int, Long] = byPid.map { case (pid, cs) =>
-      val s = running; running += cs.map(_._2).sum; pid -> s
-    }.toMap
-    // per-cluster totals and offsets in cluster order (the sort's order)
-    val totals = scala.collection.mutable.TreeMap.empty[Int, Long]
-    byPid.foreach(_._2.foreach { case (c, n) =>
-      totals.update(c, totals.getOrElse(c, 0L) + n)
-    })
-    var off = 0L
-    val offsets = totals.map { case (c, n) =>
-      val o = off; off += n; (c, (o, n))
-    }.toMap
-    val bcOff = spark.sparkContext.broadcast(offsets)
-    val schema = sorted.schema
+    // distributed ordinals: a SegmentedScan over the total
+    // order (cluster, cos desc, id); per-cluster rank = global ordinal −
+    // cluster offset. No per-cluster window, no single-task funnel; AQE
+    // sizes the range exchange. Pass 1 counts rows per cluster — the sort
+    // clusters equal keys, so this is a run-length scan — over EVERY
+    // partition: `kept` needs each cluster's total, which later partitions
+    // add to. The fold turns those |centroids| × partitions counts into
+    // each partition's ordinal start and (offset, size) of the clusters in
+    // it; pass 2 computes rank and kept in-row.
+    val scan = SegmentedScan(scored,
+      Seq(col("cluster"), col("cos_to_centroid").desc, col("__pid")))
+    val clusterIdx = scan.index("cluster")
+    val schema = scan.schema
       .add(StructField("proto_rank", LongType, nullable = false))
       .add(StructField("kept", org.apache.spark.sql.types.BooleanType, nullable = false))
-    // ordinals ride CATALYST rows (round 14): `.rdd` would deserialize all
-    // three fields of every row to external objects and createDataFrame
-    // would re-encode them; appending (rank, kept) through a reused
-    // JoinedRow skips both conversions (the sessionize discipline — rows
-    // follow the valid-until-next() SparkPlan contract, downstream copies
-    // when it buffers)
-    val ord = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val offs = bcOff.value
-      val cell = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-        .create(schema)
-      var ordinal = partStart(pid) // every pid was counted in pass 1
+    val out = scan.run(schema, wholeInput = true)({ it =>
+      val counts = scala.collection.mutable.LinkedHashMap.empty[Int, Long]
+      it.foreach { r =>
+        val c = r.getInt(clusterIdx)
+        counts.update(c, counts.getOrElse(c, 0L) + 1L)
+      }
+      counts.toArray
+    })({ parts =>
+      val totals = scala.collection.mutable.TreeMap.empty[Int, Long]
+      parts.flatten.foreach(_.foreach { case (c, n) => totals.update(c, totals.getOrElse(c, 0L) + n) })
+      // cluster order is the sort's order
+      val offsets = totals.keys.zip(totals.values.scanLeft(0L)(_ + _)).toMap
+      val starts = parts.scanLeft(0L)((s, p) => s + p.fold(0L)(_.map(_._2).sum))
+      parts.zip(starts).map { case (p, start) =>
+        (start, p.fold(Map.empty[Int, (Long, Long)])(_.map { case (c, _) =>
+          c -> (offsets(c), totals(c)) }.toMap))
+      }
+    }) { case ((start, clusters), it) =>
+      val app = new SegmentedScan.Appender(schema, 2)
+      var ordinal = start
       it.map { r =>
         ordinal += 1L
-        val (clOff, clN) = offs(r.getInt(clusterIdx))
+        val (clOff, clN) = clusters(r.getInt(clusterIdx))
         val rank = ordinal - clOff
-        cell.update(0, rank)
-        cell.update(1, rank > math.floor(pruneFraction * clN).toLong)
-        proj(joined.apply(r, cell)): org.apache.spark.sql.catalyst.InternalRow
+        app(0) = rank
+        app(1) = rank > math.floor(pruneFraction * clN).toLong
+        app(r)
       }
     }
-    val out = org.apache.spark.sql.GraftColumnBridge
-      .internalCreateDataFrame(spark, ord, schema)
-      .select(col("__pid"), col("cluster"), col("cos_to_centroid"), col("proto_rank"), col("kept"))
     (out, () => { scored.unpersist(false); () })
   }
 

@@ -24,13 +24,10 @@ object GraftColumnBridge {
   def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 
   /** A DataFrame over an RDD of CATALYST rows (internalCreateDataFrame is
-    * private[sql]) — the segmented-scan operators' round-14 escape from the
-    * external-Row round trip: `df.rdd` deserializes every field of every
-    * row to java objects and createDataFrame(RDD[Row]) re-encodes them; a
-    * mapPartitions over `queryExecution.toRdd` that emits InternalRows
-    * skips both conversions. Rows emitted by the RDD may follow the
-    * standard SparkPlan contract (valid until the iterator's next()):
-    * downstream operators copy when they buffer. */
+    * private[sql]). Its one caller is `graft.core.SegmentedScan.run`,
+    * whose pass 2 emits InternalRows with no external-Row round trip. Rows
+    * may follow the standard SparkPlan contract (valid until the
+    * iterator's next()): downstream operators copy when they buffer. */
   def internalCreateDataFrame(spark: SparkSession,
                               rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
                               schema: org.apache.spark.sql.types.StructType): DataFrame =

@@ -85,11 +85,15 @@ class OrchestrationSpec extends SparkSpec {
     while (c.snapshot.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
     assert(c.snapshot.nonEmpty)
     assert(c.snapshot.exists(m => !m.failed && m.durationNs > 0))
+    // the write's root node has no row metric; the count comes from below it
+    assert(c.snapshot.exists(m => !m.failed && m.outputRows == 3L), s"rows: ${c.snapshot}")
     // bridge into the observability registry: durations become windowed
     // histograms ready for aggregation/Prometheus export/alerting
     val reg = new graft.core.Metrics.Collector()
     c.exportTo(reg)
     val agg = reg.aggregated("query_duration_seconds", "1h")
     assert(agg.nonEmpty && agg("count") >= 1.0 && agg("max") > 0.0, s"bridge: $agg")
+    val rows = reg.aggregated("query_output_rows", "1h")
+    assert(rows.nonEmpty && rows("max") == 3.0, s"rows bridge: $rows")
   }
 }

@@ -122,10 +122,11 @@ class PlanLintSpec extends SparkSpec {
   test("no unpartitioned per-key sequential scans in batch sources (RDD-shape lint)") {
     // PlanLint sees Catalyst plans; a groupByKey.flatMapGroups per-key scan
     // is an RDD-side shape it cannot see — and the one construct that dies
-    // on a single 100×-scale key (VERDICT r5 #4: smoothEwm was the last
-    // one, replaced by the affine segmented scan in round 6). Streaming
-    // state ops ((flat)MapGroupsWithState) are the legitimate exception:
-    // their per-key state is watermark-bounded, not series-sized.
+    // on a single 100×-scale key. Streaming state ops
+    // ((flat)MapGroupsWithState) are the legitimate exception: their
+    // per-key state is watermark-bounded, not series-sized. Ordered
+    // per-partition passes (partition-indexed maps, catalyst-row RDDs
+    // turned back into frames) belong in core/SegmentedScan.scala alone.
     val mainDir = new java.io.File("src/main/scala/graft")
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
@@ -133,17 +134,26 @@ class PlanLintSpec extends SparkSpec {
         case f if f.getName.endsWith(".scala") => Seq(f)
         case _ => Nil
       }
+    val perKey = "\\.(flatMapGroups|mapGroups)\\s*[({]".r // call sites, not doc mentions
+    val handRolled =
+      "\\.mapPartitionsWithIndex\\b|\\.queryExecution\\.toRdd\\b|\\binternalCreateDataFrame\\(".r
+    // the scan's callers also stay off the external-Row path
+    val scanCallers = Seq("functions/TimeSeriesLib.scala", "vec/Prototypes.scala",
+      "quality/Profiler.scala")
+    val externalRows = "\\.rdd\\b|\\.zipWithIndex\\(\\)|\\bcreateDataFrame\\(".r
     val offenders = scalaFiles(mainDir).flatMap { f =>
       val text = scala.io.Source.fromFile(f, "UTF-8").mkString
-      val hits = "\\.(flatMapGroups|mapGroups)\\s*[({]".r // call sites, not doc mentions
-        .findAllMatchIn(text)
-        .filterNot(_ => f.getPath.contains("/streaming/"))
-        .size
-      if (hits > 0) Some(s"${f.getPath}: $hits per-key sequential scan call(s)") else None
+      val path = f.getPath
+      val keyed = if (path.contains("/streaming/")) 0 else perKey.findAllMatchIn(text).size
+      val passes = (if (path.endsWith("core/SegmentedScan.scala")) 0
+                    else handRolled.findAllMatchIn(text).size) +
+        (if (scanCallers.exists(path.endsWith)) externalRows.findAllMatchIn(text).size else 0)
+      (if (keyed > 0) Seq(s"$path: $keyed per-key sequential scan call(s)") else Nil) ++
+        (if (passes > 0) Seq(s"$path: $passes hand-rolled per-partition pass call(s)") else Nil)
     }
     assert(offenders.isEmpty,
-      "per-key full-series scans found outside streaming state ops — use a " +
-        s"segmented scan (see TimeSeriesLib.smoothEwm):\n${offenders.mkString("\n")}")
+      "per-key full-series scans or hand-rolled ordered passes found — use " +
+        s"graft.core.SegmentedScan:\n${offenders.mkString("\n")}")
   }
 
   test("PlanLint flags the shapes it exists to flag (positive control)") {

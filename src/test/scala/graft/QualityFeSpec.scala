@@ -653,7 +653,7 @@ class QualityFeSpec extends SparkSpec {
 
   test("batched featurizer preserves rows and appends features") {
     val media = Seq((1L, "abc".getBytes), (2L, "def".getBytes)).toDF("id", "payload")
-    val out = Multimodal.featurizeBatched(media, "payload", dim = 3, batchSize = 1)
+    val out = Multimodal.featurizeBatched(media, "payload", dim = 3)
     assert(out.count() == 2)
     assert(out.columns.contains("features"))
   }

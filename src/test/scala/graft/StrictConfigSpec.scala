@@ -32,6 +32,9 @@ class StrictConfigSpec extends AnyFunSuite {
     ("stray flat key next to params", batch(
       """{ type: filter, params: { condition: "age > 1" }, min_chars: 3 }"""), false,
       "operations[0]", "min_chars"),
+    ("removed no-op knob", batch(
+      "{ type: multimodal, params: { operation: decode_image_stats, batch_size: 64 } }"), false,
+      "operations[0]", "batch_size"),
     ("top-level typo", s"name: strict\n${src}attritoin: { weight_column: n }\n", false,
       "top level", "attritoin"),
     ("stream transform typo", streamHead +

@@ -93,6 +93,47 @@ class TimeSeriesSpec extends SparkSpec {
       }
       // and the shape claim itself: the scan really did run over >1 partition
       assert(df.select(col("t")).repartitionByRange(col("t")).rdd.getNumPartitions > 1)
+
+      // sequential reference with ties: each (key, t) group folds its
+      // values in ascending order (the scan's tie-break) and all its rows
+      // carry the state after the whole group
+      def tiedRef(rows: Seq[(String, Long, Double)]): Map[(String, Long), Double] =
+        rows.groupBy(_._1).toSeq.flatMap { case (k, series) =>
+          var n = 0.0; var d = 0.0
+          series.groupBy(_._2).toSeq.sortBy(_._1).map { case (t, g) =>
+            g.map(_._3).sorted.foreach { x => n = n * om + x; d = d * om + 1.0 }
+            (k, t) -> n / d
+          }
+        }.toMap
+      def checkTied(rows: Seq[(Long, String, Long, Double)]): Unit = {
+        val out = TimeSeriesLib.smoothEwm(rows.toDF("id", "k", "t", "x"), "x", alpha,
+          orderCol = "t", partitionBy = Seq("k"))
+          .select("id", "k", "t", "x", "x_ewm").as[(Long, String, Long, Double, Double)].collect()
+        // every row comes out once and unchanged: a tie buffer aliasing the
+        // sort's reused row would repeat one row per group
+        assert(out.map(r => (r._1, r._2, r._3, r._4)).sorted.toSeq == rows.sorted)
+        val ref = tiedRef(rows.map(r => (r._2, r._3, r._4)))
+        out.foreach { case (id, k, t, _, e) =>
+          val y = ref((k, t))
+          assert(math.abs(e - y) <= 1e-9 * math.max(1.0, y), s"id $id: $e vs $y")
+        }
+      }
+      // tie groups of width 3 whose rows differ in value and id
+      checkTied((0 until 3000).map(i => (i.toLong, "one", (i / 3).toLong, ((i * 7919L) % 101).toDouble)))
+      // few (key, ord) values over many shuffle partitions: every partition
+      // holds one wide tie group, so each carry crosses a boundary, and the
+      // range exchange leaves its last partition empty
+      spark.conf.set("spark.sql.shuffle.partitions", "64")
+      val few = (0 until 600).map(i => (i.toLong, s"k${i % 2}", (i % 7).toLong, ((i * 31L) % 17).toDouble))
+      val layout = few.toDF("id", "k", "t", "x").repartitionByRange(col("k"), col("t"))
+        .rdd.mapPartitions(it => Iterator(it.size)).collect()
+      assert(layout.count(_ > 0) == 14 && layout.last == 0, layout.mkString(","))
+      checkTied(few)
+      // a range exchange over deterministic input never leaves an interior
+      // partition empty (its bounds are sampled keys), so the fold's
+      // pass-through of empty partitions is pinned directly
+      assert(graft.core.SegmentedScan.prefix[Int, Int](0)(_ + _)(
+        Vector(Some(1), None, None, Some(2), None)) == Vector(0, 1, 1, 1, 3))
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
