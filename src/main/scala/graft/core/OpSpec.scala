@@ -922,9 +922,11 @@ object OpCompiler {
       exprs.indices.map(i => if (row.isNullAt(i)) 1.0 else row.getDouble(i))
     }
 
-  /** multimodal op (graft.multimodal.Multimodal): wrap binary payloads,
-    * REAL ImageIO decode/resize, REAL WAV decode/trim (AudioSystem), frame
-    * sampling, and the video/compressed-audio stub featurizer. */
+  /** multimodal op (graft.multimodal.Multimodal): wrap binary payloads;
+    * REAL ImageIO decode/resize/dHash, WAV decode/trim (AudioSystem) and GIF
+    * frame sampling, each one codec column function per row; the
+    * `sample_frames` and `decode_features_stub` stubs for video and
+    * compressed audio. */
   def multimodal(a: Params): Bound = {
     import graft.multimodal.Multimodal
     a.select[Arm]("operation")(

@@ -67,6 +67,13 @@ final class Params private (section: String, path: String, raw: Map[String, Any]
   def reqLong(k: String): Long = read(k, "int", None, true)(asLong).getOrElse(0L)
   def reqDouble(k: String): Double = read(k, "number", None, true)(asDouble).getOrElse(0.0)
 
+  /** Every key not read so far, as strings, now accepted: the pass-through
+    * tail of a mapping handed on unchecked (jdbc options go to Spark).
+    * Recorded as the one key `<other>`. */
+  def rest(): Map[String, String] =
+    if (rec != null) { rec.keys += Key(path + "<other>", "", None, Nil); Map.empty }
+    else raw.filterNot(kv => seen(kv._1)).map { case (k, v) => seen += k; k -> String.valueOf(v) }
+
   /** A list of scalars (a lone scalar is a one-element list); Nil when absent. */
   def list(k: String): Seq[String] = read(k, "[]", None, false)(asList(asStr)).getOrElse(Nil)
   def ints(k: String, d: Seq[Int] = Nil): Seq[Int] =

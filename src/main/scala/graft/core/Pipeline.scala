@@ -1,7 +1,6 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.{Readers, Sinks}
 
 /** Config-compiled pipeline runtime — the §3.1 lifecycle
   * (core/pipeline.py:187-285): load → process → validate → store, as ONE
@@ -38,25 +37,7 @@ object Pipeline {
     val dupes = conf.sources.groupBy(_.table).collect { case (t, ss) if ss.size > 1 => t }
     require(dupes.isEmpty,
       s"duplicate source table name(s): ${dupes.mkString(", ")} — give each source a distinct `table:`")
-    val frames: Map[String, DataFrame] = conf.sources.map { s =>
-      val df = s.typ match {
-        case "csv" =>
-          Readers.csv(spark, s.path,
-            header = s.options.getOrElse("header", "true").toBoolean,
-            delimiter = s.options.getOrElse("delimiter", ","),
-            encoding = s.options.getOrElse("encoding", "UTF-8"))
-        case "json"    => Readers.json(spark, s.path,
-          linesFormat = s.options.getOrElse("lines_format", "true").toBoolean,
-          flattenTopLevel = s.options.getOrElse("flatten", "false").toBoolean)
-        case "parquet" => Readers.parquet(spark, s.path)
-        case "orc"     => Readers.orc(spark, s.path)
-        case "text"    => Readers.text(spark, s.path)
-        case "s3"      => Readers.objectStore(spark, s.path, s.options.getOrElse("format", "parquet"))
-        case "jdbc"    => Readers.jdbc(spark, s.options("url"), s.path, s.options)
-        case other     => throw new IllegalArgumentException(s"Unknown source type: $other")
-      }
-      s.table -> df
-    }.toMap
+    val frames: Map[String, DataFrame] = conf.sources.map(s => s.table -> s.read(spark)).toMap
     (frames(conf.sources.head.table), name =>
       frames.getOrElse(name, throw new IllegalArgumentException(s"Unknown table: $name")))
   }
@@ -153,39 +134,30 @@ object Pipeline {
           val counted = processed.persist()
           caches += counted
           val n = counted.count()
-          st.typ match {
-            case "parquet" =>
-              if (st.partitionBy.nonEmpty) Sinks.parquetPartitioned(counted, st.path, st.partitionBy, st.mode)
-              else counted.write.mode(st.mode).parquet(st.path)
-            case "csv"  => counted.write.mode(st.mode).option("header", "true").csv(st.path)
-            case "orc"  => counted.write.mode(st.mode).orc(st.path)
-            case "jdbc" => Sinks.jdbcWrite(counted, st.options("url"), st.path, st.mode)
-            case "noop" => counted.write.format("noop").mode("overwrite").save()
-            case other  => throw new IllegalArgumentException(s"Unknown storage type: $other")
-          }
+          st.write(counted)
           // storage.options.catalog_dir: register the written dataset into
           // the DataCatalog (utils/data_catalog.py parity — the reference
           // catalogs its DB tables; graft catalogs the written dataset).
           // The analysis runs over the still-persisted frame — one cheap
           // aggregate; catalog_table/catalog_tags override the defaults.
-          st.options.get("catalog_dir").foreach { catDir =>
+          val table = st.catalogTable.getOrElse(conf.name)
+          st.catalogDir.foreach { catDir =>
             val cat = new DataCatalog(catDir)
             cat.registerTable(counted,
-              table = st.options.getOrElse("catalog_table", conf.name),
+              table = table,
               description = Some(s"output of pipeline '${conf.name}'"),
-              tags = st.options.get("catalog_tags").map(_.split(",").toSeq).getOrElse(Nil),
+              tags = st.catalogTags,
               path = if (st.typ == "jdbc" || st.typ == "noop") None else Some(st.path))
             plog.foreach(_.logger.logDataLineage(
-              conf.sources.map(_.table).mkString(","),
-              st.options.getOrElse("catalog_table", conf.name), "pipeline", conf.name))
+              conf.sources.map(_.table).mkString(","), table, "pipeline", conf.name))
           }
           // storage.options.lineage_dir: persist the cross-run lineage
           // edges (lineage_tracker.py parity — every source table → the
           // written table, attributed to this pipeline)
-          st.options.get("lineage_dir").foreach { ld =>
+          st.lineageDir.foreach { ld =>
             new LineageTracker(ld).trackTransformation(
               conf.sources.map(_.table),
-              st.options.getOrElse("catalog_table", conf.name),
+              table,
               "pipeline", conf.name,
               Map("storage_type" -> st.typ, "path" -> st.path))
           }

@@ -3,6 +3,9 @@ package graft.core
 import scala.jdk.CollectionConverters._
 import java.{util => ju}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{Readers, Sinks}
+
 /** YAML pipeline config → typed model, mirroring the reference's config
   * surface (core/config.py:83-139, the shipped pipeline YAMLs): name, source,
   * operations[], validation, storage — with `${VAR:default}` environment
@@ -17,9 +20,15 @@ import java.{util => ju}
   */
 object PipelineConfig {
 
-  final case class SourceConf(typ: String, path: String, options: Map[String, String], table: String)
-  final case class StorageConf(typ: String, path: String, mode: String,
-                               partitionBy: Seq[String], options: Map[String, String])
+  /** A source bound at parse: `read` is its reader with the options it
+    * takes already typed. */
+  final case class SourceConf(typ: String, path: String, table: String, read: SparkSession => DataFrame)
+  /** A sink bound at parse: `write` is its writer; the catalog and lineage
+    * hooks run after it. */
+  final case class StorageConf(typ: String, path: String, mode: String, partitionBy: Seq[String],
+                               write: DataFrame => Unit, catalogDir: Option[String],
+                               catalogTable: Option[String], catalogTags: Seq[String],
+                               lineageDir: Option[String])
   final case class ExpectationConf(name: String, expression: String, minRatio: Double)
   /** `attrition:` block (round 11): per-stage rows/weight in-out
     * accounting via observe() — `weight_column` is summed wherever it
@@ -59,18 +68,56 @@ object PipelineConfig {
       root.section("attrition")(attrition))
   }
 
-  /** Reader and writer `options:` stay free-form: they pass through to
-    * Spark (jdbc, csv) or name catalog/lineage hooks. */
-  private def options(a: Params): Map[String, String] =
-    a.mapping("options").map { case (k, v) => k -> String.valueOf(v) }.toMap
+  /** A source: `path` is required (the table name for jdbc) and
+    * `options:` holds only the keys its reader takes, typed; on jdbc, `url`
+    * is required and every other option passes through to Spark. */
+  private[graft] def source(a: Params): SourceConf = {
+    val (path, table, o) = (a.req("path"), a.str("table", "main"), a.sub("options"))
+    def reader(typ: String)(read: Params => SparkSession => DataFrame): (String, Params => SourceConf) =
+      typ -> (o => SourceConf(typ, path, table, read(o)))
+    a.select[Params => SourceConf]("type", "parquet")(
+      reader("csv") { o =>
+        val (header, delimiter, encoding) =
+          (o.bool("header", true), o.str("delimiter", ","), o.str("encoding", "UTF-8"))
+        Readers.csv(_, path, header, delimiter, encoding) },
+      reader("json") { o =>
+        val (lines, flatten) = (o.bool("lines_format", true), o.bool("flatten", false))
+        Readers.json(_, path, linesFormat = lines, flattenTopLevel = flatten) },
+      reader("parquet")(_ => Readers.parquet(_, path)),
+      reader("orc")(_ => Readers.orc(_, path)),
+      reader("text")(_ => Readers.text(_, path)),
+      reader("s3") { o =>
+        val format = o.oneOf("format", "parquet", "parquet", "csv", "json", "jsonl", "ndjson")
+        Readers.objectStore(_, path, format) },
+      reader("jdbc") { o =>
+        val (url, props) = (o.req("url"), o.rest())
+        Readers.jdbc(_, url, path, props) })(o)
+  }
 
-  private[graft] def source(a: Params): SourceConf =
-    SourceConf(a.oneOf("type", "parquet", "csv", "json", "parquet", "orc", "text", "s3", "jdbc"),
-      a.opt("path").orNull, options(a), a.str("table", "main"))
-
-  private[graft] def storage(a: Params): StorageConf =
-    StorageConf(a.oneOf("type", "parquet", "parquet", "csv", "orc", "jdbc", "noop"),
-      a.opt("path").orNull, a.str("mode", "overwrite"), a.list("partition_by"), options(a))
+  /** The sink: `path` is required except for `noop`; `options:` holds the
+    * catalog and lineage hooks and, on jdbc, the required `url` with every
+    * other option passed through to Spark. */
+  private[graft] def storage(a: Params): StorageConf = {
+    val (mode, o) = (a.str("mode", "overwrite"), a.sub("options"))
+    val (catalogDir, catalogTable) = (o.opt("catalog_dir"), o.opt("catalog_table"))
+    val (catalogTags, lineageDir) = (o.list("catalog_tags").flatMap(_.split(",")), o.opt("lineage_dir"))
+    def conf(typ: String, path: String, partitionBy: Seq[String] = Nil)(write: DataFrame => Unit) =
+      StorageConf(typ, path, mode, partitionBy, write, catalogDir, catalogTable, catalogTags, lineageDir)
+    a.select[Params => StorageConf]("type", "parquet")(
+      "parquet" -> { a =>
+        val (path, by) = (a.req("path"), a.list("partition_by"))
+        conf("parquet", path, by) { df =>
+          if (by.nonEmpty) Sinks.parquetPartitioned(df, path, by, mode) else df.write.mode(mode).parquet(path)
+        } },
+      "csv" -> { a => val path = a.req("path")
+        conf("csv", path)(_.write.mode(mode).option("header", "true").csv(path)) },
+      "orc" -> { a => val path = a.req("path"); conf("orc", path)(_.write.mode(mode).orc(path)) },
+      "jdbc" -> { a =>
+        val (path, url, props) = (a.req("path"), o.req("url"), o.rest())
+        conf("jdbc", path)(Sinks.jdbcWrite(_, url, path, mode, props = props)) },
+      "noop" -> { a =>
+        conf("noop", a.opt("path").orNull)(_.write.format("noop").mode("overwrite").save()) })(a)
+  }
 
   private[graft] def expectation(a: Params): ExpectationConf = {
     val e = a.req("expression")

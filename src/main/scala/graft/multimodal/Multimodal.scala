@@ -1,13 +1,19 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.api.java.{UDF1, UDF2}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal (image/audio/video) column handling for training-data
   * pipelines. Media payloads are opaque `binary` columns with a typed
-  * metadata struct; decode/featurize steps run distributed as a per-row
-  * `mapPartitions` (the Scala analogue of `mapInPandas`).
+  * metadata struct. Every real codec op is one column function in the
+  * query's own Catalyst plan (the analogue of the reference's per-row
+  * `mapInPandas`): a named UDF runs the JDK codec once per row and returns
+  * a typed column, so EXPLAIN shows the decode, column pruning and filter
+  * pushdown see through it, and the columns the codec does not read never
+  * leave Spark's row format.
   *
   * IMAGE decode/resize/encode are REAL: `javax.imageio.ImageIO` ships
   * PNG/JPEG/GIF/BMP codecs in the JDK, no external dependency
@@ -40,6 +46,53 @@ object Multimodal {
   private def widenForDecode(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+  }
+
+  /** A JDK codec as a named column function. Spark hands it the external
+    * form of each input (binary → `Array[Byte]`, struct → `Row`, long →
+    * boxed) and converts its result back to `out`, so the output column has
+    * exactly the declared type. The name is the YAML op's, so EXPLAIN shows
+    * which codec a plan runs.
+    */
+  private def codec[A](name: String, out: DataType)(f: A => Any): UserDefinedFunction =
+    udf(new UDF1[A, Any] { def call(a: A): Any = f(a) }, out).withName(name)
+
+  private def codec2[A, B](name: String, out: DataType)(f: (A, B) => Any): UserDefinedFunction =
+    udf(new UDF2[A, B, Any] { def call(a: A, b: B): Any = f(a, b) }, out).withName(name)
+
+  /** `call` as the new column `out`, evaluated once per row by a one-row
+    * generator (`explode` of a one-element array) rather than a projection:
+    * Catalyst pushes a filter on a projected column below the projection
+    * with a copy of the call in it, a second decode per row. A generator's
+    * output is an attribute, so a filter on it stays above the call, and
+    * filters on the input columns still push below the decode.
+    */
+  private def withCodec(df: DataFrame, out: String, call: Column): DataFrame =
+    widenForDecode(df).withColumn(out, explode(array(call)))
+
+  /** Replace `payload` and `meta` with one codec's `(payload, meta)` row,
+    * decoded once into a hidden struct column that both outputs read. A
+    * null result (null or undecodable payload) keeps the row's original
+    * payload and meta; column names, order and types stay the input's.
+    */
+  private def replaceMedia(df: DataFrame, name: String)(f: (Array[Byte], Row) => Row): DataFrame = {
+    val media = StructType(Seq(df.schema("payload"), df.schema("meta")))
+    val step = codec2[Array[Byte], Row](name, media) { (payload, meta) =>
+      Option(f(payload, meta)).getOrElse(Row(payload, meta))
+    }.asNonNullable()
+    withCodec(df, "__media", step(col("payload"), col("meta")))
+      .withColumns(Map("payload" -> col("__media.payload"), "meta" -> col("__media.meta")))
+      .drop("__media")
+  }
+
+  /** Decode one image payload with the JDK codec; null for null or
+    * undecodable payloads (ImageIO returns null for unknown formats).
+    */
+  private def readImage(payload: Array[Byte]): java.awt.image.BufferedImage = {
+    if (payload == null) return null
+    noImageIOFileCache()
+    try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    catch { case _: Exception => null }
   }
 
   /** Canonical media schema: payload + typed metadata. */
@@ -96,13 +149,8 @@ object Multimodal {
     * per-pixel Rec.601 luma into 8 × 32-value buckets.
     */
   private[graft] def imageStats(payload: Array[Byte]): Row = {
-    if (payload == null) return null
-    noImageIOFileCache()
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case _: Exception => null }
-    if (img == null) return null // ImageIO returns null for unknown formats
-    statsOf(img)
+    val img = readImage(payload)
+    if (img == null) null else statsOf(img)
   }
 
   /** Pixel-stat loop over a decoded image (shared by the single-image and
@@ -131,26 +179,14 @@ object Multimodal {
     Row(w, h, channels, mr, mg, mb, 0.299 * mr + 0.587 * mg + 0.114 * mb, hist.toSeq)
   }
 
-  /** REAL image decode → stats column, one codec call per row in a
-    * mapPartitions (the shape a heavier codec would use). Appends a
+  /** REAL image decode → stats column: one codec call per row. Appends a
     * nullable `outCol` struct (ImageStatsSchema); null/undecodable payloads
     * yield a null struct. Row-local — no shuffle; at 100 TB the decode cost
     * scales with executors like any map.
     */
   def decodeImageStats(df: DataFrame, payloadCol: String,
-                       outCol: String = "image_stats"): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = inSchema.add(outCol, ImageStatsSchema)
-    val payloadIdx = inSchema.fieldIndex(payloadCol)
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.map { row =>
-        val stats = imageStats(row.get(payloadIdx).asInstanceOf[Array[Byte]])
-        Row.fromSeq(row.toSeq :+ stats)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+                       outCol: String = "image_stats"): DataFrame =
+    withCodec(df, outCol, codec("decode_image_stats", ImageStatsSchema)(imageStats)(col(payloadCol)))
 
   /** Deterministic test-image generator (engine-side; also the gate query's
     * input): renders the pinned gradient pattern
@@ -221,11 +257,7 @@ object Multimodal {
     * oracle. Images smaller than 9×8, null, or undecodable payloads → null.
     */
   private[graft] def dhash64(payload: Array[Byte]): Any = {
-    if (payload == null) return null
-    noImageIOFileCache()
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case _: Exception => null }
+    val img = readImage(payload)
     if (img == null) return null
     val w = img.getWidth; val h = img.getHeight
     if (w < 9 || h < 8) return null
@@ -260,18 +292,8 @@ object Multimodal {
   }
 
   /** dHash column over a media frame (per-row decode, null passthrough). */
-  def imageDHash(df: DataFrame, payloadCol: String, outCol: String = "dhash"): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = inSchema.add(outCol, LongType)
-    val payloadIdx = inSchema.fieldIndex(payloadCol)
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.map { row =>
-        Row.fromSeq(row.toSeq :+ dhash64(row.get(payloadIdx).asInstanceOf[Array[Byte]]))
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+  def imageDHash(df: DataFrame, payloadCol: String, outCol: String = "dhash"): DataFrame =
+    withCodec(df, outCol, codec("image_dhash", LongType)(dhash64)(col(payloadCol)))
 
   /** Image near-dup pairs within Hamming radius ≤ 3 over a dHash column —
     * the multimodal sibling of text SimHash dedup, and the same 4×16-bit
@@ -303,45 +325,28 @@ object Multimodal {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** REAL image resize via JDK Graphics2D (bilinear) + PNG re-encode, in the
-    * per-row mapPartitions; metadata records the new dims. Null/undecodable
+  /** REAL image resize via JDK Graphics2D (bilinear) + PNG re-encode, one
+    * codec call per row; metadata records the new dims. Null/undecodable
     * payloads pass through unchanged with their original meta.
     */
   def resizeImages(df: DataFrame, targetW: Int, targetH: Int): DataFrame = {
     require(targetW > 0 && targetH > 0, s"resizeImages: target dims must be positive")
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val payloadIdx = inSchema.fieldIndex("payload")
-    val metaIdx = inSchema.fieldIndex("meta")
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      noImageIOFileCache()
-      it.map { row =>
-        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-        val decoded =
-          if (payload == null) null
-          else try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-               catch { case _: Exception => null }
-        if (decoded == null) row
-        else {
-          val out = new java.awt.image.BufferedImage(targetW, targetH,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g2 = out.createGraphics()
-          g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g2.drawImage(decoded, 0, 0, targetW, targetH, null)
-          g2.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          val oldMeta = row.getStruct(metaIdx)
-          val newMeta = Row("image/png", targetW, targetH, oldMeta.getLong(3))
-          val vals = row.toSeq.toArray
-          vals(payloadIdx) = bos.toByteArray
-          vals(metaIdx) = newMeta
-          Row.fromSeq(vals.toSeq)
-        }
+    replaceMedia(df, "resize_images") { (payload, meta) =>
+      val decoded = readImage(payload)
+      if (decoded == null) null
+      else {
+        val out = new java.awt.image.BufferedImage(targetW, targetH,
+          java.awt.image.BufferedImage.TYPE_INT_RGB)
+        val g2 = out.createGraphics()
+        g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+        g2.drawImage(decoded, 0, 0, targetW, targetH, null)
+        g2.dispose()
+        val bos = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(out, "png", bos)
+        Row(bos.toByteArray, Row("image/png", targetW, targetH, meta.getLong(3)))
       }
     }
-    spark.createDataFrame(rdd, inSchema)
   }
 
   /** Deterministic multi-frame test clip: an animated GIF whose frame f is
@@ -377,57 +382,55 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** One sampled GIF frame: its media id, stored index, dims and means. */
+  private val GifFrameSchema: StructType = StructType(Seq(
+    StructField("media_id", LongType),
+    StructField("frame_idx", IntegerType),
+    StructField("width", IntegerType),
+    StructField("height", IntegerType),
+    StructField("mean_r", DoubleType),
+    StructField("mean_g", DoubleType),
+    StructField("mean_b", DoubleType)))
+
+  /** Every `everyN`-th stored frame of one multi-frame payload, as
+    * GifFrameSchema rows; none for null/undecodable payloads, and a corrupt
+    * frame is skipped while the rest are kept.
+    */
+  private def gifFrames(id: java.lang.Long, payload: Array[Byte], everyN: Int): Seq[Row] = {
+    if (payload == null) return Nil
+    noImageIOFileCache()
+    val iis = javax.imageio.ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(payload))
+    val readers = javax.imageio.ImageIO.getImageReaders(iis)
+    if (!readers.hasNext) { iis.close(); return Nil }
+    val reader = readers.next()
+    try {
+      reader.setInput(iis)
+      val n = reader.getNumImages(true) // count ALL frames (one pass)
+      (0 until n by everyN).flatMap { i =>
+        try {
+          val st = statsOf(reader.read(i))
+          Seq(Row(id, i, st.getInt(0), st.getInt(1), st.getDouble(3), st.getDouble(4), st.getDouble(5)))
+        } catch { case _: Exception => Nil }
+      }
+    } catch { case _: Exception => Nil }
+    finally { reader.dispose(); iis.close() }
+  }
+
   /** REAL frame sampling for multi-frame media (animated GIF — the one
     * moving-picture format the JDK decodes): every `everyN`-th stored frame
     * is decoded and reduced to pixel stats. Output is one row per sampled
-    * frame: (media_id, frame_idx, width, height, mean_r, mean_g, mean_b).
-    * Null/undecodable payloads contribute no rows. Row-local fan-out — no
-    * shuffle; downstream repartitions by media_id if it needs co-location.
-    * (`sampleFrames` remains the byte-slice STUB for true video formats.)
+    * frame: (media_id, frame_idx, width, height, mean_r, mean_g, mean_b),
+    * the `inline` of one codec call's frame array per row. Null/undecodable
+    * payloads contribute no rows. Row-local fan-out — no shuffle; downstream
+    * repartitions by media_id if it needs co-location. (`sampleFrames`
+    * remains the byte-slice STUB for true video formats.)
     */
   def sampleGifFrames(df: DataFrame, everyN: Int = 1): DataFrame = {
     require(everyN > 0, "sampleGifFrames: everyN must be positive")
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("frame_idx", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("mean_r", DoubleType),
-      StructField("mean_g", DoubleType),
-      StructField("mean_b", DoubleType)))
-    val idIdx = inSchema.fieldIndex("media_id")
-    val payloadIdx = inSchema.fieldIndex("payload")
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      noImageIOFileCache()
-      it.flatMap { row =>
-        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-        if (payload == null) Nil
-        else {
-          val iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(payload))
-          val readers = javax.imageio.ImageIO.getImageReaders(iis)
-          if (!readers.hasNext) { iis.close(); Nil }
-          else {
-            val reader = readers.next()
-            try {
-              reader.setInput(iis)
-              val n = reader.getNumImages(true) // count ALL frames (one pass)
-              (0 until n by everyN).flatMap { i =>
-                try {
-                  val st = statsOf(reader.read(i))
-                  Seq(Row(row.getLong(idIdx), i, st.getInt(0), st.getInt(1),
-                    st.getDouble(3), st.getDouble(4), st.getDouble(5)))
-                } catch { case _: Exception => Nil } // corrupt frame: skip, keep the rest
-              }
-            } catch { case _: Exception => Nil }
-            finally { reader.dispose(); iis.close() }
-          }
-        }
-      }
+    val frames = codec2[java.lang.Long, Array[Byte]]("sample_gif_frames", ArrayType(GifFrameSchema)) {
+      (id, payload) => gifFrames(id, payload, everyN)
     }
-    spark.createDataFrame(rdd, outSchema)
+    widenForDecode(df).select(inline(frames(col("media_id"), col("payload"))))
   }
 
   /** Decoded-audio stats schema. The sums are exact integers (16-bit PCM:
@@ -550,23 +553,12 @@ object Multimodal {
   }
 
   /** REAL WAV decode → stats column, one codec call per row (same shape
-    * as `decodeImageStats`). Appends a nullable
-    * `outCol` struct (AudioStatsSchema). Row-local — no shuffle.
+    * as `decodeImageStats`). Appends a nullable `outCol` struct
+    * (AudioStatsSchema). Row-local — no shuffle.
     */
   def decodeAudioStats(df: DataFrame, payloadCol: String,
-                       outCol: String = "audio_stats"): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = inSchema.add(outCol, AudioStatsSchema)
-    val payloadIdx = inSchema.fieldIndex(payloadCol)
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.map { row =>
-        val stats = audioStats(row.get(payloadIdx).asInstanceOf[Array[Byte]])
-        Row.fromSeq(row.toSeq :+ stats)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
+                       outCol: String = "audio_stats"): DataFrame =
+    withCodec(df, outCol, codec("decode_audio_stats", AudioStatsSchema)(audioStats)(col(payloadCol)))
 
   /** Deterministic test-clip generator (engine-side; also the gate query's
     * input): mono 16-bit PCM with the pinned sample formula
@@ -593,44 +585,30 @@ object Multimodal {
 
   /** REAL audio trim: decode WAV, keep the first `maxMs` milliseconds
     * (frame-aligned: floor(maxMs·rate/1000) frames), re-encode WAV via the
-    * JDK writer, update `meta.duration_ms`. Null/undecodable payloads pass
-    * through unchanged. Row-local — no shuffle.
+    * JDK writer, update `meta.duration_ms`; one codec call per row.
+    * Null/undecodable payloads pass through unchanged. Row-local — no shuffle.
     */
   def trimAudio(df: DataFrame, maxMs: Long): DataFrame = {
     require(maxMs > 0, "trimAudio: maxMs must be positive")
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val payloadIdx = inSchema.fieldIndex("payload")
-    val metaIdx = inSchema.fieldIndex("meta")
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      it.map { row =>
-        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-        val in =
-          if (payload == null) null
-          else try openAudio(payload)
-               catch { case _: Exception => null }
-        if (in == null) row
-        else try {
-          val fmt = in.getFormat
-          val rate = math.round(fmt.getSampleRate).toLong
-          val keepFrames = math.min(in.getFrameLength, maxMs * rate / 1000L)
-          val keepBytes = (keepFrames * fmt.getFrameSize).toInt
-          val bytes = in.readNBytes(keepBytes)
-          val trimmed = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(bytes), fmt, keepFrames)
-          val bos = new java.io.ByteArrayOutputStream()
-          writeWav(trimmed, bos)
-          val oldMeta = row.getStruct(metaIdx)
-          val newMeta = Row(oldMeta.getString(0), oldMeta.getInt(1), oldMeta.getInt(2),
-            keepFrames * 1000L / rate)
-          val vals = row.toSeq.toArray
-          vals(payloadIdx) = bos.toByteArray
-          vals(metaIdx) = newMeta
-          Row.fromSeq(vals.toSeq)
-        } catch { case _: Exception => row } finally in.close()
-      }
+    replaceMedia(df, "trim_audio") { (payload, meta) =>
+      val in =
+        if (payload == null) null
+        else try openAudio(payload) catch { case _: Exception => null }
+      if (in == null) null
+      else try {
+        val fmt = in.getFormat
+        val rate = math.round(fmt.getSampleRate).toLong
+        val keepFrames = math.min(in.getFrameLength, maxMs * rate / 1000L)
+        val keepBytes = (keepFrames * fmt.getFrameSize).toInt
+        val bytes = in.readNBytes(keepBytes)
+        val trimmed = new javax.sound.sampled.AudioInputStream(
+          new java.io.ByteArrayInputStream(bytes), fmt, keepFrames)
+        val bos = new java.io.ByteArrayOutputStream()
+        writeWav(trimmed, bos)
+        Row(bos.toByteArray, Row(meta.getString(0), meta.getInt(1), meta.getInt(2),
+          keepFrames * 1000L / rate))
+      } catch { case _: Exception => null } finally in.close()
     }
-    spark.createDataFrame(rdd, inSchema)
   }
 
   /** STUB decoder for NON-DECODABLE media (video / compressed audio — no
@@ -645,17 +623,6 @@ object Multimodal {
       when(col(payloadCol).isNull, lit(null))
         .otherwise(transform(sequence(lit(0), lit(dim - 1)),
           i => (pmod(xxhash64(col(payloadCol), i), lit(1000L)).cast("double") / 500.0) - 1.0)))
-
-  /** STUB resize for NON-IMAGE media: records the target dims in metadata
-    * and truncates the payload proportionally — shape-correct placeholder
-    * for a real resampler (images: use `resizeImages`).
-    */
-  def resize(df: DataFrame, targetW: Int, targetH: Int): DataFrame =
-    df.withColumn("meta",
-        struct(col("meta.format").as("format"), lit(targetW).as("width"),
-          lit(targetH).as("height"), col("meta.duration_ms").as("duration_ms")))
-      .withColumn("payload",
-        expr(s"substring(payload, 1, greatest(1, int(length(payload) * 0.5)))"))
 
   /** Frame sampling for video payloads: every `everyMs` milliseconds of the
     * declared duration, emit (media_id, frame_idx, frame_payload). The frame
@@ -680,32 +647,5 @@ object Multimodal {
       (seed: Long, w: Int, h: Int) => syntheticPng(seed, w, h))
     spark.udf.register("graft_synthetic_wav",
       (seed: Long, numFrames: Int) => syntheticWav(seed, numFrames))
-  }
-
-  /** Per-partition featurizer — the mapPartitions path for codecs that
-    * need library calls (not expressible as Catalyst expressions).
-    */
-  def featurizeBatched(df: DataFrame, payloadCol: String, dim: Int = 16): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = inSchema.add("features", ArrayType(DoubleType))
-    val payloadIdx = inSchema.fieldIndex(payloadCol)
-    val rdd = widenForDecode(df).rdd.mapPartitions { it =>
-      // STUB "codec call" per row: deterministic hash features.
-      it.map { row =>
-        val payload = row.get(payloadIdx).asInstanceOf[Array[Byte]]
-        val feats: Array[Double] =
-          if (payload == null) null
-          else {
-            var h = 1125899906842597L
-            payload.foreach(b => h = h * 31 + b)
-            // floorMod: signed % would put negative-hash features in
-            // [-3, 1), diverging from decodeToFeatures' pmod range [-1, 1)
-            Array.tabulate(dim)(i => (Math.floorMod(h + i * 2654435761L, 1000L).toDouble / 500.0) - 1.0)
-          }
-        Row.fromSeq(row.toSeq :+ (if (feats == null) null else feats.toSeq))
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
   }
 }

@@ -637,8 +637,8 @@ object QueriesText {
 
     "q_multimodal_features" -> ((s, dir) => {
       // REAL ImageIO round-trip: a deterministic PNG is rendered per doc
-      // (dims vary with doc_id), decoded back by the engine's batched
-      // ImageIO path; the oracle recomputes the pattern's exact pixel
+      // (dims vary with doc_id), decoded back by the decode_image_stats
+      // column function; the oracle recomputes the pattern's exact pixel
       // stats in plain SQL — decoded width/height prove a real decode
       val gen = udf((seed: Long, w: Int, h: Int) => Multimodal.syntheticPng(seed, w, h))
       val d = t(s, dir, "documents")
@@ -662,8 +662,8 @@ object QueriesText {
 
     "q_multimodal_audio" -> ((s, dir) => {
       // REAL WAV round-trip: a deterministic PCM16 clip is encoded per doc
-      // (length varies with doc_id), decoded back by the engine's batched
-      // AudioSystem path; the oracle recomputes the pinned sample formula's
+      // (length varies with doc_id), decoded back by the decode_audio_stats
+      // column function; the oracle recomputes the pinned sample formula's
       // exact integer stats in SQL — parsed rate/frames prove a real decode
       val gen = udf((seed: Long, n: Int) => Multimodal.syntheticWav(seed, n))
       val d = t(s, dir, "documents")

@@ -80,14 +80,19 @@ object OpsDoc {
 
     out ++= "## Pipeline sections (PipelineConfig)\n\n"
     out ++= "Top level: `name`, `source`, `sources[]`, `operations[]`, `validation`, `storage`,\n"
-    out ++= "`attrition`. `options{}` passes through to the reader or writer (and\n"
-    out ++= "`storage.options.catalog_dir`/`lineage_dir` register the written dataset).\n\n"
+    out ++= "`attrition`. A source or storage `type` defaults to `parquet`, and its\n"
+    out ++= "`options{}` takes only the keys listed for that type;\n"
+    out ++= "`options.<other>` (jdbc) passes through to Spark's reader or writer, and\n"
+    out ++= "`storage.options.catalog_dir`/`lineage_dir` register the written dataset.\n\n"
     out ++= "| section | keys (defaults) |\n|---|---|\n"
-    Seq("`source`, `sources[]`" -> PipelineConfig.source _,
-      "`validation.expectations[]`" -> PipelineConfig.expectation _,
-      "`storage`" -> PipelineConfig.storage _,
+    Seq("`validation.expectations[]`" -> PipelineConfig.expectation _,
       "`attrition`" -> PipelineConfig.attrition _).foreach { case (name, bind) =>
       out ++= s"| $name | ${keysOf(bind)} |\n"
+    }
+    Seq[(String, Binder)]("source`, `sources[]" -> PipelineConfig.source,
+      "storage" -> PipelineConfig.storage).foreach { case (name, bind) =>
+      out ++= s"\n### `$name` (`type:` dispatch)\n\n"
+      out ++= section(bind, Map.empty, "type").mkString("\n") + "\n"
     }
 
     // top-level op types: the keys each reads before any inner selector;

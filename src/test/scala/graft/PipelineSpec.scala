@@ -831,7 +831,8 @@ class PipelineSpec extends SparkSpec {
   test("duplicate expectation names cannot hide a failure (index-based check)") {
     import graft.core.{Pipeline, PipelineConfig}
     val conf = PipelineConfig.PipelineConf("dupnames",
-      Seq(PipelineConfig.SourceConf("parquet", s"$sfDir/orders.parquet", Map.empty, "orders")),
+      Seq(PipelineConfig.SourceConf("parquet", s"$sfDir/orders.parquet", "orders",
+        graft.sources.Readers.parquet(_, s"$sfDir/orders.parquet"))),
       Nil,
       Seq(
         PipelineConfig.ExpectationConf("check", "o_totalprice < 0", 0.9), // fails

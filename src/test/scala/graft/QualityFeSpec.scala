@@ -520,6 +520,45 @@ class QualityFeSpec extends SparkSpec {
     }
   }
 
+  test("codec ops are column functions in one plan: no LogicalRDD, one codec call, same schema") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.types._
+    val (png, wav) = (Multimodal.syntheticPng(3L, 12, 9), Multimodal.syntheticWav(3L, 400))
+    // over a range, not local rows: the optimizer would evaluate a
+    // projection over a local relation into the relation itself
+    val media = Multimodal.asMedia(spark.range(1, 4).select(col("id"),
+      when(col("id") === 1, lit(png)).when(col("id") === 2, lit(wav)).as("payload")),
+      "id", "payload", "image/png")
+    val frame = StructType(Seq("media_id" -> LongType, "frame_idx" -> IntegerType,
+      "width" -> IntegerType, "height" -> IntegerType, "mean_r" -> DoubleType,
+      "mean_g" -> DoubleType, "mean_b" -> DoubleType).map { case (n, t) => StructField(n, t) })
+    // (YAML op = codec name, output, the schema the op has always produced)
+    val ops = Seq(
+      ("decode_image_stats", Multimodal.decodeImageStats(media, "payload"),
+        media.schema.add("image_stats", Multimodal.ImageStatsSchema)),
+      ("image_dhash", Multimodal.imageDHash(media, "payload"), media.schema.add("dhash", LongType)),
+      ("decode_audio_stats", Multimodal.decodeAudioStats(media, "payload"),
+        media.schema.add("audio_stats", Multimodal.AudioStatsSchema)),
+      ("resize_images", Multimodal.resizeImages(media, 4, 3), media.schema),
+      ("trim_audio", Multimodal.trimAudio(media, 10L), media.schema),
+      ("sample_gif_frames", Multimodal.sampleGifFrames(media), frame))
+    ops.foreach { case (op, out, schema) =>
+      val plan = out.queryExecution.optimizedPlan
+      assert(plan.collectLeaves().forall(!_.isInstanceOf[LogicalRDD]), s"$op escapes to an RDD:\n$plan")
+      // one call: the struct-projecting ops must not have the codec inlined
+      // into both the payload and the meta column, and a filter on a codec
+      // output must not be pushed below it with a copy of the call
+      Seq(out, out.filter(col(out.columns.last).isNotNull)).foreach { df =>
+        val p = df.queryExecution.optimizedPlan
+        val calls = p.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u.udfName }))
+        assert(calls == Seq(Some(op)), s"$op: codec calls $calls in\n$p")
+      }
+      assert(out.schema == schema, s"$op: ${out.schema.treeString} vs ${schema.treeString}")
+      out.collect() // and the plan runs
+    }
+  }
+
   test("multimodal frame sampling fans out duration/every rows") {
     val media = Seq((1L, Array.fill(200)(7.toByte))).toDF("id", "payload")
     val m = Multimodal.asMedia(media, "id", "payload", "video/fake", durationMs = 5000L)
@@ -649,13 +688,6 @@ class QualityFeSpec extends SparkSpec {
       .select("id", "quality_label").collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
     assert(lab(5L).contains(0) && lab(95L).contains(1) && lab(50L).isEmpty)
-  }
-
-  test("batched featurizer preserves rows and appends features") {
-    val media = Seq((1L, "abc".getBytes), (2L, "def".getBytes)).toDF("id", "payload")
-    val out = Multimodal.featurizeBatched(media, "payload", dim = 3)
-    assert(out.count() == 2)
-    assert(out.columns.contains("features"))
   }
 
   test("psiBins: hand-computed 2-bin PSI, zero-drift law, empty-bin smoothing") {

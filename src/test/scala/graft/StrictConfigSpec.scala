@@ -37,6 +37,13 @@ class StrictConfigSpec extends AnyFunSuite {
       "operations[0]", "batch_size"),
     ("top-level typo", s"name: strict\n${src}attritoin: { weight_column: n }\n", false,
       "top level", "attritoin"),
+    ("storage without a path (failed at the write before)",
+      s"name: strict\n${src}storage: { type: parquet }\n", false, "storage", "path"),
+    ("reader option typo (silently dropped before)",
+      "name: strict\nsource: { type: csv, path: /nonexistent, options: { heder: false } }\n", false,
+      "source.options", "heder"),
+    ("jdbc source without url", "name: strict\nsource: { type: jdbc, path: t, options: { user: u } }\n",
+      false, "source.options", "url"),
     ("stream transform typo", streamHead +
       "transforms:\n  - { type: filter, condition: \"v > 0\" }\n  - { type: gopher_gate, min_wordz: 3 }\n",
       true, "transforms[1]", "min_wordz"),
@@ -57,6 +64,9 @@ class StrictConfigSpec extends AnyFunSuite {
     val conf = Pipeline.fromYaml(batch(
       "{ type: text_processing, params: { operation: gopher_filter, min_words: 1 } }"))
     assert(conf.operations.size == 1)
+    // jdbc hands every option but `url` to Spark unchecked
+    assert(Pipeline.fromYaml("name: strict\nsource: { type: jdbc, path: t, options: { url: \"jdbc:x\", user: u } }\n")
+      .sources.map(_.typ) == Seq("jdbc"))
     assert(StreamPipeline.fromYaml(streamHead +
       "transforms:\n  - { type: gopher_gate, min_words: 3 }\n").transforms.map(_._1) == Seq("gopher_gate"))
   }
