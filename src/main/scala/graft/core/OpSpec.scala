@@ -46,6 +46,10 @@ object OpSpec {
                             rowsBetween: Option[(Long, Long)] = None,
                             rangeBetween: Option[(Long, Long)] = None)              extends OpSpec
   final case class CustomSql(query: String, tempViewName: String = "temp_table")    extends OpSpec
+  /** Parse a JSON string column in place. */
+  final case class ParseJson(column: String, schema: org.apache.spark.sql.types.StructType) extends OpSpec
+  /** Lift nested struct fields to top-level columns (graft.sources.Readers.flatten). */
+  case object Flatten                                                              extends OpSpec
   /** Ordered sub-list (one YAML transform block can expand to several ops). */
   final case class Sequence(ops: Seq[OpSpec])                                       extends OpSpec
   /** An op family bound at parse: its YAML params (kept for display) and
@@ -133,10 +137,22 @@ object OpCompiler {
                       caches: scala.collection.mutable.Buffer[DataFrame],
                       weightCol: Option[String])(
       df: DataFrame): (DataFrame, Attrition) = {
-    import org.apache.spark.sql.functions._
     val prefix = s"graft_attrition_${java.util.UUID.randomUUID().toString.take(8)}_"
+    val (out, hasWeight) = observeChain(df, ops, prefix, weightCol)(applyOp(_, _, tables, caches))
+    (out, new Attrition(df.sparkSession, prefix, ops.map(_.getClass.getSimpleName), hasWeight))
+  }
+
+  /** Thread named `observe` nodes `<prefix>0` .. `<prefix>n` through a
+    * chain of `stages`: one before the first stage and one after each. A
+    * node counts rows and, where `weightCol` exists at that boundary, sums
+    * it as a long. Returns the chain's output and, per node, whether it
+    * sums the weight. Batch ([[compileObserved]]) and stream
+    * (graft.streaming.StreamAttrition) attrition both build on it. */
+  private[graft] def observeChain[S](df: DataFrame, stages: Seq[S], prefix: String, weightCol: Option[String])(
+      stage: (DataFrame, S) => DataFrame): (DataFrame, Seq[Boolean]) = {
+    import org.apache.spark.sql.functions._
     val hasWeight = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    def instrument(d: DataFrame): DataFrame = {
+    def observe(d: DataFrame): DataFrame = {
       val name = s"$prefix${hasWeight.size}"
       val withW = weightCol.filter(d.columns.contains)
       hasWeight += withW.isDefined
@@ -145,8 +161,7 @@ object OpCompiler {
         case None    => d.observe(name, count(lit(1)).as("rows"))
       }
     }
-    val out = ops.foldLeft(instrument(df))((d, op) => instrument(applyOp(d, op, tables, caches)))
-    (out, new Attrition(df.sparkSession, prefix, ops.map(_.getClass.getSimpleName), hasWeight.toSeq))
+    (stages.foldLeft(observe(df))((d, s) => observe(stage(d, s))), hasWeight.toSeq)
   }
 
   /** The stage report of [[compileObserved]]. It keeps, per observe node,
@@ -215,6 +230,8 @@ object OpCompiler {
       case Melt(id, vv, vn, valn)        => Relational.melt(df, id, vv, vn, valn)
       case w: WindowOp                   => graft.functions.WindowLib.applyWindowOp(df, w)
       case CustomSql(q, tv)              => Relational.customSql(df, q, tv)
+      case ParseJson(c, s)               => Relational.parseJson(df, c, s)
+      case Flatten                       => graft.sources.Readers.flatten(df)
       case CacheOp(level)                =>
         val cached = df.persist(storageLevel(level))
         if (caches != null) caches += cached
@@ -398,18 +415,17 @@ object OpCompiler {
         (df, _) => TimeSeriesLib.sessionStats(df, ts, gap, keys, aggs) })(a)
   }
 
-  /** The Gopher rules (Rae 2021 A1.1) as one binder for gopher_rules,
-    * gopher_filter and the stream gopher_gate: the text and language keys
-    * are named by the caller, the nine thresholds are read once here. With
-    * a language column the two anglocentric rules dispatch per language
-    * (unknown lang → neutral) and min_alpha_ratio/min_stopwords override
-    * the floors uniformly across languages. The frame gains the per-rule
+  /** The Gopher rules (Rae 2021 A1.1), shared by gopher_rules and
+    * gopher_filter. With a language column the two anglocentric rules
+    * dispatch per language (unknown lang → neutral) and
+    * min_alpha_ratio/min_stopwords override the floors uniformly across
+    * languages. The frame gains the per-rule
     * booleans, gopher_keep and gopher_fail_reasons ([[GopherAuditColumns]]).
     */
-  private[graft] def gopher(a: Params, textKey: String, langKey: String): DataFrame => DataFrame = {
+  private def gopher(a: Params): DataFrame => DataFrame = {
     import graft.text.TextLib
-    val text = a.str(textKey, "text")
-    val lang = a.opt(langKey)
+    val text = textCol(a)
+    val lang = a.opt("lang_column")
     val (minWords, maxWords) = (a.int("min_words", 50), a.int("max_words", 100000))
     val minMeanWordLen = a.double("min_mean_word_len", 3.0)
     val maxMeanWordLen = a.double("max_mean_word_len", 10.0)
@@ -429,10 +445,15 @@ object OpCompiler {
     }
   }
 
-  /** Columns [[gopher]] adds; a gate keeps gopher_keep rows and drops them all. */
-  private[graft] val GopherAuditColumns = Seq("gopher_word_count_ok", "gopher_mean_word_len_ok",
+  /** Columns [[gopher]] adds; gopher_filter keeps gopher_keep rows and drops them all. */
+  private val GopherAuditColumns = Seq("gopher_word_count_ok", "gopher_mean_word_len_ok",
     "gopher_symbol_ratio_ok", "gopher_bullet_lines_ok", "gopher_ellipsis_lines_ok",
     "gopher_alpha_words_ok", "gopher_stopwords_ok", "gopher_keep", "gopher_fail_reasons")
+
+  /** A flagging gate's output: as flagged, or with `drop` without the rows
+    * whose `flag` is set, and without `flag` and the `audit` columns. */
+  private def dropFlagged(flagged: DataFrame, drop: Boolean, flag: String, audit: String*): DataFrame =
+    if (drop) flagged.filter(!org.apache.spark.sql.functions.col(flag)).drop(flag +: audit: _*) else flagged
 
   /** The C4 rules (Raffel 2020), shared by c4_rules and c4_filter. */
   private def c4(a: Params): DataFrame => DataFrame = {
@@ -531,10 +552,13 @@ object OpCompiler {
         (df, _) => df.withColumn(text, TextLib.fixMojibake(col(text))) },
       "seen_corpus_apply" -> { a => // flag/drop against a FROZEN corpus bloom
         val (text, path, drop) = (textCol(a), a.req("bloom_path"), a.bool("drop", false))
-        (df, _) => {
-          val flagged = Dedup.seenCorpusApply(df, text, Dedup.loadSeenBloom(df.sparkSession, path))
-          if (drop) flagged.filter(!col("maybe_seen")).drop("maybe_seen") else flagged
-        } },
+        (df, _) => dropFlagged(Dedup.seenCorpusApply(df, text, Dedup.loadSeenBloom(df.sparkSession, path)),
+          drop, "maybe_seen") },
+      "neardup_bloom_apply" -> { a => // drop near-dups of a FROZEN LSH band-bucket bloom:
+        // seen_corpus_apply's near-dup sibling (a ~bands·fpp share of fresh docs is the cost)
+        val (text, path) = (textCol(a), a.req("model_path"))
+        (df, _) => dropFlagged(Dedup.neardupBloomApply(df, text, Dedup.loadNeardupBloom(df.sparkSession, path)),
+          drop = true, "maybe_neardup") },
       "repetition_signals" -> { a => // Gopher A1.1 repetition fractions
         val (text, id, topN, dupN) = (textCol(a), idCol(a), a.int("top_n", 2), a.int("dup_n", 5))
         (df, _) => TextLib.repetitionSignals(df, text, id, topN, dupN) },
@@ -542,9 +566,13 @@ object OpCompiler {
         val (text, out) = (textCol(a), a.str("output_column", "deflate_ratio"))
         (df, _) => df.withColumn(out, graft.expr.DeflateRatio(col(text))) },
       "lang_id" -> { a => val text = textCol(a); (df, _) => TextLib.langId(df, text) },
-      "lang_id_apply" -> { a => // classify against a FROZEN char-n-gram model
+      "lang_id_apply" -> { a => // classify against a FROZEN char-n-gram model; keep_langs filters
         val (text, path, out) = (textCol(a), a.req("model_path"), a.str("output_column", "lang_pred"))
-        (df, _) => TextLib.langIdApply(df, text, TextLib.loadLangIdModel(df.sparkSession, path), out) },
+        val keep = a.opt("keep_langs").map(_.split(",").map(_.trim).toSeq)
+        (df, _) => {
+          val pred = TextLib.langIdApply(df, text, TextLib.loadLangIdModel(df.sparkSession, path), out)
+          keep.fold(pred)(langs => pred.filter(col(out).isin(langs: _*)))
+        } },
       "token_counts" -> { a => val (text, out) = (textCol(a), a.str("output_column", "n_tokens"))
         (df, _) => df.withColumn(out, TextLib.tokenCountWs(col(text))) },
       "chunk" -> { a => val (text, size, overlap) = (textCol(a), a.int("chunk_size", 512), a.int("overlap", 64))
@@ -618,10 +646,12 @@ object OpCompiler {
         val (qId, qText) = (a.str("query_id_column", "query_id"), a.str("query_text_column", "query_text"))
         val (k, k1, b) = (a.int("k", 10), a.double("k1", 1.2), a.double("b", 0.75))
         (df, tables) => graft.text.Search.bm25TopK(df, text, id, tables(queries), qId, qText, k, k1, b) },
-      "quota_per_group" -> { a =>
+      "quota_per_group" -> { a => // on a stream: a first-come lifetime budget per group
         val (group, key, quota) = (a.req("group_column"), keyCol(a, idCol(a)), a.reqInt("quota"))
         val preBuckets = a.int("pre_buckets", 64)
-        (df, _) => Scale.quotaPerGroup(df, group, key, quota, preBuckets = preBuckets) },
+        (df, _) =>
+          if (df.isStreaming) graft.streaming.StreamOps.quotaPerGroupStream(df, group, quota)
+          else Scale.quotaPerGroup(df, group, key, quota, preBuckets = preBuckets) },
       "assign_split" -> { a =>
         val (labels, weights) = (a.list("labels"), a.doubles("weights"))
         a.require(labels.nonEmpty && labels.length == weights.length,
@@ -657,10 +687,9 @@ object OpCompiler {
         (df, _) => rules(df).filter(col("c4_keep"))
           .drop("c4_n_lines_kept", "c4_n_sentences", "c4_keep") },
       // audit mode: per-rule booleans + gopher_keep + gopher_fail_reasons
-      "gopher_rules" -> { a => val rules = gopher(a, "text_column", "lang_column")
-        (df, _) => rules(df) },
+      "gopher_rules" -> { a => val rules = gopher(a); (df, _) => rules(df) },
       "gopher_filter" -> { a => // the gate applied: survivors only, audit columns dropped
-        val rules = gopher(a, "text_column", "lang_column")
+        val rules = gopher(a)
         (df, _) => rules(df).filter(col("gopher_keep")).drop(GopherAuditColumns: _*) },
       "unimax_sample" -> { a =>
         val (group, w, key) = (a.req("group_column"), a.req("weight_column"), keyCol(a, idCol(a)))
@@ -753,13 +782,21 @@ object OpCompiler {
         val (alpha, buckets, s) = (a.double("alpha", 1.0), a.int("hashed_buckets", 0), salt(a))
         (df, tables) => graft.text.Dsir.select(df, tables(target).withColumnRenamed(targetText, text),
           text, id, k, ns, alpha, buckets, s) },
-      "ppl_apply" -> { a => // gate against a FROZEN CCNet model (pplFit + savePplModel)
-        val (text, path) = (textCol(a), a.req("model_path"))
-        (df, _) => TextLib.pplApply(df, text, TextLib.loadPplModel(df.sparkSession, path)) },
-      "dsir_apply" -> { a => // score against a FROZEN hashed DSIR model (pure map)
+      "ppl_apply" -> { a => // bucket against a FROZEN CCNet model (pplFit + savePplModel);
+        // max_bucket keeps the head..max_bucket buckets
+        val (text, path, max) = (textCol(a), a.req("model_path"), a.optInt("max_bucket"))
+        (df, _) => {
+          val bucketed = TextLib.pplApply(df, text, TextLib.loadPplModel(df.sparkSession, path))
+          max.fold(bucketed)(m => bucketed.filter(col("ppl_bucket").isNotNull && col("ppl_bucket") <= m))
+        } },
+      "dsir_apply" -> { a => // score against a FROZEN hashed DSIR model (pure map);
+        // min_log_weight drops the docs scored below it
         val (text, path, ns) = (textCol(a), a.req("model_path"), gramOrders(a))
-        (df, _) => graft.text.Dsir.applyHashed(df, text, graft.text.Dsir.loadModel(df.sparkSession, path), ns)
-      },
+        val min = a.optDouble("min_log_weight")
+        (df, _) => {
+          val scored = graft.text.Dsir.applyHashed(df, text, graft.text.Dsir.loadModel(df.sparkSession, path), ns)
+          min.fold(scored)(m => scored.filter(col("log_weight") >= m))
+        } },
       "perplexity_buckets" -> { a => // CCNet head/middle/tail per group
         val (text, id, groups, n) = (textCol(a), idCol(a), a.list("group_columns"), a.int("n_buckets", 3))
         val (corpus, corpusText, vocab) = lmCorpus(a, text)
@@ -839,12 +876,12 @@ object OpCompiler {
           val survivors = dedup(df)
           graft.vec.Prototypes.protoApply(survivors, id, vec, cents(survivors), prune)
         } },
-      "semantic_gate" -> { a => // frozen semantic gate (round 13): the
-        // stream transform's batch counterpart in audit mode (adds
-        // sem_cell/sem_max_cos/sem_dup). model_path loads YESTERDAY'S fit;
-        // without it the op fits on `accepted_table` (the frozen accepted
-        // corpus — NEVER the incoming frame, whose every row would gate
-        // itself out at cosine 1.0) and save_model_path keeps the result.
+      "semantic_gate" -> { a => // frozen semantic gate (round 13): adds
+        // sem_cell/sem_max_cos/sem_dup (audit mode), or with `drop` removes
+        // the sem_dup rows and those columns. model_path loads YESTERDAY'S
+        // fit; without it the op fits on `accepted_table` (the frozen
+        // accepted corpus — NEVER the incoming frame, whose every row would
+        // gate itself out at cosine 1.0) and save_model_path keeps the result.
         import graft.vec.SemGate
         val (modelPath, accepted) = (a.opt("model_path"), a.opt("accepted_table"))
         a.require(modelPath.isDefined || accepted.isDefined,
@@ -855,7 +892,7 @@ object OpCompiler {
         val (nCells, seed) = (a.int("n_cells", 16), a.long("seed", 42L))
         val (maxTrainRows, maxReps) = (a.int("max_train_rows", 100000), a.int("max_reps", 1000000))
         val (centroids, savePath) = (a.opt("centroids_path"), a.opt("save_model_path"))
-        val threshold = a.double("threshold", 0.95)
+        val (threshold, drop) = (a.double("threshold", 0.95), a.bool("drop", false))
         (df, tables) => {
           val spark = df.sparkSession
           val model = modelPath.map(SemGate.loadSemGate(spark, _)).getOrElse {
@@ -865,7 +902,7 @@ object OpCompiler {
             savePath.foreach(SemGate.saveSemGate(spark, m, _))
             m
           }
-          SemGate.semGateApply(df, vec, model, threshold)
+          dropFlagged(SemGate.semGateApply(df, vec, model, threshold), drop, "sem_dup", "sem_cell", "sem_max_cos")
         } },
       "pq_encode" -> { a => // encode with a stored model, or train-on-the-frame
         // model_path: ENCODE WITH YESTERDAY'S CODEBOOK (appendable index);

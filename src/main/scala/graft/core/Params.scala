@@ -33,6 +33,10 @@ final class Params private (section: String, path: String, raw: Map[String, Any]
   /** The YAML map this reader wraps (empty while recording). */
   def values: Map[String, Any] = raw
 
+  /** The choices [[select]] took so far, outermost first (`text_processing`,
+    * `gopher_filter`): the label its errors carry. */
+  def selected: Seq[String] = labels.toSeq
+
   /** Whether `k` is present (even as null) — not a read, so it never makes
     * `k` accepted. */
   def has(k: String): Boolean = raw.contains(k)

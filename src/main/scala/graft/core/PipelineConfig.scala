@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 import java.{util => ju}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.sources.{Readers, Sinks}
 
 /** YAML pipeline config → typed model, mirroring the reference's config
@@ -174,6 +175,13 @@ object PipelineConfig {
       },
       "window" -> window,
       "custom_sql" -> { p => CustomSql(p.req("query"), p.str("temp_view_name", "temp_table")) },
+      // the record steps of the reference's stream processor
+      // (stream_processor.py:382-437), one op each in batch and stream
+      "calculate_field" -> { p => Calculate(p.req("field"), p.req("expression")) },
+      "rename_field" -> { p => Rename(Map(p.req("from") -> p.req("to"))) },
+      "add_timestamp" -> { p => Calculate(p.str("field", "processing_ts"), "current_timestamp()") },
+      "parse_json_field" -> { p => ParseJson(p.req("field"), schema(p, "schema")) },
+      "flatten_nested" -> { _ => Flatten },
       "feature_engineering" -> { p => FeatureEngineering(p.values)(OpCompiler.featureEngineering(p)) },
       "time_series_processing" -> { p => TimeSeriesProcessing(p.values)(OpCompiler.timeSeries(p)) },
       "text_processing" -> { p => TextProcessing(p.values)(OpCompiler.textProcessing(p)) },
@@ -189,6 +197,29 @@ object PipelineConfig {
       // Spark-native spelling of the same op)
       "cache" -> cache,
       "persist" -> cache)
+  }
+
+  /** The ops a stream transform may be, named `type` or `type/operation`:
+    * per-row ops (quota_per_group keeps a count per group in stream state)
+    * that need no table catalog and no pass over the whole input. Each
+    * maps to the keys its arm reads only on a batch input, which
+    * StreamPipeline rejects: quota_per_group's stream path keeps the first
+    * `quota` rows per group (no key order), and semantic_gate on a stream
+    * applies `model_path` (no catalog to fit on). */
+  private[graft] val streamable: Map[String, Seq[String]] =
+    (Seq("filter", "calculate_field", "rename_field", "add_timestamp", "parse_json_field", "flatten_nested") ++
+      Seq("ppl_apply", "dsir_apply", "lang_id_apply", "seen_corpus_apply", "neardup_bloom_apply",
+        "gopher_filter", "unimax_apply", "dedup_lines").map("text_processing/" + _))
+      .map(_ -> Seq.empty[String]).toMap ++ Map(
+      "text_processing/quota_per_group" -> Seq("id_column", "key_column", "pre_buckets"),
+      "text_processing/semantic_gate" -> Seq("accepted_table", "id_column", "n_cells", "seed", "max_train_rows",
+        "max_reps", "centroids_path", "save_model_path"))
+
+  /** A DDL schema key (`"ts TIMESTAMP, v DOUBLE"`), checked at parse. */
+  private[graft] def schema(a: Params, k: String): StructType = {
+    val t = scala.util.Try(StructType.fromDDL(a.req(k)))
+    a.require(t.isSuccess, s"key '$k': ${t.failed.map(_.getMessage).getOrElse("")}")
+    t.getOrElse(null)
   }
 
   private def cache(p: Params): OpSpec = {

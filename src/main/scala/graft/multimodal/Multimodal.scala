@@ -298,31 +298,34 @@ object Multimodal {
   /** Image near-dup pairs within Hamming radius ≤ 3 over a dHash column —
     * the multimodal sibling of text SimHash dedup, and the same 4×16-bit
     * block scheme (pigeonhole: distance ≤ 3 pairs must agree on ≥ 1 of 4
-    * blocks; the candidate exchange carries ids only, exact bit_count(xor)
-    * verify after). Null hashes never pair. Output (id_a, id_b, hamming),
-    * id_a < id_b.
+    * blocks; the candidate exchange carries (id, hash), exact
+    * bit_count(xor) verify after). Null hashes never pair. Output (id_a,
+    * id_b, hamming), id_a < id_b. Reads `hashed` once and caches nothing.
     */
   def imageNearDupPairs(hashed: DataFrame, idCol: String, hashCol: String = "dhash",
                         maxHamming: Int = 3, maxBucketSize: Int = 1000): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"imageNearDupPairs' 4-block scheme guarantees recall only for maxHamming <= 3, got $maxHamming")
-    // persisted: feeds the block explosion AND both per-id lookups — the
-    // upstream is typically an ImageIO decode, and recomputing it 3× means
-    // re-decoding the corpus 3× (simhashCandidates' persist rationale)
-    val sigs = hashed.filter(col(hashCol).isNotNull)
-      .select(col(idCol).as("id"), col(hashCol).as("__dh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one read of `hashed`: each id's hash rides its blocks into the
+    // buckets, so the pairs need no join back to the (decoded) input
+    val sig = struct(col(idCol).as("id"), col(hashCol).as("dh"))
     val blockStructs = (0 until 4).map { i =>
-      struct(lit(i).as("blk"), shiftright(col("__dh"), i * 16).bitwiseAND(0xFFFFL).as("v"))
+      struct(lit(i).as("blk"), shiftright(col("s.dh"), i * 16).bitwiseAND(0xFFFFL).as("v"))
     }
-    val blocks = sigs.select(col("id"), explode(array(blockStructs: _*)).as("b"))
-      .select(col("id"), col("b.blk").as("blk"), col("b.v").as("v"))
-    graft.text.Dedup.bucketPairs(blocks, Seq("blk", "v"), maxBucketSize)
-      .join(sigs.select(col("id").as("id_a"), col("__dh").as("dh_a")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("__dh").as("dh_b")), Seq("id_b"))
-      .withColumn("hamming", bit_count(col("dh_a").bitwiseXOR(col("dh_b"))))
+    val blocks = hashed.filter(col(hashCol).isNotNull).select(sig.as("s"))
+      .select(col("s"), explode(array(blockStructs: _*)).as("b"))
+      .select(col("s"), col("b.blk").as("blk"), col("b.v").as("v"))
+    // the PairCombos kernel expands each bucket's member INDEX pairs
+    graft.text.Dedup.bucketMembers(blocks, Seq("blk", "v"), maxBucketSize, col("s"))
+      .select(col("__ids"), explode(graft.expr.PairCombos(
+        sequence(lit(0L), size(col("__ids")).cast("long") - 1), normalize = false)).as("__p"))
+      .select(element_at(col("__ids"), col("__p.id_a").cast("int") + 1).as("a"),
+        element_at(col("__ids"), col("__p.id_b").cast("int") + 1).as("b"))
+      .filter(col("a.id") =!= col("b.id"))
+      .select(least(col("a.id"), col("b.id")).as("id_a"), greatest(col("a.id"), col("b.id")).as("id_b"),
+        bit_count(col("a.dh").bitwiseXOR(col("b.dh"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** REAL image resize via JDK Graphics2D (bilinear) + PNG re-encode, one

@@ -143,6 +143,10 @@ object Relational {
   def calculate(df: DataFrame, column: String, expression: String): DataFrame =
     df.withColumn(column, expr(expression))
 
+  /** Parse a JSON string column in place (stream_processor.py parse_json_field). */
+  def parseJson(df: DataFrame, column: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    df.withColumn(column, from_json(col(column), schema))
+
   /** Date-part extraction (spark_processor.py:127-136). */
   def extractDateParts(
       df: DataFrame,

@@ -2,17 +2,17 @@ package graft.streaming
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import graft.core.{OpCompiler, OpSpec}
 
 /** Streaming stage-attrition accounting (round 11) — the stream half of
-  * the batch `attrition:` block (core/OpSpec.compileObserved): NAMED
-  * `observe` nodes are threaded between every stream transform, Structured
-  * Streaming reports their values per micro-batch through
-  * StreamingQueryProgress.observedMetrics, and this listener accumulates
-  * them into the same rows/weight in-out report — zero extra passes, the
-  * metrics ride each micro-batch's own execution.
+  * the batch `attrition:` block (core/OpSpec.compileObserved): the NAMED
+  * `observe` nodes of OpCompiler.observeChain are threaded between every
+  * stream transform, Structured Streaming reports their values per
+  * micro-batch through StreamingQueryProgress.observedMetrics, and this
+  * listener accumulates them into the same rows/weight in-out report —
+  * zero extra passes, the metrics ride each micro-batch's own execution.
   *
   * (Batch uses named observes too, read from each query's observed
   * metrics by a QueryExecutionListener — OpCompiler.Attrition; streams
@@ -47,9 +47,9 @@ final class StreamAttrition private[streaming] (
 
   /** Accumulated per-stage report over every micro-batch so far — same
     * shape as the batch `Result.attrition`. */
-  def report(): Seq[graft.core.OpCompiler.StageAttrition] = synchronized {
+  def report(): Seq[OpCompiler.StageAttrition] = synchronized {
     labels.indices.map { i =>
-      graft.core.OpCompiler.StageAttrition(i + 1, labels(i),
+      OpCompiler.StageAttrition(i + 1, labels(i),
         rows(i), rows(i + 1),
         if (weightSeen(i)) Some(weights(i)) else None,
         if (weightSeen(i + 1)) Some(weights(i + 1)) else None)
@@ -59,27 +59,15 @@ final class StreamAttrition private[streaming] (
 
 object StreamAttrition {
 
-  /** Instrument a transform chain: `stages` are (label, transform) pairs;
+  /** Instrument a transform chain: `stages` are (label, op) pairs;
     * returns the observed output frame plus the listener to attach.
     * `weightCol` is summed wherever the column exists at that boundary.
     */
-  def instrument(df: DataFrame, stages: Seq[(String, DataFrame => DataFrame)],
+  def instrument(df: DataFrame, stages: Seq[(String, OpSpec)],
                  weightCol: Option[String]): (DataFrame, StreamAttrition) = {
     val prefix = s"graft_attr_${java.util.UUID.randomUUID().toString.take(8)}_"
-    val hasWeight = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    def observeAt(d: DataFrame, i: Int): DataFrame = {
-      val withW = weightCol.filter(d.columns.contains)
-      hasWeight += withW.isDefined
-      withW match {
-        case Some(w) => d.observe(s"$prefix$i", count(lit(1)).as("rows"),
-          sum(col(w).cast("long")).as("weight"))
-        case None => d.observe(s"$prefix$i", count(lit(1)).as("rows"))
-      }
-    }
-    val out = stages.zipWithIndex.foldLeft(observeAt(df, 0)) {
-      case (d, ((_, f), i)) => observeAt(f(d), i + 1)
-    }
-    (out, new StreamAttrition(prefix, stages.map(_._1), hasWeight.toSeq))
+    val (out, hasWeight) = OpCompiler.observeChain(df, stages.map(_._2), prefix, weightCol)(OpCompiler.applyOp(_, _))
+    (out, new StreamAttrition(prefix, stages.map(_._1), hasWeight))
   }
 
   def attach(spark: SparkSession, a: StreamAttrition): Unit =

@@ -83,34 +83,6 @@ object StreamOps {
   def files(spark: SparkSession, path: String, format: String, schema: StructType): DataFrame =
     spark.readStream.schema(schema).format(format).load(path)
 
-  // ------------------------------------------------------- record transforms
-
-  /** Record transforms (stream_processor.py:382-437): add_timestamp,
-    * rename_field, calculate_field (expr — NOT eval'd lambdas), flatten_nested,
-    * parse_json_field. All work identically on batch and stream frames.
-    */
-  def addTimestamp(df: DataFrame, c: String = "processing_ts"): DataFrame =
-    df.withColumn(c, current_timestamp())
-
-  def renameField(df: DataFrame, from: String, to: String): DataFrame =
-    df.withColumnRenamed(from, to)
-
-  def calculateField(df: DataFrame, c: String, expression: String): DataFrame =
-    df.withColumn(c, expr(expression))
-
-  def flattenNested(df: DataFrame): DataFrame = graft.sources.Readers.flatten(df)
-
-  def parseJsonField(df: DataFrame, c: String, schema: StructType): DataFrame =
-    df.withColumn(c, from_json(col(c), schema))
-
-  /** Record filters (stream_processor.py:440-493). */
-  def filterFieldEquals(df: DataFrame, c: String, v: Any): DataFrame = df.filter(col(c) === lit(v))
-  def filterInList(df: DataFrame, c: String, vs: Seq[Any]): DataFrame = df.filter(col(c).isin(vs: _*))
-  def filterGreaterThan(df: DataFrame, c: String, v: Any): DataFrame = df.filter(col(c) > lit(v))
-  def filterNotNull(df: DataFrame, c: String): DataFrame = df.filter(col(c).isNotNull)
-  def filterTimestampRange(df: DataFrame, c: String, from: String, to: String): DataFrame =
-    df.filter(col(c) >= lit(from).cast("timestamp") && col(c) < lit(to).cast("timestamp"))
-
   // ---------------------------------------------------------------- windows
 
   /** Stream aggregate-function surface (StreamAggregator,
@@ -369,10 +341,11 @@ object StreamOps {
       graft.sources.BatchJournal.idempotent(journal, checkpoint)(handler))
 
   /** GROWING near-dup ingest over a stream — the third leg of the
-    * streaming dedup family (seen_gate = frozen exact, neardup_gate =
-    * frozen near, this = near-dup against EVERYTHING ACCEPTED SO FAR,
-    * within-stream duplicates included). Per micro-batch: load the newest
-    * sketch version under `modelDir` (or `seed` before the first), run
+    * streaming dedup family (seen_corpus_apply = frozen exact,
+    * neardup_bloom_apply = frozen near, this = near-dup against EVERYTHING
+    * ACCEPTED SO FAR, within-stream duplicates included). Per micro-batch:
+    * load the newest sketch version under `modelDir` (or `seed` before the
+    * first), run
     * [[graft.text.Dedup.neardupIngestStep]] (probe → within-batch dedup →
     * key fold), hand the survivors to `downstream`, persist the grown
     * sketch as version=batchId, and journal the batch.

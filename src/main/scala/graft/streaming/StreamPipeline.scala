@@ -3,10 +3,8 @@ package graft.streaming
 import java.{util => ju}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
-import graft.core.Params
+import graft.core.{OpCompiler, OpSpec, Params, PipelineConfig}
 
 /** Config-driven streaming pipeline — the §3.3 lifecycle
   * (streaming_pipeline.yaml): stream source → record transforms/filters →
@@ -26,17 +24,18 @@ object StreamPipeline {
     * piece a closure holding only its Spark work. */
   final case class Conf(name: String,
                         source: SparkSession => DataFrame,
-                        transforms: Seq[(String, DataFrame => DataFrame)],
+                        transforms: Seq[(String, OpSpec)],
                         attritionWeight: Option[Option[String]],
                         window: Option[DataFrame => DataFrame],
                         sink: DataFrame => StreamingQuery,
                         monitoring: Option[SparkSession => StreamMetrics])
 
-  /** Parse and bind the whole config; an unknown key, a bad value or a
-    * batch-only op under `transforms:` fails here, before any SparkSession. */
+  /** Parse and bind the whole config; an unknown key, a bad value or an op
+    * under `transforms:` that cannot stream fails here, before any
+    * SparkSession. */
   def fromYaml(yaml: String): Conf = {
     val root = new org.yaml.snakeyaml.Yaml()
-      .load[ju.Map[String, AnyRef]](graft.core.PipelineConfig.substituteEnv(yaml))
+      .load[ju.Map[String, AnyRef]](PipelineConfig.substituteEnv(yaml))
     Params.bind("", root) { a =>
       val name = a.str("name", "stream")
       a.require(a.has("stream_source"), "missing required key 'stream_source'")
@@ -50,112 +49,33 @@ object StreamPipeline {
     }
   }
 
-  private def ddl(a: Params, k: String): StructType = {
-    val t = scala.util.Try(StructType.fromDDL(a.req(k)))
-    a.require(t.isSuccess, s"key '$k': ${t.failed.map(_.getMessage).getOrElse("")}")
-    t.getOrElse(null)
-  }
-
-  private def textField(a: Params): String = a.str("text_field", "text")
-
   private[graft] def source(a: Params): SparkSession => DataFrame =
     a.select[Params => SparkSession => DataFrame]("type", "file")(
       "file" -> { a =>
-        val (path, format, schema) = (a.req("path"), a.str("format", "json"), ddl(a, "schema"))
+        val (path, format, schema) = (a.req("path"), a.str("format", "json"), PipelineConfig.schema(a, "schema"))
         spark => StreamOps.files(spark, path, format, schema) },
       "kafka" -> { a =>
-        val (servers, topics, schema) = (a.req("servers"), a.req("topics"), ddl(a, "schema"))
+        val (servers, topics, schema) = (a.req("servers"), a.req("topics"), PipelineConfig.schema(a, "schema"))
         val offsets = a.str("starting_offsets", "latest")
         spark => StreamOps.kafka(spark, servers, topics, schema, offsets) })(a)
 
-  private type Transform = Params => DataFrame => DataFrame
-
-  /** Every stream transform, with its binder. */
-  private[graft] val transforms: Seq[(String, Transform)] = Seq(
-    "calculate_field" -> { a => val (field, e) = (a.req("field"), a.req("expression"))
-      df => StreamOps.calculateField(df, field, e) },
-    "rename_field" -> { a => val (from, to) = (a.req("from"), a.req("to"))
-      df => StreamOps.renameField(df, from, to) },
-    "add_timestamp" -> { a => val field = a.str("field", "processing_ts"); df => StreamOps.addTimestamp(df, field) },
-    "parse_json_field" -> { a => val (field, schema) = (a.req("field"), ddl(a, "schema"))
-      df => StreamOps.parseJsonField(df, field, schema) },
-    "flatten_nested" -> { _ => df => StreamOps.flattenNested(df) },
-    "filter" -> { a => val c = a.req("condition"); df => df.filter(expr(c)) },
-    "dsir_gate" -> { a => // frozen hashed-DSIR model as a pure-map stream gate (round 10)
-      val (path, text, min) = (a.req("model_path"), textField(a), a.optDouble("min_log_weight"))
-      df => {
-        val scored = graft.text.Dsir.applyHashed(df, text, graft.text.Dsir.loadModel(df.sparkSession, path))
-        min.fold(scored)(m => scored.filter(col("log_weight") >= m))
-      } },
-    "ppl_gate" -> { a => // frozen CCNet floors as a stream gate: keep head..max_bucket
-      val (path, text, max) = (a.req("model_path"), textField(a), a.optInt("max_bucket"))
-      df => {
-        val bucketed = graft.text.TextLib.pplApply(df, text,
-          graft.text.TextLib.loadPplModel(df.sparkSession, path))
-        max.fold(bucketed)(m => bucketed.filter(col("ppl_bucket").isNotNull && col("ppl_bucket") <= m))
-      } },
-    "gopher_gate" -> { a => // Gopher rules as a stream gate — pure map, no
-      // fitted model to freeze; the batch gopher_filter's binder with the
-      // stream's field names. With lang_field (round 12, VERDICT r11 #3)
-      // the anglocentric rules dispatch per language — chain it after
-      // langid_gate so lang_field = lang_pred.
-      val rules = graft.core.OpCompiler.gopher(a, "text_field", "lang_field")
-      df => rules(df).filter(col("gopher_keep")).drop(graft.core.OpCompiler.GopherAuditColumns: _*) },
-    "unimax_gate" -> { a => // frozen UniMax allocation as a stream mixture
-      // gate: a stateless broadcast join + explode (epoch column added),
-      // so upsampling composes into ingest like the other frozen gates
-      val (path, group, key) = (a.req("allocation_path"), a.str("group_field", "lang"), a.str("key_field", "doc_id"))
-      val salt = a.int("salt", 42)
-      df => graft.ops.Scale.unimaxApply(df, df.sparkSession.read.parquet(path), group, key, salt) },
-    "dedup_lines" -> { a => // within-document repeated-line removal — pure per-row map
-      val (text, minChars) = (textField(a), a.int("min_chars", 1))
-      df => graft.text.TextLib.dedupLines(df, text, minChars) },
-    "langid_gate" -> { a => // frozen char-n-gram language ID as a stream
-      // gate: pure-map scoring, optional keep_langs filter on the prediction
-      val (path, text) = (a.req("model_path"), textField(a))
-      val keep = a.opt("keep_langs").map(_.split(",").map(_.trim).toSeq)
-      df => {
-        val pred = graft.text.TextLib.langIdApply(df, text,
-          graft.text.TextLib.loadLangIdModel(df.sparkSession, path))
-        keep.fold(pred)(langs => pred.filter(col("lang_pred").isin(langs: _*)))
-      } },
-    "seen_gate" -> { a => // frozen accepted-corpus bloom: drop records
-      // whose text was already ingested — a pure row-local probe against
-      // the few-MB sketch (a ~fpp fraction of fresh docs is the cost)
-      val (path, text) = (a.req("bloom_path"), textField(a))
-      df => graft.text.Dedup.seenCorpusApply(df, text, graft.text.Dedup.loadSeenBloom(df.sparkSession, path))
-        .filter(!col("maybe_seen")).drop("maybe_seen") },
-    "neardup_gate" -> { a => // frozen NEAR-dup gate (round 12): drop records
-      // whose LSH band buckets collide with the accepted corpus's —
-      // seen_gate's sibling at the banding S-curve; the snapshot is never
-      // read at ingest (a ~bands·fpp fraction of fresh docs is the cost)
-      val (path, text) = (a.req("model_path"), textField(a))
-      df => graft.text.Dedup.neardupBloomApply(df, text,
-          graft.text.Dedup.loadNeardupBloom(df.sparkSession, path))
-        .filter(!col("maybe_neardup")).drop("maybe_neardup") },
-    "semantic_gate" -> { a => // frozen SEMANTIC gate (round 13): drop records
-      // whose embedding sits within `threshold` cosine of an accepted-corpus
-      // vector IN ITS OWN CELL — pure map, zero joins, zero state
-      val (path, vec, threshold) = (a.req("model_path"), a.str("vector_field", "embedding"),
-        a.double("threshold", 0.95))
-      df => graft.vec.SemGate.semGateApply(df, vec, graft.vec.SemGate.loadSemGate(df.sparkSession, path),
-          threshold).filter(!col("sem_dup")).drop("sem_cell", "sem_max_cos", "sem_dup") },
-    "quota_per_group" -> { a => val (group, quota) = (a.req("group_column"), a.long("quota", 10000L))
-      df => StreamOps.quotaPerGroupStream(df, group, quota) })
-
-  /** Op names that exist only in batch pipelines (a type, or a
-    * text_processing operation), for the batch-only error. */
-  private lazy val batchOnly: Set[String] =
-    (graft.core.PipelineConfig.opTypes.map(_._1) ++
-      Params.record()(graft.core.OpCompiler.textProcessing).selectors.flatMap(_.choices)).toSet --
-      transforms.map(_._1)
-
-  private[graft] def transform(a: Params): (String, DataFrame => DataFrame) = {
-    val t = a.values.get("type").map(String.valueOf)
-    a.require(!t.exists(batchOnly),
-      s"key 'type': '${t.orNull}' is a batch-only op; stream transforms are ${transforms.map(_._1).mkString(", ")}")
-    val (name, tr) = a.select("type")(transforms.map { case (n, t) => n -> (n, t) }: _*)
-    (name, tr(a))
+  /** One `transforms:` entry: an op bound by PipelineConfig.op as under
+    * `operations:`, admitted only if PipelineConfig.streamable names it and
+    * it sets none of the keys that op reads only on a batch input. Its
+    * label is its `type`, plus `/operation` for an op family. */
+  private def transform(a: Params): (String, OpSpec) = {
+    val op = PipelineConfig.op(a)
+    val label = a.selected.mkString("/")
+    val batchOnly = PipelineConfig.streamable.get(label)
+    a.require(batchOnly.isDefined,
+      s"not a streamable op; stream transforms are ${PipelineConfig.streamable.keys.toSeq.sorted.mkString(", ")}")
+    val ignored = op match {
+      case b: OpSpec.BoundOp => batchOnly.get.filter(b.params.contains)
+      case _                 => Nil
+    }
+    a.require(ignored.isEmpty, s"key '${ignored.headOption.orNull}' is read only on a batch input: a stream has " +
+      s"no table catalog, fits no model and keeps no key order (batch-only: ${batchOnly.get.mkString(", ")})")
+    (label, op)
   }
 
   /** The `attrition:` section: the weight column summed per stage. */
@@ -221,7 +141,7 @@ object StreamPipeline {
         // persist the grown sketch as v=<batchId>. See
         // StreamOps.nearDedupIngestSink for the crash-ordering contract.
         val (modelDir, ckpt) = (a.req("model_dir"), a.req("checkpoint"))
-        val (factory, key, text) = (kvStore(a), a.str("key_field", "doc_id"), textField(a))
+        val (factory, key, text) = (kvStore(a), a.str("key_field", "doc_id"), a.str("text_field", "text"))
         val (shingle, hashes, bands) = (a.int("shingle_n", 3), a.int("num_hashes", 64), a.int("bands", 16))
         val (fpp, expected) = (a.double("fpp", 0.001), a.long("expected_keys", 10000000L))
         val (threshold, rowFppWarn) = (a.double("threshold", 0.8), a.double("row_fpp_warn", 0.5))
@@ -264,7 +184,7 @@ object StreamPipeline {
         val (out, l) = StreamAttrition.instrument(base, conf.transforms, weight)
         (out, Some(l))
       case None =>
-        (conf.transforms.foldLeft(base)((d, t) => t._2(d)), None)
+        (OpCompiler.compile(conf.transforms.map(_._2))(base), None)
     }
     (conf.window.fold(transformed)(_(transformed)), attrition)
   }

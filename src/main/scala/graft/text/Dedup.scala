@@ -556,20 +556,24 @@ object Dedup {
     * EITHER formulation (same keyed exchange), and the count filter drops
     * it before collect_list materializes anything.
     */
-  private[graft] def bucketPairs(buckets: DataFrame, keyCols: Seq[String], maxBucketSize: Int): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-    buckets
-      .withColumn("__bsz", count(lit(1)).over(w))
-      .filter(col("__bsz") > 1 && col("__bsz") <= maxBucketSize)
-      .groupBy(keyCols.map(col): _*)
-      .agg(collect_list(col("id")).as("__ids"))
+  private[graft] def bucketPairs(buckets: DataFrame, keyCols: Seq[String], maxBucketSize: Int): DataFrame =
+    bucketMembers(buckets, keyCols, maxBucketSize, col("id"))
       // native expansion kernel: (least, greatest) pairs with equal ids
       // skipped — the old nested-transform HOF + filter(id_a < id_b),
       // without a slice allocation per outer element (PairCombos)
       .select(explode(graft.expr.PairCombos(col("__ids"), normalize = true)).as("__p"))
       .select(col("__p.id_a").as("id_a"), col("__p.id_b").as("id_b"))
       .dropDuplicates("id_a", "id_b")
-  }
+
+  /** The buckets of [[bucketPairs]]: one row per `keyCols` bucket of 2 to
+    * `maxBucketSize` rows, with `member` of each row collected as `__ids`. */
+  private[graft] def bucketMembers(buckets: DataFrame, keyCols: Seq[String], maxBucketSize: Int,
+                                   member: Column): DataFrame =
+    buckets
+      .withColumn("__bsz", count(lit(1)).over(Window.partitionBy(keyCols.map(col): _*)))
+      .filter(col("__bsz") > 1 && col("__bsz") <= maxBucketSize)
+      .groupBy(keyCols.map(col): _*)
+      .agg(collect_list(member).as("__ids"))
 
   /** Near-duplicate candidate pairs via MinHash-LSH: explode band hashes,
     * bucket-wise pair expansion (bucketPairs), then estimate Jaccard from

@@ -243,8 +243,8 @@ object TextLib {
 
   /** [[DefaultGopherLangParams]] with the two YAML-tunable floors
     * overridden UNIFORMLY across languages. The dynamic-dispatch ops
-    * (gopher_rules/gopher_filter with lang_column, stream gopher_gate with
-    * lang_field) route their min_alpha_ratio/min_stopwords params through
+    * (gopher_rules/gopher_filter with lang_column, in batch or stream)
+    * route their min_alpha_ratio/min_stopwords params through
     * this so the knobs keep working when per-language dispatch is on —
     * previously they were silently ignored (ADVICE r12). At the defaults
     * (0.8, 2) this IS DefaultGopherLangParams value-for-value. */

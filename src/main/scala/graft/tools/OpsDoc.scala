@@ -8,8 +8,9 @@ import graft.streaming.StreamPipeline
 
 /** docs/OPS.md generator — the YAML surface rendered from the binders that
   * parse it (graft.core.Params in recording mode): PipelineConfig's
-  * sections and op types, OpCompiler's op families, and StreamPipeline's
-  * source, transforms, window, sink and monitoring. The document lists
+  * sections and op types, OpCompiler's op families (the streamable ones
+  * marked), and StreamPipeline's source, window, sink and monitoring. The
+  * document lists
   * exactly the keys the parser accepts, because both come from the same
   * reads; OpsDocSpec regenerates it on every build and fails when the
   * committed file is stale.
@@ -49,8 +50,10 @@ object OpsDoc {
   /** The table of the selector at `sel` in `bind` (other selectors pinned):
     * one row per choice with the keys that branch reads; keys read before
     * the selector at its own level are listed once above the table, and
-    * deeper selectors' choices fill the nested-values column. */
-  private def section(bind: Binder, pinned: Map[String, String], sel: String): Seq[String] = {
+    * deeper selectors' choices fill the nested-values column. With
+    * `streams`, a last column marks the choices a stream transform may be. */
+  private def section(bind: Binder, pinned: Map[String, String], sel: String,
+                      streams: Option[String => Option[Seq[String]]] = None): Seq[String] = {
     val r = Params.record(pinned)(bind)
     val s = r.selectors.find(_.path == sel).get
     val level = sel.substring(0, sel.lastIndexOf('.') + 1)
@@ -60,10 +63,16 @@ object OpsDoc {
       val (keys, sels) = explore(bind, pinned + (sel -> c))
       val nested = sels.filterNot(_.path == sel).flatMap(_.choices).distinct
       s"| `$c` | ${renderAll(keys.filter(k => own(k) && !prelude.exists(_.path == k.path)), level)} | " +
-        s"${nested.mkString(", ")} |"
+        s"${nested.mkString(", ")} |" + streams.fold("")(st => s" ${streamMark(st(c))} |")
     }
     Seq(if (prelude.isEmpty) "" else s"Common keys: ${renderAll(prelude, level)}\n",
-      s"| `$sel` | keys (defaults) | nested values |", "|---|---|---|").filter(_.nonEmpty) ++ rows
+      s"| `$sel` | keys (defaults) | nested values |" + streams.fold("")(_ => " stream |"),
+      "|---|---|---|" + streams.fold("")(_ => "---|")).filter(_.nonEmpty) ++ rows
+  }
+
+  private def streamMark(batchOnly: Option[Seq[String]]): String = batchOnly.fold("") {
+    case Nil  => "yes"
+    case keys => s"yes, without ${keys.map(k => s"`$k`").mkString(", ")}"
   }
 
   def generate(): String = {
@@ -102,19 +111,23 @@ object OpsDoc {
       val r = Params.record(Map("type" -> t))(op)
       val inner = r.selectors.find(_.path != "type")
       val keys = r.keys.take(inner.fold(r.keys.size)(_.at)).filter(_.path != "type").toSeq
-      (t, keys, inner.map(s => (s, section(op, Map("type" -> t), s.path))))
+      // a family with a streamable operation marks it in a last column
+      val streams = Some((c: String) => PipelineConfig.streamable.get(s"$t/$c"))
+        .filter(_ => PipelineConfig.streamable.keys.exists(_.startsWith(s"$t/")))
+      (t, keys, inner.map(s => (s, section(op, Map("type" -> t), s.path, streams))))
     }
     val firstWith = typed.collect { case (t, _, Some((_, table))) => table -> t }
       .groupBy(_._1).map { case (table, ts) => table -> ts.head._2 }
     out ++= "\n## `operations:` types (PipelineConfig.parseOp)\n\n"
-    out ++= "An op's keys sit next to `type:` or under `params:`, not both.\n\n"
-    out ++= "| type | keys (defaults) | dispatch |\n|---|---|---|\n"
+    out ++= "An op's keys sit next to `type:` or under `params:`, not both. The ops\n"
+    out ++= "marked `stream` may also be stream `transforms:` entries.\n\n"
+    out ++= "| type | keys (defaults) | dispatch | stream |\n|---|---|---|---|\n"
     typed.foreach { case (t, keys, inner) =>
       val dispatch = inner.fold("") { case (s, table) =>
         val owner = firstWith(table)
         if (owner == t) s"`${s.path}:` (section below)" else s"as `$owner`"
       }
-      out ++= s"| `$t` | ${renderAll(keys)} | $dispatch |\n"
+      out ++= s"| `$t` | ${renderAll(keys)} | $dispatch | ${streamMark(PipelineConfig.streamable.get(t))} |\n"
     }
     typed.foreach {
       case (t, _, Some((s, table))) if firstWith(table) == t =>
@@ -125,14 +138,16 @@ object OpsDoc {
 
     out ++= "\n## Stream pipelines (StreamPipeline.fromYaml)\n\n"
     out ++= "Top level: `name`, `stream_source` (required), `transforms[]`, `window`,\n"
-    out ++= "`sink`, `monitoring`, `attrition`. A batch-only op under `transforms:`\n"
-    out ++= "is rejected. `sink.output_mode` defaults to `update` under a tumbling or\n"
-    out ++= "sliding window and to `append` otherwise.\n\n"
+    out ++= "`sink`, `monitoring`, `attrition`. A `transforms:` entry is an op from the\n"
+    out ++= "tables above, with the same `type`, `operation` and keys; only the ops\n"
+    out ++= "marked `stream` are accepted, and not with the keys a mark excludes (a\n"
+    out ++= "stream has no table catalog, fits no model and keeps no key order).\n"
+    out ++= "`sink.output_mode` defaults to `update` under a tumbling or sliding\n"
+    out ++= "window and to `append` otherwise.\n\n"
     out ++= s"`monitoring`: ${keysOf(StreamPipeline.monitoring(_, None))}\n\n"
     out ++= s"`attrition`: ${keysOf(StreamPipeline.attrition)}\n\n"
     Seq[(String, Binder)](
       "stream_source" -> StreamPipeline.source,
-      "transforms[]" -> StreamPipeline.transform,
       "window" -> StreamPipeline.window,
       "sink" -> (StreamPipeline.sink(_, "<name>", "append"))).foreach { case (name, bind) =>
       out ++= s"### `$name` (`type:` dispatch)\n\n"
@@ -142,7 +157,7 @@ object OpsDoc {
     out ++= "## Model envelopes\n\n"
     out ++= "`semantic_gate` without `model_path` fits on `accepted_table` (never the\n"
     out ++= "incoming frame) and `save_model_path` keeps the model for batch replay\n"
-    out ++= "and the stream gate; its size bounds (`max_reps`, `SemGate.MaxModelElems`)\n"
+    out ++= "and the stream; its size bounds (`max_reps`, `SemGate.MaxModelElems`)\n"
     out ++= "are in graft.vec.SemGate's scaladoc.\n"
     out.toString
   }

@@ -24,9 +24,8 @@ class OpsDocSpec extends AnyFunSuite {
   }
 
   test("gopher_rules and gopher_filter accept identical thresholds (anti-divergence pin)") {
-    // one binder (OpCompiler.gopher) reads the thresholds for all three
-    // ops; this pin keeps it that way — the stream gate names its text and
-    // language keys *_field, everything else must match the batch pair
+    // one binder (OpCompiler.gopher) reads the thresholds for both ops
+    // (gopher_filter is also the stream gate); this pin keeps it that way
     def paramsOf(op: String): String = {
       val row = generated.linesIterator.find(_.startsWith(s"| `$op` |"))
         .getOrElse(fail(s"no generated row for $op"))
@@ -34,8 +33,6 @@ class OpsDocSpec extends AnyFunSuite {
     }
     assert(paramsOf("gopher_rules") == paramsOf("gopher_filter"),
       s"threshold param lists diverged:\n rules:  ${paramsOf("gopher_rules")}\n filter: ${paramsOf("gopher_filter")}")
-    assert(paramsOf("gopher_gate").replace("_field", "_column") == paramsOf("gopher_rules"),
-      s"stream gate diverged:\n gate:  ${paramsOf("gopher_gate")}\n rules: ${paramsOf("gopher_rules")}")
   }
 
   test("extraction sees the real dispatch surface (blind-regex control)") {
@@ -52,9 +49,11 @@ class OpsDocSpec extends AnyFunSuite {
     assert(generated.contains("| `cdc_apply` | `changes_table`"), "scd2 rows")
     assert(generated.contains("| `zorder_key` |"), "layout rows")
     assert(generated.contains("| `alerts` | `at_epoch=0`"), "quality_monitor rows")
-    // stream sections: source, transforms, window, sink
+    // stream sections: source, window, sink; stream transforms are the
+    // op rows marked `stream`
     assert(generated.contains("| `kafka` | `servers`"), "stream source rows")
-    assert(generated.contains("| `neardup_gate` | `model_path`"), "stream transform rows")
+    assert(generated.contains("| `neardup_bloom_apply` | `text_column=text`, `model_path` |  | yes |"),
+      "streamable op rows")
     assert(generated.contains("| `session` | `gap=30 minutes`"), "stream window rows")
     assert(generated.contains("| `neardup_ingest_kv` | `model_dir`"), "stream sink rows")
     // the generated op count stays in the right order of magnitude — a

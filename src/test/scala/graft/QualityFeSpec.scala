@@ -821,6 +821,19 @@ class QualityFeSpec extends SparkSpec {
     pairs.foreach(p => assert(p._3 <= 3))
   }
 
+  test("imageNearDupPairs caches nothing: repeated calls leave executor storage as it was") {
+    val imgs = (1L to 6L).map(i => (i, Multimodal.syntheticPng2(i, 24, 16))) :+
+      ((7L, Multimodal.syntheticPng2(1L, 24, 16)))  // duplicate of id 1
+    val hashed = Multimodal.imageDHash(imgs.toDF("id", "payload"), "payload")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    (1 to 3).foreach { call =>
+      val pairs = Multimodal.imageNearDupPairs(hashed, "id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(pairs.contains((1L, 7L)), s"call $call: planted duplicate must pair")
+      assert(spark.sparkContext.getPersistentRDDs.size == before,
+        s"call $call left ${spark.sparkContext.getPersistentRDDs.size - before} persisted RDD(s) behind")
+    }
+  }
+
   test("chiSquare: hand-computed 2x2, perfect independence, degenerate single category") {
     // counts [[10, 20], [20, 40]] — exactly proportional rows → chi2 = 0
     val indep = (Seq.fill(10)(("a", "x")) ++ Seq.fill(20)(("a", "y")) ++

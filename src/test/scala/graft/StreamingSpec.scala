@@ -489,8 +489,8 @@ class StreamingSpec extends SparkSpec {
       s"""name: gated_ingest
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, lang STRING, text STRING" }
          |transforms:
-         |  - { type: ppl_gate, model_path: "$modelDir/ppl", max_bucket: 1 }
-         |  - { type: dsir_gate, model_path: "$modelDir/dsir", min_log_weight: 0.0 }
+         |  - { type: text_processing, operation: ppl_apply, model_path: "$modelDir/ppl", max_bucket: 1 }
+         |  - { type: text_processing, operation: dsir_apply, model_path: "$modelDir/dsir", min_log_weight: 0.0 }
          |sink: { type: memory, name: gated_ingest_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
       s"""name: gopher_ingest
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, text STRING" }
          |transforms:
-         |  - { type: gopher_gate, min_words: 50, max_symbol_ratio: 0.2 }
+         |  - { type: text_processing, operation: gopher_filter, min_words: 50, max_symbol_ratio: 0.2 }
          |sink: { type: memory, name: gopher_ingest_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -629,7 +629,7 @@ class StreamingSpec extends SparkSpec {
       s"""name: seen_ingest
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, text STRING" }
          |transforms:
-         |  - { type: seen_gate, bloom_path: "$modelDir/bloom" }
+         |  - { type: text_processing, operation: seen_corpus_apply, bloom_path: "$modelDir/bloom", drop: true }
          |sink: { type: memory, name: seen_ingest_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -670,7 +670,7 @@ class StreamingSpec extends SparkSpec {
       s"""name: neardup_ingest
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, text STRING" }
          |transforms:
-         |  - { type: neardup_gate, model_path: "$modelDir/ndbloom" }
+         |  - { type: text_processing, operation: neardup_bloom_apply, model_path: "$modelDir/ndbloom" }
          |sink: { type: memory, name: neardup_ingest_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -722,7 +722,7 @@ class StreamingSpec extends SparkSpec {
       s"""name: sem_gate
          |stream_source: { type: file, path: "$dir", format: json, schema: "vec_id BIGINT, embedding ARRAY<FLOAT>" }
          |transforms:
-         |  - { type: semantic_gate, model_path: "$modelDir/sg", threshold: "0.9" }
+         |  - { type: text_processing, operation: semantic_gate, model_path: "$modelDir/sg", threshold: "0.9", drop: true }
          |sink: { type: memory, name: sem_gate_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -763,7 +763,7 @@ class StreamingSpec extends SparkSpec {
       s"""name: langid_ingest
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, text STRING" }
          |transforms:
-         |  - { type: langid_gate, model_path: "$modelDir/langid", keep_langs: en }
+         |  - { type: text_processing, operation: lang_id_apply, model_path: "$modelDir/langid", keep_langs: en }
          |sink: { type: memory, name: langid_ingest_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -798,12 +798,12 @@ class StreamingSpec extends SparkSpec {
       """{"doc_id":701,"text":"the cat and the dog have been to the house of the children and that was good to see"}
         |{"doc_id":702,"text":"der Hund und die Katze spielen mit den Kindern in dem Garten und das Wetter ist schoen"}""".stripMargin)
     def yaml(langAware: Boolean, sinkName: String) = {
-      val langField = if (langAware) ", lang_field: lang_pred" else ""
+      val langField = if (langAware) ", lang_column: lang_pred" else ""
       s"""name: ml_gopher
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, text STRING" }
          |transforms:
-         |  - { type: langid_gate, model_path: "$modelDir/langid" }
-         |  - { type: gopher_gate, min_words: 5, min_mean_word_len: 2.5$langField }
+         |  - { type: text_processing, operation: lang_id_apply, model_path: "$modelDir/langid" }
+         |  - { type: text_processing, operation: gopher_filter, min_words: 5, min_mean_word_len: 2.5$langField }
          |sink: { type: memory, name: $sinkName, output_mode: append }
          |""".stripMargin
     }
@@ -847,8 +847,8 @@ class StreamingSpec extends SparkSpec {
       s"""name: unimax_ingest
          |stream_source: { type: file, path: "$dir", format: json, schema: "doc_id BIGINT, lang STRING, text STRING" }
          |transforms:
-         |  - { type: dedup_lines }
-         |  - { type: unimax_gate, allocation_path: "$modelDir/alloc", group_field: lang, key_field: doc_id }
+         |  - { type: text_processing, operation: dedup_lines }
+         |  - { type: text_processing, operation: unimax_apply, allocation_path: "$modelDir/alloc", group_column: lang, key_column: doc_id }
          |sink: { type: memory, name: unimax_ingest_out, output_mode: append }
          |""".stripMargin
     val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
@@ -860,6 +860,109 @@ class StreamingSpec extends SparkSpec {
         s"en ×1, de ×2, unknown lang dropped: ${out.toSeq}")
       assert(out.head._2 == "alpha\nbeta", s"dedup_lines rewrote the streamed text: ${out.head}")
     } finally q.stop()
+  }
+
+  test("stream ≡ batch: each streamable text_processing op keeps the same rows under transforms: and operations:") {
+    // one entry, two runs: under operations: over a static frame through
+    // Pipeline, and under transforms: over a file stream of the same rows.
+    // The frozen models are fitted as the gate tests above fit them.
+    import spark.implicits._
+    import java.nio.file.Files
+    val models = Files.createTempDirectory("graft_parity_models").toString
+    val tok = (0 until 10).map(j => s"tok${j % 7}").mkString(" ")
+    val junk = (0 until 10).map(j => s"junk$j").mkString(" ")
+    graft.text.TextLib.savePplModel(spark, graft.text.TextLib.pplFit(
+      ((1L to 20L).map(i => (i, "en", tok)) ++ (21L to 40L).map(i => (i, "en", junk))).toDF("doc_id", "lang", "text"),
+      "text", "doc_id", Seq("lang"), nBuckets = 2), s"$models/ppl")
+    // a unigram-only DSIR model: the stream must score it with gram_orders [1] too
+    graft.text.Dsir.saveModel(spark, graft.text.Dsir.fitHashed(
+      ((1L to 2L).map(i => (i, tok)) ++ (3L to 40L).map(i => (i, junk))).toDF("doc_id", "text"),
+      (1L to 20L).map(i => (i, tok)).toDF("tid", "text"), "text", ns = Seq(1), buckets = 1 << 12), s"$models/dsir")
+    graft.text.TextLib.saveLangIdModel(spark, graft.text.TextLib.langIdFit(Seq(
+      (1L, "en", "the cat is on the table and it was not happy with this situation"),
+      (2L, "en", "there is a house in the town where the children play with their friends"),
+      (3L, "de", "der Hund ist nicht mit der Katze auf den Tisch und das Haus ist schoen"),
+      (4L, "de", "die Kinder spielen in dem Garten und sie haben einen schoenen Tag")
+    ).toDF("doc_id", "lang", "text"), "text", "lang"), s"$models/langid")
+    val accepted = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank today"),
+      (2L, "completely different content about catalyst internals and codegen stages here")
+    ).toDF("doc_id", "text")
+    graft.text.Dedup.saveSeenBloom(spark,
+      graft.text.Dedup.seenCorpusFit(accepted, "text", fpp = 0.001), s"$models/bloom")
+    graft.text.Dedup.saveNeardupBloom(spark,
+      graft.text.Dedup.neardupBloomFit(accepted, "text", fpp = 0.001), s"$models/ndbloom")
+    graft.vec.SemGate.saveSemGate(spark, graft.vec.SemGate.semGateFit(Seq(
+      (1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0.95f, 0.3f, 0f, 0f)),
+      (10L, Seq(0f, 1f, 0f, 0f)), (11L, Seq(0f, 0.95f, 0.3f, 0f))
+    ).toDF("vec_id", "embedding"), "vec_id", "embedding",
+      centroids = Array(Array(1.0, 0, 0, 0), Array(0.0, 1, 0, 0))), s"$models/sg")
+    graft.ops.Scale.unimaxAllocation(
+      ((1L to 8L).map(i => (i, "en", 10L)) ++ Seq((9L, "de", 10L), (10L, "de", 10L)))
+        .toDF("doc_id", "lang", "n_chars"),
+      "lang", "n_chars", budget = 120L, maxEpochs = 2.0).write.mode("overwrite").parquet(s"$models/alloc")
+
+    val clean = Array.fill(4)(
+      "the quick brown fox jumps over that lazy dog with vigor and grace to be of sound mind").mkString(" ")
+    val docs = Seq(
+      (101L, "en", tok), (102L, "en", tok), (103L, "en", junk),
+      (201L, "en", "the dog was in the house with the cat and the children"),
+      (202L, "de", "der Garten und das Haus sind schoen und die Kinder spielen"),
+      (301L, "en", "THE QUICK   BROWN fox jumps over the lazy dog near the river bank today"),
+      (302L, "en", "the quick brown fox jumps over the lazy dog near the river bank"),
+      (303L, "en", "zxqv901 plumbus901 vortkel901 grumbo901 blit901 snarfle901 quxx901"),
+      (401L, "en", clean), (402L, "en", s"$clean ${"# " * 12}"), (403L, "en", "too short to pass"),
+      (501L, "en", "alpha\nalpha\nbeta"), (502L, "de", "gamma"), (503L, "xx", "dropped")
+    ).toDF("doc_id", "lang", "text")
+    val vecs = Seq((901L, Seq(0.99f, 0.1f, 0f, 0f)), (902L, Seq(0f, 0.99f, 0.12f, 0f)),
+      (903L, Seq(0f, 0f, 1f, 0f)), (904L, Seq(1f, 0f))).toDF("vec_id", "embedding")
+    val docsDdl = "doc_id BIGINT, lang STRING, text STRING"
+    val vecsDdl = "vec_id BIGINT, embedding ARRAY<FLOAT>"
+    def op(rest: String) = s"{ type: text_processing, operation: $rest }"
+    // (entry, input, its DDL, the survivors' projection compared as a multiset)
+    val rows = Seq(
+      (op(s"""ppl_apply, model_path: "$models/ppl", max_bucket: 1"""), docs, docsDdl, "doc_id"),
+      (op(s"""dsir_apply, model_path: "$models/dsir", gram_orders: [1], min_log_weight: 0.0"""),
+        docs, docsDdl, "doc_id"),
+      (op(s"""lang_id_apply, model_path: "$models/langid", keep_langs: en"""), docs, docsDdl, "doc_id"),
+      (op(s"""seen_corpus_apply, bloom_path: "$models/bloom", drop: true"""), docs, docsDdl, "doc_id"),
+      (op(s"""neardup_bloom_apply, model_path: "$models/ndbloom""""), docs, docsDdl, "doc_id"),
+      (op(s"""semantic_gate, model_path: "$models/sg", threshold: 0.9, drop: true"""), vecs, vecsDdl, "vec_id"),
+      (op("gopher_filter, min_words: 50, max_symbol_ratio: 0.2"), docs, docsDdl, "doc_id"),
+      (op(s"""unimax_apply, allocation_path: "$models/alloc", group_column: lang, key_column: doc_id"""),
+        docs, docsDdl, "concat(doc_id, '/', epoch)"),
+      (op("dedup_lines"), docs, docsDdl, "concat(doc_id, '/', text)"),
+      // which rows fill a group's quota differs (top-k by key vs first
+      // come); how many rows each group keeps does not
+      (op("quota_per_group, group_column: lang, quota: 2"), docs, docsDdl, "lang"))
+    rows.zipWithIndex.foreach { case ((entry, input, ddl, proj), i) =>
+      val dir = Files.createTempDirectory(s"graft_parity_$i").toString
+      input.write.json(s"$dir/in")
+      input.write.parquet(s"$dir/static")
+      val batch = graft.core.Pipeline.execute(spark, graft.core.Pipeline.fromYaml(
+        s"""name: parity_batch_$i
+           |source: { type: parquet, path: "$dir/static" }
+           |operations:
+           |  - $entry
+           |storage: { type: parquet, path: "$dir/out" }
+           |""".stripMargin))
+      assert(batch.status == "success", s"$entry: ${batch.errors.mkString("; ")}")
+      val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(
+        s"""name: parity_stream_$i
+           |stream_source: { type: file, path: "$dir/in", format: json, schema: "$ddl" }
+           |transforms:
+           |  - $entry
+           |sink: { type: memory, name: parity_out_$i, output_mode: append }
+           |""".stripMargin))
+      val streamed = try {
+        q.processAllAvailable()
+        spark.table(s"parity_out_$i").selectExpr(s"cast($proj as string)").as[String].collect().sorted.toSeq
+      } finally q.stop()
+      val batched = spark.read.parquet(s"$dir/out").selectExpr(s"cast($proj as string)").as[String]
+        .collect().sorted.toSeq
+      assert(batched.nonEmpty, s"$entry kept nothing: the row shows nothing")
+      assert(streamed == batched, s"$entry: stream kept $streamed, batch kept $batched")
+    }
   }
 
   test("atomic KV append: crash before the atomic EXEC leaves NOTHING; committed replay is skipped (round 10)") {
@@ -926,10 +1029,9 @@ class StreamingSpec extends SparkSpec {
   test("record transforms and filters work on streaming frames") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
-    val transformed = StreamOps.filterGreaterThan(
-      StreamOps.calculateField(
-        StreamOps.renameField(input.toDF(), "v", "value"), "doubled", "value * 2"),
-      "doubled", 5.0)
+    import graft.core.OpSpec._
+    val transformed = graft.core.OpCompiler.compile(Seq(Rename(Map("v" -> "value")),
+      Calculate("doubled", "value * 2"), FilterColumn("doubled", ">", 5.0)))(input.toDF())
     val q = StreamOps.runToMemory(transformed, "rec")
     try {
       input.addData(Ev(t("2024-01-01 00:00:00"), "a", 1.0), Ev(t("2024-01-01 00:00:01"), "b", 4.0))

@@ -44,11 +44,22 @@ class StrictConfigSpec extends AnyFunSuite {
       "source.options", "heder"),
     ("jdbc source without url", "name: strict\nsource: { type: jdbc, path: t, options: { user: u } }\n",
       false, "source.options", "url"),
-    ("stream transform typo", streamHead +
-      "transforms:\n  - { type: filter, condition: \"v > 0\" }\n  - { type: gopher_gate, min_wordz: 3 }\n",
+    ("stream transform typo", streamHead + "transforms:\n  - { type: filter, condition: \"v > 0\" }\n" +
+      "  - { type: text_processing, operation: gopher_filter, min_wordz: 3 }\n",
       true, "transforms[1]", "min_wordz"),
-    ("batch-only op under transforms", streamHead +
-      "transforms:\n  - { type: near_dedup, threshold: 0.8 }\n", true, "transforms[0]", "near_dedup"))
+    ("whole-input text op under transforms", streamHead +
+      "transforms:\n  - { type: text_processing, operation: near_dedup }\n", true, "transforms[0]", "near_dedup"),
+    ("join under transforms (a stream has no catalog)", streamHead +
+      "transforms:\n  - { type: join, right_table: dim, using: [v] }\n", true, "transforms[0]", "join"),
+    ("semantic_gate without model_path under transforms", streamHead +
+      "transforms:\n  - { type: text_processing, operation: semantic_gate, accepted_table: accepted }\n",
+      true, "transforms[0]", "accepted_table"),
+    ("batch-only quota key under transforms (the stream keeps first-come rows)", streamHead +
+      "transforms:\n  - { type: text_processing, operation: quota_per_group, group_column: g, quota: 2, " +
+      "key_column: v }\n", true, "transforms[0]", "key_column"),
+    ("fit-only semantic_gate key under transforms", streamHead +
+      "transforms:\n  - { type: text_processing, operation: semantic_gate, model_path: /m, n_cells: 8 }\n",
+      true, "transforms[0]", "n_cells"))
 
   test("config errors are rejected at fromYaml, naming the index and the key") {
     rejected.foreach { case (name, yaml, stream, where, key) =>
@@ -68,7 +79,8 @@ class StrictConfigSpec extends AnyFunSuite {
     assert(Pipeline.fromYaml("name: strict\nsource: { type: jdbc, path: t, options: { url: \"jdbc:x\", user: u } }\n")
       .sources.map(_.typ) == Seq("jdbc"))
     assert(StreamPipeline.fromYaml(streamHead +
-      "transforms:\n  - { type: gopher_gate, min_words: 3 }\n").transforms.map(_._1) == Seq("gopher_gate"))
+      "transforms:\n  - { type: text_processing, operation: gopher_filter, min_words: 3 }\n")
+      .transforms.map(_._1) == Seq("text_processing/gopher_filter"))
   }
 
   test("every examples/*.yaml and perfbench/pipelines/*.yaml parses") {
