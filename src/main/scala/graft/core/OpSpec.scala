@@ -937,27 +937,26 @@ object OpCompiler {
     val exps = if (listed.nonEmpty) listed else flat.map(_ -> flatMin).toSeq
     // No persist: caching here would pin a cache entry for the session's
     // lifetime (nothing downstream can know to unpersist it). The price is
-    // one extra upstream computation when the pipeline later materializes —
-    // same trade Pipeline.execute's validation stage makes; callers who
-    // want reuse should persist upstream explicitly.
+    // one extra upstream computation when the pipeline later materializes
+    // (Pipeline.execute, which owns its result's lifetime, persists it
+    // before its own validation aggregate instead); callers who want reuse
+    // should persist upstream explicitly.
     (df, _) => {
-      passRatios(df, exps.map(_._1)).zip(exps).foreach { case (ratio, (e, minR)) =>
+      passRatios(df, exps.map(_._1))._2.zip(exps).foreach { case (ratio, (e, minR)) =>
         require(ratio >= minR, f"validation failed: '$e' pass ratio $ratio%.4f < $minR")
       }
       df
     }
   }
 
-  /** The share of rows satisfying each SQL expression, in one aggregate
-    * pass (1.0 over an empty frame; no pass for no expressions). */
-  def passRatios(df: DataFrame, exprs: Seq[String]): Seq[Double] =
-    if (exprs.isEmpty) Nil
-    else {
-      import org.apache.spark.sql.functions.{avg, expr, when}
-      val aggs = exprs.zipWithIndex.map { case (e, i) => avg(when(expr(e), 1.0).otherwise(0.0)).as(s"r$i") }
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      exprs.indices.map(i => if (row.isNullAt(i)) 1.0 else row.getDouble(i))
-    }
+  /** The row count and the share of rows satisfying each SQL expression,
+    * in one aggregate pass (ratio 1.0 over an empty frame). */
+  def passRatios(df: DataFrame, exprs: Seq[String]): (Long, Seq[Double]) = {
+    import org.apache.spark.sql.functions.{avg, count, expr, lit, when}
+    val ratios = exprs.zipWithIndex.map { case (e, i) => avg(when(expr(e), 1.0).otherwise(0.0)).as(s"r$i") }
+    val row = df.agg(count(lit(1)).as("n"), ratios: _*).collect()(0)
+    (row.getLong(0), exprs.indices.map(i => if (row.isNullAt(i + 1)) 1.0 else row.getDouble(i + 1)))
+  }
 
   /** multimodal op (graft.multimodal.Multimodal): wrap binary payloads;
     * REAL ImageIO decode/resize/dHash, WAV decode/trim (AudioSystem) and GIF

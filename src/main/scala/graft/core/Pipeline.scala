@@ -16,8 +16,8 @@ object Pipeline {
       validation: Map[String, Double],
       errors: Seq[String],
       // per-stage rows/weight in-out when the YAML declared an `attrition:`
-      // block (round 11) — populated from observe() metrics, zero extra
-      // corpus passes
+      // block (round 11) — populated from observe() metrics that ride the
+      // run's one validation/count aggregate
       attrition: Seq[OpCompiler.StageAttrition] = Nil)
 
   def fromYaml(yaml: String): PipelineConfig.PipelineConf = PipelineConfig.fromYaml(yaml)
@@ -55,7 +55,7 @@ object Pipeline {
   def execute(spark: SparkSession, conf: PipelineConfig.PipelineConf,
               plog: Option[StructuredLog.PipelineLogger]): Result = {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // frames persisted by `cache` ops and by the storage stage — unpersisted
+    // frames persisted by `cache` ops and the result a sink reads — unpersisted
     // when the run ends (success, validation failure, or crash): an in-run
     // cache must not squat in executor storage after its pipeline is gone
     val caches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
@@ -81,11 +81,9 @@ object Pipeline {
         case None =>
           OpCompiler.compile(conf.operations, catalog, caches)(primary)
       }
-      // observe() metrics ride the run's own validation/storage actions —
-      // zero extra passes; a run with neither gets one cheap noop drive
-      def attritionReport(actionRan: Boolean): Seq[OpCompiler.StageAttrition] =
+      // the observe() metrics ride the run's one aggregate below
+      def attritionReport(): Seq[OpCompiler.StageAttrition] =
         attrition.map { rep =>
-          if (!actionRan) processed.write.format("noop").mode("overwrite").save()
           val report = rep()
           conf.attrition.flatMap(_.reportPath).foreach { rp =>
             import spark.implicits._
@@ -100,8 +98,18 @@ object Pipeline {
       plog.foreach(_.endStep("process"))
       stage = "validate"
 
-      // validation stage (pipeline.py:234-256): one aggregate pass
-      val ratios = OpCompiler.passRatios(processed, conf.expectations.map(_.expression))
+      // validation stage (pipeline.py:234-256): ONE aggregate over the
+      // result counts its rows, computes every expectation's pass ratio and
+      // fires the attrition observe nodes. With a sink, the result is
+      // persisted first, so that aggregate also fills the cache the sink
+      // and the catalog then read: each row is processed once, and
+      // validation describes exactly the rows written. A run with no sink,
+      // no expectations and no attrition block runs no action.
+      if (conf.storage.nonEmpty) caches += processed.persist()
+      val (counted, ratios) =
+        if (conf.storage.isEmpty && conf.expectations.isEmpty && attrition.isEmpty) (0L, Nil)
+        else OpCompiler.passRatios(processed, conf.expectations.map(_.expression))
+      val rows = conf.storage.fold(-1L)(_ => counted)
       // check by INDEX: the name-keyed report map collapses duplicate names
       // (last wins), and checking through it would let a failing expectation
       // hide behind a passing namesake
@@ -118,59 +126,52 @@ object Pipeline {
       }
       if (failed.nonEmpty) {
         plog.foreach(_.endPipeline("validation_failed"))
-        // the validation aggregate WAS an action, so the attrition metrics
-        // fired — a failing run's drop profile is exactly when the report
-        // matters most
+        // the validation aggregate fired the attrition metrics — a failing
+        // run's drop profile is exactly when the report matters most
         return Result(conf.name, "validation_failed", 0L,
           validation, failed.map(e => s"expectation '${e.name}' below min_ratio"),
-          attritionReport(actionRan = true))
+          attritionReport())
       }
 
-      // storage stage
+      // storage stage: the sink and the catalog read the persisted result
+      // the validation aggregate counted
       stage = "store"
       val storeT0 = System.currentTimeMillis()
-      val rows = conf.storage match {
-        case Some(st) =>
-          val counted = processed.persist()
-          caches += counted
-          val n = counted.count()
-          st.write(counted)
-          // storage.options.catalog_dir: register the written dataset into
-          // the DataCatalog (utils/data_catalog.py parity — the reference
-          // catalogs its DB tables; graft catalogs the written dataset).
-          // The analysis runs over the still-persisted frame — one cheap
-          // aggregate; catalog_table/catalog_tags override the defaults.
-          val table = st.catalogTable.getOrElse(conf.name)
-          st.catalogDir.foreach { catDir =>
-            val cat = new DataCatalog(catDir)
-            cat.registerTable(counted,
-              table = table,
-              description = Some(s"output of pipeline '${conf.name}'"),
-              tags = st.catalogTags,
-              path = if (st.typ == "jdbc" || st.typ == "noop") None else Some(st.path))
-            plog.foreach(_.logger.logDataLineage(
-              conf.sources.map(_.table).mkString(","), table, "pipeline", conf.name))
-          }
-          // storage.options.lineage_dir: persist the cross-run lineage
-          // edges (lineage_tracker.py parity — every source table → the
-          // written table, attributed to this pipeline)
-          st.lineageDir.foreach { ld =>
-            new LineageTracker(ld).trackTransformation(
-              conf.sources.map(_.table),
-              table,
-              "pipeline", conf.name,
-              Map("storage_type" -> st.typ, "path" -> st.path))
-          }
-          n
-        case None => -1L
+      conf.storage.foreach { st =>
+        st.write(processed)
+        // storage.options.catalog_dir: register the written dataset into
+        // the DataCatalog (utils/data_catalog.py parity — the reference
+        // catalogs its DB tables; graft catalogs the written dataset).
+        // The analysis runs over the still-persisted frame — one cheap
+        // aggregate; catalog_table/catalog_tags override the defaults.
+        val table = st.catalogTable.getOrElse(conf.name)
+        st.catalogDir.foreach { catDir =>
+          val cat = new DataCatalog(catDir)
+          cat.registerTable(processed,
+            table = table,
+            description = Some(s"output of pipeline '${conf.name}'"),
+            tags = st.catalogTags,
+            path = if (st.typ == "jdbc" || st.typ == "noop") None else Some(st.path))
+          plog.foreach(_.logger.logDataLineage(
+            conf.sources.map(_.table).mkString(","), table, "pipeline", conf.name))
+        }
+        // storage.options.lineage_dir: persist the cross-run lineage
+        // edges (lineage_tracker.py parity — every source table → the
+        // written table, attributed to this pipeline)
+        st.lineageDir.foreach { ld =>
+          new LineageTracker(ld).trackTransformation(
+            conf.sources.map(_.table),
+            table,
+            "pipeline", conf.name,
+            Map("storage_type" -> st.typ, "path" -> st.path))
+        }
       }
       plog.foreach { p =>
         conf.storage.foreach(st => p.logDataWrite(s"${st.typ}:${st.path}",
           math.max(rows, 0L), (System.currentTimeMillis() - storeT0) / 1000.0))
         p.endPipeline("success", recordsProcessed = math.max(rows, 0L))
       }
-      Result(conf.name, "success", rows, validation, errors.toSeq,
-        attritionReport(actionRan = conf.storage.nonEmpty || conf.expectations.nonEmpty))
+      Result(conf.name, "success", rows, validation, errors.toSeq, attritionReport())
     } catch {
       case t: Throwable =>
         errors += t.getMessage

@@ -50,6 +50,16 @@ object Sessions {
       // local disk, which costs far less than a dead query. No effect at
       // bench SFs (storage never nears the boundary there).
       .config("spark.memory.storageFraction", "0.3")
+      // Spark's default 100-entry codegen cache cannot hold one pipeline
+      // run, so a repeated run would recompile most of its generated
+      // classes (LRU thrash). Distinct classes per run, measured on 4
+      // cores: the perfbench curate recipe 129 (a warm run recompiled 114
+      // at the default), the full examples/training_data_pipeline.yaml 568
+      // (a warm run recompiles 13). 1000 holds the largest with headroom
+      // and stays bounded (0 would mean unbounded). The cache is JVM-wide
+      // and sized when CodeGenerator is first used: the first session
+      // configured in a JVM sets it for every later one.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.ui.enabled", "false")
 
   /** Local session sized for this container (local[32], 32 shuffle partitions). */

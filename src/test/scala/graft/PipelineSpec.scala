@@ -168,6 +168,107 @@ class PipelineSpec extends SparkSpec {
       s"storage frame leaked on failure: ${persisted -- before} still persisted")
   }
 
+  test("one run evaluates each processed row once: validation, row count and sink share one pass") {
+    val in = Files.createTempDirectory("graft_once_in").toString
+    writeCsv(in) // 4 rows, ages 30/25/35/25
+    val evals = spark.sparkContext.longAccumulator("graft_once_evals")
+    spark.udf.register("graft_once_bump", (s: String) => { evals.add(1); s })
+    // the last run has only the attrition block: its count aggregate fires
+    // the observe nodes and need not evaluate the transform at all
+    for ((expectations, sink) <- Seq((true, false), (false, true), (true, true), (false, false))) {
+      val out = Files.createTempDirectory("graft_once_out").toString + "/result"
+      val yaml =
+        s"""name: once_test
+           |source: { type: csv, path: "$in/*.csv", options: { header: true } }
+           |operations:
+           |  - type: transform
+           |    params: { calculated_columns: { tag: "graft_once_bump(name)" } }
+           |attrition: { weight_column: age }
+           |""".stripMargin +
+        (if (expectations) "validation: { expectations: [ { name: tagged, expression: \"tag IS NOT NULL\" } ] }\n"
+         else "") +
+        (if (sink) s"storage: { type: parquet, path: \"$out\", mode: overwrite }\n" else "")
+      evals.reset()
+      val res = Pipeline.execute(spark, Pipeline.fromYaml(yaml))
+      val what = s"expectations=$expectations sink=$sink"
+      assert(res.status == "success", s"$what: ${res.errors.mkString("; ")}")
+      if (expectations || sink) assert(evals.value == 4L, s"$what: the transform ran ${evals.value} times over 4 rows")
+      else assert(evals.value <= 4L, s"$what: the transform ran ${evals.value} times over 4 rows")
+      if (sink) assert(res.rowsWritten == spark.read.parquet(out).count(), what)
+      else assert(res.rowsWritten == -1L, what)
+      if (expectations) assert(res.validation == Map("tagged" -> 1.0), what)
+      assert(res.attrition == Seq(graft.core.OpCompiler.StageAttrition(
+        1, "Calculate", 4L, 4L, Some(115L), Some(115L))), s"$what: ${res.attrition}")
+    }
+  }
+
+  test("a repeated curate-shaped run compiles no new generated classes") {
+    // the perfbench curate recipe's first seven ops, its expectations,
+    // sink and attrition block over a 100-doc fixture; one run needs more
+    // distinct generated classes than Spark's default 100-entry codegen
+    // cache holds, so a cache that cannot hold a run recompiles ~100 of
+    // them on every run
+    val fixture = new java.io.File("src/test/resources/curate").getAbsolutePath
+    val out = Files.createTempDirectory("graft_warm_out").toString + "/curate"
+    val yaml =
+      s"""name: warm_curate
+         |source: { type: json, path: "$fixture/documents.jsonl", table: documents }
+         |sources:
+         |  - { type: json, path: "$fixture/blocklist.jsonl", table: blocklist }
+         |operations:
+         |  - type: transform
+         |    params: { calculated_columns: {
+         |        url: "concat('HTTPS://Crawl.', source, '.COM:443/item/', CAST(doc_id % 400 AS STRING), '?utm_campaign=x&ref=feed')" } }
+         |  - { type: text_processing, params: { operation: url_canonicalize, url_column: url } }
+         |  - { type: text_processing, params: { operation: url_dedup, url_column: url, id_column: doc_id } }
+         |  - type: text_processing
+         |    params: { operation: bloom_exclude, key_column: doc_id,
+         |              blocklist_table: blocklist, blocklist_key: bad_id, fpp: 0.01 }
+         |  - { type: text_processing, params: { operation: dedup_lines } }
+         |  - { type: text_processing, params: { operation: para_dedup, min_chars: 30 } }
+         |  - { type: filter, condition: "length(trim(text)) > 0" }
+         |validation:
+         |  expectations:
+         |    - { name: nonempty_text, expression: "length(text) > 0", min_ratio: 1.0 }
+         |    - { name: has_url, expression: "url_canonical IS NOT NULL", min_ratio: 1.0 }
+         |storage: { type: parquet, path: "$out", mode: overwrite }
+         |attrition: { weight_column: n_chars }
+         |""".stripMargin
+    val conf = Pipeline.fromYaml(yaml)
+    val first = Pipeline.execute(spark, conf)
+    assert(first.status == "success", first.errors.mkString("; "))
+    val compiled0 = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = Pipeline.execute(spark, conf)
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    assert(second.status == "success", second.errors.mkString("; "))
+    assert((second.rowsWritten, second.attrition) == (first.rowsWritten, first.attrition))
+    assert(compiled <= 5, s"the repeated run compiled $compiled generated classes")
+  }
+
+  test("a failed validation releases the persisted result, writes nothing and still reports attrition") {
+    val in = Files.createTempDirectory("graft_vfail_in").toString
+    val out = Files.createTempDirectory("graft_vfail_out").toString + "/never"
+    writeCsv(in) // ids 1-4, ages 30/25/35/25, spends 100/200/150/50
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    val res = Pipeline.execute(spark, Pipeline.fromYaml(
+      s"""name: vfail
+         |source: { type: csv, path: "$in/*.csv", options: { header: true } }
+         |operations:
+         |  - { type: filter, condition: "spend >= 100" }
+         |validation:
+         |  expectations:
+         |    - { name: impossible, expression: "spend > 1000", min_ratio: 0.5 }
+         |attrition: { weight_column: spend }
+         |storage: { type: parquet, path: "$out", mode: overwrite }
+         |""".stripMargin))
+    assert(res.status == "validation_failed", res.toString)
+    assert(persisted == before, s"the result stayed persisted: ${persisted -- before}")
+    assert(!new java.io.File(out).exists(), "a failed validation must write nothing")
+    assert(res.attrition.map(a => (a.rowsIn, a.rowsOut, a.weightIn, a.weightOut)) ==
+      Seq((4L, 3L, Some(500L), Some(450L))), res.attrition.toString)
+  }
+
   test("text_processing ops in a YAML pipeline: near-dedup then quality filter") {
     val in = Files.createTempDirectory("graft_txt").toString
     val out = Files.createTempDirectory("graft_txt_out").toString + "/clean"
