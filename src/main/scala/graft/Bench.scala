@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.RunProfile
+
 /** Per-round benchmark: runs the headline queries at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully evaluated via a noop-format
   * write (VERDICT r1: `.count()` lets Catalyst prune all columns and
@@ -15,8 +17,10 @@ import org.apache.spark.sql.SparkSession
   * round's whole perf signal (BENCH_r07.json `parsed: null`). The stdout
   * line is now ONLY `{metric,value,unit,queries,failed?,runs,
   * calibration_sec,sf,detail}` (~1 KB at 34 queries); everything
-  * diagnostic — adjudication figures, per-query GC, load averages, and the
-  * law-query ring — is written to a committed side file
+  * diagnostic — adjudication figures, per-query GC, load averages, the
+  * law-query ring, and each query's last measured run profile
+  * ([[graft.core.RunProfile]]: jobs, stages, tasks, shuffle, spill, phase
+  * times, rows per operator) — is written to a committed side file
   * (`bench_detail.json`, path overridable via SPARK_GRAFT_BENCH_DETAIL).
   * The stdout `queries` values are unchanged in meaning: the isolated truth
   * still wins when adjudication fires.
@@ -401,19 +405,26 @@ object Bench {
     /** One warmup + `runs` measured executions of `name` on `s`; returns
       * (median seconds if ALL runs green, mean GC sec per measured run,
       * system load average sampled right after the runs, code-cache MB +
-      * cumulative JIT ms sampled after the runs). */
-    def measure(s: SparkSession, name: String): (Option[Double], Double, Double, (Double, Long)) = {
+      * cumulative JIT ms sampled after the runs, the last measured run's
+      * profile). */
+    def measure(s: SparkSession, name: String)
+        : (Option[Double], Double, Double, (Double, Long), RunProfile.Summary) = {
       def run(): Unit = qs(name)(s, sfDir).write.format("noop").mode("overwrite").save()
       cleanSlate(s)
       try run() catch { case e: Throwable => System.err.println(s"[bench] $name warmup failed: ${e.getMessage}") }
       val gc0 = gcMillis()
+      var profile = RunProfile.empty
       val times = (1 to runs).flatMap { _ =>
         cleanSlate(s) // no inherited caches, checkpoints, or eviction debt
-        val t0 = System.nanoTime()
-        val ok = try { run(); true } catch {
-          case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+        val ((ok, sec), prof) = RunProfile.record(s) {
+          val t0 = System.nanoTime()
+          val ok = try { run(); true } catch {
+            case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+          }
+          (ok, (System.nanoTime() - t0) / 1e9)
         }
-        if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        profile = prof
+        if (ok) Some(sec) else None
       }
       val gcPerRun = (gcMillis() - gc0) / 1e3 / runs
       // a PARTIALLY failing query (some runs ok, some not) must be as loud as
@@ -422,20 +433,20 @@ object Bench {
       if (times.nonEmpty && times.size < runs)
         System.err.println(s"[bench] $name: only ${times.size}/$runs runs succeeded — reporting as failed")
       val median = if (times.size == runs) times.sorted.drop(times.size / 2).headOption else None
-      (median, gcPerRun, loadAvg(), jitState())
+      (median, gcPerRun, loadAvg(), jitState(), profile)
     }
 
     val measured = names.filter(qs.contains).map { name =>
-      val (median, gc, la, jit) = measure(spark, name)
-      (name, median, gc, la, jit)
+      val (median, gc, la, jit, prof) = measure(spark, name)
+      (name, median, gc, la, jit, prof)
     }
     // Law ring rides the same warmed session, after the headliners, and only
     // on a full (no-args) invocation — a dev subset run shouldn't pay for it.
     val lawMeasured =
       if (args.nonEmpty) Seq.empty
       else shuffled(lawRing, seed).filter(qs.contains).map { name =>
-        val (median, gc, la, jit) = measure(spark, name)
-        (name, median, gc, la, jit)
+        val (median, gc, la, jit, prof) = measure(spark, name)
+        (name, median, gc, la, jit, prof)
       }
     // Box-speed probe AFTER the suite too (round 10): the start probe is a
     // point sample — STRESS_r10's first cut carried 2-5× normalized
@@ -484,7 +495,7 @@ object Bench {
     val top5ByPrior = tightenedTriggerSet(prior, names)
     def baseTrigger(name: String): Double = if (top5ByPrior(name)) 1.25 else 1.5
     val suspects = measured.collect {
-      case (name, Some(suite), _, _, _) if suite >= noiseFloor &&
+      case (name, Some(suite), _, _, _, _) if suite >= noiseFloor &&
         prior.get(name).exists(p => p > 0 && suite > baseTrigger(name) * triggerScale * p) => name -> suite
     }
     /** (suite, isolated, prior, probeCpu, probeMem) per adjudicated query. */
@@ -506,7 +517,7 @@ object Bench {
         // probe pair into the side file, so the artifact itself says
         // whether the re-measure window was clean.
         val (isoMedian, probeCpu, probeMem) = try {
-          val (m, _, _, _) = measure(fresh, name)
+          val (m, _, _, _, _) = measure(fresh, name)
           (m, calibrate(fresh), calibrateMem(fresh))
         } finally { if (ownsSession) fresh.stop() }
         name -> (suite, isoMedian.getOrElse(suite), prior(name), probeCpu, probeMem)
@@ -517,20 +528,20 @@ object Bench {
     // emitted a plausible-looking zero-total success line)
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val js = graft.core.Json.str _
-    val good = measured.collect { case (k, Some(v), _, _, _) =>
+    val good = measured.collect { case (k, Some(v), _, _, _, _) =>
       k -> adjudicated.get(k).map(_._2).getOrElse(v) // isolated truth wins
     }
-    val failed = measured.collect { case (k, None, _, _, _) => js(k) } ++ unknown.map(js)
+    val failed = measured.collect { case (k, None, _, _, _, _) => js(k) } ++ unknown.map(js)
     val qJson = good.map { case (k, v) => js(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     val failedJson = if (failed.isEmpty) "" else s""","failed":[${failed.mkString(",")}]"""
 
     // Diagnostics go to the SIDE FILE, never the stdout line (VERDICT r7 #1).
     val all = measured ++ lawMeasured
-    val gcJson = all.collect { case (k, Some(_), gc, _, _) => js(k) + ":" + fmt(gc) }.mkString("{", ",", "}")
-    val laJson = all.collect { case (k, Some(_), _, la, _) => js(k) + ":" + fmt(la) }.mkString("{", ",", "}")
+    val gcJson = all.collect { case (k, Some(_), gc, _, _, _) => js(k) + ":" + fmt(gc) }.mkString("{", ",", "}")
+    val laJson = all.collect { case (k, Some(_), _, la, _, _) => js(k) + ":" + fmt(la) }.mkString("{", ",", "}")
     // JIT track (VERDICT r8 #4): code-cache MB + cumulative compile ms after
     // each query — the suite-context-penalty diagnosis data
-    val jitJson = all.collect { case (k, Some(_), _, _, (cc, cm)) =>
+    val jitJson = all.collect { case (k, Some(_), _, _, (cc, cm), _) =>
       js(k) + s""":{"code_cache_mb":${fmt(cc)},"compile_ms":$cm}"""
     }.mkString("{", ",", "}")
     val adjJson = adjudicated.toSeq.sortBy(_._1).map { case (k, (s, i, p, pc, pm)) =>
@@ -542,8 +553,8 @@ object Bench {
         s""""probes":{"cpu":${fmt(pc)},"mem":${fmt(pm)},""" +
         s""""cpu_vs_start":${rel(pc, calSec)},"mem_vs_start":${rel(pm, calMemSec)}}}"""
     }.mkString("{", ",", "}")
-    val lawJson = lawMeasured.collect { case (k, Some(v), _, _, _) => js(k) + ":" + fmt(v) }.mkString("{", ",", "}")
-    val lawFailed = lawMeasured.collect { case (k, None, _, _, _) => js(k) }
+    val lawJson = lawMeasured.collect { case (k, Some(v), _, _, _, _) => js(k) + ":" + fmt(v) }.mkString("{", ",", "}")
+    val lawFailed = lawMeasured.collect { case (k, None, _, _, _, _) => js(k) }
     val lawFailedJson = if (lawFailed.isEmpty) "" else s""","law_failed":[${lawFailed.mkString(",")}]"""
     val calJson = {
       def opt(v: Option[Double]) = v.map(fmt).getOrElse("null")
@@ -556,11 +567,14 @@ object Bench {
     // measurement order per query (round 14, VERDICT r13 #5): position
     // index in THIS run's shuffled suite — the data a position-parity
     // comparison needs
-    val orderJson = all.zipWithIndex.map { case ((k, _, _, _, _), i) =>
+    val orderJson = all.zipWithIndex.map { case ((k, _, _, _, _, _), i) =>
       js(k) + ":" + i
     }.mkString("{", ",", "}")
+    // per query, the last measured run's profile: jobs, stages, tasks,
+    // shuffle, spill, GC, phase times and rows per operator
+    val profileJson = all.map { case (k, _, _, _, _, prof) => js(k) + ":" + prof.toJson }.mkString("{", ",", "}")
     val detail =
-      s"""{"adjudicated":$adjJson,"law_ring":$lawJson$lawFailedJson,"calibration":$calJson,"gc_sec":$gcJson,"load_avg":$laJson,"jit":$jitJson,"order":$orderJson,"order_seed":$seed,"runs":$runs,"sf":${js(sfDir)}}"""
+      s"""{"adjudicated":$adjJson,"law_ring":$lawJson$lawFailedJson,"calibration":$calJson,"gc_sec":$gcJson,"load_avg":$laJson,"jit":$jitJson,"order":$orderJson,"order_seed":$seed,"runs":$runs,"sf":${js(sfDir)},"profile":$profileJson}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -88,7 +88,6 @@ object Cli {
         println(s"lineage : ${graft.core.Orchestration.lineageOf(conf).toJson}")
       } else {
         val spark = Sessions.local(appName = s"graft-${conf.name}")
-        val metrics = graft.core.Orchestration.installMetrics(spark)
         try {
           // structured JSON event log (structured_logging.py parity):
           // --log-file appends events there; default stderr (stdout stays
@@ -116,8 +115,7 @@ object Cli {
           // drop-rate dashboard on stderr (stdout stays the one JSON line)
           renderAttrition(res.attrition)
             .foreach(l => System.err.println(s"[attrition] $l"))
-          Thread.sleep(300) // listener delivery is async
-          System.err.println(f"[metrics] actions=${metrics.snapshot.size} totalMs=${metrics.totalDurationMs}%.1f")
+          System.err.println(s"[profile] ${res.profile.toJson}")
           System.err.println(s"[lineage] ${graft.core.Orchestration.lineageOf(conf).toJson}")
           if (res.status != "success") exit(1)
         } finally spark.stop()

@@ -124,10 +124,10 @@ object OpCompiler {
     * before the first op and after every op, so the per-stage in/out
     * counts ride the SAME action that executes the chain — zero extra
     * corpus passes, the `observe()` production shape. Returns the
-    * instrumented output frame and the [[Attrition]] report, valid after
-    * ONE action has executed on (a descendant of) that frame; the report
-    * is |ops| rows (stage, op, rows_in, rows_out, rows_dropped, weight_in,
-    * weight_out).
+    * instrumented output frame and the [[Attrition]] report, read from
+    * the [[RunProfile]] of a run in which an action executed (a descendant
+    * of) that frame; the report is |ops| rows (stage, op, rows_in,
+    * rows_out, rows_dropped, weight_in, weight_out).
     *
     * `weightCol` (e.g. tokens/chars) is summed as a long wherever the
     * column exists in the schema at that stage boundary — stages that drop
@@ -139,7 +139,7 @@ object OpCompiler {
       df: DataFrame): (DataFrame, Attrition) = {
     val prefix = s"graft_attrition_${java.util.UUID.randomUUID().toString.take(8)}_"
     val (out, hasWeight) = observeChain(df, ops, prefix, weightCol)(applyOp(_, _, tables, caches))
-    (out, new Attrition(df.sparkSession, prefix, ops.map(_.getClass.getSimpleName), hasWeight))
+    (out, new Attrition(prefix, ops.map(_.getClass.getSimpleName), hasWeight))
   }
 
   /** Thread named `observe` nodes `<prefix>0` .. `<prefix>n` through a
@@ -164,35 +164,23 @@ object OpCompiler {
     (stages.foldLeft(observe(df))((d, s) => observe(stage(d, s))), hasWeight.toSeq)
   }
 
-  /** The stage report of [[compileObserved]]. It keeps, per observe node,
-    * the metrics of the LAST query that ran it: eager actions inside ops
-    * run the upstream nodes too, and a query whose plan dropped a node (an
-    * empty relation propagated at plan or run time, a zero limit) simply
-    * does not report it. (Spark's `Observation` is not used: it completes
-    * on the first query whose plan holds the node, with a schema-less empty
+  /** The stage report of [[compileObserved]]: a read of the run profile
+    * that covered the instrumented chain's action. Per observe node it
+    * takes the metrics of the LAST query that ran it
+    * ([[RunProfile.Summary.observed]]): eager actions inside ops run the
+    * upstream nodes too, and a query whose plan dropped a node (an empty
+    * relation propagated at plan or run time, a zero limit) simply does
+    * not report it. (Spark's `Observation` is not used: it completes on
+    * the first query whose plan holds the node, with a schema-less empty
     * row when that query never ran it.)
-    * Listening ends at the first report or at [[close]].
     */
-  final class Attrition private[core] (spark: org.apache.spark.sql.SparkSession, prefix: String,
-                                       labels: Seq[String], hasWeight: Seq[Boolean])
-    extends (() => Seq[StageAttrition]) with AutoCloseable {
-    private val latest = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-    private val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        qe.observedMetrics.foreach { case (n, r) => if (n.startsWith(prefix)) latest.put(n, r) }
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-
-    def close(): Unit = spark.listenerManager.unregister(listener)
-
-    def apply(): Seq[StageAttrition] = {
-      org.apache.spark.sql.GraftColumnBridge.drainListeners(spark)
-      close()
+  final class Attrition private[core] (prefix: String, labels: Seq[String], hasWeight: Seq[Boolean])
+    extends (RunProfile.Summary => Seq[StageAttrition]) {
+    def apply(profile: RunProfile.Summary): Seq[StageAttrition] = {
+      val observed = profile.observed
       val vals = hasWeight.indices.map { i =>
-        val row = Option(latest.get(s"$prefix$i")).getOrElse(throw new IllegalStateException(
-          "attrition report requested before any action executed the instrumented chain"))
+        val row = observed.getOrElse(s"$prefix$i", throw new IllegalStateException(
+          "attrition report requested from a profile in which no action executed the instrumented chain"))
         val weight = if (!hasWeight(i) || row.isNullAt(1)) None else Some(row.getLong(1))
         (row.getLong(0), weight)
       }

@@ -1,17 +1,11 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.util.QueryExecutionListener
-
 /** Driver-side orchestration parity: lineage tracking
-  * (utils/lineage_tracker.py), run metrics (utils/metrics/observability
-  * collector), and the file ingestion queue (core/queue_manager.py). None of
+  * (utils/lineage_tracker.py) and the file ingestion queue
+  * (core/queue_manager.py); run metrics live in [[RunProfile]]. None of
   * this is Spark-plan work — it is deliberately plain Scala on the driver,
   * as SURVEY §1.1 notes for the queue.
   */
@@ -24,13 +18,9 @@ object Orchestration {
     */
   final case class Lineage(pipeline: String, sources: Seq[String], ops: Seq[String], sink: Option[String]) {
     def toJson: String = {
-      // real JSON escaping everywhere (backslashes first), sink included —
-      // a quote or backslash in any path must not emit invalid JSON
-      def j(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n").replace("\r", "\\r") + "\""
-      def arr(xs: Seq[String]) = xs.map(j).mkString("[", ",", "]")
-      s"""{"pipeline":${j(pipeline)},"sources":${arr(sources)},"operations":${arr(ops)},""" +
-        s""""sink":${sink.map(j).getOrElse("null")}}"""
+      def arr(xs: Seq[String]) = xs.map(Json.str).mkString("[", ",", "]")
+      s"""{"pipeline":${Json.str(pipeline)},"sources":${arr(sources)},"operations":${arr(ops)},""" +
+        s""""sink":${sink.map(Json.str).getOrElse("null")}}"""
     }
   }
 
@@ -39,62 +29,6 @@ object Orchestration {
       conf.sources.map(s => s"${s.typ}:${s.path}"),
       conf.operations.map(_.getClass.getSimpleName.stripSuffix("$")),
       conf.storage.map(st => s"${st.typ}:${st.path}"))
-
-  // ---------------------------------------------------------------- metrics
-
-  /** Query-level metrics collector: rows/bytes/duration per completed action,
-    * via Spark's QueryExecutionListener (the collector role of the
-    * reference's observability layer, executor-truthful instead of
-    * driver-guessed).
-    */
-  final case class QueryMetric(action: String, durationNs: Long, outputRows: Long, failed: Boolean)
-
-  final class MetricsCollector extends QueryExecutionListener {
-    private val buf = new ConcurrentLinkedQueue[QueryMetric]()
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      buf.add(QueryMetric(funcName, durationNs, outputRows(qe.executedPlan), failed = false))
-    }
-    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit =
-      buf.add(QueryMetric(funcName, -1L, -1L, failed = true))
-    def snapshot: Seq[QueryMetric] = buf.asScala.toSeq
-    def totalDurationMs: Double = snapshot.filterNot(_.failed).map(_.durationNs).sum / 1e6
-
-    /** Pour the current snapshot into the observability registry
-      * ([[graft.core.Metrics.Collector]]): per action a duration
-      * histogram, an output-rows counter, and a failure counter — the
-      * bridge from Spark-truthful query metrics to windowed
-      * aggregation / Prometheus export / threshold alerting.
-      */
-    def exportTo(registry: Metrics.Collector): Unit = snapshot.foreach { m =>
-      val tags = Map("action" -> m.action)
-      if (m.failed) registry.recordCounter("query_failures", 1.0, tags)
-      else {
-        registry.recordHistogram("query_duration_seconds", m.durationNs / 1e9, tags)
-        if (m.outputRows >= 0)
-          registry.recordCounter("query_output_rows", m.outputRows.toDouble, tags)
-      }
-    }
-  }
-
-  /** Rows a query produced: `numOutputRows` of the topmost node that
-    * defines it. Write, `collect` and `count` roots carry no such metric,
-    * so this looks down single-child chains, through AQE's final plan,
-    * query stages and codegen wrappers; -1 when that chain has none.
-    */
-  private[core] def outputRows(plan: SparkPlan): Long = plan match {
-    case a: AdaptiveSparkPlanExec => outputRows(a.executedPlan)
-    case s: QueryStageExec => outputRows(s.plan)
-    case _ => plan.metrics.get("numOutputRows").map(_.value).getOrElse(plan.children match {
-      case Seq(only) => outputRows(only)
-      case _ => -1L
-    })
-  }
-
-  def installMetrics(spark: SparkSession): MetricsCollector = {
-    val c = new MetricsCollector
-    spark.listenerManager.register(c)
-    c
-  }
 
   // ---------------------------------------------------------------- queue
 

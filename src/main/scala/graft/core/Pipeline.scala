@@ -18,7 +18,9 @@ object Pipeline {
       // per-stage rows/weight in-out when the YAML declared an `attrition:`
       // block (round 11) — populated from observe() metrics that ride the
       // run's one validation/count aggregate
-      attrition: Seq[OpCompiler.StageAttrition] = Nil)
+      attrition: Seq[OpCompiler.StageAttrition] = Nil,
+      // where the run's Spark-side time and rows went, failed runs included
+      profile: RunProfile.Summary = RunProfile.empty)
 
   def fromYaml(yaml: String): PipelineConfig.PipelineConf = PipelineConfig.fromYaml(yaml)
 
@@ -50,7 +52,9 @@ object Pipeline {
     * parity): pipeline_start/end, per-stage step events, one
     * data_quality_check event per expectation, a data_write event for the
     * storage stage — all correlated by the logger's (pipeline_name,
-    * run_id) context. `plog = None` is the no-logging fast path.
+    * run_id) context. `plog = None` is the no-logging fast path. The whole
+    * run, however it ends, is profiled ([[RunProfile]]): `pipeline_end`
+    * carries the profile's totals and `Result.profile` the profile.
     */
   def execute(spark: SparkSession, conf: PipelineConfig.PipelineConf,
               plog: Option[StructuredLog.PipelineLogger]): Result = {
@@ -61,6 +65,7 @@ object Pipeline {
     val caches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     var attrition: Option[OpCompiler.Attrition] = None
     var stage = "load"
+    val profile = RunProfile.start(spark)
     try {
       plog.foreach(_.startPipeline(Map(
         "sources" -> conf.sources.map(s => s"${s.typ}:${s.path}"),
@@ -82,9 +87,9 @@ object Pipeline {
           OpCompiler.compile(conf.operations, catalog, caches)(primary)
       }
       // the observe() metrics ride the run's one aggregate below
-      def attritionReport(): Seq[OpCompiler.StageAttrition] =
+      def attritionReport(prof: RunProfile.Summary): Seq[OpCompiler.StageAttrition] =
         attrition.map { rep =>
-          val report = rep()
+          val report = rep(prof)
           conf.attrition.flatMap(_.reportPath).foreach { rp =>
             import spark.implicits._
             report.map(sa => (sa.stage, sa.op, sa.rowsIn, sa.rowsOut,
@@ -97,6 +102,7 @@ object Pipeline {
         }.getOrElse(Nil)
       plog.foreach(_.endStep("process"))
       stage = "validate"
+      plog.foreach(_.startStep("validate"))
 
       // validation stage (pipeline.py:234-256): ONE aggregate over the
       // result counts its rows, computes every expectation's pass ratio and
@@ -110,6 +116,7 @@ object Pipeline {
         if (conf.storage.isEmpty && conf.expectations.isEmpty && attrition.isEmpty) (0L, Nil)
         else OpCompiler.passRatios(processed, conf.expectations.map(_.expression))
       val rows = conf.storage.fold(-1L)(_ => counted)
+      plog.foreach(_.endStep("validate", conf.storage.map(_ => counted)))
       // check by INDEX: the name-keyed report map collapses duplicate names
       // (last wins), and checking through it would let a failing expectation
       // hide behind a passing namesake
@@ -125,17 +132,19 @@ object Pipeline {
         }
       }
       if (failed.nonEmpty) {
-        plog.foreach(_.endPipeline("validation_failed"))
+        val prof = profile.summary()
+        plog.foreach(_.endPipeline("validation_failed", profile = Some(prof)))
         // the validation aggregate fired the attrition metrics — a failing
         // run's drop profile is exactly when the report matters most
         return Result(conf.name, "validation_failed", 0L,
           validation, failed.map(e => s"expectation '${e.name}' below min_ratio"),
-          attritionReport())
+          attritionReport(prof), prof)
       }
 
       // storage stage: the sink and the catalog read the persisted result
       // the validation aggregate counted
       stage = "store"
+      plog.foreach(_.startStep("store"))
       val storeT0 = System.currentTimeMillis()
       conf.storage.foreach { st =>
         st.write(processed)
@@ -166,22 +175,25 @@ object Pipeline {
             Map("storage_type" -> st.typ, "path" -> st.path))
         }
       }
+      val storeSec = (System.currentTimeMillis() - storeT0) / 1000.0
+      plog.foreach(_.endStep("store", conf.storage.map(_ => math.max(rows, 0L))))
+      val prof = profile.summary()
       plog.foreach { p =>
-        conf.storage.foreach(st => p.logDataWrite(s"${st.typ}:${st.path}",
-          math.max(rows, 0L), (System.currentTimeMillis() - storeT0) / 1000.0))
-        p.endPipeline("success", recordsProcessed = math.max(rows, 0L))
+        conf.storage.foreach(st => p.logDataWrite(s"${st.typ}:${st.path}", math.max(rows, 0L), storeSec))
+        p.endPipeline("success", recordsProcessed = math.max(rows, 0L), profile = Some(prof))
       }
-      Result(conf.name, "success", rows, validation, errors.toSeq, attritionReport())
+      Result(conf.name, "success", rows, validation, errors.toSeq, attritionReport(prof), prof)
     } catch {
       case t: Throwable =>
         errors += t.getMessage
+        val prof = profile.summary()
         plog.foreach { p =>
           p.logStepError(stage, t)
-          p.endPipeline("failed", errorMessage = Option(t.getMessage))
+          p.endPipeline("failed", errorMessage = Option(t.getMessage), profile = Some(prof))
         }
-        Result(conf.name, "failed", 0L, Map.empty, errors.toSeq)
+        Result(conf.name, "failed", 0L, Map.empty, errors.toSeq, profile = prof)
     } finally {
-      attrition.foreach(_.close())
+      profile.close()
       caches.foreach(c => try c.unpersist(blocking = false) catch { case _: Throwable => () })
     }
   }

@@ -103,12 +103,13 @@ object StructuredLog {
 
     def logPipelineEnd(pipelineName: String, status: String, durationSeconds: Double,
                        recordsProcessed: Long = 0L,
-                       errorMessage: Option[String] = None): Unit = {
+                       errorMessage: Option[String] = None,
+                       extra: Seq[(String, Any)] = Nil): Unit = {
       val base = Seq[(String, Any)](
         "event_type" -> "pipeline_end", "pipeline_name" -> pipelineName,
         "status" -> status, "duration_seconds" -> durationSeconds,
         "records_processed" -> recordsProcessed) ++
-        errorMessage.map("error_message" -> _)
+        errorMessage.map("error_message" -> _) ++ extra
       if (status == "success") info("Pipeline completed successfully", base: _*)
       else error("Pipeline failed", base: _*)
     }
@@ -189,11 +190,15 @@ object StructuredLog {
       logger.logPipelineStart(pipelineName, config, runId)
     }
 
+    /** `profile`: the run's [[RunProfile]], whose totals (jobs, stages,
+      * tasks, shuffle, ...) the pipeline_end event carries. */
     def endPipeline(status: String, recordsProcessed: Long = 0L,
-                    errorMessage: Option[String] = None): Unit =
+                    errorMessage: Option[String] = None,
+                    profile: Option[RunProfile.Summary] = None): Unit =
       startMs.foreach { t0 =>
         val dur = (clock() - t0) / 1000.0
-        logger.logPipelineEnd(pipelineName, status, dur, recordsProcessed, errorMessage)
+        logger.logPipelineEnd(pipelineName, status, dur, recordsProcessed, errorMessage,
+          profile.toSeq.flatMap(_.totals))
         metrics.foreach { c =>
           val tags = Map("pipeline" -> pipelineName, "status" -> status)
           c.recordHistogram("pipeline_duration_seconds", dur, tags)

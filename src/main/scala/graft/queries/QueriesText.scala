@@ -1168,9 +1168,9 @@ object QueriesText {
         OS.FilterCondition("lang IN ('en','de')"))
       val (out, report) = OpCompiler.compileObserved(ops, null, null,
         Some("n_chars"))(t(s, dir, "documents").select("doc_id", "lang", "n_chars"))
-      out.write.format("noop").mode("overwrite").save()
+      val (_, profile) = graft.core.RunProfile.record(s)(out.write.format("noop").mode("overwrite").save())
       import s.implicits._
-      report().map(a => (a.stage, a.op, a.rowsIn, a.rowsOut, a.rowsDropped,
+      report(profile).map(a => (a.stage, a.op, a.rowsIn, a.rowsOut, a.rowsDropped,
           a.weightIn, a.weightOut))
         .toDF("stage", "op", "rows_in", "rows_out", "rows_dropped",
           "weight_in", "weight_out")

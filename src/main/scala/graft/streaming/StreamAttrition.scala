@@ -15,7 +15,7 @@ import graft.core.{OpCompiler, OpSpec}
   * zero extra passes, the metrics ride each micro-batch's own execution.
   *
   * (Batch uses named observes too, read from each query's observed
-  * metrics by a QueryExecutionListener — OpCompiler.Attrition; streams
+  * metrics in the run's RunProfile — OpCompiler.Attrition; streams
   * report theirs per micro-batch in the progress events.)
   *
   * Thread-safety: progress events arrive on the listener bus thread;

@@ -23,14 +23,17 @@ object Dedup {
     *    every null-key row is a single-task straggler AQE cannot split, so
     *    nulls get per-row keys instead of a pass-through filter;
     *  - the sentinel is " :" + id — no sha2 hex or trimmed canonical value
-    *    starts with a space — and falls back to a per-row uuid when the id
-    *    itself is null (concat null-propagates; a null sentinel would
-    *    regroup those rows into the shared null partition and keep ONE).
+    *    starts with a space — and falls back to " #" + a per-row
+    *    monotonically increasing id when the id itself is null (concat
+    *    null-propagates; a null sentinel would regroup those rows into the
+    *    shared null partition and keep ONE). Not uuid(): the analyzer gives
+    *    it a fresh random seed on every run and codegen bakes that seed in,
+    *    so every plan over this op compiled new classes on every run.
     */
   private[graft] def keepFirstByKey(df: DataFrame, key: Column, idCol: String,
                                     ordering: Seq[Column] = Seq.empty): DataFrame = {
-    val sentinel = concat(lit(" :"),
-      coalesce(col(idCol).cast("string"), expr("uuid()")))
+    val sentinel = coalesce(concat(lit(" :"), col(idCol).cast("string")),
+      concat(lit(" #"), monotonically_increasing_id().cast("string")))
     val ord = if (ordering.nonEmpty) ordering else Seq(col(idCol).asc)
     val w = Window.partitionBy(col("__kf")).orderBy(ord: _*)
     df.withColumn("__kf", coalesce(key, sentinel))

@@ -4,8 +4,9 @@ package graft.tools
   * was the project's single best scale signal but lived only in NOTES
   * prose. This main runs the full headliner list through Bench (runs=1)
   * against the ScaleUp replica, appends the output row counts of the three
-  * workload-quadratic queries (CountPairs' trio — the counts that make
-  * super-linear walls ATTRIBUTABLE to output growth instead of plan decay),
+  * workload-quadratic queries (minhash dedup, semantic contamination and
+  * semantic dedup — the counts that make super-linear walls ATTRIBUTABLE
+  * to output growth instead of plan decay),
   * and writes one parseable JSON file to commit as STRESS_r0N.json.
   *
   * The headliner list is passed explicitly so Bench skips the law ring

@@ -106,6 +106,15 @@ class BenchArtifactSpec extends SparkSpec {
       val m = detail(k).asInstanceOf[Map[String, Any]]
       assert(m.contains("q_agg_grouped") && m.contains("q_join_equi"), s"$k missing queries: ${m.keySet}")
     }
+    // each query's counters (its last measured run's profile) ride its
+    // side-file entry, never the stdout line
+    assert(!line.contains("\"profile\""))
+    val profiles = detail("profile").asInstanceOf[Map[String, Any]]
+    assert(profiles.keySet == Set("q_agg_grouped", "q_join_equi"), s"profiles: ${profiles.keySet}")
+    profiles.values.map(_.asInstanceOf[Map[String, Any]]).foreach { p =>
+      assert(p("jobs").asInstanceOf[Long] > 0L && p("tasks").asInstanceOf[Long] > 0L &&
+        p("queries") == 1L && p.contains("shuffle_write_bytes") && p.contains("phase_ms"), p)
+    }
     // calibration annotation: prior carried no calibration_sec → ratio and
     // trigger_scale default to 1.0 (pre-round-9 artifact compatibility)
     val cal = detail("calibration").asInstanceOf[Map[String, Any]]

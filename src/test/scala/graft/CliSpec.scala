@@ -107,6 +107,46 @@ class CliSpec extends SparkSpec {
     assert(Cli.renderAttrition(Nil).isEmpty)
   }
 
+  test("run prints the result line, then one drained [profile] line on stderr") {
+    // `run` owns (and stops) its SparkSession, so it runs in a child JVM
+    // on this JVM's classpath and module options
+    val dir = tmpDir()
+    Seq((1, 30), (2, 10), (3, 40)).toDF("id", "age").coalesce(1)
+      .write.mode("overwrite").option("header", "true").csv(s"$dir/in")
+    val yaml = java.nio.file.Paths.get(dir, "p.yaml")
+    java.nio.file.Files.writeString(yaml,
+      s"""name: cli_profile
+         |source: { type: csv, path: "$dir/in/*.csv", options: { header: true } }
+         |operations:
+         |  - { type: filter, condition: "age >= 20" }
+         |storage: { type: parquet, path: "$dir/out", mode: overwrite }
+         |""".stripMargin)
+    val jvmOpts = scala.jdk.CollectionConverters.ListHasAsScala(
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments).asScala
+      .filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmOpts ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
+        "graft.Cli", "run", yaml.toString, "--log-file", s"$dir/events.jsonl")
+    val (out, err) = (new StringBuilder, new StringBuilder)
+    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => err.append(l).append('\n')))
+    assert(code == 0, s"exit $code\n$err")
+    val result = graft.core.Json.parse(out.toString.trim.linesIterator.toSeq.last).asInstanceOf[Map[String, Any]]
+    assert(result("status") == "success" && result("rows") == 2L, result)
+    val errLines = err.toString.linesIterator.toSeq
+    assert(!errLines.exists(_.startsWith("[metrics]")), errLines.mkString("\n"))
+    val profiles = errLines.filter(_.startsWith("[profile] "))
+    assert(profiles.size == 1, errLines.mkString("\n"))
+    val prof = graft.core.Json.parse(profiles.head.stripPrefix("[profile] ")).asInstanceOf[Map[String, Any]]
+    // validation's count aggregate and the write: at least two jobs, and
+    // the write, the run's last query, reports the two rows it wrote, down
+    // to the persisted result it read
+    assert(prof("jobs").asInstanceOf[Long] >= 2L && prof("tasks").asInstanceOf[Long] >= 2L, prof)
+    val write = prof("query_rows").asInstanceOf[List[Map[String, Any]]].last
+    assert(write("rows") == 2L, prof)
+    assert(write("operators").asInstanceOf[List[List[Any]]].contains(List("InMemoryTableScan", 2L)), prof)
+  }
+
   test("run --dry-run prints the plan summary without executing") {
     val out = captureOut {
       Cli.main(Array("run", "examples/governed_pipeline.yaml", "--dry-run"))

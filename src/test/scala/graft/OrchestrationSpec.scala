@@ -52,11 +52,14 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("lineage toJson emits parseable JSON for quotes and backslashes") {
-    val lin = Orchestration.Lineage("p\"1", Seq("""csv:C:\in"dir"""), Seq("Op\"x"), Some("""out\"""))
+    // a tab (any control character) must be escaped too: Jackson's strict
+    // parse rejects a raw one
+    val lin = Orchestration.Lineage("p\"1", Seq("""csv:C:\in"dir""", "csv:/in\tdir"), Seq("Op\"x"), Some("""out\"""))
     val parsed = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
       .readTree(lin.toJson)
     assert(parsed.get("pipeline").asText() == "p\"1")
     assert(parsed.get("sources").get(0).asText() == """csv:C:\in"dir""")
+    assert(parsed.get("sources").get(1).asText() == "csv:/in\tdir")
     assert(parsed.get("sink").asText() == """out\""")
   }
 
@@ -77,16 +80,14 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("metrics collector observes completed actions with row counts") {
-    val c = Orchestration.installMetrics(spark)
+    // the run profile is the query metrics collector: it drains the
+    // listener bus itself, so no polling
     val df = Seq(1, 2, 3).toDF("x")
-    df.write.format("noop").mode("overwrite").save()
-    // listener delivery is async; poll briefly
-    var tries = 0
-    while (c.snapshot.isEmpty && tries < 50) { Thread.sleep(100); tries += 1 }
-    assert(c.snapshot.nonEmpty)
-    assert(c.snapshot.exists(m => !m.failed && m.durationNs > 0))
+    val (_, c) = graft.core.RunProfile.record(spark)(df.write.format("noop").mode("overwrite").save())
+    assert(c.queries.nonEmpty)
+    assert(c.queries.exists(m => !m.failed && m.durationNs > 0))
     // the write's root node has no row metric; the count comes from below it
-    assert(c.snapshot.exists(m => !m.failed && m.outputRows == 3L), s"rows: ${c.snapshot}")
+    assert(c.queries.exists(m => !m.failed && m.outputRows == 3L), s"rows: ${c.queries}")
     // bridge into the observability registry: durations become windowed
     // histograms ready for aggregation/Prometheus export/alerting
     val reg = new graft.core.Metrics.Collector()

@@ -143,19 +143,19 @@ class PipelineSpec extends SparkSpec {
     // limit(0) plans to an empty relation: the observe nodes sit in this
     // query's logical plan but never run, so it must not supply (or void)
     // the stage metrics the later write measures
-    assert(out.limit(0).collect().isEmpty)
-    out.write.format("noop").mode("overwrite").save()
-    assert(report() == Seq(graft.core.OpCompiler.StageAttrition(
+    val (_, profile) = graft.core.RunProfile.record(spark) {
+      assert(out.limit(0).collect().isEmpty)
+      out.write.format("noop").mode("overwrite").save()
+    }
+    assert(report(profile) == Seq(graft.core.OpCompiler.StageAttrition(
       1, "FilterCondition", 3L, 2L, Some(60L), Some(50L))))
   }
 
-  test("a failed storage write releases the storage stage's persisted frame") {
+  /** A run whose sink path sits under a regular file, so its write fails. */
+  private def failedStoreRun(): Pipeline.Result = {
     val in = Files.createTempDirectory("graft_store_fail_in").toString
     writeCsv(in)
-    // the sink path sits under a regular file, so the write must fail
     val blocker = Files.createTempFile("graft_store_fail", ".txt").toString
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val before = persisted
     val res = Pipeline.execute(spark, Pipeline.fromYaml(
       s"""name: store_fail
          |source: { type: csv, path: "$in/*.csv", options: { header: true } }
@@ -164,8 +164,28 @@ class PipelineSpec extends SparkSpec {
          |storage: { type: parquet, path: "$blocker/out", mode: overwrite }
          |""".stripMargin))
     assert(res.status == "failed", s"the write under a regular file must fail: $res")
+    res
+  }
+
+  test("a failed storage write releases the storage stage's persisted frame") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    failedStoreRun()
     assert(persisted == before,
       s"storage frame leaked on failure: ${persisted -- before} still persisted")
+  }
+
+  test("a failed run releases its profile's listeners and job tag and still returns the profile") {
+    import org.apache.spark.sql.GraftTestBridge
+    val res = failedStoreRun()
+    assert(GraftTestBridge.sparkListeners[graft.core.RunProfile](spark).isEmpty,
+      "a RunProfile is still on the listener bus")
+    assert(!GraftTestBridge.queryListeners(spark).exists(_.isInstanceOf[graft.core.RunProfile]),
+      "a RunProfile is still a query execution listener")
+    assert(!spark.sparkContext.getJobTags().exists(_.startsWith(graft.core.RunProfile.TagPrefix)),
+      s"the thread still carries a run tag: ${spark.sparkContext.getJobTags()}")
+    // the validation aggregate ran before the write failed
+    assert(res.profile.jobs > 0 && res.profile.tasks > 0 && res.profile.queries.nonEmpty, res.profile.toString)
   }
 
   test("one run evaluates each processed row once: validation, row count and sink share one pass") {
@@ -243,6 +263,15 @@ class PipelineSpec extends SparkSpec {
     assert(second.status == "success", second.errors.mkString("; "))
     assert((second.rowsWritten, second.attrition) == (first.rowsWritten, first.attrition))
     assert(compiled <= 5, s"the repeated run compiled $compiled generated classes")
+    // the URL ops plan the same on every build: a literal fixed at
+    // analysis (an analyzer-seeded uuid() in url_dedup's null-key
+    // sentinel) makes every stage over them compile anew on every run, and
+    // an op that plans its input into many stages (near_dedup) repeats
+    // that per stage
+    val (primary, catalog) = Pipeline.load(spark, conf)
+    def planned = graft.core.OpCompiler.compile(conf.operations.take(3), catalog)(primary)
+      .queryExecution.optimizedPlan
+    assert(planned.sameResult(planned), "two builds of the URL ops planned differently")
   }
 
   test("a failed validation releases the persisted result, writes nothing and still reports attrition") {

@@ -119,6 +119,33 @@ class PlanLintSpec extends SparkSpec {
         violations.mkString("\n"))
   }
 
+  private def mainSources: Seq[java.io.File] = {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
+        case f if f.isDirectory => scalaFiles(f)
+        case f if f.getName.endsWith(".scala") => Seq(f)
+        case _ => Nil
+      }
+    scalaFiles(new java.io.File("src/main/scala/graft"))
+  }
+
+  test("one batch listener: only RunProfile registers Spark or query execution listeners") {
+    // a run's jobs, stages, tasks and queries are observed in one place,
+    // scoped by the run's job tag; streams report through their own two
+    // StreamingQueryListeners
+    val batch = "\\.addSparkListener\\(|listenerManager\\.register\\(".r
+    val stream = "streams\\.addListener\\(".r
+    val streamListeners = Seq("streaming/StreamAttrition.scala", "streaming/StreamMetrics.scala")
+    val offenders = mainSources.flatMap { f =>
+      val text = scala.io.Source.fromFile(f, "UTF-8").mkString
+      val path = f.getPath
+      val n = (if (path.endsWith("core/RunProfile.scala")) 0 else batch.findAllMatchIn(text).size) +
+        (if (streamListeners.exists(path.endsWith)) 0 else stream.findAllMatchIn(text).size)
+      if (n > 0) Seq(s"$path: $n listener registration(s)") else Nil
+    }
+    assert(offenders.isEmpty, "register listeners in graft.core.RunProfile only:\n" + offenders.mkString("\n"))
+  }
+
   test("no unpartitioned per-key sequential scans in batch sources (RDD-shape lint)") {
     // PlanLint sees Catalyst plans; a groupByKey.flatMapGroups per-key scan
     // is an RDD-side shape it cannot see — and the one construct that dies
@@ -128,13 +155,6 @@ class PlanLintSpec extends SparkSpec {
     // per-partition passes (partition-indexed maps, catalyst-row RDDs
     // turned back into frames) belong in core/SegmentedScan.scala alone,
     // and media codecs are column functions, not external-Row round trips.
-    val mainDir = new java.io.File("src/main/scala/graft")
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case f if f.isDirectory => scalaFiles(f)
-        case f if f.getName.endsWith(".scala") => Seq(f)
-        case _ => Nil
-      }
     val perKey = "\\.(flatMapGroups|mapGroups)\\s*[({]".r // call sites, not doc mentions
     val handRolled =
       "\\.mapPartitionsWithIndex\\b|\\.queryExecution\\.toRdd\\b|\\binternalCreateDataFrame\\(".r
@@ -144,7 +164,7 @@ class PlanLintSpec extends SparkSpec {
     val externalRows = "\\.rdd\\b|\\.zipWithIndex\\(\\)|\\bcreateDataFrame\\(".r
     // widenForDecode's `df.rdd.getNumPartitions` only reads a partition count
     val codecEscapes = "\\.rdd\\.mapPartitions\\b|\\bcreateDataFrame\\(".r
-    val offenders = scalaFiles(mainDir).flatMap { f =>
+    val offenders = mainSources.flatMap { f =>
       val text = scala.io.Source.fromFile(f, "UTF-8").mkString
       val path = f.getPath
       val keyed = if (path.contains("/streaming/")) 0 else perKey.findAllMatchIn(text).size

@@ -179,9 +179,21 @@ class StructuredLogSpec extends SparkSpec {
     val dq = lines.find(_.get("event_type").contains("data_quality_check")).get
     assert(dq("metric_name") == "adult" && dq("status") == "pass" && dq("metric_value") == 1.0)
     val steps = lines.flatMap(_.get("step")).distinct
-    assert(steps.contains("load") && steps.contains("process"))
+    assert(steps == Seq("load", "process", "validate", "store"), steps)
+    // validate runs the result's one aggregate and store the write: both
+    // take real time, and both know the rows they handled
+    Seq("validate", "store").foreach { st =>
+      val done = lines.find(m => m.get("step").contains(st) && m.contains("duration_seconds")).get
+      assert(done("duration_seconds").asInstanceOf[Double] > 0.0 && done("records_processed") == 1L, done)
+    }
     val end = lines.find(_.get("event_type").contains("pipeline_end")).get
     assert(end("status") == "success" && end("records_processed") == 1L)
+    // the run profile's totals ride the end event: the validation aggregate
+    // shuffles its partial counts, the write is one more job
+    assert(end("jobs") == res.profile.jobs.toLong && res.profile.jobs >= 2, end)
+    assert(end("stages") == res.profile.stages.toLong && end("tasks") == res.profile.tasks.toLong, end)
+    assert(end("shuffle_write_records").asInstanceOf[Long] > 0L &&
+      end("shuffle_read_bytes") == res.profile.shuffleReadBytes, end)
 
     // failure path: a broken op logs a step error and a failed end event
     val (buf2, sink2) = capture()
@@ -200,5 +212,6 @@ class StructuredLogSpec extends SparkSpec {
       "step error event present")
     val end2 = lines2.find(_.get("event_type").contains("pipeline_end")).get
     assert(end2("status") == "failed" && end2("level") == "error")
+    assert(end2("jobs") == res2.profile.jobs.toLong, end2)
   }
 }
