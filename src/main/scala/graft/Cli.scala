@@ -123,20 +123,15 @@ object Cli {
     case "stream" :: path :: rest =>
       val conf = config(path)(graft.streaming.StreamPipeline.fromYaml)
       val spark = Sessions.local(appName = s"graft-stream-${conf.name}")
-      // recentProgress is ring-buffered (numRecentProgressUpdates, default
-      // 100) — a long --drain would undercount batches/rows without this
-      spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-      val (q, attrition) = graft.streaming.StreamPipeline.startWithAttrition(spark, conf)
+      val (q, profile) = graft.streaming.StreamPipeline.start(spark, conf)
       if (rest.contains("--drain")) { // process what's there, then stop (backfill/test mode)
         q.processAllAvailable()
-        println(s"""{"stream":${j(conf.name)},"batches":${q.recentProgress.length},""" +
-          s""""rows":${q.recentProgress.map(_.numInputRows).sum}}""")
+        val summary = profile.summary()
+        println(s"""{"stream":${j(conf.name)},"batches":${summary.batches},"rows":${summary.rows}}""")
         // per-stage drop profile accumulated across the drained batches
         // (requires an `attrition:` block in the YAML, like batch runs)
-        attrition.foreach { a =>
-          renderAttrition(a.report()).foreach(l => System.err.println(s"[attrition] $l"))
-          graft.streaming.StreamAttrition.detach(spark, a)
-        }
+        renderAttrition(summary.attrition).foreach(l => System.err.println(s"[attrition] $l"))
+        System.err.println(s"[profile] ${summary.toJson}")
         q.stop(); spark.stop()
       } else {
         println(s"stream '${conf.name}' running; Ctrl-C to stop")

@@ -22,7 +22,7 @@ import scala.collection.mutable
   *
   * This is DRIVER-side bookkeeping for pipeline orchestration — per-batch
   * counts, stage timings, custom health signals (compose with
-  * [[graft.streaming.StreamMetrics]], which feeds per-batch streaming
+  * [[graft.streaming.StreamProfile]], which reports per-batch streaming
   * numbers, and [[graft.quality.QualityMonitor]], which classifies data
   * quality). Nothing here touches executors or plans.
   */
@@ -170,45 +170,6 @@ object Metrics {
       agg.get("latest").filter(v => ops(operator)(v, threshold)).map { v =>
         Alert(name, s"$metricName is $v (threshold: $threshold)", level, tags, now)
       }
-    }
-  }
-
-  /** Named boolean health checks recorded into the collector — the
-    * reference HealthChecker: per check a `health_check_<name>` gauge
-    * (1/0) and a `health_check_duration_seconds` histogram, a throwing
-    * check counts unhealthy with its error captured, and the report
-    * carries the overall verdict.
-    */
-  final case class HealthResult(healthy: Boolean, durationMs: Double, error: Option[String])
-
-  final class HealthChecker(collector: Collector,
-                            clock: () => Long = () => System.currentTimeMillis()) {
-    private val checks = mutable.LinkedHashMap.empty[String, () => Boolean]
-
-    def addCheck(name: String, check: () => Boolean): Unit = synchronized { checks(name) = check }
-
-    def runChecks(): (Boolean, Map[String, HealthResult]) = synchronized {
-      var overall = true
-      val results = checks.map { case (name, fn) =>
-        val t0 = clock()
-        val res =
-          try {
-            val ok = fn()
-            val dur = (clock() - t0) / 1000.0
-            collector.recordGauge(s"health_check_$name", if (ok) 1.0 else 0.0,
-              Map("check_name" -> name))
-            collector.recordHistogram("health_check_duration_seconds", dur,
-              Map("check_name" -> name))
-            if (!ok) overall = false
-            HealthResult(ok, dur * 1000.0, None)
-          } catch {
-            case e: Exception =>
-              overall = false
-              HealthResult(healthy = false, 0.0, Some(e.getMessage))
-          }
-        name -> res
-      }.toMap
-      (overall, results)
     }
   }
 

@@ -147,7 +147,7 @@ object OpCompiler {
     * node counts rows and, where `weightCol` exists at that boundary, sums
     * it as a long. Returns the chain's output and, per node, whether it
     * sums the weight. Batch ([[compileObserved]]) and stream
-    * (graft.streaming.StreamAttrition) attrition both build on it. */
+    * (graft.streaming.StreamProfile.observe) attrition both build on it. */
   private[graft] def observeChain[S](df: DataFrame, stages: Seq[S], prefix: String, weightCol: Option[String])(
       stage: (DataFrame, S) => DataFrame): (DataFrame, Seq[Boolean]) = {
     import org.apache.spark.sql.functions._

@@ -6,7 +6,7 @@ import scala.collection.mutable
   * `monitoring/structured_logging.py` (StructuredLogger / ContextualLogger /
   * PipelineLogger / LogAnalyzer). Closes the last monitoring-directory
   * surface: metrics_collector → [[Metrics]], health_check →
-  * [[Metrics.HealthChecker]] (round 6), structured_logging → here.
+  * [[Health]], structured_logging → here.
   *
   * Every event is ONE JSON line: `timestamp` (ISO-8601), `logger`, `level`,
   * `event` (the message), then the logger's persistent context and the

@@ -106,19 +106,6 @@ object Readers {
     withLineage(df, lineageCol)
   }
 
-  /** The reference S3Source.read config shape end-to-end: (bucket, prefix,
-    * source-or-glob, optional format — inferred from the extension when
-    * absent) → s3a URI → the format-dispatched reader above. The URI/
-    * format/dispatch halves are offline-gated (ConnectorConfSpec drives
-    * the dispatch through local files); only the s3a:// network hop needs
-    * a real object store.
-    */
-  def objectStoreRead(spark: SparkSession, bucket: String, source: String,
-                      prefix: String = "", format: String = null,
-                      lineageCol: String = "_source_s3_key"): DataFrame =
-    objectStore(spark, s3aUri(bucket, source, prefix),
-      Option(format).getOrElse(inferFormat(source)), lineageCol)
-
   /** JDBC read with pushdown (postgresql_storage.py:86-118's generated
     * projection/WHERE/LIMIT SQL is replaced by Spark's own jdbc pushdown —
     * pass `partitionColumn` bounds for parallel reads at scale).

@@ -254,7 +254,8 @@ object Sinks {
     * `to_json(struct(*))` projection. The key column stays in the value
     * payload (the reference pops it; keeping it makes the value
     * self-contained — documented divergence). Pure — offline-gated in
-    * ConnectorConfSpec; only the broker write needs Kafka.
+    * ConnectorConfSpec; only the broker write (StreamOps.kafkaSink) needs
+    * Kafka.
     */
   def kafkaPayload(df: DataFrame, keyCol: String = null): DataFrame = {
     require(keyCol == null || df.columns.contains(keyCol),
@@ -264,13 +265,4 @@ object Sinks {
         to_json(struct(df.columns.map(col).toSeq: _*)).as("value"))
     else df.select(to_json(struct(df.columns.map(col).toSeq: _*)).as("value"))
   }
-
-  /** Kafka producer sink (kafka_source.py:254-348): the payload projection
-    * above written by Spark's Kafka batch sink (no per-row driver loop).
-    */
-  def kafkaWrite(df: DataFrame, bootstrapServers: String, topic: String, keyCol: String = null): Unit =
-    kafkaPayload(df, keyCol).write.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .save()
 }

@@ -433,8 +433,8 @@ object StreamOps {
   def kafkaSink(df: DataFrame, bootstrapServers: String, topic: String,
                 checkpoint: String,
                 keyCol: String = null): DataStreamWriter[org.apache.spark.sql.Row] =
-    // same offline-gated key/value projection as the batch producer sink
-    // (ConnectorConfSpec) — whole row as JSON value, optional string key
+    // the offline-gated key/value projection (ConnectorConfSpec): whole
+    // row as JSON value, optional string key
     graft.sources.Sinks.kafkaPayload(df, keyCol)
       .writeStream.format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)

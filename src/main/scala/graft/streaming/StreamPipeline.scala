@@ -28,7 +28,7 @@ object StreamPipeline {
                         attritionWeight: Option[Option[String]],
                         window: Option[DataFrame => DataFrame],
                         sink: DataFrame => StreamingQuery,
-                        monitoring: Option[SparkSession => StreamMetrics])
+                        monitoring: Option[StreamProfile.Monitoring])
 
   /** Parse and bind the whole config; an unknown key, a bad value or an op
     * under `transforms:` that cannot stream fails here, before any
@@ -43,8 +43,8 @@ object StreamPipeline {
       val trs = a.subs("transforms").map(transform)
       val attr = a.section("attrition")(attrition)
       val win = a.section("window")(window)
-      val (queryName, snk) = sink(a.sub("sink"), name, win.fold("append")(_._1))
-      val mon = a.section("monitoring")(monitoring(_, queryName))
+      val snk = sink(a.sub("sink"), name, win.fold("append")(_._1))
+      val mon = a.section("monitoring")(monitoring)
       Conf(name, src, trs, attr, win.map(_._2), snk, mon)
     }
   }
@@ -99,9 +99,8 @@ object StreamPipeline {
         ("append", df => StreamOps.session(df, ts, gap, wm, keys, aggs)) })(a)
   }
 
-  /** The `sink:` section: (a memory sink's declared query name, start). */
-  private[graft] def sink(a: Params, name: String,
-                          defaultMode: String): (Option[String], DataFrame => StreamingQuery) = {
+  /** The `sink:` section: how to start the query. */
+  private[graft] def sink(a: Params, name: String, defaultMode: String): DataFrame => StreamingQuery = {
     val mode = a.str("output_mode", defaultMode)
     // journaled exactly-once KV sink (AtomicKeyValueSink): effects + batch
     // marker land in ONE atomic sink action, so appends survive micro-batch
@@ -113,25 +112,23 @@ object StreamPipeline {
       () => new graft.sources.KeyValueSink.InMemoryKV(ns)
     }
     def kvWrite(a: Params) = (a.str("mode", "kv"), a.str("target", "graft"), a.long("ttl_seconds", -1L))
-    type Start = DataFrame => StreamingQuery
-    a.select[Params => (Option[String], Start)]("type", "memory")(
+    a.select[Params => DataFrame => StreamingQuery]("type", "memory")(
       "memory" -> { a =>
-        val declared = a.opt("name")
-        val q = declared.getOrElse(name)
-        (declared, df => df.writeStream.format("memory").queryName(q).outputMode(mode).start()) },
+        val q = a.opt("name").getOrElse(name)
+        df => df.writeStream.format("memory").queryName(q).outputMode(mode).start() },
       "parquet" -> { a =>
         val (path, ckpt) = (a.req("path"), a.req("checkpoint"))
-        (None, df => df.writeStream.format("parquet").option("path", path)
-          .option("checkpointLocation", ckpt).outputMode("append").start()) },
+        df => df.writeStream.format("parquet").option("path", path)
+          .option("checkpointLocation", ckpt).outputMode("append").start() },
       "kafka" -> { a =>
         val (servers, topic, ckpt) = (a.req("servers"), a.req("topic"), a.opt("checkpoint").orNull)
         // the declared output_mode applies to EVERY sink
-        (None, df => StreamOps.kafkaSink(df, servers, topic, ckpt).outputMode(mode).start()) },
+        df => StreamOps.kafkaSink(df, servers, topic, ckpt).outputMode(mode).start() },
       "kv" -> { a =>
         val (factory, key, ckpt) = (kvStore(a), a.str("key_field", "doc_id"), a.opt("checkpoint").orNull)
         val (kvMode, target, ttl) = kvWrite(a)
-        (None, df => graft.sources.KeyValueSink.streamWriterAtomic(df, key, ckpt, factory,
-          mode = kvMode, target = target, ttlSeconds = ttl).start()) },
+        df => graft.sources.KeyValueSink.streamWriterAtomic(df, key, ckpt, factory,
+          mode = kvMode, target = target, ttlSeconds = ttl).start() },
       "neardup_ingest_kv" -> { a => // GROWING near-dup gate fused to the
         // journaled KV sink: per micro-batch, screen against the
         // accumulated accepted-corpus sketch, near-dedup within the batch,
@@ -147,80 +144,54 @@ object StreamPipeline {
         val (threshold, rowFppWarn) = (a.double("threshold", 0.8), a.double("row_fpp_warn", 0.5))
         val keep = a.int("keep_versions", 2)
         val (kvMode, target, ttl) = kvWrite(a)
-        (None, df => StreamOps.nearDedupIngestSink(df, text, key, modelDir,
+        df => StreamOps.nearDedupIngestSink(df, text, key, modelDir,
             graft.text.Dedup.emptyNeardupBloom(shingle, hashes, bands, fpp, expected), ckpt,
             new graft.sources.BatchJournal.KvJournal(factory),
             threshold = threshold, rowFppWarn = rowFppWarn, keepVersions = keep) { (surv, id) =>
           graft.sources.KeyValueSink.writeBatchJournaled(surv, key, factory,
             s"__graft/journal/$ckpt/kv/$id", kvMode, target, ttl)
           ()
-        }.start()) })(a)
+        }.start() })(a)
   }
 
-  /** The `monitoring:` section (reference streaming_pipeline.yaml:83-97).
-    * Memory sinks carry a query name to filter on; other sinks record every
-    * query in the session (single-query pipelines in practice). */
-  private[graft] def monitoring(a: Params, queryName: Option[String]): SparkSession => StreamMetrics = {
+  /** The `monitoring:` section (reference streaming_pipeline.yaml:83-97):
+    * the thresholds every batch of the query is classified against, and
+    * how many batches its profile retains. */
+  private[graft] def monitoring(a: Params): StreamProfile.Monitoring = {
     val (maxBatchMs, minRps) = (a.long("max_batch_ms", 1000L), a.double("min_records_per_second", 10.0))
-    val maxBatches = a.int("max_batches", 10000)
-    spark => StreamMetrics.attach(spark, maxBatchMs = maxBatchMs, minRecordsPerSec = minRps,
-      queryName = queryName.orNull, maxBatches = maxBatches)
+    val maxBatches = a.int("max_batches", StreamProfile.DefaultMaxBatches)
+    a.require(maxBatches > 0, s"max_batches must be positive, got $maxBatches")
+    StreamProfile.Monitoring(maxBatchMs, minRps, maxBatches)
   }
 
   /** Build the streaming DataFrame (source → transforms → window agg). */
-  def build(spark: SparkSession, conf: Conf): DataFrame =
-    buildWithAttrition(spark, conf)._1
+  def build(spark: SparkSession, conf: Conf): DataFrame = built(spark, conf)._1
 
-  /** [[build]] plus the stream-attrition listener when the YAML declares
-    * an `attrition:` block (round 11 — the batch Pipeline feature's
-    * streaming half): named observe nodes between every transform, per-
-    * micro-batch rows/weight accumulated by [[StreamAttrition]]. The
-    * caller attaches/detaches the listener ([[startWithAttrition]] does
-    * both ends). */
-  def buildWithAttrition(spark: SparkSession, conf: Conf): (DataFrame, Option[StreamAttrition]) = {
+  /** [[build]], with named observe nodes between the transforms when the
+    * YAML declares an `attrition:` block. */
+  private def built(spark: SparkSession, conf: Conf): (DataFrame, Option[StreamProfile.Stages]) = {
     val base = conf.source(spark)
-    val (transformed, attrition) = conf.attritionWeight match {
+    val (transformed, stages) = conf.attritionWeight match {
       case Some(weight) =>
-        val (out, l) = StreamAttrition.instrument(base, conf.transforms, weight)
-        (out, Some(l))
+        val (out, s) = StreamProfile.observe(base, conf.transforms, weight)
+        (out, Some(s))
       case None =>
         (OpCompiler.compile(conf.transforms.map(_._2))(base), None)
     }
-    (conf.window.fold(transformed)(_(transformed)), attrition)
+    (conf.window.fold(transformed)(_(transformed)), stages)
   }
 
-  /** [[start]] plus the attrition listener (attached before start; the
-    * caller detaches via [[StreamAttrition.detach]] when done — a start()
-    * failure must not leak it, the startMonitored discipline). */
-  def startWithAttrition(spark: SparkSession, conf: Conf): (StreamingQuery, Option[StreamAttrition]) = {
-    val (df, attrition) = buildWithAttrition(spark, conf)
-    attrition.foreach(StreamAttrition.attach(spark, _))
-    try (conf.sink(df), attrition)
-    catch {
-      case e: Throwable =>
-        attrition.foreach(StreamAttrition.detach(spark, _))
-        throw e
-    }
+  /** Start the query against the configured sink, with its
+    * [[StreamProfile]]: the `monitoring:` status and the `attrition:`
+    * report, when declared, plus the per-batch rows and phase times. The
+    * profile detaches itself when the query terminates. */
+  def start(spark: SparkSession, conf: Conf): (StreamingQuery, StreamProfile) = {
+    val (df, stages) = built(spark, conf)
+    StreamProfile.start(spark, conf.monitoring, stages)(conf.sink(df))
   }
 
-  /** Start the query with a metrics listener when the YAML declares a
-    * `monitoring` section. Returns the query plus the attached
-    * [[StreamMetrics]] (None without a monitoring section). Caller detaches
-    * the listener when done.
-    */
-  def startMonitored(spark: SparkSession, conf: Conf): (StreamingQuery, Option[StreamMetrics]) = {
-    val metrics = conf.monitoring.map(_(spark))
-    // a start() failure must not leak the already-attached listener on the
-    // shared session (round-6 review)
-    try (start(spark, conf), metrics)
-    catch {
-      case e: Throwable =>
-        metrics.foreach(StreamMetrics.detach(spark, _))
-        throw e
-    }
-  }
-
-  /** Start the query against the configured sink. */
-  def start(spark: SparkSession, conf: Conf): StreamingQuery =
-    conf.sink(build(spark, conf))
+  /** [[start]] under its former name, which the frozen benchmark harness
+    * (perfbench's StreamBench) calls. */
+  @deprecated("use start", "0.1.0")
+  def startWithAttrition(spark: SparkSession, conf: Conf): (StreamingQuery, StreamProfile) = start(spark, conf)
 }

@@ -70,22 +70,6 @@ object TextLib {
     */
   def shingles(text: Column, n: Int): Column = graft.expr.WordShingles(text, n)
 
-  /** Character n-gram shingles (robust for CJK / no-whitespace scripts).
-    *
-    * PERF WARNING: pass a CHEAP column (an attribute, not a computed
-    * expression) — the per-element `substring(t, i, n)` lambda re-evaluates
-    * `t`'s whole subtree once per position (HOFs are interpreted, no CSE),
-    * so handing it a regex-normalized expression is O(len²) in regex runs.
-    * The internal `normalized()` wrap below is the only subtree cost; for
-    * hot paths use a native expression (see WordShingles) instead.
-    */
-  def charShingles(text: Column, n: Int): Column = {
-    val t = normalized(text)
-    array_distinct(
-      when(length(t) <= n, array(t))
-        .otherwise(transform(sequence(lit(1), length(t) - n + 1), i => substring(t, i, lit(n)))))
-  }
-
   // ---------------------------------------------------------------- quality
 
   /** Quality metrics per document: length, token counts, punctuation /

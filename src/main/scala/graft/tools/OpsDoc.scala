@@ -144,7 +144,7 @@ object OpsDoc {
     out ++= "stream has no table catalog, fits no model and keeps no key order).\n"
     out ++= "`sink.output_mode` defaults to `update` under a tumbling or sliding\n"
     out ++= "window and to `append` otherwise.\n\n"
-    out ++= s"`monitoring`: ${keysOf(StreamPipeline.monitoring(_, None))}\n\n"
+    out ++= s"`monitoring`: ${keysOf(StreamPipeline.monitoring)}\n\n"
     out ++= s"`attrition`: ${keysOf(StreamPipeline.attrition)}\n\n"
     Seq[(String, Binder)](
       "stream_source" -> StreamPipeline.source,

@@ -230,19 +230,4 @@ object Prototypes {
       seed, "far_from_centroid", maxTrainRows, maxClusterSize)
     protoApply(survivors, idCol, vecCol, centroids, pruneFraction)
   }
-
-  /** [[d4Select]] with the prototype centroids FITTED on the semantic
-    * survivors (the paper re-clusters after dedup — duplicate mass no
-    * longer drags centroids toward itself).
-    */
-  def d4SelectFit(corpus: DataFrame, idCol: String, vecCol: String,
-                  semThreshold: Double, semClusters: Int,
-                  protoK: Int, pruneFraction: Double,
-                  seed: Long = 42L, maxTrainRows: Int = 100000,
-                  maxClusterSize: Int = 10000): DataFrame = {
-    val survivors = SemDedup.semanticDedup(corpus, idCol, vecCol, semThreshold, semClusters,
-      seed, "far_from_centroid", maxTrainRows, maxClusterSize)
-    protoApply(survivors, idCol, vecCol,
-      protoFit(survivors, idCol, vecCol, protoK, seed, maxTrainRows), pruneFraction)
-  }
 }

@@ -74,7 +74,7 @@ class CliSpec extends SparkSpec {
     // same fixture + YAML as PipelineSpec's attrition gate; here the CLI
     // rendering of that report is pinned (Cli run prints these lines with
     // an [attrition] stderr prefix; stream --drain renders the
-    // StreamAttrition report through the same function)
+    // StreamProfile report through the same function)
     val in = java.nio.file.Files.createTempDirectory("graft_cli_attr").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$in/d.csv"),
       "id,age,spend,city\n1,30,100,NY\n2,25,200,SF\n3,35,150,NY\n4,25,50,LA\n")
@@ -107,6 +107,20 @@ class CliSpec extends SparkSpec {
     assert(Cli.renderAttrition(Nil).isEmpty)
   }
 
+  /** Run `graft.Cli <args>` in a child JVM on this JVM's classpath and
+    * module options; returns (exit code, stdout, stderr). */
+  private def cliJvm(args: String*): (Int, String, String) = {
+    val jvmOpts = scala.jdk.CollectionConverters.ListHasAsScala(
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments).asScala
+      .filterNot(_.startsWith("-Xmx"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmOpts ++
+      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"), "graft.Cli") ++ args
+    val (out, err) = (new StringBuilder, new StringBuilder)
+    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
+      l => out.append(l).append('\n'), l => err.append(l).append('\n')))
+    (code, out.toString, err.toString)
+  }
+
   test("run prints the result line, then one drained [profile] line on stderr") {
     // `run` owns (and stops) its SparkSession, so it runs in a child JVM
     // on this JVM's classpath and module options
@@ -121,19 +135,11 @@ class CliSpec extends SparkSpec {
          |  - { type: filter, condition: "age >= 20" }
          |storage: { type: parquet, path: "$dir/out", mode: overwrite }
          |""".stripMargin)
-    val jvmOpts = scala.jdk.CollectionConverters.ListHasAsScala(
-      java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments).asScala
-      .filterNot(_.startsWith("-Xmx"))
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ jvmOpts ++
-      Seq("-Xmx1g", "-cp", System.getProperty("java.class.path"),
-        "graft.Cli", "run", yaml.toString, "--log-file", s"$dir/events.jsonl")
-    val (out, err) = (new StringBuilder, new StringBuilder)
-    val code = scala.sys.process.Process(cmd).!(scala.sys.process.ProcessLogger(
-      l => out.append(l).append('\n'), l => err.append(l).append('\n')))
+    val (code, out, err) = cliJvm("run", yaml.toString, "--log-file", s"$dir/events.jsonl")
     assert(code == 0, s"exit $code\n$err")
-    val result = graft.core.Json.parse(out.toString.trim.linesIterator.toSeq.last).asInstanceOf[Map[String, Any]]
+    val result = graft.core.Json.parse(out.trim.linesIterator.toSeq.last).asInstanceOf[Map[String, Any]]
     assert(result("status") == "success" && result("rows") == 2L, result)
-    val errLines = err.toString.linesIterator.toSeq
+    val errLines = err.linesIterator.toSeq
     assert(!errLines.exists(_.startsWith("[metrics]")), errLines.mkString("\n"))
     val profiles = errLines.filter(_.startsWith("[profile] "))
     assert(profiles.size == 1, errLines.mkString("\n"))
@@ -145,6 +151,41 @@ class CliSpec extends SparkSpec {
     val write = prof("query_rows").asInstanceOf[List[Map[String, Any]]].last
     assert(write("rows") == 2L, prof)
     assert(write("operators").asInstanceOf[List[List[Any]]].contains(List("InMemoryTableScan", 2L)), prof)
+  }
+
+  test("stream --drain prints the result line, one [profile] line and attrition") {
+    // `stream` owns (and stops) its SparkSession, so it runs in a child JVM;
+    // the YAML's monitoring: section classifies the drained batches
+    val dir = tmpDir()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "in"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "in", "b1.json"),
+      """{"doc_id":1,"v":5}
+        |{"doc_id":2,"v":-1}
+        |{"doc_id":3,"v":7}""".stripMargin)
+    val yaml = java.nio.file.Paths.get(dir, "s.yaml")
+    java.nio.file.Files.writeString(yaml,
+      s"""name: cli_stream
+         |stream_source: { type: file, path: "$dir/in", format: json, schema: "doc_id BIGINT, v BIGINT" }
+         |transforms:
+         |  - { type: filter, condition: "v > 0" }
+         |attrition: { weight_column: v }
+         |sink: { type: memory, name: cli_stream_out }
+         |monitoring: { max_batch_ms: 600000, min_records_per_second: 0 }
+         |""".stripMargin)
+    val (code, out, err) = cliJvm("stream", yaml.toString, "--drain")
+    assert(code == 0, s"exit $code\n$err")
+    val result = graft.core.Json.parse(out.trim.linesIterator.toSeq.last).asInstanceOf[Map[String, Any]]
+    assert(result.keySet == Set("stream", "batches", "rows"), result)
+    assert(result("stream") == "cli_stream" && result("batches") == 1L && result("rows") == 3L, result)
+    val errLines = err.linesIterator.toSeq
+    val profiles = errLines.filter(_.startsWith("[profile] "))
+    assert(profiles.size == 1, errLines.mkString("\n"))
+    val prof = graft.core.Json.parse(profiles.head.stripPrefix("[profile] ")).asInstanceOf[Map[String, Any]]
+    assert(prof("batches") == 1L && prof("rows") == 3L && prof("status") == "PASS", prof)
+    val attrition = errLines.filter(_.startsWith("[attrition] ")).map(_.stripPrefix("[attrition] ").split("\\s+").toSeq)
+    assert(attrition == Seq(
+      Seq("stage", "op", "rows_in", "rows_out", "dropped", "weight_in", "weight_out"),
+      Seq("1", "filter", "3", "2", "1", "11", "12")), errLines.mkString("\n"))
   }
 
   test("run --dry-run prints the plan summary without executing") {

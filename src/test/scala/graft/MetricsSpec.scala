@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.core.Metrics
+import graft.core.{Health, Metrics}
 import graft.core.Metrics._
 
 /** Engine-side observability registry — mirrors the reference's
@@ -93,18 +93,22 @@ class MetricsSpec extends AnyFunSuite {
   test("health checks: gauges + duration recorded, throwing check counts unhealthy") {
     val (clock, setTime) = fixedClock(0L)
     val c = new Collector(clock = clock)
-    val h = new HealthChecker(c, clock)
-    h.addCheck("storage", () => true)
-    h.addCheck("jdbc", () => { setTime(clock() + 50L); false })
-    h.addCheck("boom", () => throw new RuntimeException("nope"))
-    val (overall, results) = h.runChecks()
-    assert(!overall)
-    assert(results("storage").healthy && !results("jdbc").healthy)
-    assert(results("boom").error.contains("nope"))
-    assert(c.getMetrics("health_check_storage", "1h").map(_.value) == Seq(1.0))
-    assert(c.getMetrics("health_check_jdbc", "1h").map(_.value) == Seq(0.0))
-    assert(c.getMetrics("health_check_duration_seconds", "1h").size == 2,
-      "throwing check records no duration (reference parity)")
+    def check(name: String)(perform: => Health.Status) =
+      Health.Check(name, () => (perform, name, Map.empty[String, Double]))
+    val (overall, results) = Health.runAll(Seq(
+      check("storage")(Health.Healthy),
+      check("jdbc") { setTime(clock() + 50L); Health.Unhealthy },
+      check("boom")(throw new RuntimeException("nope"))), c, clock)
+    assert(overall == Health.Unhealthy)
+    val byName = results.map(r => r.name -> r).toMap
+    assert(byName("storage").status == Health.Healthy && byName("jdbc").status == Health.Unhealthy)
+    assert(byName("jdbc").durationMs == 50.0)
+    assert(byName("boom").status == Health.Unhealthy && byName("boom").message.contains("nope"))
+    // one status gauge per check, tagged with its name (0 healthy, 2 unhealthy)
+    val gauges = c.getMetrics("health_check_status", "1h").map(m => m.tags("check_name") -> m.value)
+    assert(gauges == Seq("storage" -> 0.0, "jdbc" -> 2.0, "boom" -> 2.0))
+    assert(c.getMetrics("health_check_duration_seconds", "1h").map(_.value) == Seq(0.0, 0.05, 0.0),
+      "a throwing check records its duration too")
   }
 
   test("alert lifecycle: fire once, stay active, resolve, reappear in history") {

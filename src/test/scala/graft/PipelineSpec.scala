@@ -591,7 +591,7 @@ class PipelineSpec extends SparkSpec {
       java.nio.file.Paths.get("examples/stream_pipeline.yaml")), "UTF-8")
     val conf = graft.streaming.StreamPipeline.fromYaml(
       yaml.replace("${GRAFT_STREAM_IN:/tmp/graft_stream_in}", in))
-    val q = graft.streaming.StreamPipeline.start(spark, conf)
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, conf)
     try {
       q.processAllAvailable()
       val n = spark.sql("SELECT count(*) FROM events_stream_out").first().getLong(0)

@@ -131,19 +131,19 @@ class PlanLintSpec extends SparkSpec {
 
   test("one batch listener: only RunProfile registers Spark or query execution listeners") {
     // a run's jobs, stages, tasks and queries are observed in one place,
-    // scoped by the run's job tag; streams report through their own two
-    // StreamingQueryListeners
+    // scoped by the run's job tag; a stream query reports through its one
+    // StreamProfile
     val batch = "\\.addSparkListener\\(|listenerManager\\.register\\(".r
     val stream = "streams\\.addListener\\(".r
-    val streamListeners = Seq("streaming/StreamAttrition.scala", "streaming/StreamMetrics.scala")
     val offenders = mainSources.flatMap { f =>
       val text = scala.io.Source.fromFile(f, "UTF-8").mkString
       val path = f.getPath
       val n = (if (path.endsWith("core/RunProfile.scala")) 0 else batch.findAllMatchIn(text).size) +
-        (if (streamListeners.exists(path.endsWith)) 0 else stream.findAllMatchIn(text).size)
+        (if (path.endsWith("streaming/StreamProfile.scala")) 0 else stream.findAllMatchIn(text).size)
       if (n > 0) Seq(s"$path: $n listener registration(s)") else Nil
     }
-    assert(offenders.isEmpty, "register listeners in graft.core.RunProfile only:\n" + offenders.mkString("\n"))
+    assert(offenders.isEmpty, "register listeners in graft.core.RunProfile and graft.streaming.StreamProfile only:\n" +
+      offenders.mkString("\n"))
   }
 
   test("no unpartitioned per-key sequential scans in batch sources (RDD-shape lint)") {

@@ -90,7 +90,7 @@ class StreamingSpec extends SparkSpec {
          |  aggregations: { v2: [sum, count] }
          |sink: { type: memory, name: yaml_stream_out, output_mode: complete }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val rows = spark.sql("SELECT user, v2_sum, v2_count FROM yaml_stream_out ORDER BY window_start, user")
@@ -99,53 +99,62 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("StreamMetrics: per-batch latency/rate metrics with PASS/WARN/FAIL classification") {
+  private def writeFile(dir: String, name: String, body: String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, name), body)
+
+  test("StreamProfile: per-batch latency/rate classification as PASS/WARN/FAIL") {
     // the reference declares processing_latency_p95 and records/s alert
-    // thresholds (streaming_pipeline.yaml:83-97); two listeners on the SAME
-    // run prove both the collection and the classification rule: a
-    // 0ms-latency threshold must FAIL every non-trivial batch, a loose one
-    // must PASS them all
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val agg = StreamOps.tumbling(input.toDF(), "ts", "5 minutes", "10 minutes",
-      Seq("user"), Seq("v" -> "sum"))
-    val strict = graft.streaming.StreamMetrics.attach(spark,
-      maxBatchMs = 0L, minRecordsPerSec = 0.0, queryName = "metrx")
-    val loose = graft.streaming.StreamMetrics.attach(spark,
-      maxBatchMs = 600000L, minRecordsPerSec = 0.0, queryName = "metrx")
-    val q = agg.writeStream.format("memory").queryName("metrx").outputMode("complete").start()
+    // thresholds (streaming_pipeline.yaml:83-97). The rule is a pure
+    // function: a 0 ms latency threshold FAILs every batch that took any
+    // time, a loose one PASSes it, and the 0.8 guard band WARNs
+    import graft.streaming.StreamProfile.{Monitoring, classify}
+    val strict = Monitoring(maxBatchMs = 0L, minRowsPerSec = 0.0, maxBatches = 10)
+    val loose = Monitoring(maxBatchMs = 600000L, minRowsPerSec = 0.0, maxBatches = 10)
+    assert(classify(2L, 5L, 400.0, strict) == "FAIL")
+    assert(classify(2L, 5L, 400.0, loose) == "PASS")
+    val band = Monitoring(maxBatchMs = 1000L, minRowsPerSec = 10.0, maxBatches = 10)
+    assert(classify(2L, 900L, 100.0, band) == "WARN", "latency inside the 0.8 band")
+    assert(classify(2L, 100L, 11.0, band) == "WARN", "rate under floor/0.8")
+    assert(classify(2L, 100L, 9.0, band) == "FAIL", "rate under the floor")
+    assert(classify(0L, 100L, 0.0, band) == "PASS", "an empty batch skips the rate check")
+    // one YAML run over two files: the profile classifies each batch and
+    // rolls them up
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_classify").toString
+    writeFile(dir, "b1.json",
+      """{"ts":"2024-01-01T00:01:00.000Z","user":"a","v":1.0}
+        |{"ts":"2024-01-01T00:02:00.000Z","user":"b","v":2.0}""".stripMargin)
+    val yaml =
+      s"""name: classify_stream
+         |stream_source: { type: file, path: "$dir", format: json, schema: "ts TIMESTAMP, user STRING, v DOUBLE" }
+         |window: { type: tumbling, size: "5 minutes", time_column: ts, watermark: "10 minutes", keys: [user], aggregations: { v: [sum] } }
+         |sink: { type: memory, name: classify_stream_out, output_mode: complete }
+         |monitoring: { max_batch_ms: 600000, min_records_per_second: 0 }
+         |""".stripMargin
+    val (q, profile) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
-      input.addData(Ev(t("2024-01-01 00:01:00"), "a", 1.0), Ev(t("2024-01-01 00:02:00"), "b", 2.0))
       q.processAllAvailable()
-      input.addData(Ev(t("2024-01-01 00:03:00"), "a", 3.0))
+      writeFile(dir, "b2.json", """{"ts":"2024-01-01T00:03:00.000Z","user":"a","v":3.0}""")
       q.processAllAvailable()
-      // listener bus is async — poll until both listeners saw the data batches
-      var spins = 0
-      while (spins < 40 && loose.metrics.count(_.numInputRows > 0) < 2) {
-        Thread.sleep(250); spins += 1
-      }
-      val got = loose.metrics.filter(_.numInputRows > 0)
-      assert(got.size >= 2, s"expected >=2 data batches, got ${loose.metrics}")
-      assert(got.map(_.numInputRows).sum == 3L, s"row accounting: $got")
-      assert(got.forall(_.batchDurationMs > 0), s"durations must be positive: $got")
-      assert(got.forall(_.status == "PASS"), s"loose thresholds must PASS: $got")
-      val s = strict.metrics.filter(_.numInputRows > 0)
-      assert(s.forall(_.status == "FAIL"), s"0ms threshold must FAIL every batch: $s")
-      // rollup: p95 over recorded batches + worst status
-      val (n, rows, p95, rps, worst) = loose.summary
-      assert(n >= 2 && rows == 3L && p95 > 0 && rps > 0 && worst == "PASS",
-        s"summary ($n, $rows, $p95, $rps, $worst)")
-      assert(strict.summary._5 == "FAIL")
-    } finally {
-      q.stop()
-      graft.streaming.StreamMetrics.detach(spark, strict)
-      graft.streaming.StreamMetrics.detach(spark, loose)
-    }
+    } finally q.stop()
+    val s = profile.summary()
+    val got = s.recent.filter(_.rows > 0)
+    assert(got.size >= 2, s"expected >=2 data batches, got ${s.recent}")
+    assert(got.map(_.rows).sum == 3L, s"row accounting: $got")
+    assert(got.forall(_.batchMs > 0), s"durations must be positive: $got")
+    assert(got.forall(_.status.contains("PASS")), s"loose thresholds must PASS: $got")
+    assert(got.forall(b => classify(b.rows, b.batchMs, b.rowsPerSec, strict) == "FAIL"),
+      s"0ms threshold must FAIL every batch: $got")
+    // rollup: p95 over the recorded batches + worst status
+    assert(s.batches >= 2 && s.rows == 3L && s.p95Ms > 0 && s.rowsPerSec > 0 && s.status.contains("PASS"),
+      s"summary $s")
+    // each batch splits its trigger time into phases
+    assert(got.forall(b => b.phaseMs.contains("addBatch") && b.phaseMs("addBatch") <= b.batchMs), got)
+    assert(s.phaseMs("triggerExecution") == s.recent.map(_.batchMs).sum, s)
   }
 
   test("StreamPipeline: YAML monitoring section attaches metrics to the run") {
     val dir = java.nio.file.Files.createTempDirectory("graft_stream_mon").toString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/batch1.json"),
+    writeFile(dir, "batch1.json",
       """{"ts":"2024-01-01T00:01:00.000Z","user":"a","v":1.0}
         |{"ts":"2024-01-01T00:02:00.000Z","user":"b","v":2.0}""".stripMargin)
     val yaml =
@@ -161,31 +170,58 @@ class StreamingSpec extends SparkSpec {
          |sink: { type: memory, name: mon_stream_out, output_mode: complete }
          |monitoring: { max_batch_ms: 600000, min_records_per_second: 0 }
          |""".stripMargin
-    val (q, metricsOpt) = graft.streaming.StreamPipeline.startMonitored(
-      spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, profile) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    try q.processAllAvailable()
+    finally q.stop()
+    val s = profile.summary()
+    assert(s.recent.exists(_.rows > 0), s"expected a data batch in ${s.recent}")
+    // exactly its own query's batches
+    assert(s.recent.map(_.batchId) == q.recentProgress.map(_.batchId).toSeq, s"scope: ${s.recent}")
+    assert(s.status.contains("PASS"))
+    // it removed itself from the session when its query terminated
+    assert(!spark.streams.listListeners().contains(profile))
+  }
+
+  test("StreamProfile: concurrent parquet and memory streams each count their own") {
+    // a listener on the session sees every query's progress; the profile
+    // keeps only its own query's, whatever the sink
+    val (inA, inB) = (java.nio.file.Files.createTempDirectory("graft_scope_a").toString,
+      java.nio.file.Files.createTempDirectory("graft_scope_b").toString)
+    val out = java.nio.file.Files.createTempDirectory("graft_scope_out").toString
+    writeFile(inA, "a1.json", "{\"id\":1,\"v\":1}\n{\"id\":2,\"v\":2}\n{\"id\":3,\"v\":3}")
+    writeFile(inB, "b1.json", "{\"id\":4,\"v\":4}\n{\"id\":5,\"v\":5}")
+    def yaml(name: String, in: String, sink: String) =
+      s"""name: $name
+         |stream_source: { type: file, path: "$in", format: json, schema: "id BIGINT, v BIGINT" }
+         |transforms:
+         |  - { type: filter, condition: "v > 0" }
+         |sink: $sink
+         |""".stripMargin
+    val start = (y: String) => graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(y))
+    val (qa, pa) = start(yaml("scope_parquet", inA,
+      s"""{ type: parquet, path: "$out/sink", checkpoint: "$out/ckpt" }"""))
+    val (qb, pb) = start(yaml("scope_memory", inB, "{ type: memory, name: scope_memory_out }"))
     try {
-      assert(metricsOpt.isDefined, "monitoring section must attach a listener")
-      q.processAllAvailable()
-      var spins = 0
-      while (spins < 40 && !metricsOpt.get.metrics.exists(_.numInputRows > 0)) {
-        Thread.sleep(250); spins += 1
-      }
-      val m = metricsOpt.get.metrics
-      assert(m.exists(_.numInputRows > 0), s"expected a data batch in $m")
-      assert(m.forall(_.queryName == "mon_stream_out"), s"name filter: $m")
-      assert(metricsOpt.get.summary._5 == "PASS")
-    } finally {
-      q.stop()
-      metricsOpt.foreach(graft.streaming.StreamMetrics.detach(spark, _))
-    }
+      qa.processAllAvailable()
+      qb.processAllAvailable()
+      writeFile(inA, "a2.json", "{\"id\":6,\"v\":6}")
+      qa.processAllAvailable()
+    } finally { qa.stop(); qb.stop() }
+    val (sa, sb) = (pa.summary(), pb.summary())
+    assert(sa.rows == 4L && sb.rows == 2L, s"rows: parquet ${sa.rows}, memory ${sb.rows}")
+    assert(sa.batches == qa.recentProgress.length && sb.batches == qb.recentProgress.length,
+      s"batches: parquet ${sa.batches}, memory ${sb.batches}")
+    assert(sa.recent.map(_.batchId) == qa.recentProgress.map(_.batchId).toSeq)
+    assert(sb.recent.map(_.batchId) == qb.recentProgress.map(_.batchId).toSeq)
+    assert(sa.status.isEmpty && sb.status.isEmpty, "no monitoring: section, no status")
   }
 
   test("StreamPipeline: attrition block accumulates per-stage rows/weight across micro-batches (round 11)") {
     // the batch attrition feature's streaming half: named observes ride
-    // each micro-batch; the listener accumulates in/out per stage. Two
+    // each micro-batch; the profile accumulates in/out per stage. Two
     // separate files prove cross-batch accumulation.
     val dir = java.nio.file.Files.createTempDirectory("graft_attr_stream").toString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/b1.json"),
+    writeFile(dir, "b1.json",
       """{"doc_id":1,"v":5}
         |{"doc_id":2,"v":-1}
         |{"doc_id":3,"v":7}""".stripMargin)
@@ -198,32 +234,23 @@ class StreamingSpec extends SparkSpec {
          |attrition: { weight_column: v }
          |sink: { type: memory, name: attr_stream_out, output_mode: append }
          |""".stripMargin
-    val (q, attrOpt) = graft.streaming.StreamPipeline.startWithAttrition(
+    val (q, profile) = graft.streaming.StreamPipeline.start(
       spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
-      assert(attrOpt.isDefined, "attrition block must attach a listener")
-      def reportWhen(cond: Seq[graft.core.OpCompiler.StageAttrition] => Boolean) = {
-        var spins = 0
-        while (spins < 40 && !cond(attrOpt.get.report())) { Thread.sleep(250); spins += 1 }
-        attrOpt.get.report()
-      }
       q.processAllAvailable()
-      val r1 = reportWhen(_.headOption.exists(_.rowsIn == 3))
+      val r1 = profile.summary().attrition
       assert(r1.map(a => (a.stage, a.op, a.rowsIn, a.rowsOut, a.weightIn, a.weightOut)) == Seq(
         (1, "filter", 3L, 2L, Some(11L), Some(12L)),
         (2, "filter", 2L, 1L, Some(12L), Some(5L))), s"batch-1 report wrong: $r1")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"),
+      writeFile(dir, "b2.json",
         """{"doc_id":4,"v":3}
           |{"doc_id":5,"v":-2}""".stripMargin)
       q.processAllAvailable()
-      val r2 = reportWhen(_.headOption.exists(_.rowsIn == 5))
+      val r2 = profile.summary().attrition
       assert(r2.map(a => (a.stage, a.rowsIn, a.rowsOut, a.weightIn, a.weightOut)) == Seq(
         (1, 5L, 3L, Some(12L), Some(15L)),
         (2, 3L, 2L, Some(15L), Some(8L))), s"accumulated report wrong: $r2")
-    } finally {
-      q.stop()
-      attrOpt.foreach(graft.streaming.StreamAttrition.detach(spark, _))
-    }
+    } finally q.stop()
   }
 
   test("StreamPipeline: session-window YAML starts without an explicit output_mode") {
@@ -246,7 +273,7 @@ class StreamingSpec extends SparkSpec {
          |  aggregations: { v: [sum] }
          |sink: { type: memory, name: yaml_session_out }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try q.processAllAvailable() // starting at all IS the assertion
     finally q.stop()
   }
@@ -493,7 +520,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: dsir_apply, model_path: "$modelDir/dsir", min_log_weight: 0.0 }
          |sink: { type: memory, name: gated_ingest_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val kept = spark.sql("SELECT doc_id FROM gated_ingest_out").as[Long].collect().toSet
@@ -521,7 +548,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: gopher_filter, min_words: 50, max_symbol_ratio: 0.2 }
          |sink: { type: memory, name: gopher_ingest_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val out = spark.sql("SELECT * FROM gopher_ingest_out")
@@ -585,7 +612,7 @@ class StreamingSpec extends SparkSpec {
       .replace("${GRAFT_UNIMAX_ALLOC:/models/unimax_alloc}", s"$modelDir/alloc")
       .replace("${GRAFT_KV_NAMESPACE:curation_stream}", ns)
       .replace("${GRAFT_CURATION_CP:/tmp/graft_curation_cp}", cp)
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val rows = KeyValueSink.InMemoryKV.list(ns, "curated")
@@ -632,7 +659,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: seen_corpus_apply, bloom_path: "$modelDir/bloom", drop: true }
          |sink: { type: memory, name: seen_ingest_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val kept = spark.sql("SELECT doc_id FROM seen_ingest_out").as[Long].collect().toSet
@@ -673,7 +700,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: neardup_bloom_apply, model_path: "$modelDir/ndbloom" }
          |sink: { type: memory, name: neardup_ingest_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val streamKept = spark.sql("SELECT doc_id FROM neardup_ingest_out").as[Long].collect().toSet
@@ -725,7 +752,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: semantic_gate, model_path: "$modelDir/sg", threshold: "0.9", drop: true }
          |sink: { type: memory, name: sem_gate_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val streamKept = spark.sql("SELECT vec_id FROM sem_gate_out").as[Long].collect().toSet
@@ -766,7 +793,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: lang_id_apply, model_path: "$modelDir/langid", keep_langs: en }
          |sink: { type: memory, name: langid_ingest_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val kept = spark.sql("SELECT doc_id, lang_pred FROM langid_ingest_out")
@@ -808,7 +835,7 @@ class StreamingSpec extends SparkSpec {
          |""".stripMargin
     }
     def run(langAware: Boolean, sinkName: String): Map[Long, String] = {
-      val q = graft.streaming.StreamPipeline.start(spark,
+      val (q, _) = graft.streaming.StreamPipeline.start(spark,
         graft.streaming.StreamPipeline.fromYaml(yaml(langAware, sinkName)))
       try {
         q.processAllAvailable()
@@ -851,7 +878,7 @@ class StreamingSpec extends SparkSpec {
          |  - { type: text_processing, operation: unimax_apply, allocation_path: "$modelDir/alloc", group_column: lang, key_column: doc_id }
          |sink: { type: memory, name: unimax_ingest_out, output_mode: append }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       val out = spark.sql("SELECT doc_id, text, epoch FROM unimax_ingest_out")
@@ -947,7 +974,7 @@ class StreamingSpec extends SparkSpec {
            |storage: { type: parquet, path: "$dir/out" }
            |""".stripMargin))
       assert(batch.status == "success", s"$entry: ${batch.errors.mkString("; ")}")
-      val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(
+      val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(
         s"""name: parity_stream_$i
            |stream_source: { type: file, path: "$dir/in", format: json, schema: "$ddl" }
            |transforms:
@@ -1386,7 +1413,7 @@ class StreamingSpec extends SparkSpec {
          |        model_dir: "$dir/model", checkpoint: "$dir/ckpt",
          |        namespace: $ns, threshold: "0.7", expected_keys: "10000" }
          |""".stripMargin
-    val q = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
+    val (q, _) = graft.streaming.StreamPipeline.start(spark, graft.streaming.StreamPipeline.fromYaml(yaml))
     try {
       q.processAllAvailable()
       // batch 2: one near-dup of the accepted doc 1, one fresh

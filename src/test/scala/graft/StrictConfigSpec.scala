@@ -59,7 +59,9 @@ class StrictConfigSpec extends AnyFunSuite {
       "key_column: v }\n", true, "transforms[0]", "key_column"),
     ("fit-only semantic_gate key under transforms", streamHead +
       "transforms:\n  - { type: text_processing, operation: semantic_gate, model_path: /m, n_cells: 8 }\n",
-      true, "transforms[0]", "n_cells"))
+      true, "transforms[0]", "n_cells"),
+    ("non-positive monitoring retention (accepted at parse before)", streamHead +
+      "monitoring: { max_batches: 0 }\n", true, "monitoring", "max_batches"))
 
   test("config errors are rejected at fromYaml, naming the index and the key") {
     rejected.foreach { case (name, yaml, stream, where, key) =>
