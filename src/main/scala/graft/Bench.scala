@@ -305,7 +305,7 @@ object Bench {
     // round-7 additions (VERDICT r6 #6: the two heaviest plan families with
     // no timing track — an iterative-graph loop and a golden-family
     // cells → pairs → connected-components composite)
-    "q_pagerank",            // iterative convergence loop + per-iteration localCheckpoint
+    "q_pagerank",            // iterative convergence loop + periodic lineage cut
     "q_semantic_dedup",      // SemDeDup: driver Lloyd + cell pairs + CC + election
     // round-9 additions (new beyond-reference operators get a perf track
     // from birth; priors appear in BENCH_r09, adjudication skips them
@@ -385,23 +385,6 @@ object Bench {
     // comparable without folklore about run variance
     val runs = cfg("SPARK_GRAFT_BENCH_RUNS").getOrElse("3").toInt
 
-    /** Measure each query from a CLEAN memory slate: clearCache drops
-      * CacheManager entries, but localCheckpoint blocks (iterative
-      * operators' truncated state, API-returned materialized results) and
-      * lagging broadcast blocks live at the RDD/ContextCleaner level and
-      * accumulate across a 34-query session — enough resident storage that
-      * a later query's aggregations get denied execution memory (measured:
-      * q_pagerank AGGREGATE_OUT_OF_MEMORY in suite context at the 100x
-      * stress while passing standalone). Unpersisting leftover RDDs and
-      * nudging the GC (the ContextCleaner is reference-triggered) restores
-      * per-query isolation — which is what a benchmark is supposed to
-      * measure anyway. */
-    def cleanSlate(s: SparkSession): Unit = {
-      s.catalog.clearCache()
-      s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-
     /** One warmup + `runs` measured executions of `name` on `s`; returns
       * (median seconds if ALL runs green, mean GC sec per measured run,
       * system load average sampled right after the runs, code-cache MB +
@@ -409,13 +392,24 @@ object Bench {
       * profile). */
     def measure(s: SparkSession, name: String)
         : (Option[Double], Double, Double, (Double, Long), RunProfile.Summary) = {
-      def run(): Unit = qs(name)(s, sfDir).write.format("noop").mode("overwrite").save()
-      cleanSlate(s)
+      // Each run starts from a CLEAN memory slate. A run is one
+      // Checkpoints scope, so the holds and cuts its query takes (iterative
+      // operators' truncated state, API-returned materialized results) are
+      // released when it ends, and a GC nudge before each run releases
+      // lagging broadcast blocks (the ContextCleaner is reference-
+      // triggered). Left to accumulate across a 34-query session, they
+      // denied a later query's aggregations execution memory (measured:
+      // q_pagerank AGGREGATE_OUT_OF_MEMORY in suite context at the 100x
+      // stress while passing standalone).
+      def run(): Unit = graft.core.Checkpoints.scoped {
+        qs(name)(s, sfDir).write.format("noop").mode("overwrite").save()
+      }
+      System.gc()
       try run() catch { case e: Throwable => System.err.println(s"[bench] $name warmup failed: ${e.getMessage}") }
       val gc0 = gcMillis()
       var profile = RunProfile.empty
       val times = (1 to runs).flatMap { _ =>
-        cleanSlate(s) // no inherited caches, checkpoints, or eviction debt
+        System.gc()
         val ((ok, sec), prof) = RunProfile.record(s) {
           val t0 = System.nanoTime()
           val ok = try { run(); true } catch {

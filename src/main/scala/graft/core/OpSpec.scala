@@ -75,9 +75,10 @@ object OpSpec {
     * in-run equivalent). `storageLevel` is any
     * `org.apache.spark.storage.StorageLevel.fromString` name
     * (MEMORY_ONLY, MEMORY_AND_DISK, DISK_ONLY, ..._SER, ..._2, NONE).
-    * Pipeline.execute unpersists every cache-op frame when the run ends,
-    * success or failure — the op marks a reuse point, it must not leak
-    * executor storage past its run.
+    * The frame is held in the current [[Checkpoints]] scope, so
+    * Pipeline.execute releases it when the run ends, success or failure —
+    * the op marks a reuse point, it must not leak executor storage past
+    * its run.
     */
   final case class CacheOp(storageLevel: String = "MEMORY_AND_DISK")                 extends OpSpec
 
@@ -100,14 +101,7 @@ object OpCompiler {
   import OpSpec._
 
   def compile(ops: Seq[OpSpec], tables: String => DataFrame = null): DataFrame => DataFrame =
-    compile(ops, tables, null)
-
-  /** `caches` (when non-null) collects every frame a CacheOp persisted so
-    * the caller — Pipeline.execute — can unpersist them when the run ends;
-    * without it a cache op still works but its lifetime is the session's. */
-  def compile(ops: Seq[OpSpec], tables: String => DataFrame,
-              caches: scala.collection.mutable.Buffer[DataFrame]): DataFrame => DataFrame =
-    df => ops.foldLeft(df)((d, op) => applyOp(d, op, tables, caches))
+    df => ops.foldLeft(df)((d, op) => applyOp(d, op, tables))
 
   /** One stage of an attrition report (round 11, VERDICT r10 #5): rows and
     * (when the declared weight column exists at that point of the chain)
@@ -134,11 +128,10 @@ object OpCompiler {
     * or have not yet created it report a null weight, never an error.
     */
   def compileObserved(ops: Seq[OpSpec], tables: String => DataFrame,
-                      caches: scala.collection.mutable.Buffer[DataFrame],
                       weightCol: Option[String])(
       df: DataFrame): (DataFrame, Attrition) = {
     val prefix = s"graft_attrition_${java.util.UUID.randomUUID().toString.take(8)}_"
-    val (out, hasWeight) = observeChain(df, ops, prefix, weightCol)(applyOp(_, _, tables, caches))
+    val (out, hasWeight) = observeChain(df, ops, prefix, weightCol)(applyOp(_, _, tables))
     (out, new Attrition(prefix, ops.map(_.getClass.getSimpleName), hasWeight))
   }
 
@@ -190,8 +183,9 @@ object OpCompiler {
     }
   }
 
-  def applyOp(df: DataFrame, op: OpSpec, tables: String => DataFrame = null,
-              caches: scala.collection.mutable.Buffer[DataFrame] = null): DataFrame = {
+  /** A `cache` op holds its frame in the current [[Checkpoints]] scope:
+    * a pipeline run releases it when the run ends. */
+  def applyOp(df: DataFrame, op: OpSpec, tables: String => DataFrame = null): DataFrame = {
     val catalog: String => DataFrame =
       if (tables != null) tables
       else name => throw new IllegalArgumentException(
@@ -220,13 +214,21 @@ object OpCompiler {
       case CustomSql(q, tv)              => Relational.customSql(df, q, tv)
       case ParseJson(c, s)               => Relational.parseJson(df, c, s)
       case Flatten                       => graft.sources.Readers.flatten(df)
-      case CacheOp(level)                =>
-        val cached = df.persist(storageLevel(level))
-        if (caches != null) caches += cached
-        cached
-      case Sequence(ops2)                => ops2.foldLeft(df)((d, o) => applyOp(d, o, tables, caches))
+      case CacheOp(level)                => Checkpoints.hold(df, storageLevel(level))
+      case Sequence(ops2)                => ops2.foldLeft(df)((d, o) => applyOp(d, o, tables))
       case b: BoundOp                    => b.bound(df, catalog)
     }
+  }
+
+  /** The former signature, kept for perfbench's BatchBench, which is
+    * frozen with the benchmark: a `cache` op's frame is also added to
+    * `caches`, whose owner may release it before the current scope ends. */
+  @deprecated("a cache op's frame belongs to the current Checkpoints scope; drop `caches`", "0.1.0")
+  def applyOp(df: DataFrame, op: OpSpec, tables: String => DataFrame,
+              caches: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
+    val out = applyOp(df, op, tables)
+    if (caches != null && op.isInstanceOf[CacheOp]) caches += out
+    out
   }
 
   /** A `cache` op's storage level, checked when the op is parsed. */
@@ -466,7 +468,7 @@ object OpCompiler {
     val ids = a.list("centroid_ids").flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val (k, seed, maxTrainRows) = (a.int("k", 64), a.long("seed", 42L), a.int("max_train_rows", 100000))
     val (loadPath, savePath) = (a.opt("centroids_path"), a.opt("save_centroids_path"))
-    df => loadPath.map(graft.vec.Prototypes.loadCentroids(df.sparkSession, _)).getOrElse {
+    df => loadPath.map(graft.vec.Similarity.loadCentroids(df.sparkSession, _)).getOrElse {
       val cents =
         if (ids.nonEmpty) {
           val rows = df.filter(col(idCol).cast("string").isin(ids: _*))
@@ -478,7 +480,7 @@ object OpCompiler {
             case n: java.lang.Number => n.doubleValue()
           }.toArray)
         } else graft.vec.Prototypes.protoFit(df, idCol, vecCol, k, seed, maxTrainRows)
-      savePath.foreach(graft.vec.Prototypes.saveCentroids(df.sparkSession, cents, _))
+      savePath.foreach(graft.vec.Similarity.saveCentroids(df.sparkSession, cents, _))
       cents
     }
   }
@@ -886,7 +888,7 @@ object OpCompiler {
           val model = modelPath.map(SemGate.loadSemGate(spark, _)).getOrElse {
             val m = SemGate.semGateFit(tables(accepted.get), id, vec, nCells = nCells, seed = seed,
               maxTrainRows = maxTrainRows, maxReps = maxReps,
-              centroids = centroids.map(graft.vec.Prototypes.loadCentroids(spark, _)).orNull)
+              centroids = centroids.map(graft.vec.Similarity.loadCentroids(spark, _)).orNull)
             savePath.foreach(SemGate.saveSemGate(spark, m, _))
             m
           }

@@ -55,49 +55,22 @@ object Orchestration {
       else Files.readAllLines(journal).asScala.filter(_.nonEmpty).map(parse)
         .foldLeft(Map.empty[String, QueueItem])((m, it) => m + (it.id -> it)) // last write wins
 
-    // Free-form fields (path, table) must be escaped or a single double
-    // quote in a filename corrupts the journal and makes the WHOLE queue
-    // unloadable on restart. Inside escaped values every quote is preceded
-    // by a backslash, so the `,(?=")` field-split below stays unambiguous.
-    private def esc(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n").replace("\r", "\\r")
+    // One journal line per write, through the shared Json codec (as
+    // LineageTracker and DataCatalog do): free-form fields (path, table)
+    // may hold quotes, backslashes, commas or newlines. Numbers are read
+    // through their string form, so lines written as all-strings (the
+    // older journal format) load too.
     private def parse(line: String): QueueItem = {
-      // escape-aware quoted-string scan: every key and value is a quoted,
-      // esc()-escaped string, so scanning quote-to-quote with backslash
-      // handling is unambiguous. (The previous regex split on `,(?=")`
-      // misfired when a VALUE ended with a comma — the comma precedes the
-      // closing quote and matched the lookahead, corrupting the record.)
-      val fields = scala.collection.mutable.LinkedHashMap.empty[String, String]
-      var i = 0
-      def readQuoted(): String = {
-        i += 1 // opening quote
-        val sb = new StringBuilder
-        while (line(i) != '"') {
-          if (line(i) == '\\' && i + 1 < line.length) {
-            line(i + 1) match { case 'n' => sb += '\n'; case 'r' => sb += '\r'; case c => sb += c }
-            i += 2
-          } else { sb += line(i); i += 1 }
-        }
-        i += 1 // closing quote
-        sb.toString
-      }
-      while (i < line.length) {
-        if (line(i) == '"') {
-          val k = readQuoted()
-          while (i < line.length && line(i) != '"') i += 1 // skip the colon
-          val v = readQuoted()
-          fields(k) = v
-        } else i += 1
-      }
-      val m = fields
-      QueueItem(m("id"), m("path"), m("table"), m("priority").toInt, m("created").toLong,
-        m("status"), m("attempts").toInt)
+      val m = Json.parse(line).asInstanceOf[Map[String, Any]]
+      def num(k: String): Long = m(k).toString.toLong
+      QueueItem(m("id").toString, m("path").toString, m("table").toString, num("priority").toInt,
+        num("created"), m("status").toString, num("attempts").toInt)
     }
 
     private def append(it: QueueItem): Unit = {
-      val json = s"""{"id":"${it.id}","path":"${esc(it.path)}","table":"${esc(it.table)}",""" +
-        s""""priority":"${it.priority}","created":"${it.created}","status":"${it.status}","attempts":"${it.attempts}"}"""
-      Files.write(journal, (json + "\n").getBytes,
+      val json = Json.value(Map("id" -> it.id, "path" -> it.path, "table" -> it.table,
+        "priority" -> it.priority, "created" -> it.created, "status" -> it.status, "attempts" -> it.attempts))
+      Files.write(journal, (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.APPEND)
       items += (it.id -> it)
     }

@@ -57,12 +57,15 @@ object Pipeline {
     * carries the profile's totals and `Result.profile` the profile.
     */
   def execute(spark: SparkSession, conf: PipelineConfig.PipelineConf,
-              plog: Option[StructuredLog.PipelineLogger]): Result = {
+              plog: Option[StructuredLog.PipelineLogger]): Result =
+    // every hold and cut the run takes (the ops', the `cache` ops' and the
+    // result the sink reads) is released when the run ends: success,
+    // validation failure or crash
+    Checkpoints.scoped(run(spark, conf, plog))
+
+  private def run(spark: SparkSession, conf: PipelineConfig.PipelineConf,
+                  plog: Option[StructuredLog.PipelineLogger]): Result = {
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // frames persisted by `cache` ops and the result a sink reads — unpersisted
-    // when the run ends (success, validation failure, or crash): an in-run
-    // cache must not squat in executor storage after its pipeline is gone
-    val caches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     var attrition: Option[OpCompiler.Attrition] = None
     var stage = "load"
     val profile = RunProfile.start(spark)
@@ -80,11 +83,11 @@ object Pipeline {
       val processed = conf.attrition match {
         case Some(a) =>
           val (out, rep) = OpCompiler.compileObserved(
-            conf.operations, catalog, caches, a.weightColumn)(primary)
+            conf.operations, catalog, a.weightColumn)(primary)
           attrition = Some(rep)
           out
         case None =>
-          OpCompiler.compile(conf.operations, catalog, caches)(primary)
+          OpCompiler.compile(conf.operations, catalog)(primary)
       }
       // the observe() metrics ride the run's one aggregate below
       def attritionReport(prof: RunProfile.Summary): Seq[OpCompiler.StageAttrition] =
@@ -111,7 +114,7 @@ object Pipeline {
       // and the catalog then read: each row is processed once, and
       // validation describes exactly the rows written. A run with no sink,
       // no expectations and no attrition block runs no action.
-      if (conf.storage.nonEmpty) caches += processed.persist()
+      if (conf.storage.nonEmpty) Checkpoints.hold(processed)
       val (counted, ratios) =
         if (conf.storage.isEmpty && conf.expectations.isEmpty && attrition.isEmpty) (0L, Nil)
         else OpCompiler.passRatios(processed, conf.expectations.map(_.expression))
@@ -192,9 +195,6 @@ object Pipeline {
           p.endPipeline("failed", errorMessage = Option(t.getMessage), profile = Some(prof))
         }
         Result(conf.name, "failed", 0L, Map.empty, errors.toSeq, profile = prof)
-    } finally {
-      profile.close()
-      caches.foreach(c => try c.unpersist(blocking = false) catch { case _: Throwable => () })
-    }
+    } finally profile.close()
   }
 }

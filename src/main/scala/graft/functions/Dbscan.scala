@@ -1,8 +1,8 @@
 package graft.functions
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed DBSCAN over low-dimensional feature columns.
   *
@@ -101,10 +101,9 @@ object Dbscan {
     val dist2 = (0 until d)
       .map(i => (col(s"a$i") - col(s"b$i")) * (col(s"a$i") - col(s"b$i")))
       .reduce(_ + _)
-    val pairs = left.join(right, Seq("cell"))
+    val pairs = Checkpoints.hold(left.join(right, Seq("cell"))
       .filter(col("id_a") < col("id_b") && dist2 <= lit(eps * eps))
-      .select("id_a", "id_b")
-      .persist(StorageLevel.MEMORY_AND_DISK) // feeds degree, core edges, borders
+      .select("id_a", "id_b")) // feeds degree, core edges, borders
     val nPairs = pairs.count() // materializes the cache for either path
 
     val idType = df.schema(idCol).dataType
@@ -132,7 +131,6 @@ object Dbscan {
       // come from ONE collect of the already-materialized pair list; the
       // differential spec pins equality against the distributed path.
       val rows = pairs.collect()
-      pairs.unpersist()
       val deg = new java.util.HashMap[Any, Integer]()
       rows.foreach { r =>
         deg.merge(r.get(0), 1, (a, b) => a + b); deg.merge(r.get(1), 1, (a, b) => a + b)
@@ -163,10 +161,9 @@ object Dbscan {
 
     val deg = pairs.select(col("id_a").as("id")).union(pairs.select(col("id_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("__nbrs"))
-    val flagged = pts.select("id").join(deg, Seq("id"), "left")
+    val flagged = Checkpoints.hold(pts.select("id").join(deg, Seq("id"), "left")
       .withColumn("is_core", coalesce(col("__nbrs"), lit(0L)) + 1 >= minPts)
-      .drop("__nbrs")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .drop("__nbrs"))
 
     val coreIds = flagged.filter(col("is_core")).select("id")
     val coreEdges = pairs

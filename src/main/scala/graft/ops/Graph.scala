@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Link-graph analytics for web-curation pipelines: degree statistics and
   * PageRank. Crawl-derived quality signals (a page's link authority is a
@@ -11,8 +12,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: every step is an equi-join/groupBy on node ids (one shuffle
   * each); the rank state is |nodes| rows, never |edges|; a periodic
-  * `localCheckpoint` (every k iterations) truncates the lineage so the plan
-  * stays bounded and the dangling-mass scalar folds into the contribution
+  * lineage cut (every k iterations) keeps the plan bounded,
+  * and the dangling-mass scalar folds into the contribution
   * aggregate instead of replaying the iteration history
   * (the clusterCandidates lesson, NOTES_r05).
   */
@@ -45,7 +46,7 @@ object Graph {
     * rank side broadcastable at bench scale and lets the checkpointed
     * eDeg's hash(src) partitioning be reused at cluster scale (a LEFT
     * join from ranks would force the edge relation through a sort-merge
-    * every iteration). The state is materialized (`localCheckpoint`) only
+    * every iteration). The state is materialized (cut) only
     * every `checkpointInterval` iterations: a deferred level re-reads its
     * predecessor only through reused exchanges plus one |nodes|-cheap
     * projection, so deferral trades state materializations and job
@@ -60,68 +61,59 @@ object Graph {
     // ONE edge-sized artifact lives at a time: the distinct edge relation
     // is never materialized on its own (it is computed twice — into outd
     // and into eDeg — trading one cheap re-aggregation for an edge-sized
-    // block footprint of zero), and nodes derives from the CHECKPOINTED
-    // eDeg, not from a third distinct pass. Superseded rank generations
-    // are released as soon as their successor exists, and everything is
-    // released at return. Stale checkpoint blocks are what choked the
-    // 100x scale-stress: e + eDeg + old rank generations sat in storage
-    // while the per-iteration hash aggregations were denied execution
-    // memory (AGGREGATE_OUT_OF_MEMORY at the default heap).
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
-    // outd is consumed exactly once (into eDeg's materialization) now that
-    // the dangling pass is folded into the contribution aggregate, so it
-    // carries no checkpoint of its own
-    val outd = e.groupBy("src").agg(count(lit(1)).as("outd"))
-    // every edge row survives the outd join (outd covers every src), so
-    // eDeg IS the distinct edge relation, degree-annotated
-    val eDeg = e.join(outd, Seq("src")).localCheckpoint()
-    // node universe annotated with the STATIC has-out-edges flag — both
-    // derived from the CHECKPOINTED eDeg, not from extra passes over e
-    val nodes = eDeg.select(col("src").as("node"))
-      .union(eDeg.select(col("dst").as("node"))).distinct()
-      .join(eDeg.select(col("src").as("node")).distinct()
-        .withColumn("__out", lit(true)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("__out"), lit(false)).as("__has_out"))
-      .localCheckpoint()
-    val n = nodes.count()
-    require(n > 0, "pageRank: empty graph")
+    // block footprint of zero), and nodes derives from the CUT eDeg, not
+    // from a third distinct pass. A rank generation is released as soon
+    // as its successor exists, and everything but the result is released
+    // at return. Stale checkpoint blocks are what choked the 100x
+    // scale-stress: e + eDeg + old rank generations sat in storage while
+    // the per-iteration hash aggregations were denied execution memory
+    // (AGGREGATE_OUT_OF_MEMORY at the default heap).
+    Checkpoints.scoped {
+      val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
+      // outd is consumed exactly once (into eDeg's materialization) now that
+      // the dangling pass is folded into the contribution aggregate, so it
+      // carries no cut of its own
+      val outd = e.groupBy("src").agg(count(lit(1)).as("outd"))
+      // every edge row survives the outd join (outd covers every src), so
+      // eDeg IS the distinct edge relation, degree-annotated
+      val eDeg = Checkpoints.cut(e.join(outd, Seq("src")))
+      // node universe annotated with the STATIC has-out-edges flag — both
+      // derived from the CUT eDeg, not from extra passes over e
+      val nodes = Checkpoints.cut(eDeg.select(col("src").as("node"))
+        .union(eDeg.select(col("dst").as("node"))).distinct()
+        .join(eDeg.select(col("src").as("node")).distinct()
+          .withColumn("__out", lit(true)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__out"), lit(false)).as("__has_out")))
+      val n = nodes.count()
+      require(n > 0, "pageRank: empty graph")
 
-    // the uniform start is a pure projection of the checkpointed nodes —
-    // no materialization of its own
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    // the last MATERIALIZED generation — deferred (plan-only) generations
-    // between checkpoints hold no blocks, so only checkpointed ones are
-    // ever freed (null = still on the shared nodes checkpoint)
-    var lastCheckpointed: DataFrame = null
-    for (i <- 1 to iterations) {
-      // mass sitting on nodes with no out-edges: one conditional-sum pass
-      // over the rank state (the flag rides in-row), broadcast IN-PLAN as
-      // a one-row scalar under every output row (the scalar-broadcast
-      // pattern binQuantile et al. use) instead of a head() to the driver
-      val dangling = ranks.agg(coalesce(
-        sum(when(!col("__has_out"), col("rank"))), lit(0.0)).as("__dangling"))
-      val contribs = eDeg.join(ranks, eDeg("src") === ranks("node"))
-        .select(col("dst").as("node"), (col("rank") / col("outd")).as("__c"))
-        .groupBy("node").agg(sum(col("__c")).as("__contrib"))
-      val next = nodes.join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("__has_out"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("__contrib"), lit(0.0)) + col("__dangling") / n)).as("rank"))
-      if (i % checkpointInterval == 0 || i == iterations) {
-        ranks = next.localCheckpoint()
-        // the superseded generation is never read again
-        if (lastCheckpointed ne null) graft.core.Checkpoints.free(lastCheckpointed)
-        lastCheckpointed = ranks
-      } else {
-        ranks = next // deferred: chains onto the last checkpoint's plan
+      def iteration(ranks: DataFrame): DataFrame = {
+        // mass sitting on nodes with no out-edges: one conditional-sum pass
+        // over the rank state (the flag rides in-row), broadcast IN-PLAN as
+        // a one-row scalar under every output row (the scalar-broadcast
+        // pattern binQuantile et al. use) instead of a head() to the driver
+        val dangling = ranks.agg(coalesce(
+          sum(when(!col("__has_out"), col("rank"))), lit(0.0)).as("__dangling"))
+        val contribs = eDeg.join(ranks, eDeg("src") === ranks("node"))
+          .select(col("dst").as("node"), (col("rank") / col("outd")).as("__c"))
+          .groupBy("node").agg(sum(col("__c")).as("__contrib"))
+        nodes.join(contribs, Seq("node"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("node"), col("__has_out"),
+            (lit((1 - damping) / n) + lit(damping) *
+              (coalesce(col("__contrib"), lit(0.0)) + col("__dangling") / n)).as("rank"))
       }
+      // one cut per `checkpointInterval` iterations, and one after the
+      // last: the iterations between cuts chain onto the last cut's plan.
+      // The uniform start is a pure projection of the cut nodes.
+      val segments = (1 to iterations).grouped(checkpointInterval).toSeq
+      var segment = 0
+      Checkpoints.iterate(nodes.withColumn("rank", lit(1.0 / n))) { ranks =>
+        segments(segment).foldLeft(ranks)((r, _) => iteration(r))
+      } { _ => segment += 1; segment == segments.size }
+        .select(col("node"), col("rank"))
     }
-    // the returned ranks is materialized and lineage-free: the edge-sized
-    // eDeg (and nodes) checkpoint blocks can be released too
-    graft.core.Checkpoints.free(eDeg); graft.core.Checkpoints.free(nodes)
-    ranks.select(col("node"), col("rank"))
   }
 
 
@@ -142,14 +134,11 @@ object Graph {
     * closure join.
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val canon = canonical(edges, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // degrees + orientation + closure
-    // materialize the (|nodes|-sized) result, then release the cached edges
-    // — the un-released persist accumulated for the session lifetime on
-    // repeated calls (round-6 ADVICE)
-    val out = triangleCountsOnCanonical(canon).localCheckpoint()
-    canon.unpersist()
-    out
+    // the canonical edges feed degrees, orientation and closure; the
+    // (|nodes|-sized) result is cut and the edges released
+    Checkpoints.scoped {
+      Checkpoints.cut(triangleCountsOnCanonical(Checkpoints.hold(canonical(edges, srcCol, dstCol))))
+    }
   }
 
   /** Canonical undirected simple-graph edge relation (a < b, nulls/loops
@@ -199,20 +188,18 @@ object Graph {
     // ONE canonicalization + persist shared by the degree agg and the
     // triangle pass (previously this called triangleCounts on its own
     // canonical frame, which re-canonicalized and persisted a second copy)
-    val canon = canonical(edges, srcCol, dstCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = canon.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("degree"))
-    val tri = triangleCountsOnCanonical(canon)
-    val out = deg.join(tri, Seq("node"), "left")
-      .select(col("node"), col("degree"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-        when(col("degree") > 1,
-          (lit(2.0) * coalesce(col("n_triangles"), lit(0L))) /
-            (col("degree") * (col("degree") - 1)).cast("double"))
-          .otherwise(lit(0.0)).as("clustering_coeff"))
-      .localCheckpoint()
-    canon.unpersist()
-    out
+    Checkpoints.scoped {
+      val canon = Checkpoints.hold(canonical(edges, srcCol, dstCol))
+      val deg = canon.select(explode(array(col("a"), col("b"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("degree"))
+      val tri = triangleCountsOnCanonical(canon)
+      Checkpoints.cut(deg.join(tri, Seq("node"), "left")
+        .select(col("node"), col("degree"),
+          coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
+          when(col("degree") > 1,
+            (lit(2.0) * coalesce(col("n_triangles"), lit(0L))) /
+              (col("degree") * (col("degree") - 1)).cast("double"))
+            .otherwise(lit(0.0)).as("clustering_coeff")))
+    }
   }
 }

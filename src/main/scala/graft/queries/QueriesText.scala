@@ -1166,7 +1166,7 @@ object QueriesText {
         OS.Calculate("n_chars", "n_chars - 10"),
         OS.FilterCondition("n_chars >= 190"),
         OS.FilterCondition("lang IN ('en','de')"))
-      val (out, report) = OpCompiler.compileObserved(ops, null, null,
+      val (out, report) = OpCompiler.compileObserved(ops, null,
         Some("n_chars"))(t(s, dir, "documents").select("doc_id", "lang", "n_chars"))
       val (_, profile) = graft.core.RunProfile.record(s)(out.write.format("noop").mode("overwrite").save())
       import s.implicits._

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -151,34 +152,6 @@ object StreamOps {
         keys.map(col) ++ aggs.map { case (c, f) => col(s"${c}_$f") }): _*)
   }
 
-  /** Within-watermark stream deduplication (available-if-needed per SURVEY
-    * §2.L): exact-once per key inside the watermark horizon.
-    */
-  def dedupWithinWatermark(df: DataFrame, tsCol: String, watermarkDelay: String,
-                           keys: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, watermarkDelay).dropDuplicatesWithinWatermark(keys)
-
-  /** Streaming exact TEXT dedup — the ingestion-time shape of `Dedup.exact`:
-    * one survivor per sha2(normalized text) within the watermark horizon.
-    * State per distinct doc is one 256-bit hash, evicted at the watermark,
-    * so state stays bounded by the horizon's distinct-doc count (not the
-    * stream's total history) — the property that makes continuous corpus
-    * ingestion viable.
-    */
-  def dedupTextStream(df: DataFrame, textCol: String, tsCol: String,
-                      watermarkDelay: String): DataFrame =
-    // null text → per-row sentinel key, NOT a shared null key:
-    // dropDuplicatesWithinWatermark treats null keys as equal, which would
-    // collapse every failed-extraction row in the horizon to one survivor —
-    // batch Dedup.exact semantics (nulls all pass through) must hold here
-    // too. uuid() is unique per row, and " :" cannot collide with sha2 hex.
-    df.withColumn("__text_h",
-        coalesce(sha2(graft.text.TextLib.normalized(col(textCol)), 256),
-          concat(lit(" :"), expr("uuid()"))))
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("__text_h")
-      .drop("__text_h")
-
   /** Streaming per-group intake quota — the ingestion-time twin of
     * `Scale.quotaPerGroup`: across ALL micro-batches, at most `quota` rows
     * per group ever pass (a lifetime intake budget per domain/source — the
@@ -222,24 +195,6 @@ object StreamOps {
     }.drop("__qk")
   }
 
-  /** Streaming blocklist exclusion: drop stream rows whose key appears in a
-    * STATIC blocklist — the continuous-ingestion form of
-    * `Scale.excludeKeysBloom`. The blocklist is sketched ONCE at stream
-    * build time into a Bloom literal evaluated row-local per micro-batch;
-    * only the tiny bloom-positive fraction pays the exact stream-static
-    * left_anti re-check (no false drops). Stateless: no watermark, no
-    * streaming state — the sketch and the static side are fixed for the
-    * stream's lifetime; restart the stream to pick up a new blocklist.
-    */
-  def excludeKeysStream(df: DataFrame, keyCol: String,
-                        blocklist: DataFrame, blockKeyCol: String,
-                        fpp: Double = 0.01): DataFrame =
-    // the batch implementation is stream-safe as-is: the bloom is built
-    // from the STATIC blocklist at call time, the probe is a row-local
-    // filter, and the suspect re-check is a stream-static left_anti join —
-    // this method exists as the documented streaming entry point
-    graft.ops.Scale.excludeKeysBloom(df, keyCol, blocklist, blockKeyCol, fpp)
-
   /** Per-micro-batch PSI drift monitor — the ingestion-time form of
     * Profiler.psiBins: the REFERENCE (training snapshot / last accepted
     * batch) is fitted ONCE at setup (exact percentile cuts + smoothed
@@ -259,16 +214,6 @@ object StreamOps {
       onResult(graft.quality.Profiler.psiApply(batch, valueCol, fit), id)
     }
   }
-
-  /** Stream-static enrichment: broadcast-join a bounded dimension frame
-    * onto a stream (the lookup-table pattern — device registry, allowlist,
-    * model metadata). The static side broadcasts once per micro-batch
-    * planning; the stream side never shuffles. Left join by default so
-    * unmatched events survive with null enrichment.
-    */
-  def enrichStream(stream: DataFrame, dim: DataFrame, keys: Seq[String],
-                   joinType: String = "left"): DataFrame =
-    stream.join(broadcast(dim), keys, joinType)
 
   /** Stream-stream equi-join with an event-time band — the watermarked
     * two-stream correlation (click↔impression, request↔response). The
@@ -386,9 +331,9 @@ object StreamOps {
       val spark = batch.sparkSession
       val latest = graft.text.Dedup.loadLatestNeardupBloom(spark, modelDir)
       val model = latest.map(_._1).getOrElse(seed)
-      val (survivors, grown) =
-        graft.text.Dedup.neardupIngestStep(batch, textCol, idCol, model, threshold)
-      try {
+      Checkpoints.scoped {
+        val (survivors, grown) =
+          graft.text.Dedup.neardupIngestStep(batch, textCol, idCol, model, threshold)
         downstream(survivors, id)
         // version = max(batchId, latest+1): a checkpoint reset restarts
         // batch ids at 0, and plain v=batchId would then write BELOW the
@@ -426,7 +371,7 @@ object StreamOps {
         // one exists, and an unbounded dir also makes the per-batch
         // listStatus scan grow forever
         graft.text.Dedup.pruneNeardupBloomVersions(spark, modelDir, keepVersions)
-      } finally survivors.unpersist()
+      }
     }
 
   /** Kafka producer sink (kafka_source.py:254-348 streaming parity). */

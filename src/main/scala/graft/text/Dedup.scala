@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -113,11 +114,10 @@ object Dedup {
     // count (skipped when expectedBatchRows is hinted), the bloom
     // treeAggregate, and the final anti-join — without it the upstream
     // DAG recomputes per consumer. Same ownership trade as
-    // minhashCandidates' signature cache: the handle stays cached for the
-    // returned frame's lifetime; at extreme scale write the batch to a
-    // table first and pass that in instead.
-    val withH = df.withColumn("__h", sha2(TextLib.normalized(col(textCol)), 256))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // minhashCandidates' signature cache: the hold lives as long as the
+    // caller's scope; at extreme scale write the batch to a table first
+    // and pass that in instead.
+    val withH = Checkpoints.hold(df.withColumn("__h", sha2(TextLib.normalized(col(textCol)), 256)))
     val nullText = withH.filter(col("__h").isNull)
     val hashed = withH.filter(col("__h").isNotNull)
     val bytes = graft.ops.Scale.bloomBytes(
@@ -313,9 +313,8 @@ object Dedup {
       .filter(!col("maybe_neardup")).drop("maybe_neardup")
     // persisted: the key fold below is an action over the survivors, and
     // the caller hands the SAME frame downstream — one LSH pass, not two
-    val survivors = nearDedup(fresh, textCol, idCol, model.shingleN,
-      model.numHashes, model.bands, threshold, maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val survivors = Checkpoints.hold(nearDedup(fresh, textCol, idCol, model.shingleN,
+      model.numHashes, model.bands, threshold, maxBucketSize))
     val hs = survivors
       .select(minhashSignature(col(textCol), model.shingleN, model.numHashes).as("__sig"))
       .select(explode(lshBandHashes(col("__sig"), model.bands,
@@ -675,10 +674,9 @@ object Dedup {
     // member expansion — without it the signature computation runs per
     // consumer (MLlib's LSH caches for the same reason). 64×8B per doc; at
     // extreme scale write signatures to a table instead.
-    val sigs = df.select(
+    val sigs = Checkpoints.hold(df.select(
       col(idCol).as("id"),
-      minhashSignature(col(textCol), shingleN, numHashes).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      minhashSignature(col(textCol), shingleN, numHashes).as("sig")))
     // null signatures stay out of banding on BOTH paths: est against a null
     // signature is null (never >= threshold), so they can only inflate
     // buckets toward the cap
@@ -707,12 +705,11 @@ object Dedup {
     // = min id), so the common expansion path needs NO join-back shuffle
     // of the signature relation. Null signatures stay out: they can
     // never emit output.
-    val groups = live
+    val groups = Checkpoints.hold(live
       .groupBy(col("sig"))
       .agg(count(lit(1)).as("__gsz"),
         graft.expr.BoundedMinList(col("id"), maxBucketSize).as("__ids"))
-      .withColumn("__rep", col("__ids").getItem(0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__rep", col("__ids").getItem(0)))
     // Bucket rows carry IDS ONLY: exploding the 64-long signature into all
     // `bands` bucket rows would push bands× the array bytes through every
     // shuffle below (measured ~2× wall-clock on the LSH stage). Signatures
@@ -820,8 +817,7 @@ object Dedup {
     // cover distance <= 3); a larger radius silently misses pairs
     require(maxHamming >= 0 && maxHamming <= 3,
       s"simhashCandidates' 4-block scheme guarantees recall only for maxHamming <= 3, got $maxHamming")
-    val sigs = simhash(df, textCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // feeds groups + member expansion
+    val sigs = Checkpoints.hold(simhash(df, textCol, idCol)) // feeds groups + member expansion
     // identical-simhash collapse (the minhashCandidates/SemDedup precedent):
     // hamming(x, x) = 0 passes every valid radius (maxHamming >= 0 required
     // above), so EVERY identical-value group collapses to its min-id rep for
@@ -833,11 +829,10 @@ object Dedup {
     // value lookups ride the distinct-value relation on long rep keys, and
     // expansion left-joins only multi-doc groups' members (AQE broadcasts
     // that relation when duplication is light).
-    val groups = sigs.groupBy(col("simhash"))
+    val groups = Checkpoints.hold(sigs.groupBy(col("simhash"))
       .agg(count(lit(1)).as("__gsz"),
         graft.expr.BoundedMinList(col("id"), maxBucketSize).as("__ids"))
-      .withColumn("__rep", col("__ids").getItem(0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__rep", col("__ids").getItem(0)))
     val blockStructs = (0 until 4).map { i =>
       struct(lit(i).as("blk"), shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL).as("v"))
     }
@@ -920,11 +915,10 @@ object Dedup {
     // candidate generators): a boilerplate bucket with 10k new × 100k ref
     // ids would otherwise expand to 10^9 joined rows before the dedup
     val refBucketW = Window.partitionBy(col("band"), col("bucket"))
-    val r = sigs(refDf, "ref")
+    val r = Checkpoints.hold(sigs(refDf, "ref")
       .withColumn("__bsz", count(lit(1)).over(refBucketW))
       .filter(col("__bsz") <= maxBucketSize)
-      .drop("__bsz")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .drop("__bsz"))
     n.join(r, Seq("band", "bucket"))
       .dropDuplicates("new_id", "ref_id")
       .withColumn("est_jaccard",
@@ -952,7 +946,7 @@ object Dedup {
     * current labels across edges and keeps the minimum, then (b) replaces
     * every label by its own label (path halving) — O(log diameter) rounds
     * (maxIter=10 covers chains ~2^10 long). Each round lazily
-    * localCheckpoints the label frame: the convergence count materializes
+    * cuts the label frame (core/Checkpoints): the convergence count materializes
     * it in one job, and lineage never accrues (the jump references labels
     * ~4× per round — un-truncated, the posted explain string alone grows
     * ~4^rounds).
@@ -964,9 +958,8 @@ object Dedup {
     * Input: (id_a, id_b) pairs. Output: (id, cluster_id).
     */
   def clusterCandidates(pairs: DataFrame, maxIter: Int = 10,
-                        maxLocalEdges: Long = 2000000L): DataFrame = {
-    val p = pairs.select(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                        maxLocalEdges: Long = 2000000L): DataFrame = Checkpoints.scoped {
+    val p = Checkpoints.hold(pairs.select(col("id_a"), col("id_b")))
     // ONE action decides the path AND fetches the local edges: collecting
     // limit(max+1) replaces the previous count()-then-collect() pair —
     // candidate graphs are usually tiny, and on the hot q_semantic_dedup /
@@ -983,85 +976,73 @@ object Dedup {
         val (a, b) = (row.get(0), row.get(1))
         if (a != null && b != null) uf.union(a, b)
       }
-      p.unpersist()
       val rows = new java.util.ArrayList[org.apache.spark.sql.Row](uf.ids.size())
       uf.ids.forEach(id => rows.add(org.apache.spark.sql.Row(id, uf.find(id))))
-      return spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
+      spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", idType),
         org.apache.spark.sql.types.StructField("cluster_id", idType))))
+    } else {
+      val edges = Checkpoints.hold(p.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct())
+      val labels0 = Checkpoints.hold(edges.select(col("src").as("id")).distinct()
+        .withColumn("cluster_id", col("id")))
+      var changed = 1L
+      var iter = 0
+      val labels = if (maxIter < 1) labels0 else Checkpoints.iterate(labels0, eager = false) { labels =>
+        val viaNeighbors = edges
+          .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("cluster_id", "n_label"), Seq("dst"))
+          .groupBy(col("src").as("id"))
+          .agg(min(col("n_label")).as("n_min"))
+        // `propagated` is deliberately NOT persisted even though it feeds both
+        // sides of the jump self-join below (≤2× one round's join+agg over the
+        // CACHED labels/edges — bounded): an in-loop persist+unpersist of a
+        // frame that is a subtree of the cached `next` triggers CacheManager
+        // recache of the dependent entry (its materialized data is dropped and
+        // later iterations recompute the full history) — measured as an OOM in
+        // the end-to-end pipeline spec, vs seconds for the recompute trade.
+        // carry the pre-update label in-row (`__old`) so the convergence
+        // check below is a narrow filter+count on the checkpointed frame —
+        // the previous formulation re-joined next⋈labels just to compare,
+        // a whole extra shuffle per round
+        val propagated = labels.join(viaNeighbors, Seq("id"), "left")
+          .select(col("id"), col("cluster_id").as("__old"),
+            least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id"))).as("cluster_id"))
+        // pointer jump (path halving): label := label's label. Every label IS
+        // an id in the frame (labels start as ids and least() preserves that),
+        // so the left join always matches; coalesce guards the invariant.
+        val jump = propagated.select(col("id").as("cluster_id"), col("cluster_id").as("__cc_up"))
+        val stepped = propagated.join(jump, Seq("cluster_id"), "left")
+          .select(col("id"), col("__old"),
+            least(col("cluster_id"), coalesce(col("__cc_up"), col("cluster_id"))).as("cluster_id"))
+        // `stepped` is cut EVERY round (was every 4th + persist): the jump
+        // self-join references this round's labels ~4x, so un-truncated
+        // lineage makes the NEXT round's plan — and the full explain string
+        // each job posts to the SQL listener — grow ~4^rounds; four deferred
+        // rounds over a wide upstream (dbscan's grid-pair subtree) built a
+        // multi-GB plan string and OOMed the driver before any task ran.
+        // LAZY cut: the convergence count materializes it in the same job
+        // (eager would pay a second job per round for nothing), and the
+        // previous round's labels are released once it has.
+        // (Per-round persist of `propagated` remains wrong — see the note
+        // above.)
+        stepped
+      } { next =>
+        changed = next.filter(col("cluster_id") =!= col("__old")).count()
+        iter += 1
+        changed == 0 || iter >= maxIter
+      }
+      if (changed > 0) {
+        throw new IllegalStateException(
+          s"clusterCandidates did not converge in $maxIter iterations " +
+          s"($changed labels still changing) — the output would silently " +
+          "under-merge duplicate chains; raise maxIter (reach doubles per " +
+          "iteration) or pre-filter degenerate candidate graphs")
+      }
+      // lineage already truncated by the per-round cuts; drop the
+      // convergence-bookkeeping column before handing back
+      labels.drop("__old")
     }
-    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("cluster_id", "n_label"), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("n_label")).as("n_min"))
-      // `propagated` is deliberately NOT persisted even though it feeds both
-      // sides of the jump self-join below (≤2× one round's join+agg over the
-      // CACHED labels/edges — bounded): an in-loop persist+unpersist of a
-      // frame that is a subtree of the cached `next` triggers CacheManager
-      // recache of the dependent entry (its materialized data is dropped and
-      // later iterations recompute the full history) — measured as an OOM in
-      // the end-to-end pipeline spec, vs seconds for the recompute trade.
-      // carry the pre-update label in-row (`__old`) so the convergence
-      // check below is a narrow filter+count on the checkpointed frame —
-      // the previous formulation re-joined next⋈labels just to compare,
-      // a whole extra shuffle per round
-      val propagated = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"), col("cluster_id").as("__old"),
-          least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id"))).as("cluster_id"))
-      // pointer jump (path halving): label := label's label. Every label IS
-      // an id in the frame (labels start as ids and least() preserves that),
-      // so the left join always matches; coalesce guards the invariant.
-      val jump = propagated.select(col("id").as("cluster_id"), col("cluster_id").as("__cc_up"))
-      val stepped = propagated.join(jump, Seq("cluster_id"), "left")
-        .select(col("id"), col("__old"),
-          least(col("cluster_id"), coalesce(col("__cc_up"), col("cluster_id"))).as("cluster_id"))
-      // EVERY round truncates lineage (was every 4th + persist): the jump
-      // self-join references this round's labels ~4x, so un-truncated
-      // lineage makes the NEXT round's plan — and the full explain string
-      // each job posts to the SQL listener — grow ~4^rounds; four deferred
-      // rounds over a wide upstream (dbscan's grid-pair subtree) built a
-      // multi-GB plan string and OOMed the driver before any task ran.
-      // LAZY checkpoint: the count below materializes it in the same job
-      // (eager would pay a second job per round for nothing). Same
-      // executor-loss exposure as the old persist + periodic checkpoint —
-      // local checkpoints are not fault-tolerant; an adversarial-scale run
-      // that must survive executor loss uses reliable checkpointing
-      // upstream. (Per-round persist of `propagated` remains wrong — see
-      // the note above.)
-      val next = stepped.localCheckpoint(false)
-      changed = next.filter(col("cluster_id") =!= col("__old")).count()
-      labels.unpersist() // round 1: labels is a CacheManager persist
-      // rounds >= 2: labels is a checkpoint — unpersist() above is a no-op
-      // on its blocks, which would otherwise leak one generation per round
-      graft.core.Checkpoints.free(labels)
-      labels = next
-      iter += 1
-    }
-    p.unpersist()
-    // the final labels are a materialized checkpoint with no lineage into
-    // edges — releasing the cache here (not only on the throw path) keeps
-    // repeated calls (batchwise nearDedup) from accumulating leaked blocks
-    edges.unpersist()
-    if (changed > 0) {
-      throw new IllegalStateException(
-        s"clusterCandidates did not converge in $maxIter iterations " +
-        s"($changed labels still changing) — the output would silently " +
-        "under-merge duplicate chains; raise maxIter (reach doubles per " +
-        "iteration) or pre-filter degenerate candidate graphs")
-    }
-    // lineage already truncated by the per-round checkpoints; drop the
-    // convergence-bookkeeping column before handing back
-    labels.drop("__old")
   }
 
   /** End-to-end near-deduplication: MinHash-LSH candidates → connected-
@@ -1567,8 +1548,8 @@ object Dedup {
       threshold: Double = 0.5,
       maxDocFreq: Int = 500
   ): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), explode(TextLib.shingles(col(textCol), shingleN)).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // sizes + df-prune + both join sides
+    val sh = Checkpoints.hold(df.select(col(idCol).as("id"),
+      explode(TextLib.shingles(col(textCol), shingleN)).as("s"))) // sizes + df-prune + both join sides
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     val pruned = sh.join(
       sh.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq && col("df") > 1),
@@ -1605,8 +1586,8 @@ object Dedup {
       threshold: Double = 0.8,
       maxDocFreq: Int = 500
   ): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), explode(TextLib.shingles(col(textCol), shingleN)).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // sizes + df-prune + both join sides
+    val sh = Checkpoints.hold(df.select(col(idCol).as("id"),
+      explode(TextLib.shingles(col(textCol), shingleN)).as("s"))) // sizes + df-prune + both join sides
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("sz"))
     val pruned = sh.join(
       sh.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") <= maxDocFreq && col("df") > 1),

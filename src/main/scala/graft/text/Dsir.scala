@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -104,41 +105,38 @@ object Dsir {
     // measured SLOWER: a (doc,gram,count) pre-agg persist + its exchange
     // read 2.58 s vs 1.37 prior at sf0.1, trading a cheap columnar
     // re-scan for a corpus-sized cache round-trip) and the target once.
-    // Both caches release before return: the narrow per-doc sums are
-    // checkpointed first, the SemDedup/Prototypes discipline.
-    val tc = targetFeats.groupBy(col("__f")).agg(count(lit(1)).as("__ct"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rc = rawFeats.groupBy(col("__f")).agg(count(lit(1)).as("__cr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vocab = tc.join(rc, Seq("__f"), "full")
-      .select(col("__f"), coalesce(col("__ct"), lit(0L)).as("__ct"),
-        coalesce(col("__cr"), lit(0L)).as("__cr"))
-    // three scalars — the only driver-side data movement. This action also
-    // fills the tc/rc caches, so each corpus pays its gram scan once here.
-    val s = vocab.agg(sum(col("__ct")), sum(col("__cr")), count(lit(1))).head()
-    val nT = Option(s.get(0)).fold(0L)(_.asInstanceOf[Long]).toDouble
-    val nR = Option(s.get(1)).fold(0L)(_.asInstanceOf[Long]).toDouble
-    val v = vocabSize.getOrElse(s.getLong(2)).toDouble
-    val w = vocab.select(col("__f"),
-      (log((col("__ct") + alpha) / lit(nT + alpha * v)) -
-        log((col("__cr") + alpha) / lit(nR + alpha * v))).as("__lw"))
-    // Occurrence-stream join, deliberately NOT pre-aggregated to
-    // (doc, gram, count): measured twice now — the round-11 ×100 A/B
-    // (occurrence 38.1/36.5 s vs pre-agg 39.0 s) and the round-14 sf0.1
-    // A/B above — the pre-agg's (doc, gram) exchange + corpus-sized
-    // materialization buys nothing at either scale. The weight-table side
-    // carries the SHUFFLE_HASH hint: at bench scale the planner's
-    // estimates made the CORPUS-SIZED feature stream the broadcast BUILD
-    // side (plans/r14/q_dsir_weights_before.txt node (39): BuildLeft over
-    // the 483k-row Generate output, 56 MiB broadcast), which inverts at
-    // 100 TB into broadcasting the corpus; building on the vocab side per
-    // partition is the only orientation that is safe at every scale
-    // (guide §3.1), and AQE still skew-splits the stream side's hot grams.
-    val perDoc = rawFeats.join(w.hint("shuffle_hash"), Seq("__f")) // raw features are in the fit by construction
-      .groupBy(col(idCol)).agg(sum(col("__lw")).as("__dsir_lw"))
-      .localCheckpoint() // narrow (|docs| rows); lets both caches release now
-    tc.unpersist(false)
-    rc.unpersist(false)
+    // Both caches release before return: the scope below cuts the narrow
+    // per-doc sums (|docs| rows) first, the SemDedup/Prototypes discipline.
+    val perDoc = Checkpoints.scoped {
+      val tc = Checkpoints.hold(targetFeats.groupBy(col("__f")).agg(count(lit(1)).as("__ct")))
+      val rc = Checkpoints.hold(rawFeats.groupBy(col("__f")).agg(count(lit(1)).as("__cr")))
+      val vocab = tc.join(rc, Seq("__f"), "full")
+        .select(col("__f"), coalesce(col("__ct"), lit(0L)).as("__ct"),
+          coalesce(col("__cr"), lit(0L)).as("__cr"))
+      // three scalars — the only driver-side data movement. This action also
+      // fills the tc/rc caches, so each corpus pays its gram scan once here.
+      val s = vocab.agg(sum(col("__ct")), sum(col("__cr")), count(lit(1))).head()
+      val nT = Option(s.get(0)).fold(0L)(_.asInstanceOf[Long]).toDouble
+      val nR = Option(s.get(1)).fold(0L)(_.asInstanceOf[Long]).toDouble
+      val v = vocabSize.getOrElse(s.getLong(2)).toDouble
+      val w = vocab.select(col("__f"),
+        (log((col("__ct") + alpha) / lit(nT + alpha * v)) -
+          log((col("__cr") + alpha) / lit(nR + alpha * v))).as("__lw"))
+      // Occurrence-stream join, deliberately NOT pre-aggregated to
+      // (doc, gram, count): measured twice now — the round-11 ×100 A/B
+      // (occurrence 38.1/36.5 s vs pre-agg 39.0 s) and the round-14 sf0.1
+      // A/B above — the pre-agg's (doc, gram) exchange + corpus-sized
+      // materialization buys nothing at either scale. The weight-table side
+      // carries the SHUFFLE_HASH hint: at bench scale the planner's
+      // estimates made the CORPUS-SIZED feature stream the broadcast BUILD
+      // side (plans/r14/q_dsir_weights_before.txt node (39): BuildLeft over
+      // the 483k-row Generate output, 56 MiB broadcast), which inverts at
+      // 100 TB into broadcasting the corpus; building on the vocab side per
+      // partition is the only orientation that is safe at every scale
+      // (guide §3.1), and AQE still skew-splits the stream side's hot grams.
+      Checkpoints.cut(rawFeats.join(w.hint("shuffle_hash"), Seq("__f")) // raw features are in the fit by construction
+        .groupBy(col(idCol)).agg(sum(col("__lw")).as("__dsir_lw")))
+    }
     raw.filter(col(idCol).isNotNull)
       .join(perDoc, Seq(idCol), "left")
       .withColumn("log_weight", coalesce(col("__dsir_lw"), lit(0.0)))

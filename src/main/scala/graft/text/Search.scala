@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,14 +23,12 @@ import org.apache.spark.sql.functions._
   *   - The corpus tokenizes ONCE (round 14 — it used to be three executing
   *     scans: train df election, scoring, and a scalar (N, Σdl) pass): a
   *     narrow per-doc frame (id, dl, matched-terms-only token array) is
-  *     localCheckpointed — the guide-§8 "decide with small rows" proxy,
+  *     cut (core/Checkpoints) — the guide-§8 "decide with small rows" proxy,
   *     |docs| rows with NO text payload, bounded per row by the query
   *     term list — and the scalar stats, the per-term document
   *     frequencies, and the scoring join all derive from it. The
-  *     checkpoint truncates lineage, so the returned frame re-reads those
-  *     blocks instead of re-tokenizing; no session-lifetime cache is
-  *     pinned (localCheckpoint blocks release with the RDD, the Dsir
-  *     perDoc discipline).
+  *     cut truncates lineage, so the returned frame re-reads it instead
+  *     of re-tokenizing; it is released with the caller's scope.
   *   - Per-query top-k is a row_number window on the (bounded) per-query
   *     candidate set, rank-pushdown-rescued (partial top-k before the
   *     exchange).
@@ -77,14 +76,13 @@ object Search {
     val dlCol = coalesce(graft.expr.TextCharStats(col(textCol)).getField("n_tokens"), lit(0))
     // ONE corpus tokenize (round 14): the narrow per-doc proxy — id, dl,
     // and ONLY the tokens that are query terms (the same token filter the
-    // old per-scan explode applied) — is localCheckpointed, and the scalar
+    // old per-scan explode applied) — is cut, and the scalar
     // stats, the df election, and the scoring join all read it instead of
     // re-tokenizing the corpus per consumer (three full scans before).
-    val docProxy = corpus
+    val docProxy = Checkpoints.cut(corpus
       .select(col(idCol), dlCol.as("__dl"),
         filter(split(TextLib.normalized(col(textCol)), " "),
-          t => t =!= "" && t.isin(terms: _*)).as("__mt"))
-      .localCheckpoint()
+          t => t =!= "" && t.isin(terms: _*)).as("__mt")))
 
     // scalar job: N and avgdl over ALL docs (null/empty text counts dl 0)
     val (nDocs, avgdl) = {

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -590,13 +591,12 @@ object TextLib {
     require(n >= 1, s"langIdFit: n must be >= 1, got $n")
     require(tableSize > 0, s"langIdFit: tableSize must be positive, got $tableSize")
     import org.apache.spark.sql.expressions.Window
-    val counts = df.filter(col(langCol).isNotNull && col(textCol).isNotNull)
-      .select(col(langCol).cast("string").as("__lang"),
-        normalized(col(textCol)).as("__t"))
-      .select(col("__lang"), explode(charGramArray(col("__t"), n)).as("gram"))
-      .groupBy("__lang", "gram").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.scoped {
+      val counts = Checkpoints.hold(df.filter(col(langCol).isNotNull && col(textCol).isNotNull)
+        .select(col(langCol).cast("string").as("__lang"),
+          normalized(col(textCol)).as("__t"))
+        .select(col("__lang"), explode(charGramArray(col("__t"), n)).as("gram"))
+        .groupBy("__lang", "gram").agg(count(lit(1)).as("tf")))
       val totals = counts.groupBy("__lang").agg(sum("tf").as("T")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val w = Window.partitionBy(col("__lang")).orderBy(col("tf").desc, col("gram").asc)
@@ -612,7 +612,7 @@ object TextLib {
           -math.log(t))
       }
       new LangIdModel(n, langs, lms)
-    } finally counts.unpersist()
+    }
   }
 
   /** Score any frame — batch or STREAMING — against a frozen
@@ -773,23 +773,21 @@ object TextLib {
   /** The unigram LM fit [[unigramScore]] and [[pplFit]] share: top-`vocabSize`
     * (token, tf) pairs by corpus frequency (ties by token) plus the total
     * token count T. The model is MATERIALIZED at call time (two driver jobs
-    * over the token counts, cached only for their duration): the vocabulary
-    * is exactly what the scoring join broadcasts anyway, and an engine-side
-    * persist here would pin a session-lifetime cache entry nothing could
-    * ever unpersist (callers return lazy frames).
+    * over the token counts, held only for their duration): the vocabulary
+    * is exactly what the scoring join broadcasts anyway, and callers
+    * return lazy frames that would otherwise keep the counts cached.
     */
   private def unigramModel(train: DataFrame, trainText: String,
                            vocabSize: Int): (Seq[(String, Long)], Double) = {
-    val counts = wordCounts(train, trainText)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Checkpoints.scoped {
+      val counts = Checkpoints.hold(wordCounts(train, trainText))
       val t = Option(counts.agg(sum("tf")).first().get(0))
         .map(_.asInstanceOf[Long].toDouble).getOrElse(0.0)
       val vocab = counts.orderBy(col("tf").desc, col("token").asc)
         .limit(vocabSize).collect()
         .map(r => (r.getString(0), r.getLong(1)))
       (vocab.toSeq, t)
-    } finally counts.unpersist()
+    }
   }
 
   def unigramScore(df: DataFrame, textCol: String, idCol: String,
@@ -1120,36 +1118,33 @@ object TextLib {
     // Measured trade at sf0.1: the extra re-agg job costs ~10% wall there
     // (per-job overhead dominates a 600k-row corpus), bought against a
     // whole corpus scan+regex pass that dominates at the 100 TB posture.
-    val pairCounts = explodedTokenPairs(train, trainText, Seq.empty)
-      .select(col("__prev").as("prev"), col("__cur").as("cur"))
-      .groupBy("prev", "cur").agg(count(lit(1)).as("btf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (vocabPairs, totalT, bigramRows) =
-      try {
-        val counts = pairCounts.groupBy("cur").agg(sum("btf").as("tf"))
-          .select(col("cur").as("token"), col("tf"))
-        val t = Option(counts.agg(sum("tf")).first().get(0))
-          .map(_.asInstanceOf[Long].toDouble).getOrElse(0.0)
-        val v = counts.orderBy(col("tf").desc, col("token").asc)
-          .limit(vocabSize).collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-          .toSeq
-        // Bigram side: vocab-restricted via two broadcast semijoins, capped
-        // with a distributed TakeOrdered. Only the capped table ever
-        // reaches the driver.
-        val vDf = v.toDF("token", "tf")
-        val b = pairCounts.filter(col("prev").isNotNull)
-          .join(broadcast(vDf.select(col("token").as("prev"), col("tf").as("ptf"))), Seq("prev"))
-          .join(broadcast(vDf.select(col("token").as("cur"))), Seq("cur"))
-          .orderBy(col("btf").desc, col("prev").asc, col("cur").asc)
-          .limit(bigramSize)
-          .collect()
-          .map(r => (r.getAs[String]("prev"), r.getAs[String]("cur"),
-                     r.getAs[Long]("btf"), r.getAs[Long]("ptf")))
-          .toSeq
-        (v, t, b)
-      } finally pairCounts.unpersist()
-    (vocabPairs, totalT, bigramRows)
+    Checkpoints.scoped {
+      val pairCounts = Checkpoints.hold(explodedTokenPairs(train, trainText, Seq.empty)
+        .select(col("__prev").as("prev"), col("__cur").as("cur"))
+        .groupBy("prev", "cur").agg(count(lit(1)).as("btf")))
+      val counts = pairCounts.groupBy("cur").agg(sum("btf").as("tf"))
+        .select(col("cur").as("token"), col("tf"))
+      val t = Option(counts.agg(sum("tf")).first().get(0))
+        .map(_.asInstanceOf[Long].toDouble).getOrElse(0.0)
+      val v = counts.orderBy(col("tf").desc, col("token").asc)
+        .limit(vocabSize).collect()
+        .map(r => (r.getString(0), r.getLong(1)))
+        .toSeq
+      // Bigram side: vocab-restricted via two broadcast semijoins, capped
+      // with a distributed TakeOrdered. Only the capped table ever
+      // reaches the driver.
+      val vDf = v.toDF("token", "tf")
+      val b = pairCounts.filter(col("prev").isNotNull)
+        .join(broadcast(vDf.select(col("token").as("prev"), col("tf").as("ptf"))), Seq("prev"))
+        .join(broadcast(vDf.select(col("token").as("cur"))), Seq("cur"))
+        .orderBy(col("btf").desc, col("prev").asc, col("cur").asc)
+        .limit(bigramSize)
+        .collect()
+        .map(r => (r.getAs[String]("prev"), r.getAs[String]("cur"),
+                   r.getAs[Long]("btf"), r.getAs[Long]("ptf")))
+        .toSeq
+      (v, t, b)
+    }
   }
 
   /** The explode → broadcast-joins → per-doc avg formulation of
@@ -1261,30 +1256,28 @@ object TextLib {
     // corpus scans and the vocabulary join would execute twice; a
     // session-lifetime persist nothing can release is the alternative
     // hazard. Cache for exactly the two actions, then release.
-    val joined = ca.join(cb, Seq("token"), "full_outer")
-      .select(coalesce(col("ca"), lit(0L)).as("ca"), coalesce(col("cb"), lit(0L)).as("cb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (klAb, klBa, js) =
-      try {
-        val t = joined.agg(
-          sum("ca").cast("double"), sum("cb").cast("double"),
-          count(lit(1)).cast("double")).first()
-        if (t.isNullAt(0) || t.isNullAt(1)) (0.0, 0.0, 0.0) // an empty corpus
-        else {
-          val (na, nb, v) = (t.getDouble(0), t.getDouble(1), t.getDouble(2))
-          val pa = (col("ca").cast("double") + lit(smoothing)) / lit(na + smoothing * v)
-          val pb = (col("cb").cast("double") + lit(smoothing)) / lit(nb + smoothing * v)
-          val r = joined.select(pa.as("pa"), pb.as("pb"))
-            .withColumn("pm", (col("pa") + col("pb")) / 2)
-            .agg(
-              sum(col("pa") * log(col("pa") / col("pb"))),
-              sum(col("pb") * log(col("pb") / col("pa"))),
-              ((sum(col("pa") * log(col("pa") / col("pm"))) +
-                sum(col("pb") * log(col("pb") / col("pm")))) / 2))
-            .first()
-          (r.getDouble(0), r.getDouble(1), r.getDouble(2))
-        }
-      } finally joined.unpersist()
+    val (klAb, klBa, js) = Checkpoints.scoped {
+      val joined = Checkpoints.hold(ca.join(cb, Seq("token"), "full_outer")
+        .select(coalesce(col("ca"), lit(0L)).as("ca"), coalesce(col("cb"), lit(0L)).as("cb")))
+      val t = joined.agg(
+        sum("ca").cast("double"), sum("cb").cast("double"),
+        count(lit(1)).cast("double")).first()
+      if (t.isNullAt(0) || t.isNullAt(1)) (0.0, 0.0, 0.0) // an empty corpus
+      else {
+        val (na, nb, v) = (t.getDouble(0), t.getDouble(1), t.getDouble(2))
+        val pa = (col("ca").cast("double") + lit(smoothing)) / lit(na + smoothing * v)
+        val pb = (col("cb").cast("double") + lit(smoothing)) / lit(nb + smoothing * v)
+        val r = joined.select(pa.as("pa"), pb.as("pb"))
+          .withColumn("pm", (col("pa") + col("pb")) / 2)
+          .agg(
+            sum(col("pa") * log(col("pa") / col("pb"))),
+            sum(col("pb") * log(col("pb") / col("pa"))),
+            ((sum(col("pa") * log(col("pa") / col("pm"))) +
+              sum(col("pb") * log(col("pb") / col("pm")))) / 2))
+          .first()
+        (r.getDouble(0), r.getDouble(1), r.getDouble(2))
+      }
+    }
     val sp = dfA.sparkSession
     import sp.implicits._
     Seq((klAb, klBa, js)).toDF("kl_ab", "kl_ba", "js")

@@ -1,5 +1,6 @@
 package graft.vec
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -268,8 +269,7 @@ object Pq {
     // re-rank join — without the cache each consumer would re-scan and
     // re-normalize the full corpus (malformed rows already dropped, so
     // every downstream stage sees clean unit vectors)
-    val unit = unitFrame(corpus, corpusId, corpusVec)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val unit = Checkpoints.hold(unitFrame(corpus, corpusId, corpusVec))
     val sample = sampleFromUnit(unit, maxTrainRows, seed)
     val coarse = lloyd(sample, math.min(nlist, sample.length), 20, seed - 1)
     val nl = coarse.length

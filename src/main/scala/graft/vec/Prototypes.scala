@@ -1,6 +1,6 @@
 package graft.vec
 
-import graft.core.SegmentedScan
+import graft.core.{Checkpoints, SegmentedScan}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
@@ -61,31 +61,13 @@ object Prototypes {
     Pq.lloyd(sample, math.min(k, sample.length), 20, seed)
   }
 
-  /** Persist [[protoFit]] centroids — the fit-once / apply-everywhere
-    * discipline of langid/ppl/dsir/pq (VERDICT r12 #5): at 100 TB the
-    * prototype structure is trained once on a sample and reused by every
-    * pruning job, so it must survive the training job. Same one-row
-    * nested-array parquet idiom as [[Similarity.saveCentroids]] /
-    * [[Pq.saveModel]]; doubles round-trip bit-exactly through parquet, so
-    * a loaded apply is bit-identical to the in-memory one
-    * (PrototypesSpec pins this).
-    */
-  def saveCentroids(spark: org.apache.spark.sql.SparkSession,
-                    centroids: Array[Array[Double]], path: String): Unit =
-    Similarity.saveCentroids(spark, centroids, path)
-
-  /** Load centroids written by [[saveCentroids]] (shape-validated). */
-  def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                    path: String): Array[Array[Double]] =
-    Similarity.loadCentroids(spark, path)
-
   /** Internal: (__pid, cluster, cos_to_centroid, proto_rank, kept) for
     * every WELL-FORMED row (right dimension, no null elements, non-zero
     * norm). kept = proto_rank > floor(pruneFraction · n_cluster), rank 1 =
     * most prototypical.
     */
   private def ranked(corpus: DataFrame, idCol: String, vecCol: String,
-                     centroids: Array[Array[Double]], pruneFraction: Double): (DataFrame, () => Unit) = {
+                     centroids: Array[Array[Double]], pruneFraction: Double): DataFrame = {
     require(pruneFraction >= 0 && pruneFraction < 1,
       s"prototypes: pruneFraction in [0,1), got $pruneFraction")
     require(centroids.nonEmpty, "prototypes: no centroids")
@@ -117,16 +99,15 @@ object Prototypes {
     // persisted: the k-dot argmax projection feeds the counts collect, the
     // ordinal sort, and (through the returned frame's lineage) the caller's
     // join/anti-join — uncached it would re-scan the corpus 2-3× (the
-    // SemDedup unit-frame persist discipline; round-12 review catch). The
-    // returned release hook unpersists it; callers call it as soon as they
-    // have MATERIALIZED what they need from the ranked frame, so repeated
-    // proto ops in one session don't accumulate cached blocks (ADVICE r12).
-    val scored = pre
+    // SemDedup unit-frame persist discipline; round-12 review catch).
+    // Callers cut what they need from the ranked frame in a scope that
+    // releases it, so repeated proto ops in one session don't accumulate
+    // cached blocks (ADVICE r12).
+    val scored = Checkpoints.hold(pre
       .withColumn("__best", array_max(scoredArr))
       .select(col("__pid"),
         (lit(0) - col("__best.ni")).cast("int").as("cluster"),
-        col("__best.c").as("cos_to_centroid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("__best.c").as("cos_to_centroid")))
     // distributed ordinals: a SegmentedScan over the total
     // order (cluster, cos desc, id); per-cluster rank = global ordinal −
     // cluster offset. No per-cluster window, no single-task funnel; AQE
@@ -171,7 +152,7 @@ object Prototypes {
         app(r)
       }
     }
-    (out, () => { scored.unpersist(false); () })
+    out
   }
 
   /** Audit map: (id, cluster, cos_to_centroid, proto_rank, kept) for EVERY
@@ -184,11 +165,9 @@ object Prototypes {
     */
   def protoSelectMap(corpus: DataFrame, idCol: String, vecCol: String,
                      centroids: Array[Array[Double]], pruneFraction: Double): DataFrame = {
-    val (r, release) = ranked(corpus, idCol, vecCol, centroids, pruneFraction)
-    // materialize the narrow ranked map (5 thin columns), then drop the
-    // wide scored cache — the retained blocks are exactly the op's output
-    val rc = r.localCheckpoint()
-    release()
+    // cut the narrow ranked map (5 thin columns) and release the wide
+    // scored cache — the retained blocks are exactly the op's output
+    val rc = Checkpoints.scoped(Checkpoints.cut(ranked(corpus, idCol, vecCol, centroids, pruneFraction)))
     corpus.select(col(idCol))
       .join(rc.withColumnRenamed("__pid", idCol), Seq(idCol), "left")
       .withColumn("kept", coalesce(col("kept"), lit(true)))
@@ -200,11 +179,11 @@ object Prototypes {
     */
   def protoApply(corpus: DataFrame, idCol: String, vecCol: String,
                  centroids: Array[Array[Double]], pruneFraction: Double): DataFrame = {
-    val (r, release) = ranked(corpus, idCol, vecCol, centroids, pruneFraction)
-    // materialize only the pruneFraction-sized dropped-id list, then drop
-    // the wide scored cache
-    val dropped = r.filter(!col("kept")).select(col("__pid").as(idCol)).localCheckpoint()
-    release()
+    // cut only the pruneFraction-sized dropped-id list and release the
+    // wide scored cache
+    val dropped = Checkpoints.scoped(Checkpoints.cut(
+      ranked(corpus, idCol, vecCol, centroids, pruneFraction)
+        .filter(!col("kept")).select(col("__pid").as(idCol))))
     corpus.join(dropped, Seq(idCol), "left_anti")
   }
 

@@ -1,5 +1,6 @@
 package graft.vec
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -119,70 +120,66 @@ object SemDedup {
     // SAME rows kept. Equivalent by construction: unitFrame already
     // guarantees __u non-null with non-null elements, so __cl is null
     // exactly when the dimension mismatches.
-    val unit0 = unitBase.withColumnRenamed("__id", "id")
-      .filter(size(col("__u")) === lit(cents(0).length)) // wrong-dim rows: not duplicates of anything
-      .withColumn("__cl", nearest(col("__u")))
-      .withColumn("__cc", graft.expr.DotProduct(col("__u"), element_at(centArr, col("__cl") + 1)))
-      .withColumn("__selfdup",
-        coalesce(graft.expr.DotProduct(col("__u"), col("__u")) >= lit(threshold), lit(false)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Only MULTI-member groups ride the join-back (a duplicate-light
-    // corpus keeps this relation broadcast-small, so AQE broadcasts it
-    // instead of shuffling the whole corpus on array keys); selfdup
-    // singletons coalesce to themselves — bit-identical to joining every
-    // group, since a singleton's elected rep IS its own id.
-    val identGroups = unit0.filter(col("__selfdup"))
-      .groupBy(col("__u").as("__gu"))
-      .agg(min(col("id")).as("__grep"), count(lit(1)).as("__ggsz"))
-      .filter(col("__ggsz") >= 2)
-    val unit = unit0.join(identGroups, unit0("__u") === identGroups("__gu"), "left")
-      .withColumn("__rep", when(col("__selfdup"), coalesce(col("__grep"), col("id"))).otherwise(col("id")))
-      .withColumn("__gsz", coalesce(col("__ggsz"), lit(1L)))
-      .drop("__gu", "__grep", "__ggsz")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reps = unit.filter(col("id") === col("__rep"))
-    val pairs = graft.text.Dedup.bucketPairs(
-        reps.select(col("id"), col("__cl")), Seq("__cl"), maxClusterSize)
-      .join(reps.select(col("id").as("id_a"), col("__u").as("__ua")), Seq("id_a"))
-      .join(reps.select(col("id").as("id_b"), col("__u").as("__ub")), Seq("id_b"))
-      .filter(graft.expr.DotProduct(col("__ua"), col("__ub")) >= threshold)
-      .select("id_a", "id_b")
-    val repGroups = graft.text.Dedup.clusterCandidates(pairs)
-      .withColumnRenamed("cluster_id", "__grp")
-    // an identical group (size ≥ 2) whose rep pairs with no OTHER vector
-    // is a component of its own, labeled by its min member id — the rep
-    val soloDupReps = reps.filter(col("__gsz") >= 2 && col("__selfdup")).select(col("id"))
-      .join(repGroups.select("id"), Seq("id"), "left_anti")
-      .withColumn("__grp", col("id"))
-    val repLabeled = repGroups.unionByName(soloDupReps)
-    // __cc rides the SAME join that attaches the group label: the previous
-    // formulation joined unit twice (groups on __rep, then members back on
-    // id to re-fetch __cc) — one whole join/exchange for a column the left
-    // side already carried (round 15).
-    val members = unit.select(col("id"), col("__rep"), col("__cc"))
-      .join(repLabeled.select(col("id").as("__rep"), col("__grp")), Seq("__rep"))
-      .select(col("id"), col("__grp"), col("__cc"))
-    // survivor: the paper keeps the member LEAST similar to its centroid
-    // (diversity); min_id keeps the smallest id. Both tie-break on id.
-    val electKey =
-      if (keep == "far_from_centroid") struct(col("__cc"), col("id"))
-      else struct(lit(0.0), col("id"))
-    val survivors = members.withColumn("__ek", electKey)
-      .groupBy(col("__grp")).agg(min(col("__ek")).as("__win"))
-      .select(col("__grp"), col("__win.id").as("survivor"))
-    // Materialize the NARROW groups map (3 thin columns) and release the
-    // two WIDE persisted frames (unit0/unit carry the embedding arrays) —
-    // repeated semantic_dedup/d4_select ops in one session previously
-    // accumulated their cached blocks for the session lifetime (the
-    // Prototypes release discipline, ADVICE r12's "same latent issue as
-    // SemDedup"). Values are unchanged; the caller's anti-join reads the
-    // checkpoint instead of re-reading the caches.
-    val out = members.join(survivors, Seq("__grp"))
-      .select(col("id"), col("survivor"), round(col("__cc"), 6).as("cos_to_centroid"))
-      .localCheckpoint()
-    unit0.unpersist(false)
-    unit.unpersist(false)
-    out
+    Checkpoints.scoped {
+      val unit0 = Checkpoints.hold(unitBase.withColumnRenamed("__id", "id")
+        .filter(size(col("__u")) === lit(cents(0).length)) // wrong-dim rows: not duplicates of anything
+        .withColumn("__cl", nearest(col("__u")))
+        .withColumn("__cc", graft.expr.DotProduct(col("__u"), element_at(centArr, col("__cl") + 1)))
+        .withColumn("__selfdup",
+          coalesce(graft.expr.DotProduct(col("__u"), col("__u")) >= lit(threshold), lit(false))))
+      // Only MULTI-member groups ride the join-back (a duplicate-light
+      // corpus keeps this relation broadcast-small, so AQE broadcasts it
+      // instead of shuffling the whole corpus on array keys); selfdup
+      // singletons coalesce to themselves — bit-identical to joining every
+      // group, since a singleton's elected rep IS its own id.
+      val identGroups = unit0.filter(col("__selfdup"))
+        .groupBy(col("__u").as("__gu"))
+        .agg(min(col("id")).as("__grep"), count(lit(1)).as("__ggsz"))
+        .filter(col("__ggsz") >= 2)
+      val unit = Checkpoints.hold(unit0.join(identGroups, unit0("__u") === identGroups("__gu"), "left")
+        .withColumn("__rep", when(col("__selfdup"), coalesce(col("__grep"), col("id"))).otherwise(col("id")))
+        .withColumn("__gsz", coalesce(col("__ggsz"), lit(1L)))
+        .drop("__gu", "__grep", "__ggsz"))
+      val reps = unit.filter(col("id") === col("__rep"))
+      val pairs = graft.text.Dedup.bucketPairs(
+          reps.select(col("id"), col("__cl")), Seq("__cl"), maxClusterSize)
+        .join(reps.select(col("id").as("id_a"), col("__u").as("__ua")), Seq("id_a"))
+        .join(reps.select(col("id").as("id_b"), col("__u").as("__ub")), Seq("id_b"))
+        .filter(graft.expr.DotProduct(col("__ua"), col("__ub")) >= threshold)
+        .select("id_a", "id_b")
+      val repGroups = graft.text.Dedup.clusterCandidates(pairs)
+        .withColumnRenamed("cluster_id", "__grp")
+      // an identical group (size ≥ 2) whose rep pairs with no OTHER vector
+      // is a component of its own, labeled by its min member id — the rep
+      val soloDupReps = reps.filter(col("__gsz") >= 2 && col("__selfdup")).select(col("id"))
+        .join(repGroups.select("id"), Seq("id"), "left_anti")
+        .withColumn("__grp", col("id"))
+      val repLabeled = repGroups.unionByName(soloDupReps)
+      // __cc rides the SAME join that attaches the group label: the previous
+      // formulation joined unit twice (groups on __rep, then members back on
+      // id to re-fetch __cc) — one whole join/exchange for a column the left
+      // side already carried (round 15).
+      val members = unit.select(col("id"), col("__rep"), col("__cc"))
+        .join(repLabeled.select(col("id").as("__rep"), col("__grp")), Seq("__rep"))
+        .select(col("id"), col("__grp"), col("__cc"))
+      // survivor: the paper keeps the member LEAST similar to its centroid
+      // (diversity); min_id keeps the smallest id. Both tie-break on id.
+      val electKey =
+        if (keep == "far_from_centroid") struct(col("__cc"), col("id"))
+        else struct(lit(0.0), col("id"))
+      val survivors = members.withColumn("__ek", electKey)
+        .groupBy(col("__grp")).agg(min(col("__ek")).as("__win"))
+        .select(col("__grp"), col("__win.id").as("survivor"))
+      // Materialize the NARROW groups map (3 thin columns) and release the
+      // two WIDE persisted frames (unit0/unit carry the embedding arrays) —
+      // repeated semantic_dedup/d4_select ops in one session previously
+      // accumulated their cached blocks for the session lifetime (the
+      // Prototypes release discipline, ADVICE r12's "same latent issue as
+      // SemDedup"). Values are unchanged; the caller's anti-join reads the
+      // checkpoint instead of re-reading the caches.
+      Checkpoints.cut(members.join(survivors, Seq("__grp"))
+        .select(col("id"), col("survivor"), round(col("__cc"), 6).as("cos_to_centroid")))
+    }
   }
 
   /** The end-to-end op: corpus minus semantic duplicates (one survivor per

@@ -51,6 +51,24 @@ class OrchestrationSpec extends SparkSpec {
     assert(items.map(_.table).toSet == Set("t", ",\""))
   }
 
+  test("file queue loads a journal written in the all-strings line format") {
+    // journals written before the queue used the shared Json codec quote
+    // every value, numbers included
+    val dir = Files.createTempDirectory("graft_qlegacy").toString
+    Files.write(java.nio.file.Paths.get(dir, "queue.jsonl"), java.util.Arrays.asList(
+      """{"id":"a","path":"in/\"x\".csv","table":"t,1","priority":"2","created":"1","status":"pending","attempts":"0"}""",
+      """{"id":"b","path":"in/y.csv","table":"t","priority":"5","created":"2","status":"failed","attempts":"3"}"""))
+    val q = new Orchestration.FileQueue(dir)
+    assert(q.stats == Map("pending" -> 1, "failed" -> 1))
+    assert(q.resetFailed() == 1)
+    val first = q.next().get
+    assert((first.id, first.priority, first.attempts) == (("b", 5, 4)), first.toString)
+    val second = q.next().get
+    assert((second.path, second.table, second.created) == (("in/\"x\".csv", "t,1", 1L)), second.toString)
+    // the lines this queue appended after the legacy ones reload with them
+    assert(new Orchestration.FileQueue(dir).stats == Map("processing" -> 2))
+  }
+
   test("lineage toJson emits parseable JSON for quotes and backslashes") {
     // a tab (any control character) must be escaped too: Jackson's strict
     // parse rejects a raw one

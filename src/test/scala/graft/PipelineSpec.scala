@@ -118,13 +118,13 @@ class PipelineSpec extends SparkSpec {
     // (the storage stage's own persist already cleans up after itself)
     assert(persistedCount() == before,
       s"cache-op frame leaked: $before persisted RDDs before, ${persistedCount()} after")
-    // the op really persists with the requested level while the run lives
-    val caches = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val cached = graft.core.OpCompiler.applyOp(
-      Seq((1, "x")).toDF("a", "b"), graft.core.OpSpec.CacheOp("MEMORY_ONLY"), null, caches)
-    assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    assert(caches.size == 1)
-    caches.foreach(_.unpersist(blocking = true))
+    // the op really persists with the requested level while its scope lives
+    val level = graft.core.Checkpoints.scoped {
+      graft.core.OpCompiler.applyOp(
+        Seq((1, "x")).toDF("a", "b"), graft.core.OpSpec.CacheOp("MEMORY_ONLY")).storageLevel
+    }
+    assert(level == org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    assert(persistedCount() == before, "the scope released the cache-op frame")
     // an unknown level is a config error, not a silent MEMORY_AND_DISK —
     // rejected when the YAML is parsed
     val bad = intercept[IllegalArgumentException] {
@@ -139,7 +139,7 @@ class PipelineSpec extends SparkSpec {
   test("attrition report survives a query whose plan drops the observed stages") {
     val df = Seq((1, 10L), (2, 20L), (3, 30L)).toDF("id", "n")
     val (out, report) = graft.core.OpCompiler.compileObserved(
-      Seq(graft.core.OpSpec.FilterCondition("id > 1")), null, null, Some("n"))(df)
+      Seq(graft.core.OpSpec.FilterCondition("id > 1")), null, Some("n"))(df)
     // limit(0) plans to an empty relation: the observe nodes sit in this
     // query's logical plan but never run, so it must not supply (or void)
     // the stage metrics the later write measures
@@ -322,6 +322,36 @@ class PipelineSpec extends SparkSpec {
     val back = spark.read.parquet(out).orderBy("doc_id").collect()
     assert(back.map(_.getLong(0)).toSeq == Seq(1L, 3L), "survivors must be min-id per cluster")
     assert(back(0).schema.fieldNames.contains("stopword_ratio"))
+  }
+
+  test("a near_dedup run leaves storage as it found it: success, validation failure and failure") {
+    import org.apache.spark.sql.GraftTestBridge
+    val in = Files.createTempDirectory("graft_hold").toString
+    val base = "the quick brown fox jumps over the lazy dog again and again in the field"
+    Seq((1L, base), (2L, base + " tonight"), (3L, "a different document about query plans"), (4L, base))
+      .toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(in + "/docs")
+    val blocker = Files.createTempFile("graft_hold_blocker", "").toString
+    def storage = (spark.sparkContext.getPersistentRDDs.keySet, GraftTestBridge.cachedData(spark))
+    for ((expectation, sink, status) <- Seq(
+        ("doc_id > 0", Files.createTempDirectory("graft_hold_out").toString + "/ok", "success"),
+        ("doc_id > 100", Files.createTempDirectory("graft_hold_out").toString + "/never", "validation_failed"),
+        ("doc_id > 0", s"$blocker/out", "failed"))) {
+      val before = storage
+      val res = Pipeline.execute(spark, Pipeline.fromYaml(
+        s"""name: hold_$status
+           |source: { type: parquet, path: "$in/docs" }
+           |operations:
+           |  - { type: text_processing, params: { operation: near_dedup, threshold: 0.5 } }
+           |validation:
+           |  expectations:
+           |    - { name: e, expression: "$expectation", min_ratio: 1.0 }
+           |storage: { type: parquet, path: "$sink", mode: overwrite }
+           |""".stripMargin))
+      assert(res.status == status, res.toString)
+      val after = storage
+      assert(after._1 == before._1, s"$status: persisted RDDs left behind: ${after._1 -- before._1}")
+      assert(after._2 == before._2, s"$status: cache manager entries left behind: ${after._2.diff(before._2)}")
+    }
   }
 
   test("YAML multimodal + quality_monitor ops drive the round-5 surfaces") {

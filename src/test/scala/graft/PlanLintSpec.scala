@@ -146,6 +146,19 @@ class PlanLintSpec extends SparkSpec {
       offenders.mkString("\n"))
   }
 
+  test("one storage owner: only core/Checkpoints persists, cuts or releases a frame") {
+    // an op that persists or cuts on its own decides its own lifetime and
+    // its own executor-loss story; Checkpoints.hold/cut/scoped decide both
+    // in one place
+    val storage = "\\.(persist|localCheckpoint|checkpoint|unpersist)\\(|\\.cache\\(\\)".r
+    val offenders = mainSources.filterNot(_.getPath.endsWith("core/Checkpoints.scala")).flatMap { f =>
+      val n = storage.findAllMatchIn(scala.io.Source.fromFile(f, "UTF-8").mkString).size
+      if (n > 0) Seq(s"${f.getPath}: $n persist/cut/release call(s)") else Nil
+    }
+    assert(offenders.isEmpty, "take and release storage through graft.core.Checkpoints only:\n" +
+      offenders.mkString("\n"))
+  }
+
   test("no unpartitioned per-key sequential scans in batch sources (RDD-shape lint)") {
     // PlanLint sees Catalyst plans; a groupByKey.flatMapGroups per-key scan
     // is an RDD-side shape it cannot see — and the one construct that dies

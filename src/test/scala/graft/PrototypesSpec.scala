@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.PipelineConfig
-import graft.vec.Prototypes
+import graft.vec.{Prototypes, Similarity}
 
 class PrototypesSpec extends SparkSpec {
   import spark.implicits._
@@ -96,8 +96,8 @@ class PrototypesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_proto_cent").toString
     val data = corpus().filter(size(col("embedding")) === 4 && col("vec_id") =!= 90L)
     val fitted = Prototypes.protoFit(data, "vec_id", "embedding", k = 3)
-    Prototypes.saveCentroids(spark, fitted, s"$dir/cents")
-    val loaded = Prototypes.loadCentroids(spark, s"$dir/cents")
+    Similarity.saveCentroids(spark, fitted, s"$dir/cents")
+    val loaded = Similarity.loadCentroids(spark, s"$dir/cents")
     // doubles round-trip bit-exactly through parquet
     assert(loaded.length == fitted.length &&
       loaded.zip(fitted).forall { case (a, b) => a.sameElements(b) },

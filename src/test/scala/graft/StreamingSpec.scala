@@ -1083,42 +1083,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dedupTextStream keeps one survivor per normalized text") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val dd = StreamOps.dedupTextStream(input.toDF(), "text", "ts", "1 hour")
-    val q = StreamOps.runToMemory(dd, "tdd")
-    try {
-      input.addData(
-        Doc(t("2024-01-01 00:00:00"), 1L, "Hello   World"),
-        Doc(t("2024-01-01 00:01:00"), 2L, "hello world"), // same normalized text
-        Doc(t("2024-01-01 00:02:00"), 3L, "different doc"))
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT id FROM tdd").as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 3L), s"expected first-seen survivors, got $ids")
-      // the helper hash column must not leak into the output schema
-      assert(!spark.table("tdd").columns.contains("__text_h"))
-    } finally q.stop()
-  }
-
-  test("dedupTextStream: null-text rows ALL pass through (batch exact-dedup parity)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamOps.runToMemory(
-      StreamOps.dedupTextStream(input.toDF(), "text", "ts", "1 hour"), "tdd_nulls")
-    try {
-      input.addData(
-        Doc(t("2024-01-01 00:00:00"), 1L, "real doc"),
-        Doc(t("2024-01-01 00:01:00"), 2L, null),
-        Doc(t("2024-01-01 00:02:00"), 3L, null),
-        Doc(t("2024-01-01 00:03:00"), 4L, null))
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT id FROM tdd_nulls").as[Long].collect().sorted.toSeq
-      assert(ids == Seq(1L, 2L, 3L, 4L),
-        s"failed extractions are not duplicates of each other, got $ids")
-    } finally q.stop()
-  }
-
   test("quotaPerGroupStream: binary group keys quota by VALUE, not JVM identity") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Doc]
@@ -1190,43 +1154,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("excludeKeysStream drops exactly the blocklisted keys, no state") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val block = Seq(2L, 4L, 999L).toDF("bad_id")
-    val out = StreamOps.excludeKeysStream(input.toDF(), "id", block, "bad_id", fpp = 0.5)
-    val q = StreamOps.runToMemory(out, "bloomex")
-    try {
-      input.addData((1L to 6L).map(i => Doc(t("2024-01-01 00:00:00"), i, s"doc $i")): _*)
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT id FROM bloomex").as[Long].collect().sorted.toSeq
-      // even at fpp=0.5 the exact anti-join re-check guarantees precision
-      assert(ids == Seq(1L, 3L, 5L, 6L), s"got $ids")
-      // a second batch flows through the same fixed sketch
-      input.addData(Doc(t("2024-01-01 00:10:00"), 4L, "again"),
-                    Doc(t("2024-01-01 00:10:00"), 7L, "new"))
-      q.processAllAvailable()
-      val ids2 = spark.sql("SELECT id FROM bloomex").as[Long].collect().sorted.toSeq
-      assert(ids2 == Seq(1L, 3L, 5L, 6L, 7L), s"got $ids2")
-    } finally q.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark dedups keyed events") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val dd = StreamOps.dedupWithinWatermark(input.toDF(), "ts", "1 hour", Seq("user"))
-    val q = StreamOps.runToMemory(dd, "dd")
-    try {
-      input.addData(
-        Ev(t("2024-01-01 00:00:00"), "a", 1.0),
-        Ev(t("2024-01-01 00:01:00"), "a", 2.0),
-        Ev(t("2024-01-01 00:02:00"), "b", 3.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT user FROM dd").as[String].collect()
-      assert(rows.sorted.toSeq == Seq("a", "b"))
-    } finally q.stop()
-  }
-
   test("psiDriftMonitor: fit once, score every micro-batch against it") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Ev]
@@ -1257,22 +1184,6 @@ class StreamingSpec extends SparkSpec {
       assert(math.abs(b1(1)._2 - 0.5 * math.log(2.0)) < 1e-9)
       assert(b1(0)._2 > 6.0, "near-empty bin against 0.5 ref mass is a large positive term")
       // the reference fit is literals: each micro-batch job is batch-local
-    } finally q.stop()
-  }
-
-  test("enrichStream broadcast-joins a static dimension; unmatched rows survive") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Ev]
-    val dim = Seq(("a", "tier1"), ("b", "tier2")).toDF("user", "tier")
-    val out = StreamOps.enrichStream(input.toDF(), dim, Seq("user"))
-    val q = out.writeStream.format("memory").queryName("enr").outputMode("append").start()
-    try {
-      input.addData(Ev(t("2024-01-01 00:00:00"), "a", 1.0),
-        Ev(t("2024-01-01 00:00:01"), "zz", 2.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT user, tier FROM enr ORDER BY user")
-        .collect().map(r => (r.getString(0), Option(r.getString(1))))
-      assert(rows.toSeq == Seq("a" -> Some("tier1"), "zz" -> None))
     } finally q.stop()
   }
 
